@@ -1582,12 +1582,39 @@ _SPARK_BUILTINS: set[str] | None = None
 
 
 def _spark_builtins(spark) -> set[str]:
+    """Names Spark resolves without the bridge: its built-ins plus the
+    Python UDF catalog, whose names translate() registers on first use."""
     global _SPARK_BUILTINS
     if _SPARK_BUILTINS is None:
+        from clickhouse_23_3_19_32_lts_spark.functions.catalog import CATALOG
+
         _SPARK_BUILTINS = {
             r[0].rsplit(".", 1)[-1].lower() for r in spark.sql("SHOW FUNCTIONS").collect()
-        }
+        } | {n.lower() for n in CATALOG}
     return _SPARK_BUILTINS
+
+
+_CALL_NAME_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
+
+
+def _ensure_udfs(sql: str, spark=None) -> str:
+    """Register on ``spark`` the catalog UDFs that ``sql`` calls. translate()
+    passes no session and registers on the active one, if any: its output is
+    text, and ch_sql and create_sql_function register on the session that
+    runs it."""
+    from clickhouse_23_3_19_32_lts_spark.functions.catalog import (
+        catalog_names,
+        ensure_udfs,
+    )
+
+    names = catalog_names(_CALL_NAME_RE.findall(sql))
+    if names and spark is None:
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.getActiveSession()
+    if names and spark is not None:
+        ensure_udfs(spark, names)
+    return sql
 
 
 # Rendered Spark SQL uses typed-literal suffixes (123L, 0.0D, 1S, 2BD) that
@@ -1685,6 +1712,8 @@ def _literal_params(builder, nargs: int) -> list[bool] | None:
 
 def _render_call(spark, builder, args) -> str | None:
     """builder(args…) → parse-validated Spark SQL fragment, or None."""
+    from clickhouse_23_3_19_32_lts_spark.functions.catalog import UdfRegistrationError
+
     try:
         col = builder(*args)
         sql = spark._jsparkSession.expression(col._jc).sql()
@@ -1692,6 +1721,8 @@ def _render_call(spark, builder, args) -> str | None:
             sql = _fix_lambdas(_tokenize_spark(sql))
         spark._jsparkSession.sessionState().sqlParser().parseExpression(sql)
         return sql
+    except UdfRegistrationError:
+        raise
     except Exception:  # noqa: BLE001 — builder shape not SQL-expressible
         return None
 
@@ -7131,7 +7162,7 @@ def translate(
         res = _wrap_case_conditions(res)
         if re.search(r"(?i)\bORDER\s+BY\b", res):
             res = _order_by_nulls(res)
-        return res
+        return _ensure_udfs(res)
     finally:
         _SAFE_SUBSCRIPT = prev
         _INLINE_SELECT_ALIASES = prev2
@@ -8209,7 +8240,7 @@ def ch_sql(spark, query: str):
     parsed = parse_fill_query(query)
     if parsed is not None:
         return apply_fill(spark, parsed)
-    return spark.sql(translate(query))
+    return spark.sql(_ensure_udfs(translate(query), spark))
 
 
 # --- WITH FILL full surface: parse to the DataFrame operator ----------------
@@ -8232,7 +8263,7 @@ _INTERVAL_RE = re.compile(
 
 
 def _expr_sql(ch_expr: str) -> str:
-    return _rewrite(_rewrite_ternary_tokens(_tokenize(ch_expr)))
+    return _ensure_udfs(_rewrite(_rewrite_ternary_tokens(_tokenize(ch_expr))))
 
 
 def parse_fill_query(ch_sql_text: str):
@@ -8397,9 +8428,11 @@ def apply_fill(spark, parsed):
             raise ChSqlError("WITH FILL subquery shape needs operators.with_fill")
         apply_fill(spark, sub).createOrReplaceTempView("__fill_sub")
         outer = before + " SELECT * FROM __fill_sub " + after
-        return spark.sql(translate(outer))
+        return spark.sql(_ensure_udfs(translate(outer), spark))
 
-    df = spark.sql(translate(parsed["inner"]))
+    # the fill bounds, steps and INTERPOLATE constants are SQL fragments
+    _ensure_udfs(repr(parsed), spark)
+    df = spark.sql(_ensure_udfs(translate(parsed["inner"]), spark))
     dtypes = dict(df.dtypes)
     items = []
     for col_name, desc, frm_sql, to_sql, step_spec in parsed["items"]:

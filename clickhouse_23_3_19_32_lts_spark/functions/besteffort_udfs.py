@@ -11,8 +11,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
-_REGISTERED: set = set()
-
 
 def _parse(s, tz, us: bool, strict: bool):
     from clickhouse_23_3_19_32_lts_spark.functions.besteffort import (
@@ -73,7 +71,7 @@ def _to_ts(r, scale: int, tz=None, dt64: bool = False):
         return None
 
 
-def _make_udfs() -> dict:
+def make_udfs() -> dict:
     def _series(ss: pd.Series, tzs: pd.Series, us: bool, strict: bool, scale: int) -> pd.Series:
         out = []
         for s, tz in zip(ss, tzs):
@@ -134,20 +132,3 @@ def _make_udfs() -> dict:
         "chParseDT64BestEffortUSOrNull": be64_us_null,
         "chParseDT64BestEffortUS": be64_us_strict,
     }
-
-
-_UDFS: dict = {}
-
-
-def register_besteffort_udfs(spark) -> None:
-    key = id(spark)
-    if key in _REGISTERED:
-        return
-    if not _UDFS:
-        _UDFS.update(_make_udfs())
-    for name, fn in _UDFS.items():
-        spark.udf.register(name, fn)
-    _REGISTERED.add(key)
-    import clickhouse_23_3_19_32_lts_spark.dialect as _d
-
-    _d._SPARK_BUILTINS = None

@@ -18,8 +18,8 @@ Algorithms live in chhash_core.py, validated against the reference's own
 stateless vectors (00259_hashing_tuples, 00678_murmurhash,
 00746_hashing_tuples, 01032_cityHash64_for_decimal).
 
-SQL surface (registered by register_hash_udfs, rendered by the dialect's
-_render_exact_hash):
+SQL surface (registered on first use through functions/catalog.py,
+rendered by the dialect's _render_exact_hash):
   ch_<fam>_elems(x, tag) -> array<hash>   one argument's token stream
   ch_<fam>_fold(arr)     -> hash          fold a stream from scratch
   ch_<fam>_comb(acc, arr)-> hash          continue a fold
@@ -450,27 +450,10 @@ def _sip128(C, data: bytes):
     return (v0 ^ v1) & M64, (v2 ^ v3) & M64
 
 
-_REGISTERED: set = set()
-
-_FAMILY_UDFS: dict = {}
-_SINGLETONS: dict = {}
-
-
-def register_hash_udfs(spark) -> None:
-    """Idempotently register the exact-hash kernels with this session."""
-    key = id(spark)
-    if key in _REGISTERED:
-        return
+def make_udfs() -> dict:
+    """Every exact-hash kernel by SQL name (functions/catalog.py)."""
+    out = {}
     for fam in _FAMILIES:
-        elems, fold, comb = _FAMILY_UDFS.setdefault(fam, _family_udfs(fam))
-        spark.udf.register(f"ch_{fam.lower()}_elems", elems)
-        spark.udf.register(f"ch_{fam.lower()}_fold", fold)
-        spark.udf.register(f"ch_{fam.lower()}_comb", comb)
-    if not _SINGLETONS:
-        _SINGLETONS.update(_make_singletons())
-    for name, fn in _SINGLETONS.items():
-        spark.udf.register(name, fn)
-    _REGISTERED.add(key)
-    import clickhouse_23_3_19_32_lts_spark.dialect as _d
-
-    _d._SPARK_BUILTINS = None
+        for part, fn in zip(("elems", "fold", "comb"), _family_udfs(fam)):
+            out[f"ch_{fam.lower()}_{part}"] = fn
+    return {**out, **_make_singletons()}

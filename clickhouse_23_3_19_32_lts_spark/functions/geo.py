@@ -9,9 +9,9 @@ Reference surface:
     projection subset (geoToH3, h3ToGeo, h3kRing, h3ToGeoBoundary, kRing/
     hexRing/line/distance/faces/areas/directed edges) is re-derived from the
     public H3 v3 spec in h3_core.py (icosahedral gnomonic projection,
-    validated against the reference's stateless vectors) and registered as
-    pandas UDFs by functions/h3_udfs.register_h3_udfs; the chfn builders
-    below delegate to those session-registered kernels.
+    validated against the reference's stateless vectors) as pandas UDFs in
+    functions/h3_udfs.py; the chfn builders below call those kernels by
+    name through the UDF catalog (functions/catalog.py).
   - regionTo* family: src/Functions/FunctionsEmbeddedDictionaries.{h,cpp} +
     src/Dictionaries/Embedded/RegionsHierarchy.cpp — a parent-chain walk over
     a user-provided geobase (id, parent, type, population). register_geobase()
@@ -27,9 +27,12 @@ then fifteen 3-bit digits for resolutions 1..15 (unused digits = 7).
 
 from __future__ import annotations
 
+import inspect
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_23_3_19_32_lts_spark.functions.catalog import udf_call
 from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col
 
 MAX_H3_RES = 15
@@ -299,116 +302,48 @@ def h3HexAreaM2(res) -> Column:
 
 
 # -- projection subset: DataFrame-level builders delegating to the pandas
-# UDF kernels registered by h3_udfs.register_h3_udfs (called automatically
-# by session.get_spark; F.call_function resolves the registered name).
+# UDF kernels of h3_udfs.py; udf_call applies the kernel's UDF object, so
+# a builder needs no session registration.
 
-def _h3_call(name: str, *args) -> Column:
-    return F.call_function(name, *[col(a) for a in args])
+def _kernel_builder(name: str, params: str):
+    """chfn builder ``name(params…)`` calling catalog UDF ``name``."""
+    sig = inspect.Signature(
+        [inspect.Parameter(p, inspect.Parameter.POSITIONAL_OR_KEYWORD) for p in params.split()]
+    )
 
+    def build(*args) -> Column:
+        sig.bind(*args)  # TypeError on a wrong argument count, like a def
+        return udf_call(name, *args)
 
-@chfn("geoToH3")
-def geoToH3(lon, lat, res) -> Column:
-    return _h3_call("geoToH3", lon, lat, res)
-
-
-@chfn("h3ToGeo")
-def h3ToGeo(h) -> Column:
-    return _h3_call("h3ToGeo", h)
-
-
-@chfn("h3ToGeoBoundary")
-def h3ToGeoBoundary(h) -> Column:
-    return _h3_call("h3ToGeoBoundary", h)
+    build.__name__ = build.__qualname__ = name
+    build.__signature__ = sig
+    globals()[name] = chfn(name)(build)
 
 
-@chfn("h3kRing")
-def h3kRing(h, k) -> Column:
-    return _h3_call("h3kRing", h, k)
-
-
-@chfn("h3HexRing")
-def h3HexRing(h, k) -> Column:
-    return _h3_call("h3HexRing", h, k)
-
-
-@chfn("h3Distance")
-def h3Distance(a, b) -> Column:
-    return _h3_call("h3Distance", a, b)
-
-
-@chfn("h3Line")
-def h3Line(a, b) -> Column:
-    return _h3_call("h3Line", a, b)
-
-
-@chfn("h3IndexesAreNeighbors")
-def h3IndexesAreNeighbors(a, b) -> Column:
-    return _h3_call("h3IndexesAreNeighbors", a, b)
-
-
-@chfn("h3GetFaces")
-def h3GetFaces(h) -> Column:
-    return _h3_call("h3GetFaces", h)
-
-
-@chfn("h3CellAreaRads2")
-def h3CellAreaRads2(h) -> Column:
-    return _h3_call("h3CellAreaRads2", h)
-
-
-@chfn("h3CellAreaM2")
-def h3CellAreaM2(h) -> Column:
-    return _h3_call("h3CellAreaM2", h)
-
-
-@chfn("h3GetUnidirectionalEdge")
-def h3GetUnidirectionalEdge(a, b) -> Column:
-    return _h3_call("h3GetUnidirectionalEdge", a, b)
-
-
-@chfn("h3GetOriginIndexFromUnidirectionalEdge")
-def h3GetOriginIndexFromUnidirectionalEdge(e) -> Column:
-    return _h3_call("h3GetOriginIndexFromUnidirectionalEdge", e)
-
-
-@chfn("h3GetDestinationIndexFromUnidirectionalEdge")
-def h3GetDestinationIndexFromUnidirectionalEdge(e) -> Column:
-    return _h3_call("h3GetDestinationIndexFromUnidirectionalEdge", e)
-
-
-@chfn("h3GetIndexesFromUnidirectionalEdge")
-def h3GetIndexesFromUnidirectionalEdge(e) -> Column:
-    return _h3_call("h3GetIndexesFromUnidirectionalEdge", e)
-
-
-@chfn("h3GetUnidirectionalEdgesFromHexagon")
-def h3GetUnidirectionalEdgesFromHexagon(h) -> Column:
-    return _h3_call("h3GetUnidirectionalEdgesFromHexagon", h)
-
-
-@chfn("h3UnidirectionalEdgeIsValid")
-def h3UnidirectionalEdgeIsValid(e) -> Column:
-    return _h3_call("h3UnidirectionalEdgeIsValid", e)
-
-
-@chfn("h3GetUnidirectionalEdgeBoundary")
-def h3GetUnidirectionalEdgeBoundary(e) -> Column:
-    return _h3_call("h3GetUnidirectionalEdgeBoundary", e)
-
-
-@chfn("h3ExactEdgeLengthRads")
-def h3ExactEdgeLengthRads(e) -> Column:
-    return _h3_call("h3ExactEdgeLengthRads", e)
-
-
-@chfn("h3ExactEdgeLengthKm")
-def h3ExactEdgeLengthKm(e) -> Column:
-    return _h3_call("h3ExactEdgeLengthKm", e)
-
-
-@chfn("h3ExactEdgeLengthM")
-def h3ExactEdgeLengthM(e) -> Column:
-    return _h3_call("h3ExactEdgeLengthM", e)
+for _name, _params in (
+    ("geoToH3", "lon lat res"),
+    ("h3ToGeo", "h"),
+    ("h3ToGeoBoundary", "h"),
+    ("h3kRing", "h k"),
+    ("h3HexRing", "h k"),
+    ("h3Distance", "a b"),
+    ("h3Line", "a b"),
+    ("h3IndexesAreNeighbors", "a b"),
+    ("h3GetFaces", "h"),
+    ("h3CellAreaRads2", "h"),
+    ("h3CellAreaM2", "h"),
+    ("h3GetUnidirectionalEdge", "a b"),
+    ("h3GetOriginIndexFromUnidirectionalEdge", "e"),
+    ("h3GetDestinationIndexFromUnidirectionalEdge", "e"),
+    ("h3GetIndexesFromUnidirectionalEdge", "e"),
+    ("h3GetUnidirectionalEdgesFromHexagon", "h"),
+    ("h3UnidirectionalEdgeIsValid", "e"),
+    ("h3GetUnidirectionalEdgeBoundary", "e"),
+    ("h3ExactEdgeLengthRads", "e"),
+    ("h3ExactEdgeLengthKm", "e"),
+    ("h3ExactEdgeLengthM", "e"),
+):
+    _kernel_builder(_name, _params)
 
 
 @chfn("s2CellsIntersect")
@@ -579,51 +514,20 @@ def regionIn(child, ancestor) -> Column:
 
 
 # -- S2 cell-id subset: DataFrame-level builders delegating to the pandas
-# UDF kernels registered by s2_udfs.register_s2_udfs (geometry re-derived
+# UDF kernels of s2_udfs.py, built by _kernel_builder (geometry re-derived
 # from the public s2geometry spec in s2_core.py; reference parity:
 # src/Functions/geoToS2.cpp, s2ToGeo.cpp, s2GetNeighbors.cpp,
 # s2CellsIntersect.cpp, s2Cap*.cpp, s2Rect*.cpp).
 
-@chfn("geoToS2")
-def geoToS2(lon, lat) -> Column:
-    return _h3_call("geoToS2", lon, lat)
-
-
-@chfn("s2ToGeo")
-def s2ToGeo(cell) -> Column:
-    return _h3_call("s2ToGeo", cell)
-
-
-@chfn("s2GetNeighbors")
-def s2GetNeighbors(cell) -> Column:
-    return _h3_call("s2GetNeighbors", cell)
-
-
-@chfn("s2CapContains")
-def s2CapContains(center, degrees, point) -> Column:
-    return _h3_call("s2CapContains", center, degrees, point)
-
-
-@chfn("s2CapUnion")
-def s2CapUnion(c1, r1, c2, r2) -> Column:
-    return _h3_call("s2CapUnion", c1, r1, c2, r2)
-
-
-@chfn("s2RectContains")
-def s2RectContains(lo, hi, point) -> Column:
-    return _h3_call("s2RectContains", lo, hi, point)
-
-
-@chfn("s2RectAdd")
-def s2RectAdd(lo, hi, point) -> Column:
-    return _h3_call("s2RectAdd", lo, hi, point)
-
-
-@chfn("s2RectUnion")
-def s2RectUnion(lo1, hi1, lo2, hi2) -> Column:
-    return _h3_call("s2RectUnion", lo1, hi1, lo2, hi2)
-
-
-@chfn("s2RectIntersection")
-def s2RectIntersection(lo1, hi1, lo2, hi2) -> Column:
-    return _h3_call("s2RectIntersection", lo1, hi1, lo2, hi2)
+for _name, _params in (
+    ("geoToS2", "lon lat"),
+    ("s2ToGeo", "cell"),
+    ("s2GetNeighbors", "cell"),
+    ("s2CapContains", "center degrees point"),
+    ("s2CapUnion", "c1 r1 c2 r2"),
+    ("s2RectContains", "lo hi point"),
+    ("s2RectAdd", "lo hi point"),
+    ("s2RectUnion", "lo1 hi1 lo2 hi2"),
+    ("s2RectIntersection", "lo1 hi1 lo2 hi2"),
+):
+    _kernel_builder(_name, _params)

@@ -29,8 +29,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
-_REGISTERED: set = set()
-
 
 def _core():
     from clickhouse_23_3_19_32_lts_spark.functions import h3_core as C
@@ -47,7 +45,7 @@ def _i(v) -> int | None:
 _EARTH_RADIUS_KM = 6371.007180918475
 
 
-def _make_udfs() -> dict:
+def make_udfs() -> dict:
     @pandas_udf("long")
     def geo_to_h3(lon: pd.Series, lat: pd.Series, res: pd.Series) -> pd.Series:
         C = _core()
@@ -363,21 +361,3 @@ def _make_udfs() -> dict:
         "h3ExactEdgeLengthKm": h3_exact_edge_length_km,
         "h3ExactEdgeLengthM": h3_exact_edge_length_m,
     }
-
-
-_UDFS: dict = {}
-
-
-def register_h3_udfs(spark) -> None:
-    """Idempotently register the H3 projection kernels with this session."""
-    key = id(spark)
-    if key in _REGISTERED:
-        return
-    if not _UDFS:
-        _UDFS.update(_make_udfs())
-    for name, fn in _UDFS.items():
-        spark.udf.register(name, fn)
-    _REGISTERED.add(key)
-    import clickhouse_23_3_19_32_lts_spark.dialect as _d
-
-    _d._SPARK_BUILTINS = None

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
+from clickhouse_23_3_19_32_lts_spark.functions.catalog import udf_call
 from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col, lit_or_col
 
 __all__ = [
@@ -118,8 +119,6 @@ def formatReadableQuantity(x) -> Column:
 
 @chfn("formatReadableTimeDelta")
 def formatReadableTimeDelta(x, max_unit=None) -> Column:
-    from clickhouse_23_3_19_32_lts_spark.functions.variants2 import _named_pudf
-
     # NULL marks the default: a string literal renders unquoted through
     # the bridge's .sql() round-trip, a NULL survives it
     mu = (
@@ -127,7 +126,7 @@ def formatReadableTimeDelta(x, max_unit=None) -> Column:
         if max_unit is not None
         else F.lit(None).cast("string")
     )
-    return _named_pudf(ch_fmt_timedelta, "string")(col(x).cast("double"), mu)
+    return udf_call("ch_fmt_timedelta", col(x).cast("double"), mu)
 
 
 def ch_fmt_timedelta(sec: pd.Series, maxu: pd.Series) -> pd.Series:

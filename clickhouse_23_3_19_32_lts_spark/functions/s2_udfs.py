@@ -25,7 +25,6 @@ from decimal import Decimal
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
-_REGISTERED: set = set()
 _U64_MASK = (1 << 64) - 1
 
 
@@ -57,7 +56,7 @@ def _f(v) -> float | None:
 _DEC = Decimal
 
 
-def _make_udfs() -> dict:
+def make_udfs() -> dict:
     @pandas_udf("decimal(20,0)")
     def geo_to_s2(lon: pd.Series, lat: pd.Series) -> pd.Series:
         C = _core()
@@ -218,21 +217,3 @@ def _make_udfs() -> dict:
         "s2RectUnion": s2_rect_union,
         "s2RectIntersection": s2_rect_intersection,
     }
-
-
-_UDFS: dict = {}
-
-
-def register_s2_udfs(spark) -> None:
-    """Idempotently register the S2 cell kernels with this session."""
-    key = id(spark)
-    if key in _REGISTERED:
-        return
-    if not _UDFS:
-        _UDFS.update(_make_udfs())
-    for name, fn in _UDFS.items():
-        spark.udf.register(name, fn)
-    _REGISTERED.add(key)
-    import clickhouse_23_3_19_32_lts_spark.dialect as _d
-
-    _d._SPARK_BUILTINS = None

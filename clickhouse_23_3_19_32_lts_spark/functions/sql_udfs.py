@@ -170,20 +170,10 @@ def _fuzz_bits(s: pd.Series, prob: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-_REGISTERED: set[int] = set()
-
-
-def register_sql_udfs(spark) -> None:
-    """Idempotently register the SQL-callable kernels with this session."""
-    key = id(spark)
-    if key in _REGISTERED:
-        return
-    spark.udf.register("geohashEncode", _geohash_encode)
-    spark.udf.register("geohashDecode", _geohash_decode)
-    spark.udf.register("geohashesInBox", _geohashes_in_box)
-    spark.udf.register("fuzzBits", _fuzz_bits)
-    _REGISTERED.add(key)
-    # the dialect caches SHOW FUNCTIONS; reset so the new names are seen
-    import clickhouse_23_3_19_32_lts_spark.dialect as _d
-
-    _d._SPARK_BUILTINS = None
+def make_udfs() -> dict:
+    return {
+        "geohashEncode": _geohash_encode,
+        "geohashDecode": _geohash_decode,
+        "geohashesInBox": _geohashes_in_box,
+        "fuzzBits": _fuzz_bits,
+    }

@@ -31,6 +31,7 @@ from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql import functions as F
 
+from clickhouse_23_3_19_32_lts_spark.functions.catalog import udf_call
 from clickhouse_23_3_19_32_lts_spark.functions.registry import REGISTRY, chfn, col, lit_or_col
 
 # --------------------------------------------------------------------------
@@ -792,16 +793,9 @@ def windowID(ts, *args) -> Column:
 @chfn("jumpConsistentHash")
 def jumpConsistentHash(key, buckets) -> Column:
     """Lamping-Veach jump hash (consistentHashes.cpp) — exact via the
-    session-registered chhash kernel (data-dependent loop; not hot-path
-    material). The registered name keeps the SQL rendering resolvable."""
-    from pyspark.sql import SparkSession
-
-    from clickhouse_23_3_19_32_lts_spark.functions.chhash import register_hash_udfs
-
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        register_hash_udfs(spark)
-    return F.call_function(
+    catalog's chhash kernel (data-dependent loop; not hot-path material).
+    Its SQL rendering names the catalog UDF, which translate registers."""
+    return udf_call(
         "ch_jumpconsistenthash", col(key).cast("long"), col(buckets).cast("int")
     )
 
@@ -911,24 +905,10 @@ def IPv4NumToStringClassC(n) -> Column:
     )
 
 
-# Module-level pandas UDFs with UNIQUE names: the SQL bridge renders a
-# builder's Column to SQL text, and a UDF call keeps the inner function's
-# __name__ — a generic nested `_ntoa` then fails to resolve when that SQL
-# is re-parsed. register_variant_udfs() makes these names session-visible.
-
-# pandas UDFs must NOT be created at module import time: executors import
-# this package inside Python workers (no SparkContext), and @pandas_udf
-# parses its return-type DDL eagerly. Create lazily, once, named — the SQL
-# bridge renders calls by the impl function's __name__.
-_PUDF_CACHE: dict = {}
-
-
-def _named_pudf(impl, ret: str):
-    u = _PUDF_CACHE.get(impl.__name__)
-    if u is None:
-        u = pandas_udf(impl, ret)
-        _PUDF_CACHE[impl.__name__] = u
-    return u
+# Module-level pandas UDF kernels, called by name through the UDF catalog
+# (functions/catalog.py; make_udfs below). pandas UDFs must NOT be created at
+# module import time: executors import this package inside Python workers
+# (no SparkContext), and @pandas_udf parses its return-type DDL eagerly.
 
 def ch_ipv6_expand(ser: pd.Series) -> pd.Series:
     import ipaddress
@@ -987,17 +967,17 @@ def ch_ipv6_aton(ser: pd.Series) -> pd.Series:
 
 def _ipv6_expand(s: Column) -> Column:
     """Full 32-hex-digit form of an IPv6 string (pandas UDF, stdlib exact)."""
-    return _named_pudf(ch_ipv6_expand, "string")(s)
+    return udf_call("ch_ipv6_expand", s)
 
 
 @chfn("IPv6NumToString", "INET6_NTOA")
 def IPv6NumToString(x) -> Column:
-    return _named_pudf(ch_ipv6_ntoa, "string")(col(x))
+    return udf_call("ch_ipv6_ntoa", x)
 
 
 @chfn("IPv6StringToNum", "INET6_ATON")
 def IPv6StringToNum(s) -> Column:
-    return _named_pudf(ch_ipv6_aton, "binary")(col(s))
+    return udf_call("ch_ipv6_aton", s)
 
 
 @chfn("cutIPv6")
@@ -1030,7 +1010,7 @@ def ch_ipv6_cidr_range(ser: pd.Series, pfx: pd.Series) -> pd.DataFrame:
 
 @chfn("IPv6CIDRToRange")
 def IPv6CIDRToRange(s, prefix) -> Column:
-    return _named_pudf(ch_ipv6_cidr_range, "struct<lo:string,hi:string>")(col(s).cast("string"), col(prefix).cast("int"))
+    return udf_call("ch_ipv6_cidr_range", col(s).cast("string"), col(prefix).cast("int"))
 
 
 # --------------------------------------------------------------------------
@@ -1695,17 +1675,17 @@ def ch_base58_enc(ser: pd.Series) -> pd.Series:
 
 @chfn("base58Encode")
 def base58Encode(s) -> Column:
-    return _named_pudf(ch_base58_enc, "string")(col(s))
+    return udf_call("ch_base58_enc", s)
 
 
 @chfn("base58Decode")
 def base58Decode(s) -> Column:
-    return _named_pudf(ch_base58_dec_strict, "string")(col(s))
+    return udf_call("ch_base58_dec_strict", s)
 
 
 @chfn("tryBase58Decode")
 def tryBase58Decode(s) -> Column:
-    return _named_pudf(ch_base58_dec, "string")(col(s))
+    return udf_call("ch_base58_dec", s)
 
 
 def _b58_decode_one(v):
@@ -1796,21 +1776,22 @@ for _name, _builder in REGISTRY.items():
         globals()[_name] = _builder
 
 
-def register_variant_udfs(spark) -> None:
-    """Session-register the module-level pandas UDFs so SQL rendered by the
-    registry bridge (which keeps their __name__) resolves on re-parse."""
+def make_udfs() -> dict:
+    """The module's pandas UDF kernels by SQL name (functions/catalog.py)."""
     from clickhouse_23_3_19_32_lts_spark.functions.misc import (
         ch_fmt_timedelta,
     )
 
-    for impl, ret in (
-        (ch_ipv6_expand, "string"),
-        (ch_ipv6_ntoa, "string"),
-        (ch_ipv6_aton, "binary"),
-        (ch_ipv6_cidr_range, "struct<lo:string,hi:string>"),
-        (ch_base58_enc, "string"),
-        (ch_base58_dec, "string"),
-        (ch_base58_dec_strict, "string"),
-        (ch_fmt_timedelta, "string"),
-    ):
-        spark.udf.register(impl.__name__, _named_pudf(impl, ret))
+    return {
+        impl.__name__: pandas_udf(impl, ret)
+        for impl, ret in (
+            (ch_ipv6_expand, "string"),
+            (ch_ipv6_ntoa, "string"),
+            (ch_ipv6_aton, "binary"),
+            (ch_ipv6_cidr_range, "struct<lo:string,hi:string>"),
+            (ch_base58_enc, "string"),
+            (ch_base58_dec, "string"),
+            (ch_base58_dec_strict, "string"),
+            (ch_fmt_timedelta, "string"),
+        )
+    }

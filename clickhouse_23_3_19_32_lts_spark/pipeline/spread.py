@@ -38,12 +38,12 @@ _SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
 def _parse_bytes(conf: str, default: int = 128 * 1024 * 1024) -> int:
     """Parse a Spark size conf ('134217728', '134217728b', '128m', '1g',
-    '128MB'). Returns `default` on anything unrecognized rather than
+    '128MB', '1.5g'). Returns `default` on anything unrecognized rather than
     falling through to an expensive plan-conversion fallback."""
-    m = re.fullmatch(r"\s*(\d+)\s*([kmgt]?)b?\s*", conf, re.IGNORECASE)
+    m = re.fullmatch(r"\s*(\d+(?:\.\d*)?|\.\d+)\s*([kmgt]?)b?\s*", conf, re.IGNORECASE)
     if not m:
         return default
-    return int(m.group(1)) * _SIZE_SUFFIX.get(m.group(2).lower(), 1)
+    return int(float(m.group(1)) * _SIZE_SUFFIX.get(m.group(2).lower(), 1))
 
 
 def _estimated_scan_tasks(df: DataFrame, target: int) -> int:

@@ -49,6 +49,16 @@ DEFAULT_CONFS: dict[str, str] = {
 }
 
 
+def default_driver_memory() -> str:
+    """One eighth of physical memory (MemTotal), between 1 and 4 GiB — the
+    rule perfbench/run.py sizes its runs with. In local mode the driver heap
+    is the whole executor; a larger fixed default lets the heap outgrow a
+    small or shared host before the collector runs."""
+    with open("/proc/meminfo") as fh:
+        mem_kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{max(1024, min(4096, mem_kb // 1024 // 8)) // 256 * 256}m"
+
+
 def get_spark(
     app_name: str = "clickhouse_23_3_19_32_lts_spark",
     master: str | None = None,
@@ -82,7 +92,8 @@ def get_spark(
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
         confs.setdefault(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         confs.setdefault("spark.ui.enabled", "false")
     if extra_confs:
@@ -91,25 +102,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try:
-        from clickhouse_23_3_19_32_lts_spark.functions.chhash import register_hash_udfs
-        from clickhouse_23_3_19_32_lts_spark.functions.h3_udfs import register_h3_udfs
-        from clickhouse_23_3_19_32_lts_spark.functions.besteffort_udfs import (
-            register_besteffort_udfs,
-        )
-        from clickhouse_23_3_19_32_lts_spark.functions.s2_udfs import register_s2_udfs
-        from clickhouse_23_3_19_32_lts_spark.functions.sql_udfs import register_sql_udfs
-
-        from clickhouse_23_3_19_32_lts_spark.functions.variants2 import (
-            register_variant_udfs,
-        )
-
-        register_sql_udfs(spark)
-        register_hash_udfs(spark)
-        register_h3_udfs(spark)
-        register_s2_udfs(spark)
-        register_besteffort_udfs(spark)
-        register_variant_udfs(spark)
-    except Exception:  # noqa: BLE001 — SQL UDF names are additive, never fatal
-        pass
+    # Python UDFs (functions/catalog.py) register on first use, not here.
     return spark

@@ -20,7 +20,12 @@ import re
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
-from clickhouse_23_3_19_32_lts_spark.dialect import ChSqlError, _rewrite, _tokenize
+from clickhouse_23_3_19_32_lts_spark.dialect import (
+    ChSqlError,
+    _ensure_udfs,
+    _rewrite,
+    _tokenize,
+)
 
 _CREATE_FN_RE = re.compile(
     r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?FUNCTION\s+(?P<name>[A-Za-z_][A-Za-z0-9_]*)"
@@ -45,7 +50,7 @@ def create_sql_function(
         raise ChSqlError(f"not a CREATE FUNCTION ... AS (args) -> body statement: {ddl!r}")
     name = m.group("name")
     params = [p.strip() for p in m.group("params").split(",") if p.strip()]
-    body = _rewrite(_tokenize(m.group("body")))
+    body = _ensure_udfs(_rewrite(_tokenize(m.group("body"))), spark)
     types = param_types or {}
     sig = ", ".join(f"{p} {types.get(p, 'DOUBLE')}" for p in params)
     spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) RETURN {body}")

@@ -23,22 +23,15 @@ TABLES = (
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    # Cap the test-session driver heap: the bench default (48g) makes G1
-    # expand the heap instead of collecting at sf0.001 workloads — two full
-    # round-9 suite runs watched the JVM balloon to ~54 GB RSS over the
-    # ~1400-test golden corpus and then die silently (no hs_err, no
-    # kernel OOM log) in the 014xx-016xx overflow-repro region, cascading
-    # ConnectionRefused over every later test. A 16g cap keeps RSS ~20 GB
-    # (GC actually runs) and is far above anything the sf0.001/sf0.01
-    # fixtures need. Overridable for debugging via SPARK_GRAFT_TEST_DRIVER_MEM.
+    # get_spark sizes the driver heap from physical memory. A fixed large
+    # heap lets G1 expand instead of collecting: round-9 suite runs at 48g
+    # watched the JVM balloon to ~54 GB RSS over the golden corpus and then
+    # die silently. Overridable for debugging via SPARK_GRAFT_TEST_DRIVER_MEM.
+    mem = os.environ.get("SPARK_GRAFT_TEST_DRIVER_MEM")
     s = get_spark(
         app_name="tests",
         shuffle_partitions=8,
-        extra_confs={
-            "spark.driver.memory": os.environ.get(
-                "SPARK_GRAFT_TEST_DRIVER_MEM", "16g"
-            )
-        },
+        extra_confs={"spark.driver.memory": mem} if mem else None,
     )
     yield s
 

@@ -23,6 +23,7 @@ import json
 import os
 import subprocess
 import sys
+import warnings
 
 import pytest
 
@@ -85,6 +86,8 @@ def chunk_results():
 @pytest.mark.parametrize("chunk", range(_NCHUNKS))
 def test_golden_chunk(chunk, chunk_results):
     res = chunk_results[chunk]
+    for f in res.get("flaky", []):
+        warnings.warn(f"golden {f['name']} passed only on retry: {f['msg'][:400]}")
     assert not res["failed"], (
         f"chunk {chunk}/{_NCHUNKS}: {len(res['failed'])}/{res['total']} failed:\n"
         + "\n".join(f"  {f['name']}: {f['msg'][:400]}" for f in res["failed"])

@@ -7,6 +7,7 @@ reference's own 02591_bson_long_tuple.reference output.
 
 from __future__ import annotations
 
+import os
 import struct
 
 import pytest
@@ -20,6 +21,7 @@ from clickhouse_23_3_19_32_lts_spark.sources.msgpack_bson import (
     mp_pack,
     mp_unpack,
 )
+from tests.test_golden_corpus import BASE as REF_TESTS
 
 
 def _mp_roundtrip(v):
@@ -59,6 +61,10 @@ def test_msgpack_truncation_raises():
         mp_unpack(bytes(out[:-2]), 0)
 
 
+@pytest.mark.skipif(
+    not os.path.isdir(REF_TESTS),
+    reason="reference test corpus not present: BSON reference-vector coverage lost",
+)
 def test_bson_long_tuple_reference_vector():
     """Byte-exact against the reference's own 02591 output: an 11-element
     unnamed tuple of UInt8 renders as a BSON array doc with int32 items."""

@@ -23,6 +23,10 @@ def test_parse_bytes_forms():
     assert _parse_bytes("128MB") == 128 * 1024 * 1024
     assert _parse_bytes("1g") == 1 << 30
     assert _parse_bytes("64k") == 64 * 1024
+    # fractional sizes scale by the suffix instead of falling to the default
+    assert _parse_bytes("1.5g") == 3 << 29
+    assert _parse_bytes("0.5m") == 512 * 1024
+    assert _parse_bytes("2.25K") == 2304
     # unrecognized input -> numeric default, never an exception
     assert _parse_bytes("whatever") == 128 * 1024 * 1024
 

@@ -27,6 +27,19 @@ def test_create_sql_function_with_ch_body(spark):
     assert got == 202403
 
 
+def test_create_sql_function_registers_catalog_udfs(spark):
+    """A body that names Python UDF kernels registers them on the session
+    the function is created on, so it resolves there on first use."""
+    other = spark.newSession()
+    create_sql_function(
+        other,
+        "CREATE FUNCTION cell_key AS (lon, lat, s) -> (geoToH3(lon, lat, 15), cityHash64(s))",
+        param_types={"s": "STRING"},
+    )
+    got = other.sql("SELECT cell_key(37.79506683, 55.71290588, 'abc') AS v").first()["v"]
+    assert [str(x) for x in got] == ["644325524701193974", "4220206313085259313"]
+
+
 def test_create_sql_function_inlines_into_plan(spark, sf_dir):
     """The reference inlines SQL UDFs into the AST; Spark SQL UDFs likewise
     disappear into the optimized plan (no UDF call node, plain codegen)."""

@@ -7,8 +7,7 @@ resolution, and Catalyst handles every optimization the reference does at
 AST/QueryPlan level (SURVEY.md §4.1 "What Catalyst already does").
 
 Scale notes: registration is lazy (no data read until an action); scans get
-partition discovery + row-group pruning from the Parquet source; `dims()`
-marks small dimension tables so query code can `F.broadcast` them.
+partition discovery + row-group pruning from the Parquet source.
 """
 
 from __future__ import annotations
@@ -19,35 +18,35 @@ import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# The driver's fixture tables (TESTDATA.md). `documents`/`embeddings` serve
-# the training-data-pipeline operators.
-STANDARD_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
-# Tables safe to broadcast at any realistic scale factor (bounded cardinality:
-# 5 regions / 25 nations) vs. merely "small at test SF".
-ALWAYS_BROADCAST = {"region", "nation"}
+def _listing(path: str) -> tuple[tuple, str | None]:
+    """One recursive listing of a table path: its staleness key and the
+    footer file `_nanos_ts_columns` reads (None for an empty directory).
+
+    The key is the (mtime_ns, size) of the path and of every file beneath
+    it, so a rewrite, an append or a delete anywhere in a Hive-partitioned
+    tree (`tbl/p=1/part-0.parquet`) changes it even when no directory
+    mtime moves."""
+    st = os.stat(path)
+    key: list = [(path, st.st_mtime_ns, st.st_size)]
+    footer = None if os.path.isdir(path) else path
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for name in sorted(files):
+            p = os.path.join(root, name)
+            fst = os.stat(p)
+            key.append((p, fst.st_mtime_ns, fst.st_size))
+            if footer is None and name.endswith(".parquet"):
+                footer = p
+    return tuple(key), footer
 
 
-def _nanos_ts_columns(path: str) -> list[str]:
+def _nanos_ts_columns(footer: str | None) -> list[str]:
     """Column names stored as parquet TIMESTAMP(NANOS) (Spark reads them as
     long under spark.sql.legacy.parquet.nanosAsLong). Footer-only read."""
-    if os.path.isdir(path):
-        for name in os.listdir(path):
-            if name.endswith(".parquet"):
-                path = os.path.join(path, name)
-                break
-    schema = papq.read_schema(path)
+    if footer is None:
+        return []
+    schema = papq.read_schema(footer)
     return [
         name
         for name, typ in zip(schema.names, schema.types)
@@ -55,41 +54,17 @@ def _nanos_ts_columns(path: str) -> list[str]:
     ]
 
 
-# Inferred-schema memo keyed on the file stat: schema inference via
-# spark.read.parquet costs ~160 ms of driver time per call (a footer-reading
-# job), ~35 ms with an explicit schema. This caches only METADATA — which
-# columns exist and their types — never data or results; any rewrite of the
-# file/directory changes the stat key and re-infers. The same role Spark's
-# own filesourcePartitionFileCacheSize plays for file listings (guide §6).
-_SCHEMA_CACHE: dict[tuple, object] = {}
-
-# DataFrame-HANDLE memo (round 10): even with the schema memo, each
-# spark.read.schema(s).parquet(path) call costs ~30 ms of py4j/DataSource-
-# resolution driver time; star queries read up to 7 tables, so table-read
-# chatter alone was ~0.2 s per build. A DataFrame is an immutable, lazy plan
-# handle — reusing it never reuses data or results (every action re-executes
-# from the parquet files), so this is plan-metadata caching in the same
-# class as the schema memo above. Keyed on the file stat plus the owning
-# SparkSession (a handle from a stopped/other session must never leak in).
-_DF_CACHE: dict[tuple, tuple] = {}
-
-
-def _stat_key(path: str) -> tuple:
-    """Stat-based staleness key. For a DIRECTORY table an in-place rewrite
-    of a contained part file need not change the directory's own
-    mtime/size, so fold in the max (mtime_ns, size) over the contained
-    *.parquet files (one scandir level — the fixture layout)."""
-    st = os.stat(path)
-    key: tuple = (path, st.st_mtime_ns, st.st_size)
-    if os.path.isdir(path):
-        newest = (0, 0)
-        with os.scandir(path) as it:
-            for e in it:
-                if e.name.endswith(".parquet"):
-                    est = e.stat()
-                    newest = max(newest, (est.st_mtime_ns, est.st_size))
-        key += newest
-    return key
+# Table-read memo, one entry per path: (listing key, inferred schema,
+# TIMESTAMP(NANOS) columns, session, DataFrame handle). It holds plan
+# metadata only, never data or results: a DataFrame is a lazy plan handle,
+# and every action re-reads the parquet files. Schema inference costs
+# ~160 ms of driver time per read (a footer-reading job), an explicit
+# schema ~35 ms, and a reused handle nothing; star queries read up to 7
+# tables per build. A changed listing key replaces the path's entry, so
+# the memo holds one entry per path and never serves a stale read. A
+# handle is reused only by the session that made it; another session
+# with the same key reuses the schema and skips inference.
+_READS: dict[str, tuple] = {}
 
 
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
@@ -98,16 +73,14 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     DuckDB truncates ns→µs the same way (its TIMESTAMP is µs), so the oracle
     sees identical values. The division happens in codegen, JVM-side.
     """
-    try:
-        key = _stat_key(path)
-    except OSError:
-        key = None
-    if key is not None:
-        hit = _DF_CACHE.get(key)
-        # identity check: only reuse a handle created by THIS session object
-        if hit is not None and hit[0] is spark:
-            return hit[1]
-    nanos_cols = _nanos_ts_columns(path)
+    key, footer = _listing(path)
+    hit = _READS.get(path)
+    if hit is not None and hit[0] == key:
+        _, schema, nanos_cols, owner, df = hit
+        if owner is spark:
+            return df
+    else:
+        schema, nanos_cols = None, _nanos_ts_columns(footer)
     if nanos_cols:
         # Spark 4 rejects TIMESTAMP(NANOS) outright unless this (runtime-
         # settable) conf is on — the driver may hand us a session without it.
@@ -115,18 +88,15 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:  # noqa: BLE001 — conf may be locked; reads then fail loudly
             pass
-    schema = _SCHEMA_CACHE.get(key) if key is not None else None
     if schema is not None:
         df = spark.read.schema(schema).parquet(path)
     else:
         df = spark.read.parquet(path)
-        if key is not None:
-            _SCHEMA_CACHE[key] = df.schema
+        schema = df.schema
     for c in nanos_cols:
         # integer division: double division would lose precision at ~1.7e18 ns
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    if key is not None:
-        _DF_CACHE[key] = (spark, df)
+    _READS[path] = (key, schema, nanos_cols, spark, df)
     return df
 
 
@@ -308,12 +278,3 @@ class Engine:
         df.write.mode(mode).parquet(path)
         self.register_parquet(name, path)
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Plain-dict loader used by the query registry (no view registration)."""
-    out: dict[str, DataFrame] = {}
-    for name in STANDARD_TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            out[name] = read_parquet_table(spark, p)
-    return out

@@ -7,8 +7,7 @@ both; the first 15 hex chars (60 bits) parse into a signed 64-bit int
 without overflow on either side.
 
 Cost note: md5 is ~5× slower than xxhash64, but it runs JVM-side in
-whole-stage codegen — at 100 TB the scan, not the hash, dominates. Swap in
-xxhash64 via the `fast=` flag when oracle parity is not needed.
+whole-stage codegen — at 100 TB the scan, not the hash, dominates.
 """
 
 from __future__ import annotations
@@ -17,13 +16,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def portable_hash64(c: Column | str, seed: int | None = None, fast: bool = False) -> Column:
+def portable_hash64(c: Column | str, seed: int | None = None) -> Column:
     """60-bit deterministic hash of a string column; equals sql_hash64()."""
     col = F.col(c) if isinstance(c, str) else c
     if seed is not None:
         col = F.concat(col, F.lit(f"|{seed}"))
-    if fast:
-        return F.xxhash64(col)
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 

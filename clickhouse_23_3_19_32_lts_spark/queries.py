@@ -19,6 +19,8 @@ Conventions:
 from __future__ import annotations
 
 import os
+import string
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,20 +63,34 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet_table(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _sql(spark: SparkSession, sf_dir: str, tables: list[str], stmt: str) -> DataFrame:
-    """Build a query as ONE SQL statement over per-call temp views.
+def _sql(spark: SparkSession, sf_dir: str, stmt: str) -> DataFrame:
+    """Build a query as ONE SQL statement over the tables it names.
 
-    Driver-side construction cost: a DataFrame-API star builder makes
-    hundreds of py4j round trips (~0.5 ms each); one spark.sql() parse is
-    ~10 ms. Views are (re)registered from `sf_dir` on EVERY call, so
-    successive builds against different scale factors never see stale
-    views, and the underlying reads go through the memoized
-    read_parquet_table. Plans are identical to the DataFrame form
-    (broadcast hints mirror the F.broadcast calls) — fenced in
-    tests/test_plan_quality.py and hash-proven against the oracle."""
-    for t in tables:
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"__t_{t}")
-    return spark.sql(stmt)
+    Each `{table}` placeholder is bound to `_t(spark, sf_dir, table)` for
+    this call only, through a temp view under a fresh name that is dropped
+    once the statement is analysed: no name outlives the build, so two
+    builds on one session cannot read each other's tables. (pyspark's
+    `spark.sql(stmt, table=df)` binds the same way but drops through
+    `Catalog.dropTempView`, which re-analyses each view to uncache it,
+    ~4 ms per table; these views are never cached.) Driver-side
+    construction cost: a DataFrame-API star builder makes hundreds of py4j
+    round trips (~0.5 ms each); one spark.sql() parse is ~10 ms. Plans are
+    identical to the DataFrame form (broadcast hints mirror the F.broadcast
+    calls) — fenced in tests/test_plan_quality.py and proven against the
+    oracle."""
+    views = {
+        t: f"_q{uuid.uuid4().hex}"
+        for _, t, _, _ in string.Formatter().parse(stmt)
+        if t
+    }
+    try:
+        for t, view in views.items():
+            _t(spark, sf_dir, t).createTempView(view)
+        return spark.sql(stmt.format(**views))
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for view in views.values():
+            catalog.dropTempView(view)
 
 
 # ---------------------------------------------------------------------------
@@ -222,20 +238,19 @@ def q05_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame form, ~2x cheaper to build driver-side."""
     return _sql(
         spark, sf_dir,
-        ["lineitem", "orders", "customer", "supplier", "nation", "region"],
         """
         SELECT /*+ BROADCAST(c, s, n, r) */ n.n_name,
                sum(l.l_extendedprice * (1 - l.l_discount)) AS revenue
-        FROM __t_lineitem l
-        JOIN (SELECT * FROM __t_orders
+        FROM {lineitem} l
+        JOIN (SELECT * FROM {orders}
               WHERE o_orderdate >= TIMESTAMP '1996-01-01'
                 AND o_orderdate <  TIMESTAMP '1997-01-01') o
           ON l.l_orderkey = o.o_orderkey
-        JOIN __t_customer c ON o.o_custkey = c.c_custkey
-        JOIN __t_supplier s
+        JOIN {customer} c ON o.o_custkey = c.c_custkey
+        JOIN {supplier} s
           ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-        JOIN __t_nation n ON s.s_nationkey = n.n_nationkey
-        JOIN __t_region r ON n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
+        JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+        JOIN {region} r ON n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
         GROUP BY n.n_name
         ORDER BY revenue DESC, n_name
         """,

@@ -11,10 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_23_3_19_32_lts_spark.pipeline.hashing import sql_hash64
 from clickhouse_23_3_19_32_lts_spark.queries import _t, query
 
 # DuckDB fragments mirroring pipeline.hashing / pipeline.dedup primitives.
-_H60 = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
 _SHINGLES3 = (
     "list_distinct(list_transform(generate_series(1, greatest(len(w)-2, 1)),"
     " i -> concat_ws(' ', w[i], w[i+1], w[i+2])))"
@@ -110,7 +110,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sh a JOIN sh b ON a.doc_id < b.doc_id
     WHERE bit_count(xor(a.sh, b.sh)) <= 10
     ORDER BY id_a, id_b
-    """.replace("{HW}", _H60.format(x="w")),
+    """.replace("{HW}", sql_hash64("w")),
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (ngramSimHash analogue) with pigeonhole

@@ -122,23 +122,22 @@ def ssb_q3_1(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (round 10): same all-broadcast plan, ~2x cheaper build."""
     return _sql(
         spark, sf_dir,
-        ["lineitem", "orders", "customer", "supplier", "nation", "region"],
         """
         SELECT /*+ BROADCAST(c, s, cn, sn, cr, sr) */
                cn.n_name AS c_nation, sn.n_name AS s_nation,
                year(o.o_orderdate) AS o_year,
                sum(l.l_extendedprice * (1 - l.l_discount)) AS revenue
-        FROM __t_lineitem l
-        JOIN (SELECT * FROM __t_orders
+        FROM {lineitem} l
+        JOIN (SELECT * FROM {orders}
               WHERE year(o_orderdate) BETWEEN 1996 AND 1997) o
           ON l.l_orderkey = o.o_orderkey
-        JOIN __t_customer c ON o.o_custkey = c.c_custkey
-        JOIN __t_supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN __t_nation cn ON c.c_nationkey = cn.n_nationkey
-        JOIN __t_nation sn ON s.s_nationkey = sn.n_nationkey
-        JOIN __t_region cr
+        JOIN {customer} c ON o.o_custkey = c.c_custkey
+        JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+        JOIN {nation} cn ON c.c_nationkey = cn.n_nationkey
+        JOIN {nation} sn ON s.s_nationkey = sn.n_nationkey
+        JOIN {region} cr
           ON cn.n_regionkey = cr.r_regionkey AND cr.r_name = 'ASIA'
-        JOIN __t_region sr
+        JOIN {region} sr
           ON sn.n_regionkey = sr.r_regionkey AND sr.r_name = 'ASIA'
         GROUP BY cn.n_name, sn.n_name, year(o.o_orderdate)
         ORDER BY o_year, revenue DESC, c_nation, s_nation
@@ -169,22 +168,20 @@ def ssb_q4_1(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round 10): same all-broadcast plan, ~2x cheaper build."""
     return _sql(
         spark, sf_dir,
-        ["lineitem", "orders", "customer", "supplier", "part", "nation",
-         "region"],
         """
         SELECT /*+ BROADCAST(c, s, p, cn, cr) */
                year(o.o_orderdate) AS o_year, cn.n_name AS c_nation,
                sum(l.l_extendedprice * (1 - l.l_discount)
                    - l.l_extendedprice * l.l_tax) AS profit
-        FROM __t_lineitem l
-        JOIN __t_orders o ON l.l_orderkey = o.o_orderkey
-        JOIN __t_customer c ON o.o_custkey = c.c_custkey
-        JOIN __t_supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN (SELECT * FROM __t_part
+        FROM {lineitem} l
+        JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+        JOIN {customer} c ON o.o_custkey = c.c_custkey
+        JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+        JOIN (SELECT * FROM {part}
               WHERE p_type IN ('ECONOMY', 'PROMO')) p
           ON l.l_partkey = p.p_partkey
-        JOIN __t_nation cn ON c.c_nationkey = cn.n_nationkey
-        JOIN __t_region cr
+        JOIN {nation} cn ON c.c_nationkey = cn.n_nationkey
+        JOIN {region} cr
           ON cn.n_regionkey = cr.r_regionkey AND cr.r_name = 'AMERICA'
         GROUP BY year(o.o_orderdate), cn.n_name
         ORDER BY o_year, c_nation

@@ -5,19 +5,16 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clickhouse_23_3_19_32_lts_spark.session import get_spark  # noqa: E402
 
+from tests.oracle_check import duck_views  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_MID = "/root/testdata/sf0.01"
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")
@@ -44,10 +41,19 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def duck():
     """DuckDB connection with the same tables registered as views."""
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = duck_views(SF_DIR)
+    yield con
+    con.close()
+
+
+@pytest.fixture(scope="session")
+def sf_dir_mid() -> str:
+    return SF_DIR_MID
+
+
+@pytest.fixture(scope="session")
+def duck_mid():
+    """The same views over the sf0.01 tables, the driver's oracle scale."""
+    con = duck_views(SF_DIR_MID)
     yield con
     con.close()

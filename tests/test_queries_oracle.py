@@ -1,5 +1,5 @@
-"""Every registered query must hash-match its DuckDB oracle (driver's t2 gate,
-run locally at sf0.001 for speed; the driver uses sf0.01)."""
+"""Every registered query must exactly match its DuckDB oracle at sf0.01,
+the driver's t2 gate and scale (the compare of tools/driver_sim.py)."""
 
 from __future__ import annotations
 
@@ -13,9 +13,20 @@ QUERIES = all_queries()
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(name, spark, sf_dir, duck):
-    df = QUERIES[name](spark, sf_dir)
-    assert_matches_oracle(df, duck, ORACLES[name])
+def test_query_matches_oracle(name, spark, sf_dir_mid, duck_mid):
+    df = QUERIES[name](spark, sf_dir_mid)
+    assert_matches_oracle(df, duck_mid, ORACLES[name])
+
+
+def test_sql_builders_leave_no_views(spark, sf_dir):
+    """The single-statement builders bind their tables per query: building
+    them leaves the session's view list as it was. A fresh session, so no
+    earlier test's views hide a leak."""
+    session = spark.newSession()
+    before = session.sql("SHOW VIEWS").collect()
+    for name in ("q05_regional_revenue", "ssb_q3_1", "ssb_q4_1"):
+        QUERIES[name](session, sf_dir)
+    assert session.sql("SHOW VIEWS").collect() == before
 
 
 def test_every_query_runs(spark, sf_dir):

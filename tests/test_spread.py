@@ -1,5 +1,5 @@
 """Unit tests for pipeline/spread.py guard hardening and the engine
-read-path memos (round-10 VERDICT items 7/8 + ADVICE fixes)."""
+read-path memo (round-10 VERDICT items 7/8 + ADVICE fixes)."""
 
 from __future__ import annotations
 
@@ -8,6 +8,7 @@ import shutil
 
 import pytest
 
+from clickhouse_23_3_19_32_lts_spark import engine
 from clickhouse_23_3_19_32_lts_spark.engine import read_parquet_table
 from clickhouse_23_3_19_32_lts_spark.pipeline.spread import (
     _estimated_scan_tasks,
@@ -61,11 +62,13 @@ def test_estimated_scan_tasks_early_exit(spark, sf_dir):
 
 
 def test_read_memo_reinfers_on_rewrite(spark, sf_dir, tmp_path):
-    """The schema/DF memos key on the file stat: rewriting the file (new
-    mtime/size) must re-infer — never serve the stale handle."""
+    """The read memo keys on the file stat: rewriting the file (new
+    mtime/size) must re-infer — never serve the stale handle — and must
+    replace the path's entry, not add one."""
     src = os.path.join(sf_dir, "region.parquet")
     p = str(tmp_path / "t.parquet")
     shutil.copyfile(src, p)
+    n_entries = len(engine._READS)
     df1 = read_parquet_table(spark, p)
     assert read_parquet_table(spark, p) is df1  # stat unchanged -> same handle
     # rewrite with different content (nation has a different schema)
@@ -74,11 +77,38 @@ def test_read_memo_reinfers_on_rewrite(spark, sf_dir, tmp_path):
     df2 = read_parquet_table(spark, p)
     assert df2 is not df1
     assert df2.schema != df1.schema
+    assert len(engine._READS) == n_entries + 1
+
+
+def test_read_memo_other_session(spark, sf_dir, tmp_path):
+    """Another session with the same stat gets its own handle (never one
+    made by a different session) but reuses the memoized schema: no
+    footer-reading inference job runs for it."""
+    p = str(tmp_path / "t.parquet")
+    shutil.copyfile(os.path.join(sf_dir, "region.parquet"), p)
+    sc = spark.sparkContext
+
+    def jobs(group, read):
+        sc.setJobGroup(group, group)
+        try:
+            df = read()
+        finally:
+            sc._jsc.clearJobGroup()
+        return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    df1, inferred = jobs("read-memo-first", lambda: read_parquet_table(spark, p))
+    assert inferred  # inference runs a job, so its absence below means reuse
+    other = spark.newSession()
+    df2, reused = jobs("read-memo-other", lambda: read_parquet_table(other, p))
+    assert df2 is not df1
+    assert df2.sparkSession is other
+    assert df2.schema == df1.schema
+    assert reused == []
 
 
 def test_read_memo_directory_part_rewrite(spark, sf_dir, tmp_path):
     """Directory tables: an in-place rewrite of a contained part file need
-    not change the directory stat — the key folds in the newest part stat
+    not change the directory stat — the key folds in every part's stat
     (round-9 VERDICT item 8)."""
     d = tmp_path / "tbl"
     d.mkdir()
@@ -91,3 +121,26 @@ def test_read_memo_directory_part_rewrite(spark, sf_dir, tmp_path):
     df2 = read_parquet_table(spark, str(d))
     assert df2 is not df1
     assert df2.schema != df1.schema
+
+
+def test_read_memo_partitioned_append(spark, sf_dir, tmp_path):
+    """A Hive-partitioned directory reads, and a file appended inside a
+    partition is seen on the next read even though no directory mtime
+    moves and the new file is neither newer nor larger than the old."""
+    d = tmp_path / "tbl"
+    part = d / "p=1"
+    part.mkdir(parents=True)
+    src = os.path.join(sf_dir, "region.parquet")
+    shutil.copyfile(src, part / "part-0.parquet")
+    for x in (part, d):
+        os.utime(x, ns=(3, 3))
+    df1 = read_parquet_table(spark, str(d))
+    assert "p" in df1.columns
+    n = df1.count()
+    shutil.copyfile(src, part / "part-1.parquet")
+    os.utime(part / "part-1.parquet", ns=(1, 1))
+    for x in (part, d):
+        os.utime(x, ns=(3, 3))
+    df2 = read_parquet_table(spark, str(d))
+    assert df2 is not df1
+    assert df2.count() == 2 * n

@@ -1,7 +1,8 @@
 """Simulate the driver's t2 oracle gate at sf0.01 over a given list of queries.
 
-Stricter than tests/oracle_check.py: after column-sort + row-sort + 6-dp float
-rounding, requires EXACT equality (a stand-in for the driver's value hash).
+Column sort + row sort + 6-dp float rounding, then EXACT equality (a
+stand-in for the driver's value hash): the compare of tests/oracle_check.py,
+which tests/test_queries_oracle.py runs over every registry query.
 
 Usage: python tools/driver_sim.py [name ...]   (default: all registered)
 """
@@ -14,27 +15,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-import pandas as pd
+from tests.oracle_check import compare, duck_views, normalize
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SIM_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1).copy()
-    for c in pdf.columns:
-        s = pdf[c]
-        if s.dtype == object:
-            pdf[c] = s.map(lambda v: None if v is None else str(v))
-        elif s.dtype.kind == "f":
-            pdf[c] = s.round(6)
-        elif str(s.dtype).startswith("datetime64"):
-            pdf[c] = s.astype("datetime64[us]")
-    pdf = pdf.sort_values(by=list(pdf.columns), ignore_index=True, na_position="first")
-    return pdf
 
 
 def main() -> int:
@@ -46,17 +29,13 @@ def main() -> int:
     names = sys.argv[1:] or list(queries)
 
     spark = get_spark(app_name="driver_sim", shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = duck_views(SF_DIR)
 
     n_ok = n_bad = n_noorc = 0
     for name in names:
         t0 = time.time()
         try:
-            got = _normalize(queries[name](spark, SF_DIR).toPandas())
+            got = normalize(queries[name](spark, SF_DIR).toPandas())
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark raised {exc!r}")
             n_bad += 1
@@ -66,33 +45,19 @@ def main() -> int:
             n_noorc += 1
             continue
         try:
-            want = _normalize(con.sql(oracles[name]).df())
+            want = normalize(con.sql(oracles[name]).df())
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: duckdb raised {exc!r}")
             n_bad += 1
             continue
         dt = time.time() - t0
-        if list(got.columns) != list(want.columns):
-            print(f"FAIL {name}: schema spark={list(got.columns)} duck={list(want.columns)}")
-            n_bad += 1
-        elif len(got) != len(want):
-            print(f"FAIL {name}: rows spark={len(got)} duck={len(want)}")
-            n_bad += 1
+        ok, msg = compare(got, want)
+        if ok:
+            print(f"ok   {name} ({len(got)} rows, {dt:.1f}s)")
+            n_ok += 1
         else:
-            eq = True
-            for c in got.columns:
-                a, b = got[c], want[c]
-                col_eq = ((a.isna() & b.isna()) | (a == b))
-                if not col_eq.all():
-                    i = (~col_eq).idxmax()
-                    print(f"FAIL {name}: col={c} row={i} spark={a[i]!r} duck={b[i]!r}")
-                    eq = False
-                    break
-            if eq:
-                print(f"ok   {name} ({len(got)} rows, {dt:.1f}s)")
-                n_ok += 1
-            else:
-                n_bad += 1
+            print(f"FAIL {name}: {msg}")
+            n_bad += 1
     print(f"\n{n_ok} ok, {n_bad} bad, {n_noorc} no-oracle of {len(names)}")
     return 1 if n_bad else 0
 

@@ -20,8 +20,14 @@ Layout (per SURVEY.md §7):
   tablepolicies.py -- MergeTree-family semantics (Replacing/Summing/... + FINAL)
 """
 
-from clickhouse_23_3_19_32_lts_spark.engine import Engine
-from clickhouse_23_3_19_32_lts_spark.session import get_spark
+import logging
+
+# The package logger. Every fallback warns here instead of passing silently.
+# Defined before the submodule imports below, which import it.
+log = logging.getLogger(__name__)
+
+from clickhouse_23_3_19_32_lts_spark.engine import Engine  # noqa: E402
+from clickhouse_23_3_19_32_lts_spark.session import get_spark  # noqa: E402
 
 __all__ = ["Engine", "get_spark"]
 __version__ = "0.1.0"

@@ -18,6 +18,8 @@ import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_23_3_19_32_lts_spark import log
+
 
 def _listing(path: str) -> tuple[tuple, str | None]:
     """One recursive listing of a table path: its staleness key and the
@@ -86,8 +88,11 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
         # settable) conf is on — the driver may hand us a session without it.
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:  # noqa: BLE001 — conf may be locked; reads then fail loudly
-            pass
+        except Exception as e:  # noqa: BLE001 — conf may be locked; reads then fail loudly
+            log.warning(
+                "conf spark.sql.legacy.parquet.nanosAsLong=true refused, reading %s "
+                "(TIMESTAMP(NANOS) columns %s) without it: %s", path, nanos_cols, e,
+            )
     if schema is not None:
         df = spark.read.schema(schema).parquet(path)
     else:

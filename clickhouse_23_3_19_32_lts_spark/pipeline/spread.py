@@ -33,6 +33,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_23_3_19_32_lts_spark import log
+
 _SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
 
@@ -92,7 +94,8 @@ def spread(df: DataFrame, key: str | Column | None = None) -> DataFrame:
     try:
         if _estimated_scan_tasks(df, target) >= target:
             return df
-    except Exception:  # noqa: BLE001 — non-file plans: fall back to the exact count
+    except Exception as e:  # noqa: BLE001 — non-file plans: fall back to the exact count
+        log.warning("spread: scan-task estimate failed (%s); counting partitions instead", e)
         if df.rdd.getNumPartitions() >= target:
             return df
     if key is not None:

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from clickhouse_23_3_19_32_lts_spark import log
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -58,8 +60,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ):
         try:
             spark.conf.set(k, v)
-        except Exception:  # noqa: BLE001 — locked conf: proceed, fail loudly later
-            pass
+        except Exception as e:  # noqa: BLE001 — locked conf: proceed, answers may differ
+            log.warning("conf %s=%s refused, reading %s without it: %s", k, v, name, e)
     return read_parquet_table(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 

@@ -1,13 +1,22 @@
 """SparkSession construction tuned for this engine.
 
 Local test profile: one JVM, ``local[N]`` threads. Cluster profile: the same
-settings minus driver-memory are what we'd ship to a 1000-executor job —
-AQE on (runtime re-plan, skew-join splitting, partition coalescing), UTC
-session time zone (oracle comparability), ANSI off (ClickHouse wraps integer
-overflow silently — SURVEY.md §1.3), Arrow enabled for the pandas-UDF path.
+settings minus driver-memory. ``DEFAULT_CONFS`` holds only what differs from
+Spark 4.1's defaults: UTC session time zone (oracle comparability), ANSI off
+(ClickHouse wraps integer overflow silently — SURVEY.md §1.3), Arrow enabled
+for the pandas-UDF path, and a generated-class cache sized to the engine's
+codegen working set. AQE, predicate pushdown and dynamic partition pruning
+are Spark's defaults; ``tests/test_session.py`` fails if a Spark upgrade
+flips one of them.
 
-Reference analogue: ``max_threads`` / settings profile
-(/root/reference/src/Core/Settings.h) — here everything maps onto Spark conf.
+``spark.sql.codegen.cache.maxEntries`` is a static conf: it takes effect only
+when the session (and its JVM) is built here. A session built elsewhere — the
+driver's own, handed to ``__spark_entry__`` — keeps Spark's 100-entry cache,
+so its warm queries compile again; the runtime-settable confs still apply.
+
+Reference analogue: ``max_threads`` / settings profile and
+``compiled_expression_cache_size`` (src/Core/Settings.h) — here everything
+maps onto Spark conf.
 """
 
 from __future__ import annotations
@@ -16,15 +25,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Scale-aware defaults. At 100 TB these are overridden per-cluster; what
-# matters is that they are *declared here* rather than hard-coded at call
-# sites: shuffle partitioning is the single biggest lever at scale.
+# Only settings that differ from Spark 4.1's defaults are declared here;
+# shuffle partitioning and driver memory come from the machine (get_spark).
 DEFAULT_CONFS: dict[str, str] = {
-    # AQE: coalesce small shuffle partitions, split skewed ones, runtime
-    # re-plan sort-merge -> broadcast when a side turns out small.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     # ClickHouse integer arithmetic wraps (C++ semantics); ANSI would raise.
     "spark.sql.ansi.enabled": "false",
     # ClickHouse count() takes zero args (AggregateFunctionCount.cpp).
@@ -39,13 +42,23 @@ DEFAULT_CONFS: dict[str, str] = {
     # Broadcast threshold: dims (region/nation/supplier/customer at test SF)
     # should broadcast; AQE also converts at runtime.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # Files: pack small test files; at 100 TB the default 128m is right.
-    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    # Parquet: enable predicate pushdown machinery explicitly (defaults on;
-    # pinned so a vendor default-flip can't silently disable pruning).
-    "spark.sql.parquet.filterPushdown": "true",
+    # Parquet: answer MIN/MAX/COUNT from row-group footers (off by default).
     "spark.sql.parquet.aggregatePushdown": "true",
-    "spark.sql.optimizer.dynamicPartitionPruning.enabled": "true",
+    # Generated-class cache (static). Spark's 100 entries hold less than one
+    # pass of the benchmark queries, so each warm pass would compile ~420
+    # classes again. Census at sf0.01 with the cache opened up, entries
+    # after one pass (stage id in class names / out of them, below): the 18
+    # OLAP headline queries 254 / 228, the 7 pipeline queries 151 / 125, all
+    # 25 in one JVM 325 with it out. In local mode a class is cached twice:
+    # the key is (context class loader, source), and the driver's
+    # whole-stage compile check and the executor tasks run under different
+    # loaders, so the 254 OLAP entries hold 165 distinct sources. Guava
+    # splits maximumSize over 4 segments that evict on their own; 1000 gives
+    # each segment about 3x its share of the 325.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # Without the CodegenStageN suffix, identical whole-stage sources at
+    # different stage positions are one cache entry (runtime conf).
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

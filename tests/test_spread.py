@@ -3,6 +3,7 @@ read-path memo (round-10 VERDICT items 7/8 + ADVICE fixes)."""
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 
@@ -40,6 +41,15 @@ def test_spread_inmemory_already_parallel_is_noop(spark):
     df = spark.range(0, 1000, 1, target + 2)
     out = spread(df, "id")
     assert out is df  # untouched: no repartition node added
+
+
+def test_spread_fallback_warns(spark, caplog):
+    df = spark.range(0, 10, 1, 1)
+    with caplog.at_level(logging.WARNING, logger="clickhouse_23_3_19_32_lts_spark"):
+        spread(df, "id")
+    got = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(got) == 1, got
+    assert "spread: scan-task estimate failed (no input files" in got[0]
 
 
 def test_spread_inmemory_narrow_is_repartitioned(spark):

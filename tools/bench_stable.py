@@ -1,14 +1,17 @@
 """Contention-robust measurement harness for the optimization rounds.
 
-The sandbox shares its 32 host cores with noisy neighbors: calib_sec has
-been observed to swing 0.58 -> 3.35 within minutes, so a single bench.py
-pass can show phantom 5-10x "regressions" on whichever queries happened to
-run during a contention burst (round-9 baseline runs 1-3). This harness
-runs each headline query K times inside one session and reports the MIN
-per query — the min is the least-contended observation and tracks plan
-cost, not neighbor load. It changes nothing about bench.py (the driver
-contract artifact); it exists so optimization decisions are made against
-stable numbers.
+The engine is measured on a shared 4-core, 15 GB host whose speed follows
+its neighbours' load (calib_sec once swung 0.58 -> 3.35 within minutes on
+a shared 32-core host), so a single bench.py pass can show phantom 5-10x
+"regressions" on whichever queries happened to run during a contention
+burst. This harness runs each headline query K times inside one session
+and reports the MIN per query — the min is the least-contended observation
+and tracks plan cost, not neighbor load. It also reports the classes Spark
+compiled in each pass (``compiled``, from ``CodegenMetrics``): the first
+pass pays the codegen working set, and a later pass that compiles anything
+means the codegen cache no longer holds it. It changes nothing about
+bench.py (the driver contract artifact); it exists so optimization
+decisions are made against stable numbers.
 
 Usage: python tools/bench_stable.py [K] [--plans plans/r09 --suffix _before]
 """
@@ -66,15 +69,19 @@ def main() -> None:
                     df._jdf.queryExecution(), "formatted"))
     _run(queries[names[0]](spark, sf_dir))
 
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     calibs = [calib()]
     results: dict[str, list[float]] = {n: [] for n in names}
+    compiled: list[int] = []
     for rep in range(k):
+        before = compiles.getCount()
         for name in names:
             spark.sparkContext.setJobDescription(f"{name} rep{rep}")
             t0 = time.perf_counter()
             _run(queries[name](spark, sf_dir))
             results[name].append(round(time.perf_counter() - t0, 4))
         spark.sparkContext.setJobDescription(None)
+        compiled.append(compiles.getCount() - before)
         calibs.append(calib())
 
     mins = {n: min(v) for n, v in results.items()}
@@ -84,6 +91,7 @@ def main() -> None:
         "value": round(sum(mins.values()), 4),
         "queries": mins,
         "all_runs": results,
+        "compiled": compiled,
         "calibs": calibs,
     }
     print(json.dumps(out))

@@ -11,13 +11,19 @@ sketches) is provided as library code on top.
 Layout (per SURVEY.md §7):
   engine.py        -- Engine: session wrapper + table registry over parquet dirs
   session.py       -- tuned local SparkSession builder
-  functions/       -- ClickHouse scalar-function name -> Spark Column builders
-  operators/       -- ASOF/ANY join, LIMIT BY, WITH FILL, TOTALS, dedup, ANN,
-                      text analysis, event analytics
+  functions/       -- ClickHouse function name -> Spark Column builder registry
+  dialect.py       -- ClickHouse SQL -> Spark SQL translation (ch_sql)
+  udf.py           -- CREATE FUNCTION and executable UDFs
+  operators/       -- ASOF/ANY join, ARRAY JOIN, LIMIT BY, WITH FILL, TOTALS,
+                      SAMPLE, live views
+  pipeline/        -- LLM-data operators: dedup, similarity search/ANN, text
+                      metrics, multimodal columns
   sources/         -- readers + table functions (numbers, generateRandom, ...)
-  plans/           -- plan inspection helpers (pushdown/broadcast assertions)
   streaming/       -- tumble/hop/watermark wrappers over Structured Streaming
-  tablepolicies.py -- MergeTree-family semantics (Replacing/Summing/... + FINAL)
+  policies.py      -- MergeTree-family semantics (Replacing/Summing/... + FINAL)
+  projections.py   -- aggregate projections with query rewrite
+  chtypes.py       -- static ClickHouse type inference for the dialect
+  queries*.py      -- the registry of oracle-backed benchmark queries
 """
 
 import logging

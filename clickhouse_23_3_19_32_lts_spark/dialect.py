@@ -23,117 +23,42 @@ sensitive names + aliases); grammar src/Parsers/ParserSelectQuery.cpp.
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import re
+
+# The functions/ registry is the one definition of every function it
+# implements: translate renders those names through the registry bridge
+# (_registry_bridge). The tables below hold names the registry lacks, plus
+# registry names whose table rendering still differs from the builder's or
+# that the bridge cannot render; tests/test_registry_parity.py lists each
+# such exception with its reason.
 
 # --- 1:1 function renames (CH name → Spark SQL name) -----------------------
 NAME_MAP: dict[str, str] = {
     # datetime
     "toYear": "year",
-    "toMonth": "month",
-    "toDayOfMonth": "dayofmonth",
-    "toDayOfYear": "dayofyear",
     "toHour": "hour",
     "toMinute": "minute",
     "toSecond": "second",
     "toUnixTimestamp": "unix_timestamp",
     "fromUnixTimestamp": "from_unixtime",
-    "toLastDayOfMonth": "last_day",
-    "now": "current_timestamp",
-    "today": "current_date",
     # string
-    "lowerUTF8": "lower",
-    "upperUTF8": "upper",
     "lengthUTF8": "length",
-    "char_length": "length",
-    "character_length": "length",
-    "mid": "substring",
-    "substr": "substring",
-    "replaceAll": "replace",
-    "concatWithSeparator": "concat_ws",
-    "trimBoth": "trim",
-    "trimLeft": "ltrim",
-    "trimRight": "rtrim",
-    "leftPad": "lpad",
-    "rightPad": "rpad",
-    "startsWith": "startswith",
-    "endsWith": "endswith",
-    "extractAll": "regexp_extract_all",
-    "match": "rlike",
-    "base64Encode": "base64",
     "base64Decode": "unbase64",
-    "hex": "hex",
-    "unhex": "unhex",
-    "bin": "bin",
-    "reverseUTF8": "reverse",
-    "repeat": "repeat",
-    "format": "format_string",
-    # math
-    "log": "ln",
-    "log2": "log2",
-    "log10": "log10",
-    "exp": "exp",
-    "cbrt": "cbrt",
-    "sign": "signum",
-    "pow": "power",
     # arrays
-    "arrayConcat": "concat",
     "arraysOverlap": "arrays_overlap",
-    "arraySort": "array_sort",
-    "arrayReverse": "reverse",
-    "arrayFlatten": "flatten",
-    "arrayZip": "arrays_zip",
-    "arrayIntersect": "array_intersect",
-    "arrayPushBack": "array_append",
-    "arrayPushFront": "array_prepend",
-    "arrayMap": "transform",
-    "arrayFilter": "filter",
-    "arrayExists": "exists",
-    "arrayAll": "forall",
     "arrayShuffle": "shuffle",
-    "arrayJoin": "explode",
-    "emptyArrayUInt64": "array",
-    # maps
-    "mapKeys": "map_keys",
-    "mapValues": "map_values",
-    "mapContains": "map_contains_key",
-    "mapFromArrays": "map_from_arrays",
     # json
     "JSONLength": "json_array_length",
     # hash / misc (cityHash64/sipHash64/murmur*/halfMD5 render bit-exact via
     # the ch_*_elem/_comb pandas UDFs — see _render_exact_hash below)
-    "MD5": "md5",
-    "xxHash64": "xxhash64",
     "xxHash32": "crc32",
     "randCanonical": "rand",
     "generateUUIDv4": "uuid",
-    "isNull": "isnull",
-    "isNotNull": "isnotnull",
-    "ifNull": "nvl",
-    "nullIf": "nullif",
-    "coalesce": "coalesce",
-    "greatest": "greatest",
-    "least": "least",
-    "if": "if",
-    "toTypeName": "typeof",
     # aggregates
     "uniq": "approx_count_distinct",
-    "uniqHLL12": "approx_count_distinct",
-    "uniqCombined": "approx_count_distinct",
     "anyLast": "last",
-    "argMin": "min_by",
-    "argMax": "max_by",
-    "median": "median",
-    "stddevPop": "stddev_pop",
-    "stddevSamp": "stddev_samp",
-    "varPop": "var_pop",
-    "varSamp": "var_samp",
-    "covarPop": "covar_pop",
-    "covarSamp": "covar_samp",
-    "groupArray": "collect_list",
-    "groupUniqArray": "collect_set",
-    "groupBitAnd": "bit_and",
-    "groupBitOr": "bit_or",
-    "groupBitXor": "bit_xor",
 }
 
 # numeric-conversion targets (type-aware date/datetime handling in the call
@@ -145,6 +70,22 @@ _NUM_CONV_SPARK = {
     "toFloat32": "FLOAT", "toFloat64": "DOUBLE",
 }
 
+# avgWeighted(v, w), also under -If: rows where EITHER the value or the
+# weight is NULL are skipped entirely (Nullable combinator wrapping);
+# zero/absent total weight → nan (AggregateFunctionAvgWeighted: 0/0
+# division). {EMPTY} is the empty-set result, NULL or nan.
+_AVG_WEIGHTED = (
+    "(CASE WHEN sum(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL"
+    " THEN NULL ELSE CAST(({1}) AS DOUBLE) END) IS NULL"
+    " THEN {EMPTY}"
+    " WHEN sum(CASE WHEN ({0}) IS NULL THEN NULL"
+    " ELSE CAST(({1}) AS DOUBLE) END) = 0e0"
+    " THEN CAST('NaN' AS DOUBLE)"
+    " ELSE CAST(sum(({0}) * ({1})) AS DOUBLE)"
+    " / sum(CASE WHEN ({0}) IS NULL THEN NULL"
+    " ELSE CAST(({1}) AS DOUBLE) END) END)"
+)
+
 # --- argument templates: CH call → Spark SQL with {0},{1},... placeholders --
 TEMPLATES: dict[str, str] = {
     "intDiv": "(({0}) div ({1}))",
@@ -153,16 +94,9 @@ TEMPLATES: dict[str, str] = {
     "positiveModulo": "pmod({0}, abs({1}))",
     "negate": "(-({0}))",
     "toString": "CAST({0} AS STRING)",
-    "toInt8": "CAST({0} AS TINYINT)",
-    "toInt16": "CAST({0} AS SMALLINT)",
-    "toInt32": "CAST({0} AS INT)",
-    "toInt64": "CAST({0} AS BIGINT)",
     "toUInt8": "CAST({0} AS INT)",
     "toUInt16": "CAST({0} AS INT)",
     "toUInt32": "CAST({0} AS BIGINT)",
-    "toUInt64": "CAST({0} AS BIGINT)",
-    "toFloat32": "CAST({0} AS FLOAT)",
-    "toFloat64": "CAST({0} AS DOUBLE)",
     # Int128/256 carried as BIGINT: values beyond ±2^63 are documented
     # unsupported (SCALING.md; src/Core/Types.h wide integers) but the
     # in-range arithmetic the golden corpus exercises is exact
@@ -208,34 +142,17 @@ TEMPLATES: dict[str, str] = {
         "(CASE WHEN length(hex({0})) % 2 = 1 THEN concat('0', hex({0}))"
         " ELSE hex({0}) END)"
     ),
-    # arrayDistinct drops NULL elements (arrayDistinct.cpp: only
-    # non-default, non-NULL values are kept distinct)
-    "arrayDistinct": "array_distinct(filter({0}, __x -> __x IS NOT NULL))",
     # untuple(t) expands the tuple into one column per element
     # (FunctionUntuple) — Spark's inline generator over a 1-element array
     "untuple": "inline(array({0}))",
-    # best-effort datetime parsing: the reference token scanner is
-    # reimplemented in functions/besteffort.py (parseDateTimeBestEffort.cpp)
-    # and exposed through the chParseDT* pandas UDFs; see ARITY_TEMPLATES
-    "parseDateTimeBestEffort": None,
-    "parseDateTimeBestEffortOrNull": None,
-    "parseDateTimeBestEffortOrZero": None,
-    "parseDateTime64BestEffort": None,
-    "parseDateTime64BestEffortOrNull": None,
-    "parseDateTime64BestEffortOrZero": None,
     # 64-bit sub-second unix conversions (FunctionsConversion.h
     # fromUnixTimestamp64* / toUnixTimestamp64*)
     "fromUnixTimestamp64Milli": "timestamp_millis(CAST({0} AS BIGINT))",
     "fromUnixTimestamp64Micro": "timestamp_micros(CAST({0} AS BIGINT))",
     "fromUnixTimestamp64Nano": "timestamp_micros(CAST(({0}) DIV 1000 AS BIGINT))",
-    "toUnixTimestamp64Milli": "(unix_micros({0}) DIV 1000)",
-    "toUnixTimestamp64Micro": "unix_micros({0})",
-    "toUnixTimestamp64Nano": "(unix_micros({0}) * 1000)",
     # toTime: same time-of-day on the fixed date 1970-01-02
     # (DateTimeTransforms.h ToTimeImpl)
     "toTime": "timestamp_seconds(86400 + (unix_timestamp({0}) % 86400))",
-    "toDecimal64": "CAST({0} AS DECIMAL(18, {1}))",
-    "toDecimal128": "CAST({0} AS DECIMAL(38, {1}))",
     # toStartOfYear/Quarter/Month return Date whatever the input
     # (DateTimeTransforms.h) — Spark's date_trunc returns timestamp
     "toStartOfYear": "greatest(to_date(date_trunc('year', {0})), DATE '1970-01-01')",
@@ -251,51 +168,19 @@ TEMPLATES: dict[str, str] = {
     "toYYYYMMDD": "(year({0}) * 10000 + month({0}) * 100 + dayofmonth({0}))",
     "toDayOfWeek": "(((dayofweek({0}) + 5) % 7) + 1)",  # ISO: Mon=1..Sun=7
     "DAYOFWEEK": "(((dayofweek({0}) + 5) % 7) + 1)",  # MySQL alias, same ISO rule
-    "yesterday": "date_sub(current_date(), 1)",
     # Spark 4's builtin monthname() abbreviates ('Jan'); the reference
     # prints the full English name (DateLUTImpl months[])
     "monthName": "date_format({0}, 'MMMM')",
-    # NULL on empty/invalid/non-array input (JSONArrayLength.cpp returns
-    # Nullable; the registry builder's 0-default diverges)
-    "JSONArrayLength": "json_array_length({0})",
-    "JSON_ARRAY_LENGTH": "json_array_length({0})",
     # partition ID of a value (partitionId.cpp): numbers render decimal
     "partitionId": "CAST({0} AS STRING)",
     "plus": "(({0}) + ({1}))",
     "minus": "(({0}) - ({1}))",
     "multiply": "(({0}) * ({1}))",
-    "divide": "(CAST({0} AS DOUBLE) / {1})",
     "JSONExtractRaw": "get_json_object({0}, concat('$.', {1}))",
-    "visitParamExtractString": "get_json_object({0}, concat('$.', {1}))",
     # bit ops (src/Functions/bitAnd.cpp et al.)
-    "bitAnd": "({0} & {1})",
-    "bitOr": "({0} | {1})",
-    "bitXor": "({0} ^ {1})",
-    "bitNot": "(~{0})",
     "bitShiftLeft": "shiftleft({0}, CAST({1} AS INT))",
     "bitShiftRight": "shiftright({0}, CAST({1} AS INT))",
     "bitTest": "((shiftright({0}, CAST({1} AS INT)) & 1) = 1)",
-    "bitCount": "bit_count({0})",
-    "bitHammingDistance": "bit_count({0} ^ {1})",
-    "roundBankers": None,  # arity-dispatched: see ARITY_TEMPLATES
-    "exp2": "power(2, {0})",
-    "exp10": "power(10, {0})",
-    "e": "exp(1)",
-    "notLike": "(NOT ({0} LIKE {1}))",
-    "like": "({0} LIKE {1})",
-    # later map's keys win, FIRST map's key order is kept, new keys append
-    # (mapUpdate.cpp updates in place)
-    "mapUpdate": (
-        "map_from_entries(concat("
-        "transform(map_entries({0}), __e -> named_struct('key', __e.key,"
-        " 'value', IF(array_contains(map_keys({1}), __e.key),"
-        " try_element_at({1}, __e.key), __e.value))),"
-        " filter(map_entries({1}),"
-        " __e -> NOT array_contains(map_keys({0}), __e.key))))"
-    ),
-    "ilike": "({0} ILIKE {1})",
-    "notILike": "(NOT ({0} ILIKE {1}))",
-    "notILike": "(NOT ({0} ILIKE {1}))",
     "positionCaseInsensitive": "locate(lower({1}), lower({0}))",
     # the UTF8 variants count characters (positionUTF8.cpp) — exactly
     # Spark's locate; the plain variants count BYTES (see ARITY_TEMPLATES)
@@ -303,10 +188,6 @@ TEMPLATES: dict[str, str] = {
     "positionCaseInsensitiveUTF8": "locate(lower({1}), lower({0}))",
     "toQuarter": "quarter({0})",
     "timeSlot": "date_trunc('hour', {0})",
-    # identity / introspection shims
-    "materialize": "{0}",
-    "toNullable": "{0}",
-    "toLowCardinality": "{0}",
     # toFixedString pads to N with NUL bytes (FunctionToFixedString);
     # the golden TSV escaper prints them as \0 like writeEscapedString
     # byte-exact pad (CH pads bytes, rpad counts chars). Too-long input
@@ -319,9 +200,6 @@ TEMPLATES: dict[str, str] = {
         "(CASE WHEN octet_length({0}) > ({1}) THEN substr({0}, 1, {1})"
         " ELSE concat({0}, repeat(char(0), ({1}) - octet_length({0}))) END)"
     ),
-    # regexp replace (One-variant: Spark replaces all; documented divergence)
-    "replaceRegexpAll": "regexp_replace({0}, {1}, {2})",
-    "replaceRegexpOne": "regexp_replace({0}, {1}, {2})",
     # first literal occurrence only (ReplaceStringImpl replace_one): splice
     # at locate(); empty/missing needle leaves the haystack unchanged
     "replaceOne": (
@@ -329,16 +207,6 @@ TEMPLATES: dict[str, str] = {
         " ELSE concat(substr({0}, 1, locate({1}, {0}) - 1), {2},"
         " substr({0}, locate({1}, {0}) + length({1}))) END)"
     ),
-    "ignore": "(length(CAST({0} AS STRING)) * 0)",
-    "identity": "{0}",
-    # numeric classification
-    "isFinite": "(NOT isnan(CAST({0} AS DOUBLE)) AND abs(CAST({0} AS DOUBLE)) < double('Infinity'))",
-    "isInfinite": "(abs(CAST({0} AS DOUBLE)) = double('Infinity'))",
-    "isNaN": "isnan({0})",
-    # decimals with explicit scale
-    "toDecimal32": "CAST({0} AS DECIMAL(9, {1}))",
-    # misc string/array
-    "appendTrailingCharIfAbsent": "(CASE WHEN length({0}) = 0 OR endswith({0}, {1}) THEN {0} ELSE concat({0}, {1}) END)",
     # typeof() with Spark→ClickHouse type-name mapping (covers cast results;
     # ClickHouse literal-inference types like UInt8 are not recoverable)
     "toTypeName": (
@@ -350,27 +218,12 @@ TEMPLATES: dict[str, str] = {
         " WHEN 'timestamp' THEN 'DateTime' WHEN 'boolean' THEN 'Bool'"
         " ELSE typeof({0}) END)"
     ),
-    # negative size errors in CH (TOO_LARGE_ARRAY_SIZE), array_repeat gives []
-    "arrayWithConstant": (
-        "array_repeat({1}, CAST(CASE WHEN ({0}) < 0 THEN"
-        " raise_error('arrayWithConstant: negative size') ELSE ({0}) END"
-        " AS INT))"
-    ),
-    "tuple": None,  # variadic — handled specially (struct)
     # scheme-less URLs still parse (a missing protocol just reads empty —
     # protocol.cpp/path.cpp), so prepend one before java's URI parser
     "extractURLParameter": "parse_url({0}, 'QUERY', {1})",
     "domain": (
         "coalesce(parse_url(CASE WHEN ({0}) RLIKE '^[a-zA-Z][a-zA-Z0-9+.-]*://'"
         " THEN {0} ELSE concat('http://', {0}) END, 'HOST'), '')"
-    ),
-    "path": (
-        "coalesce(parse_url(CASE WHEN ({0}) RLIKE '^[a-zA-Z][a-zA-Z0-9+.-]*://'"
-        " THEN {0} ELSE concat('http://', {0}) END, 'PATH'), '')"
-    ),
-    "queryString": (
-        "coalesce(parse_url(CASE WHEN ({0}) RLIKE '^[a-zA-Z][a-zA-Z0-9+.-]*://'"
-        " THEN {0} ELSE concat('http://', {0}) END, 'QUERY'), '')"
     ),
     "protocol": "coalesce(parse_url({0}, 'PROTOCOL'), '')",
     # string semantics; for arrays use size()/cardinality (Spark type-checks
@@ -380,10 +233,7 @@ TEMPLATES: dict[str, str] = {
     # rewrite below — empty(unhex('00')) must be 0 here
     "empty": "(coalesce(length({0}), 0) = 0)",
     "notEmpty": "(coalesce(length({0}), 0) > 0)",
-    "has": "array_contains({0}, {1})",
     "indexOf": "array_position({0}, {1})",
-    "arrayElement": "element_at({0}, {1})",
-    "arraySlice": "slice({0}, {1}, {2})",
     # consecutive-duplicate removal (arrayCompact.cpp), NOT array_distinct:
     # [1,2,1] keeps all three; the reference compares binary reps, so
     # same-bit nan runs collapse too — Spark's <=> matches except for the
@@ -393,8 +243,6 @@ TEMPLATES: dict[str, str] = {
         " OR NOT (__x <=> element_at({0}, greatest(__i, 1))))"
     ),
     "arrayUniq": "size(array_distinct({0}))",
-    "arrayStringConcat": "array_join({0}, {1})",
-    "arraySum": "aggregate({0}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)",
     # -Array agg combinators (AggregateFunctionArray.cpp): aggregate over
     # all array elements of all rows
     "sumArray": "sum(aggregate({0}, CAST(0 AS DOUBLE), (acc, x) -> acc + x))",
@@ -405,60 +253,17 @@ TEMPLATES: dict[str, str] = {
     "minArray": "min(array_min({0}))",
     "maxArray": "max(array_max({0}))",
     "avgArray": "(sum(aggregate({0}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)) / sum(size({0})))",
-    "arrayAvg": "(aggregate({0}, CAST(0 AS DOUBLE), (acc, x) -> acc + x) / size({0}))",
-    "arrayMin": "array_min({0})",
-    "arrayMax": "array_max({0})",
     "arrayCount": "size(filter({0}, x -> x is not null and x != 0))",
     "JSONExtractString": "get_json_object({0}, concat('$.', {1}))",
     "JSONExtractInt": "CAST(get_json_object({0}, concat('$.', {1})) AS BIGINT)",
     "JSONExtractFloat": "CAST(get_json_object({0}, concat('$.', {1})) AS DOUBLE)",
     "JSONExtractBool": "CAST(get_json_object({0}, concat('$.', {1})) AS BOOLEAN)",
     "JSONHas": "(get_json_object({0}, concat('$.', {1})) IS NOT NULL)",
-    "SHA256": "sha2({0}, 256)",
-    "SHA512": "sha2({0}, 512)",
     "rand": "CAST(rand(42) * 4294967296 AS BIGINT)",  # seeded: CH CSE makes rand()=rand() true
     "rand64": "CAST(rand(43) * 9.223372036854776e18 AS BIGINT)",
-    "assumeNotNull": "coalesce({0})",
     "any": "first({0}, true)",
     "countDistinct": "count(DISTINCT {0})",
     "uniqExact": "count(DISTINCT {0})",
-    # rows where EITHER the value or the weight is NULL are skipped
-    # entirely (Nullable combinator wrapping); zero/absent total weight
-    # → nan (AggregateFunctionAvgWeighted: 0/0 division)
-    "avgWeighted": (
-        "(CASE WHEN sum(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL"
-        " THEN NULL ELSE CAST(({1}) AS DOUBLE) END) IS NULL"
-        " THEN {EMPTY}"
-        " WHEN sum(CASE WHEN ({0}) IS NULL THEN NULL"
-        " ELSE CAST(({1}) AS DOUBLE) END) = 0e0"
-        " THEN CAST('NaN' AS DOUBLE)"
-        " ELSE CAST(sum(({0}) * ({1})) AS DOUBLE)"
-        " / sum(CASE WHEN ({0}) IS NULL THEN NULL"
-        " ELSE CAST(({1}) AS DOUBLE) END) END)"
-    ),
-    # countIf counts non-zero (AggregateFunctionIf); CAST covers numeric args
-    "sumIf": "sum(CASE WHEN {1} THEN {0} END)",
-    "avgIf": "avg(CASE WHEN {1} THEN {0} END)",
-    "minIf": "min(CASE WHEN {1} THEN {0} END)",
-    "maxIf": "max(CASE WHEN {1} THEN {0} END)",
-    "runningDifference": "({0} - lag({0}) OVER (ORDER BY monotonically_increasing_id()))",
-    "multiIf": None,  # variadic — handled specially
-    "transform": None,  # (x, from_arr, to_arr, default) — handled specially
-    # -State / -Merge combinators (AggregateFunctionState.cpp /
-    # AggregateFunctionMerge.cpp): partial states as storable column values.
-    # uniqState is a Datasketches HLL binary (constant-size, mergeable).
-    "countState": "count({0})",
-    "countMerge": "sum({0})",
-    "sumState": "sum({0})",
-    "sumMerge": "sum({0})",
-    "minState": "min({0})",
-    "minMerge": "min({0})",
-    "maxState": "max({0})",
-    "maxMerge": "max({0})",
-    "avgState": "struct(sum({0}) AS sum, count({0}) AS cnt)",
-    "avgMerge": "(sum({0}.sum) / sum({0}.cnt))",
-    "uniqExactState": "collect_set({0})",
-    "uniqExactMerge": "size(array_distinct(flatten(collect_list({0}))))",
     # uniqState/Merge use the exact array carrier: the reference's uniq is
     # EXACT below ~4096 distinct (HyperLogLogWithSmallSetOptimization), so
     # golden-scale results only match the exact form; the sketch tier for
@@ -515,8 +320,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
         2: "count(CASE WHEN {1} THEN {0} END)",
     },
     "ignore": {0: "0", 1: "(length(CAST({0} AS STRING)) * 0)"},
-    # roundBankers scale argument (FunctionsRound.h: optional, default 0)
-    "roundBankers": {1: "bround({0})", 2: "bround({0}, {1})"},
     # DateTime display time zones: the reference renders a DateTime in its
     # column zone; the session is pinned UTC, so a non-UTC zone becomes a
     # wall-clock shift (convert_timezone matches DateLUT incl. historic
@@ -659,9 +462,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
         2: "coalesce(chParseDT64BestEffortUSOrNull({0}, {1}, 'UTC'), timestamp_seconds(0))",
         3: "coalesce(chParseDT64BestEffortUSOrNull({0}, {1}, {2}), timestamp_seconds(0))",
     },
-    # 2-arg arraySlice runs to the end; 1-arg arrayStringConcat joins with ''
-    "arraySlice": {2: "slice({0}, {1}, size({0}))"},
-    "arrayStringConcat": {1: "array_join({0}, '')"},
     # bare parametric-aggregate forms default to level 0.5
     # (AggregateFunctionQuantile.h: params optional)
     "quantile": {1: "coalesce(percentile({0}, 0.5), double('NaN'))"},
@@ -713,14 +513,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
         3: "count(DISTINCT {0}, {1}, {2})",
         4: "count(DISTINCT {0}, {1}, {2}, {3})",
     },
-    "uniqHLL12": {
-        2: "approx_count_distinct(struct({0}, {1}))",
-        3: "approx_count_distinct(struct({0}, {1}, {2}))",
-    },
-    "uniqCombined": {
-        2: "approx_count_distinct(struct({0}, {1}))",
-        3: "approx_count_distinct(struct({0}, {1}, {2}))",
-    },
     # default precision 12 (geohashEncode.cpp); the 3-arg form resolves to
     # the registered SQL pandas UDF (functions/sql_udfs.py)
     "geohashEncode": {2: "geohashEncode({0}, {1}, 12)"},
@@ -733,7 +525,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
     # coalesce; count needs the nullif
     "countOrNull": {0: "nullif(count(*), 0)", 1: "nullif(count({0}), 0)"},
     "countOrDefault": {0: "count(*)", 1: "count({0})"},
-    "sumOrNull": {1: "sum({0})"},
     "minOrNull": {1: "min({0})"},
     "maxOrNull": {1: "max({0})"},
     "avgOrNull": {1: "avg({0})"},
@@ -1088,7 +879,7 @@ def ch_type_to_spark(t: str) -> str:
         if len(parts) >= 2:
             return ch_type_to_spark(", ".join(parts[1:]) if len(parts) > 2 else parts[1])
     # AggregateFunction(agg, T…) partial-state columns: the carrier Spark
-    # type must match what the -State TEMPLATES produce (collect_set array
+    # type must match what the -State renderings produce (collect_set array
     # for groupBitmap/uniqExact, hll sketch binary for uniq, plain values
     # for sum/min/max/any, (sum, cnt) struct for avg)
     m = re.match(r"AggregateFunction\s*\((.*)\)$", t, re.IGNORECASE | re.DOTALL)
@@ -1580,6 +1371,34 @@ def _alias_backref_tokens(tokens: list[str], upto: int, ident: str) -> list[str]
 _BRIDGE_CACHE: dict[tuple[str, int], str | None] = {}
 _SPARK_BUILTINS: set[str] | None = None
 
+# The session registry calls render on and catalog UDFs register on. ch_sql,
+# apply_fill, parse_fill_query and create_sql_function bind the session they
+# run on; only an unbound translate() falls back to the active session,
+# which a new thread does not have.
+_SESSION: contextvars.ContextVar = contextvars.ContextVar("_SESSION", default=None)
+
+
+@contextlib.contextmanager
+def _on_session(spark):
+    """Bind ``spark`` for the translation inside the block (None: no-op)."""
+    if spark is None:
+        yield
+        return
+    token = _SESSION.set(spark)
+    try:
+        yield
+    finally:
+        _SESSION.reset(token)
+
+
+def _session():
+    spark = _SESSION.get()
+    if spark is None:
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.getActiveSession()
+    return spark
+
 
 def _spark_builtins(spark) -> set[str]:
     """Names Spark resolves without the bridge: its built-ins plus the
@@ -1597,22 +1416,17 @@ def _spark_builtins(spark) -> set[str]:
 _CALL_NAME_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
 
 
-def _ensure_udfs(sql: str, spark=None) -> str:
-    """Register on ``spark`` the catalog UDFs that ``sql`` calls. translate()
-    passes no session and registers on the active one, if any: its output is
-    text, and ch_sql and create_sql_function register on the session that
-    runs it."""
+def _ensure_udfs(sql: str) -> str:
+    """Register the catalog UDFs that ``sql`` calls on the bound session
+    (``_session``); with none, leave the text unregistered."""
     from clickhouse_23_3_19_32_lts_spark.functions.catalog import (
         catalog_names,
         ensure_udfs,
     )
 
     names = catalog_names(_CALL_NAME_RE.findall(sql))
-    if names and spark is None:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-    if names and spark is not None:
+    spark = _session() if names else None
+    if spark is not None:
         ensure_udfs(spark, names)
     return sql
 
@@ -1717,6 +1531,8 @@ def _render_call(spark, builder, args) -> str | None:
     try:
         col = builder(*args)
         sql = spark._jsparkSession.expression(col._jc).sql()
+        if "Column<" in sql:
+            return None  # a builder formatted a Column into a literal
         if "lambdafunction" in sql:
             sql = _fix_lambdas(_tokenize_spark(sql))
         spark._jsparkSession.sessionState().sqlParser().parseExpression(sql)
@@ -1749,15 +1565,19 @@ def _avgw_nullable(val_args, rewritten) -> bool:
     ))
 
 
+def _registry() -> dict:
+    """The function registry, or {} while the package is still importing."""
+    try:
+        from clickhouse_23_3_19_32_lts_spark.functions import REGISTRY
+    except ImportError:  # circular import during bootstrap
+        return {}
+    return REGISTRY
+
+
 def _registry_bridge(fname: str, arg_sql: list[str]) -> str | None:
     """SQL fragment for a registry function call, or None to fall through."""
-    try:
-        from pyspark.sql import SparkSession
-
-        from clickhouse_23_3_19_32_lts_spark.functions.registry import REGISTRY
-    except Exception:  # noqa: BLE001 — circular import during bootstrap
-        return None
-    spark = SparkSession.getActiveSession()
+    REGISTRY = _registry()
+    spark = _session()
     if spark is None or fname not in REGISTRY:
         return None
     if fname.lower() in _spark_builtins(spark):
@@ -3020,7 +2840,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 for a in _aw0
             ]
             out.append(_fill_template(
-                TEMPLATES["avgWeighted"].replace(
+                _AVG_WEIGHTED.replace(
                     "{EMPTY}",
                     "CAST(NULL AS DOUBLE)" if _nul else "CAST('NaN' AS DOUBLE)",
                 ),
@@ -3035,7 +2855,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             _aw = [_rewrite(a) for a in args]
             _nul = _avgw_nullable(args, _aw)
             out.append(_fill_template(
-                TEMPLATES["avgWeighted"].replace(
+                _AVG_WEIGHTED.replace(
                     "{EMPTY}",
                     "CAST(NULL AS DOUBLE)" if _nul else "CAST('NaN' AS DOUBLE)",
                 ),
@@ -3122,7 +2942,8 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
         # cond) aggregates only rows where cond — rewrite to the base
         # aggregate over if(cond, arg, NULL) in CH space and reprocess, so
         # the base function's own translation machinery applies. Explicitly
-        # mapped combinators (sumIf, countIf, …) keep their entries.
+        # mapped combinators (sumIf, countIf, …) keep their entries; a
+        # registry base applies unless the registry defines the -If name.
         if (
             t.endswith("If")
             and len(t) > 2
@@ -3135,6 +2956,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 t[:-2] in NAME_MAP
                 or t[:-2] in TEMPLATES
                 or (t[:-2] in ARITY_TEMPLATES and len(args) - 1 in ARITY_TEMPLATES[t[:-2]])
+                or (t[:-2] in _registry() and t not in _registry())
             )
         ):
             base = t[:-2]
@@ -7114,6 +6936,7 @@ def translate(
     dt_best_effort: bool = False,
     table_schemas: "dict[str, list] | None" = None,
     table_sampling: "dict[str, tuple] | None" = None,
+    spark=None,
 ) -> str:
     """ClickHouse SQL → Spark SQL. Raises ChSqlError on constructs that need
     the library operators instead (INTERPOLATE, multi-column WITH FILL,
@@ -7128,7 +6951,10 @@ def translate(
     nullable_cols: column names declared Nullable(...) in the statement's
     tables — empty-set rewrites that only apply to non-Nullable arguments
     (avg/median NaN) are skipped when the argument references one, since
-    ClickHouse returns NULL, not NaN, for Nullable empty sets."""
+    ClickHouse returns NULL, not NaN, for Nullable empty sets.
+    spark: the session that will run the result; registry calls render on
+    it and catalog UDFs register on it. Unset, the caller's binding
+    (ch_sql) or else the active session is used."""
     global _SAFE_SUBSCRIPT, _INLINE_SELECT_ALIASES, _NULLABLE_COLS
     global _LENGTH_AS_SIZE, _TOTALS_MARKER, _COL_CH_TYPES, _DT_BEST_EFFORT
     global _DECLARED_CH_TYPES
@@ -7152,17 +6978,18 @@ def translate(
     _LENGTH_AS_SIZE = length_as_size
     _TOTALS_MARKER = totals_marker
     try:
-        res = _translate_impl(ch_sql)
-        # late placeholder: internal grouping() markers inserted by the
-        # totals/rollup rewrites, shielded from the GROUPING-compat pass
-        res = res.replace("__ch_grouping__(", "grouping(")
-        if bool_ops:
-            # retry mode: numeric-truthiness operands under infix AND/OR/NOT
-            res = _wrap_logical_operands(res)
-        res = _wrap_case_conditions(res)
-        if re.search(r"(?i)\bORDER\s+BY\b", res):
-            res = _order_by_nulls(res)
-        return _ensure_udfs(res)
+        with _on_session(spark):
+            res = _translate_impl(ch_sql)
+            # late placeholder: internal grouping() markers inserted by the
+            # totals/rollup rewrites, shielded from the GROUPING-compat pass
+            res = res.replace("__ch_grouping__(", "grouping(")
+            if bool_ops:
+                # retry mode: numeric-truthiness operands under infix AND/OR/NOT
+                res = _wrap_logical_operands(res)
+            res = _wrap_case_conditions(res)
+            if re.search(r"(?i)\bORDER\s+BY\b", res):
+                res = _order_by_nulls(res)
+            return _ensure_udfs(res)
     finally:
         _SAFE_SUBSCRIPT = prev
         _INLINE_SELECT_ALIASES = prev2
@@ -8237,10 +8064,10 @@ def ch_sql(spark, query: str):
     """Run a ClickHouse-dialect query on Spark: translate + execute. WITH
     FILL shapes beyond translate()'s single-column SQL rewrite run through
     the DataFrame fill operator."""
-    parsed = parse_fill_query(query)
+    parsed = parse_fill_query(query, spark)
     if parsed is not None:
         return apply_fill(spark, parsed)
-    return spark.sql(_ensure_udfs(translate(query), spark))
+    return spark.sql(translate(query, spark=spark))
 
 
 # --- WITH FILL full surface: parse to the DataFrame operator ----------------
@@ -8266,10 +8093,16 @@ def _expr_sql(ch_expr: str) -> str:
     return _ensure_udfs(_rewrite(_rewrite_ternary_tokens(_tokenize(ch_expr))))
 
 
-def parse_fill_query(ch_sql_text: str):
+def parse_fill_query(ch_sql_text: str, spark=None):
     """None, or a dict describing a WITH FILL query for the DF operator:
     {inner, items: [(col, desc, from_sql, to_sql, step_spec)], tail_order,
-    interpolate, limit}. step_spec is (value, unit|None)."""
+    interpolate, limit}. step_spec is (value, unit|None). The fill bounds,
+    steps and INTERPOLATE constants are rendered for ``spark``."""
+    with _on_session(spark):
+        return _parse_fill_query(ch_sql_text)
+
+
+def _parse_fill_query(ch_sql_text: str):
     s = _strip_block_comments(ch_sql_text).strip().rstrip(";")
     s = _FORMAT_TAIL.sub("", s)
     s = _SETTINGS_TAIL.sub("", s)
@@ -8423,16 +8256,17 @@ def apply_fill(spark, parsed):
         # WITH FILL inside a subquery: fill the inner scope, splice the
         # result back as a temp view, run the outer query normally
         before, inner, after = parsed["sub"]
-        sub = parse_fill_query(inner)
+        sub = parse_fill_query(inner, spark)
         if sub is None or "sub" in sub:
             raise ChSqlError("WITH FILL subquery shape needs operators.with_fill")
         apply_fill(spark, sub).createOrReplaceTempView("__fill_sub")
         outer = before + " SELECT * FROM __fill_sub " + after
-        return spark.sql(_ensure_udfs(translate(outer), spark))
+        return spark.sql(translate(outer, spark=spark))
 
     # the fill bounds, steps and INTERPOLATE constants are SQL fragments
-    _ensure_udfs(repr(parsed), spark)
-    df = spark.sql(_ensure_udfs(translate(parsed["inner"]), spark))
+    with _on_session(spark):
+        _ensure_udfs(repr(parsed))
+    df = spark.sql(translate(parsed["inner"], spark=spark))
     dtypes = dict(df.dtypes)
     items = []
     for col_name, desc, frm_sql, to_sql, step_spec in parsed["items"]:

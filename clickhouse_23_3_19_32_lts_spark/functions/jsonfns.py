@@ -38,12 +38,12 @@ def _path(*keys) -> str:
 
 
 @chfn("JSONExtractString")
-def JSONExtractString(j, *keys) -> Column:
+def JSONExtractString(j, *keys: str | int) -> Column:
     return F.get_json_object(col(j), _path(*keys))
 
 
 @chfn("JSONExtractInt", "JSONExtractUInt")
-def JSONExtractInt(j, *keys) -> Column:
+def JSONExtractInt(j, *keys: str | int) -> Column:
     return F.get_json_object(col(j), _path(*keys)).cast("long")
 
 
@@ -51,22 +51,22 @@ JSONExtractUInt = JSONExtractInt
 
 
 @chfn("JSONExtractFloat")
-def JSONExtractFloat(j, *keys) -> Column:
+def JSONExtractFloat(j, *keys: str | int) -> Column:
     return F.get_json_object(col(j), _path(*keys)).cast("double")
 
 
 @chfn("JSONExtractBool")
-def JSONExtractBool(j, *keys) -> Column:
+def JSONExtractBool(j, *keys: str | int) -> Column:
     return F.get_json_object(col(j), _path(*keys)).cast("boolean")
 
 
 @chfn("JSONExtractRaw")
-def JSONExtractRaw(j, *keys) -> Column:
+def JSONExtractRaw(j, *keys: str | int) -> Column:
     return F.get_json_object(col(j), _path(*keys))
 
 
 @chfn("JSONExtractArrayRaw")
-def JSONExtractArrayRaw(j, *keys) -> Column:
+def JSONExtractArrayRaw(j, *keys: str | int) -> Column:
     """Array elements as raw JSON strings."""
     return F.from_json(
         F.get_json_object(col(j), _path(*keys)), "array<string>"
@@ -74,18 +74,18 @@ def JSONExtractArrayRaw(j, *keys) -> Column:
 
 
 @chfn("JSONExtractKeys")
-def JSONExtractKeys(j, *keys) -> Column:
+def JSONExtractKeys(j, *keys: str | int) -> Column:
     target = F.get_json_object(col(j), _path(*keys)) if keys else col(j)
     return F.json_object_keys(target)
 
 
 @chfn("JSONHas")
-def JSONHas(j, *keys) -> Column:
+def JSONHas(j, *keys: str | int) -> Column:
     return F.get_json_object(col(j), _path(*keys)).isNotNull()
 
 
 @chfn("JSONLength")
-def JSONLength(j, *keys) -> Column:
+def JSONLength(j, *keys: str | int) -> Column:
     target = F.get_json_object(col(j), _path(*keys)) if keys else col(j)
     return F.coalesce(
         F.json_array_length(target),
@@ -94,7 +94,7 @@ def JSONLength(j, *keys) -> Column:
 
 
 @chfn("JSONType")
-def JSONType(j, *keys) -> Column:
+def JSONType(j, *keys: str | int) -> Column:
     v = F.get_json_object(col(j), _path(*keys)) if keys else col(j)
     t = F.trim(v)
     return (

@@ -745,41 +745,41 @@ def _iv_str(interval) -> str:
 
 
 @chfn("tumble")
-def tumble(ts, interval) -> Column:
+def tumble(ts, interval: str) -> Column:
     """window(ts, interval) struct — (start, end), end-exclusive, exactly
     Spark's tumbling window."""
     return F.window(col(ts), _iv_str(interval).replace("INTERVAL ", ""))
 
 
 @chfn("tumbleStart")
-def tumbleStart(ts, interval) -> Column:
+def tumbleStart(ts, interval: str) -> Column:
     return tumble(ts, interval)["start"]
 
 
 @chfn("tumbleEnd")
-def tumbleEnd(ts, interval) -> Column:
+def tumbleEnd(ts, interval: str) -> Column:
     return tumble(ts, interval)["end"]
 
 
 @chfn("hop")
-def hop(ts, slide, size) -> Column:
+def hop(ts, slide: str, size: str) -> Column:
     return F.window(
         col(ts), _iv_str(size).replace("INTERVAL ", ""), _iv_str(slide).replace("INTERVAL ", "")
     )
 
 
 @chfn("hopStart")
-def hopStart(ts, slide, size) -> Column:
+def hopStart(ts, slide: str, size: str) -> Column:
     return hop(ts, slide, size)["start"]
 
 
 @chfn("hopEnd")
-def hopEnd(ts, slide, size) -> Column:
+def hopEnd(ts, slide: str, size: str) -> Column:
     return hop(ts, slide, size)["end"]
 
 
 @chfn("windowID")
-def windowID(ts, *args) -> Column:
+def windowID(ts, *args: str) -> Column:
     """Window identifier = epoch seconds of the (tumble) window end."""
     w = tumble(ts, args[0]) if len(args) == 1 else hop(ts, args[0], args[1])
     return F.unix_timestamp(w["end"])

@@ -23,6 +23,7 @@ from pyspark.sql.functions import pandas_udf
 from clickhouse_23_3_19_32_lts_spark.dialect import (
     ChSqlError,
     _ensure_udfs,
+    _on_session,
     _rewrite,
     _tokenize,
 )
@@ -50,7 +51,8 @@ def create_sql_function(
         raise ChSqlError(f"not a CREATE FUNCTION ... AS (args) -> body statement: {ddl!r}")
     name = m.group("name")
     params = [p.strip() for p in m.group("params").split(",") if p.strip()]
-    body = _ensure_udfs(_rewrite(_tokenize(m.group("body"))), spark)
+    with _on_session(spark):
+        body = _ensure_udfs(_rewrite(_tokenize(m.group("body"))))
     types = param_types or {}
     sig = ", ".join(f"{p} {types.get(p, 'DOUBLE')}" for p in params)
     spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) RETURN {body}")

@@ -46,7 +46,7 @@ class _Timeout(Exception):
 def _fresh_spark(tag: str):
     """Build a brand-new session, dropping any cached singletons so a JVM
     killed by a previous pathological test cannot poison the rest of the
-    chunk (same self-healing protocol as tools/golden_scan_shard.py)."""
+    chunk."""
     from pyspark.sql import SparkSession
 
     from clickhouse_23_3_19_32_lts_spark.session import get_spark

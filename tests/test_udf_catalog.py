@@ -8,6 +8,7 @@ import json
 import os
 import subprocess
 import sys
+import weakref
 
 import pytest
 
@@ -95,13 +96,26 @@ def test_registration_is_per_session(spark):
 
 def test_memo_dies_with_its_session(spark):
     """The memo holds no entry for a dead session, so a later session that
-    reuses its id() starts unregistered."""
+    reuses its id() starts unregistered.
+
+    pyspark's RDD.toDF closes over the newest SparkSession object, so each
+    new session stays alive until another is built; pointing toDF back at
+    the fixture's session frees it. The gc.collect() before counting lets
+    sessions earlier tests left in reference cycles die first, so the count
+    moves only with ``other``."""
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    _monkey_patch_RDD(spark)
+    gc.collect()
     before = len(catalog._REGISTERED)
     other = spark.newSession()
     catalog.ensure_udfs(other, ["geoToS2"])
     assert len(catalog._REGISTERED) == before + 1
+    dead = weakref.ref(other)
     del other
+    _monkey_patch_RDD(spark)
     gc.collect()
+    assert dead() is None
     assert len(catalog._REGISTERED) == before
 
 

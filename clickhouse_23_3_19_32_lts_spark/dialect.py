@@ -48,14 +48,11 @@ NAME_MAP: dict[str, str] = {
     "base64Decode": "unbase64",
     # arrays
     "arraysOverlap": "arrays_overlap",
-    "arrayShuffle": "shuffle",
     # json
     "JSONLength": "json_array_length",
     # hash / misc (cityHash64/sipHash64/murmur*/halfMD5 render bit-exact via
     # the ch_*_elem/_comb pandas UDFs — see _render_exact_hash below)
     "xxHash32": "crc32",
-    "randCanonical": "rand",
-    "generateUUIDv4": "uuid",
     # aggregates
     "uniq": "approx_count_distinct",
     "anyLast": "last",
@@ -1372,18 +1369,15 @@ _BRIDGE_CACHE: dict[tuple[str, int], str | None] = {}
 _SPARK_BUILTINS: set[str] | None = None
 
 # The session registry calls render on and catalog UDFs register on. ch_sql,
-# apply_fill, parse_fill_query and create_sql_function bind the session they
-# run on; only an unbound translate() falls back to the active session,
-# which a new thread does not have.
+# apply_fill and create_sql_function bind the session they run on; only an
+# unbound translate() falls back to the active session, which a new thread
+# does not have.
 _SESSION: contextvars.ContextVar = contextvars.ContextVar("_SESSION", default=None)
 
 
 @contextlib.contextmanager
 def _on_session(spark):
-    """Bind ``spark`` for the translation inside the block (None: no-op)."""
-    if spark is None:
-        yield
-        return
+    """Bind ``spark`` for the translation inside the block."""
     token = _SESSION.set(spark)
     try:
         yield
@@ -1597,13 +1591,15 @@ def _registry_bridge(fname: str, arg_sql: list[str]) -> str | None:
             # so a transient JVM/socket failure would otherwise poison this
             # (name, arity) for the rest of the process — long scans then
             # report registered functions as UNRESOLVED_ROUTINE
-            tpl = _render_call(
-                spark, builder, [F.col(f"__dlt_a{j}") for j in range(len(arg_sql))]
-            )
-            if tpl is not None:
+            placeholders = [F.col(f"__dlt_a{j}") for j in range(len(arg_sql))]
+            tpl = _render_call(spark, builder, placeholders)
+            if tpl is None:
+                return None
+            # nor a random one: a builder that draws a seed renders a new
+            # text each time, and a cached text would replay its draws in
+            # every query
+            if _render_call(spark, builder, placeholders) == tpl:
                 _BRIDGE_CACHE[key] = tpl
-        if tpl is None:
-            return None
         for j, a in enumerate(arg_sql):
             # lambda repl: arg SQL may contain backslashes (regex literals)
             tpl = re.sub(rf"\b__dlt_a{j}\b", lambda _m, a=a: f"({a})", tpl)
@@ -6936,7 +6932,6 @@ def translate(
     dt_best_effort: bool = False,
     table_schemas: "dict[str, list] | None" = None,
     table_sampling: "dict[str, tuple] | None" = None,
-    spark=None,
 ) -> str:
     """ClickHouse SQL → Spark SQL. Raises ChSqlError on constructs that need
     the library operators instead (INTERPOLATE, multi-column WITH FILL,
@@ -6952,9 +6947,8 @@ def translate(
     tables — empty-set rewrites that only apply to non-Nullable arguments
     (avg/median NaN) are skipped when the argument references one, since
     ClickHouse returns NULL, not NaN, for Nullable empty sets.
-    spark: the session that will run the result; registry calls render on
-    it and catalog UDFs register on it. Unset, the caller's binding
-    (ch_sql) or else the active session is used."""
+    Registry calls render, and catalog UDFs register, on the session that
+    ch_sql/apply_fill bound (_on_session); unbound, on the active one."""
     global _SAFE_SUBSCRIPT, _INLINE_SELECT_ALIASES, _NULLABLE_COLS
     global _LENGTH_AS_SIZE, _TOTALS_MARKER, _COL_CH_TYPES, _DT_BEST_EFFORT
     global _DECLARED_CH_TYPES
@@ -6978,18 +6972,17 @@ def translate(
     _LENGTH_AS_SIZE = length_as_size
     _TOTALS_MARKER = totals_marker
     try:
-        with _on_session(spark):
-            res = _translate_impl(ch_sql)
-            # late placeholder: internal grouping() markers inserted by the
-            # totals/rollup rewrites, shielded from the GROUPING-compat pass
-            res = res.replace("__ch_grouping__(", "grouping(")
-            if bool_ops:
-                # retry mode: numeric-truthiness operands under infix AND/OR/NOT
-                res = _wrap_logical_operands(res)
-            res = _wrap_case_conditions(res)
-            if re.search(r"(?i)\bORDER\s+BY\b", res):
-                res = _order_by_nulls(res)
-            return _ensure_udfs(res)
+        res = _translate_impl(ch_sql)
+        # late placeholder: internal grouping() markers inserted by the
+        # totals/rollup rewrites, shielded from the GROUPING-compat pass
+        res = res.replace("__ch_grouping__(", "grouping(")
+        if bool_ops:
+            # retry mode: numeric-truthiness operands under infix AND/OR/NOT
+            res = _wrap_logical_operands(res)
+        res = _wrap_case_conditions(res)
+        if re.search(r"(?i)\bORDER\s+BY\b", res):
+            res = _order_by_nulls(res)
+        return _ensure_udfs(res)
     finally:
         _SAFE_SUBSCRIPT = prev
         _INLINE_SELECT_ALIASES = prev2
@@ -8063,11 +8056,12 @@ def _translate_impl(ch_sql: str) -> str:
 def ch_sql(spark, query: str):
     """Run a ClickHouse-dialect query on Spark: translate + execute. WITH
     FILL shapes beyond translate()'s single-column SQL rewrite run through
-    the DataFrame fill operator."""
-    parsed = parse_fill_query(query, spark)
-    if parsed is not None:
-        return apply_fill(spark, parsed)
-    return spark.sql(translate(query, spark=spark))
+    the DataFrame fill operator. Registry calls render on ``spark``."""
+    with _on_session(spark):
+        parsed = parse_fill_query(query)
+        if parsed is not None:
+            return apply_fill(spark, parsed)
+        return spark.sql(translate(query))
 
 
 # --- WITH FILL full surface: parse to the DataFrame operator ----------------
@@ -8093,16 +8087,10 @@ def _expr_sql(ch_expr: str) -> str:
     return _ensure_udfs(_rewrite(_rewrite_ternary_tokens(_tokenize(ch_expr))))
 
 
-def parse_fill_query(ch_sql_text: str, spark=None):
+def parse_fill_query(ch_sql_text: str):
     """None, or a dict describing a WITH FILL query for the DF operator:
     {inner, items: [(col, desc, from_sql, to_sql, step_spec)], tail_order,
-    interpolate, limit}. step_spec is (value, unit|None). The fill bounds,
-    steps and INTERPOLATE constants are rendered for ``spark``."""
-    with _on_session(spark):
-        return _parse_fill_query(ch_sql_text)
-
-
-def _parse_fill_query(ch_sql_text: str):
+    interpolate, limit}. step_spec is (value, unit|None)."""
     s = _strip_block_comments(ch_sql_text).strip().rstrip(";")
     s = _FORMAT_TAIL.sub("", s)
     s = _SETTINGS_TAIL.sub("", s)
@@ -8252,93 +8240,93 @@ def apply_fill(spark, parsed):
         fill_grid,
     )
 
-    if "sub" in parsed:
-        # WITH FILL inside a subquery: fill the inner scope, splice the
-        # result back as a temp view, run the outer query normally
-        before, inner, after = parsed["sub"]
-        sub = parse_fill_query(inner, spark)
-        if sub is None or "sub" in sub:
-            raise ChSqlError("WITH FILL subquery shape needs operators.with_fill")
-        apply_fill(spark, sub).createOrReplaceTempView("__fill_sub")
-        outer = before + " SELECT * FROM __fill_sub " + after
-        return spark.sql(translate(outer, spark=spark))
-
-    # the fill bounds, steps and INTERPOLATE constants are SQL fragments
     with _on_session(spark):
+        if "sub" in parsed:
+            # WITH FILL inside a subquery: fill the inner scope, splice the
+            # result back as a temp view, run the outer query normally
+            before, inner, after = parsed["sub"]
+            sub = parse_fill_query(inner)
+            if sub is None or "sub" in sub:
+                raise ChSqlError("WITH FILL subquery shape needs operators.with_fill")
+            apply_fill(spark, sub).createOrReplaceTempView("__fill_sub")
+            outer = before + " SELECT * FROM __fill_sub " + after
+            return spark.sql(translate(outer))
+
+        # the fill bounds, steps and INTERPOLATE constants are SQL fragments
         _ensure_udfs(repr(parsed))
-    df = spark.sql(translate(parsed["inner"], spark=spark))
-    dtypes = dict(df.dtypes)
-    items = []
-    for col_name, desc, frm_sql, to_sql, step_spec in parsed["items"]:
-        if col_name.isdigit():
-            col_name = df.columns[int(col_name) - 1]
-        dt = dtypes.get(col_name, "double")
-        is_time = dt == "date" or dt.startswith("timestamp")
-        step, cal = None, None
-        if step_spec is not None:
-            val, unit = step_spec
-            if unit == "EXPR":
-                # constant expression: evaluate once on the driver
-                got = spark.sql(f"SELECT ({val})").collect()[0][0]
-                import datetime as _dtm
-                import decimal as _dec
+        df = spark.sql(translate(parsed["inner"]))
+        dtypes = dict(df.dtypes)
+        items = []
+        for col_name, desc, frm_sql, to_sql, step_spec in parsed["items"]:
+            if col_name.isdigit():
+                col_name = df.columns[int(col_name) - 1]
+            dt = dtypes.get(col_name, "double")
+            is_time = dt == "date" or dt.startswith("timestamp")
+            step, cal = None, None
+            if step_spec is not None:
+                val, unit = step_spec
+                if unit == "EXPR":
+                    # constant expression: evaluate once on the driver
+                    got = spark.sql(f"SELECT ({val})").collect()[0][0]
+                    import datetime as _dtm
+                    import decimal as _dec
 
-                if isinstance(got, _dtm.datetime):
-                    got = got.timestamp()
-                elif isinstance(got, _dtm.date):
-                    got = (got - _dtm.date(1970, 1, 1)).days
-                elif isinstance(got, _dec.Decimal):
-                    got = float(got)
-                step = float(got)
-            elif unit is None:
-                step = val
-            elif not is_time:
-                # the reference rejects INTERVAL steps on non-time columns
-                raise ChSqlError(f"WITH FILL STEP INTERVAL on {dt}")
-            elif unit in ("MONTH", "QUARTER", "YEAR"):
-                step = val * {"MONTH": 1, "QUARTER": 3, "YEAR": 12}[unit]
-                cal = "month"
-            elif dt == "date":
-                if unit not in ("DAY", "WEEK"):
-                    raise ChSqlError(f"WITH FILL STEP INTERVAL {unit} on Date")
-                step = val * {"DAY": 1, "WEEK": 7}[unit]
-            else:
-                step = val * {"SECOND": 1, "MINUTE": 60, "HOUR": 3600, "DAY": 86400, "WEEK": 604800}[unit]
-        items.append(
-            FillItem(
-                name=col_name,
-                desc=desc,
-                frm=F.expr(frm_sql) if frm_sql else None,
-                to=F.expr(to_sql) if to_sql else None,
-                step=step,
-                cal=cal,
+                    if isinstance(got, _dtm.datetime):
+                        got = got.timestamp()
+                    elif isinstance(got, _dtm.date):
+                        got = (got - _dtm.date(1970, 1, 1)).days
+                    elif isinstance(got, _dec.Decimal):
+                        got = float(got)
+                    step = float(got)
+                elif unit is None:
+                    step = val
+                elif not is_time:
+                    # the reference rejects INTERVAL steps on non-time columns
+                    raise ChSqlError(f"WITH FILL STEP INTERVAL on {dt}")
+                elif unit in ("MONTH", "QUARTER", "YEAR"):
+                    step = val * {"MONTH": 1, "QUARTER": 3, "YEAR": 12}[unit]
+                    cal = "month"
+                elif dt == "date":
+                    if unit not in ("DAY", "WEEK"):
+                        raise ChSqlError(f"WITH FILL STEP INTERVAL {unit} on Date")
+                    step = val * {"DAY": 1, "WEEK": 7}[unit]
+                else:
+                    step = val * {"SECOND": 1, "MINUTE": 60, "HOUR": 3600, "DAY": 86400, "WEEK": 604800}[unit]
+            items.append(
+                FillItem(
+                    name=col_name,
+                    desc=desc,
+                    frm=F.expr(frm_sql) if frm_sql else None,
+                    to=F.expr(to_sql) if to_sql else None,
+                    step=step,
+                    cal=cal,
+                )
             )
-        )
-    # the reference errors on a FROM/TO range contradicting the direction,
-    # and on DateTime bounds for a Date fill column (type mismatch)
-    import datetime as _dtm
+        # the reference errors on a FROM/TO range contradicting the direction,
+        # and on DateTime bounds for a Date fill column (type mismatch)
+        import datetime as _dtm
 
-    for (col_name, desc, frm_sql, to_sql, _ss) in parsed["items"]:
-        if frm_sql and to_sql:
-            a, b = spark.sql(f"SELECT ({frm_sql}), ({to_sql})").collect()[0]
-            cname = df.columns[int(col_name) - 1] if col_name.isdigit() else col_name
-            if dtypes.get(cname) == "date" and (
-                isinstance(a, _dtm.datetime) or isinstance(b, _dtm.datetime)
-            ):
-                raise ChSqlError("WITH FILL bound type incompatible with Date column")
-            if a is not None and b is not None:
-                try:
-                    bad = (a > b) if not desc else (a < b)
-                except TypeError:
-                    bad = False
-                if bad:
-                    raise ChSqlError("WITH FILL FROM/TO range contradicts direction")
-    tail = [
-        F.expr(e).desc() if d else F.expr(e).asc() for e, d in parsed["tail_order"]
-    ]
-    interp = []
-    for c, kind, v in parsed["interpolate"]:
-        if kind == "concat" and dtypes.get(c) != "string":
-            raise ChSqlError("INTERPOLATE || over a non-string column")
-        interp.append((c, kind, F.expr(v) if kind == "const" else v))
-    return fill_grid(df, items, tail_order=tail, interpolate=interp, limit=parsed["limit"])
+        for (col_name, desc, frm_sql, to_sql, _ss) in parsed["items"]:
+            if frm_sql and to_sql:
+                a, b = spark.sql(f"SELECT ({frm_sql}), ({to_sql})").collect()[0]
+                cname = df.columns[int(col_name) - 1] if col_name.isdigit() else col_name
+                if dtypes.get(cname) == "date" and (
+                    isinstance(a, _dtm.datetime) or isinstance(b, _dtm.datetime)
+                ):
+                    raise ChSqlError("WITH FILL bound type incompatible with Date column")
+                if a is not None and b is not None:
+                    try:
+                        bad = (a > b) if not desc else (a < b)
+                    except TypeError:
+                        bad = False
+                    if bad:
+                        raise ChSqlError("WITH FILL FROM/TO range contradicts direction")
+        tail = [
+            F.expr(e).desc() if d else F.expr(e).asc() for e, d in parsed["tail_order"]
+        ]
+        interp = []
+        for c, kind, v in parsed["interpolate"]:
+            if kind == "concat" and dtypes.get(c) != "string":
+                raise ChSqlError("INTERPOLATE || over a non-string column")
+            interp.append((c, kind, F.expr(v) if kind == "const" else v))
+        return fill_grid(df, items, tail_order=tail, interpolate=interp, limit=parsed["limit"])

@@ -153,12 +153,12 @@ def trimRight(s) -> Column:
 
 
 @chfn("leftPad", "lpad", "leftPadUTF8")
-def leftPad(s, n: int, pad: str = " ") -> Column:
+def leftPad(s, n: Column | int, pad: Column | str = " ") -> Column:
     return F.lpad(col(s), n, pad)
 
 
 @chfn("rightPad", "rpad", "rightPadUTF8")
-def rightPad(s, n: int, pad: str = " ") -> Column:
+def rightPad(s, n: Column | int, pad: Column | str = " ") -> Column:
     return F.rpad(col(s), n, pad)
 
 
@@ -238,28 +238,28 @@ def positionCaseInsensitive(haystack, needle: str) -> Column:
 
 
 @chfn("match", "REGEXP_MATCHES")
-def match(s, pattern: str) -> Column:
-    return col(s).rlike(pattern)
+def match(s, pattern: Column | str) -> Column:
+    return F.rlike(col(s), lit_or_col(pattern))
 
 
 @chfn("like", "LIKE")
-def like(s, pattern: str) -> Column:
-    return col(s).like(pattern)
+def like(s, pattern: Column | str) -> Column:
+    return F.like(col(s), lit_or_col(pattern))
 
 
 @chfn("notLike", "NOT LIKE")
-def notLike(s, pattern: str) -> Column:
-    return ~col(s).like(pattern)
+def notLike(s, pattern: Column | str) -> Column:
+    return ~like(s, pattern)
 
 
 @chfn("ilike", "ILIKE")
-def ilike(s, pattern: str) -> Column:
-    return col(s).ilike(pattern)
+def ilike(s, pattern: Column | str) -> Column:
+    return F.ilike(col(s), lit_or_col(pattern))
 
 
 @chfn("notILike")
-def notILike(s, pattern: str) -> Column:
-    return ~col(s).ilike(pattern)
+def notILike(s, pattern: Column | str) -> Column:
+    return ~ilike(s, pattern)
 
 
 @chfn("countSubstrings")
@@ -371,8 +371,8 @@ def replaceOne(s, needle: str, repl: str) -> Column:
 
 
 @chfn("replaceAll", "replace", "REPLACE")
-def replaceAll(s, needle: str, repl: str) -> Column:
-    return F.replace(col(s), F.lit(needle), F.lit(repl))
+def replaceAll(s, needle: Column | str, repl: Column | str) -> Column:
+    return F.replace(col(s), lit_or_col(needle), lit_or_col(repl))
 
 
 @chfn("replaceRegexpOne")

@@ -59,20 +59,19 @@ NO_RENDER = "the bridge cannot render the call shape"
 # tests/test_dialect.py::test_translate_strings expects the table's text;
 # the bridge parenthesises its arguments (year((d))) or renders another form
 PINNED = "an existing test pins the table's rendering"
+# two random draws never agree, so these compare the result type and whether
+# a second query repeats the first: the table's copy draws from a literal
+# seed, the bridge from a seed per call
+RANDOM = "the result type or the seeding differs"
 
 # (table, name) -> (reason, a call that shows the reason on the probe table,
 # in a shape ClickHouse accepts; uniqMerge reads an array column as its state)
 KEPT = {
     ("NAME_MAP", "JSONLength"): (DIFFERS, "JSONLength(j)"),
     ("NAME_MAP", "anyLast"): (DIFFERS, "anyLast(if(k = 6, NULL, i))"),
-    ("NAME_MAP", "arrayShuffle"): (
-        DIFFERS, "arrayShuffle([1, 2, 3, 4, 5, 6, 7, 8, 9, 10])"
-    ),
     ("NAME_MAP", "base64Decode"): (DIFFERS, "base64Decode('YWJj')"),
     ("NAME_MAP", "fromUnixTimestamp"): (DIFFERS, "fromUnixTimestamp(i)"),
-    ("NAME_MAP", "generateUUIDv4"): (DIFFERS, "generateUUIDv4()"),
     ("NAME_MAP", "lengthUTF8"): (DIFFERS, "lengthUTF8(s)"),
-    ("NAME_MAP", "randCanonical"): (DIFFERS, "randCanonical()"),
     ("NAME_MAP", "toHour"): (NO_RENDER, "toHour(ts, 'Asia/Shanghai')"),
     ("NAME_MAP", "toMinute"): (NO_RENDER, "toMinute(ts, 'Asia/Shanghai')"),
     ("NAME_MAP", "toSecond"): (NO_RENDER, "toSecond(ts, 'Asia/Shanghai')"),
@@ -130,8 +129,8 @@ KEPT = {
     ("TEMPLATES", "positionUTF8"): (DIFFERS, "positionUTF8(s, 'l')"),
     ("TEMPLATES", "positiveModulo"): (NO_RENDER, "positiveModulo(i = 5, 2)"),
     ("TEMPLATES", "protocol"): (DIFFERS, "protocol(u)"),
-    ("TEMPLATES", "rand"): (DIFFERS, "rand()"),
-    ("TEMPLATES", "rand64"): (DIFFERS, "rand64()"),
+    ("TEMPLATES", "rand"): (RANDOM, "rand()"),
+    ("TEMPLATES", "rand64"): (RANDOM, "rand64()"),
     ("TEMPLATES", "replaceOne"): (DIFFERS, "replaceOne(s, '', 'x')"),
     ("TEMPLATES", "timeSlot"): (DIFFERS, "timeSlot(ts)"),
     ("TEMPLATES", "toDate"): (NO_RENDER, "toDate(i)"),
@@ -456,6 +455,20 @@ def _status(spark, table: str, name: str, call: str):
     return ("agree" if got == want else "differs"), table_sql, bridged_sql
 
 
+def _seeding(spark, table: str, name: str, call: str):
+    """(type, whether a second query repeats the first) of a random call,
+    through the table and through translate without the entry."""
+
+    def twice():
+        first, second = (_answers(spark, [D._expr_sql(call)])[0] for _ in range(2))
+        return first[0], first == second
+
+    with D._on_session(spark):
+        with_entry = twice()
+        with _removed(table, name):
+            return with_entry, twice()
+
+
 def test_every_duplicate_is_listed():
     dups = {(t, n) for t, tb in TABLES.items() for n in tb if n in REGISTRY}
     assert sorted(dups - set(KEPT)) == [], "registry names with a table entry but no reason"
@@ -469,7 +482,53 @@ def test_kept_reason_holds(probe, table, name):
     detail = f"{call}: table {table_sql!r}, without the entry {bridged_sql!r}"
     if reason == PINNED:
         assert bridged_sql != table_sql, f"the bridge now renders the pinned text; {detail}"
+    elif reason == RANDOM:
+        with_entry, without = _seeding(probe, table, name, call)
+        assert with_entry != without, f"both (type, repeats) {with_entry}; {detail}"
     elif reason == DIFFERS:
         assert status == "differs", f"{status}, not differs; {detail}"
     else:
         assert status == "no_render", f"{status}, not no_render; {detail}"
+
+
+# --- calls of deleted entries ------------------------------------------------
+
+# Calls a deleted table entry used to render, with the answers it gave:
+# non-constant pad lengths and patterns (ClickHouse takes a column there),
+# and -If forms of deleted aggregate bases, which the generic -If combinator
+# expands through the registry.
+ROW_CALLS = {
+    "leftPad(s, length(s) + 2, '*')": [
+        "**abc", "**", None, "**Hello World", "**xyz", "**abc"
+    ],
+    "rightPad(s, k, '*')": ["a", "**", None, "Hell", "xyz**", "abc***"],
+    "match(s, concat('^', substring(s, 1, 1)))": [
+        True, True, None, True, True, True
+    ],
+    "notLike(s, concat(substring(s, 1, 1), '%'))": [
+        False, False, None, False, False, False
+    ],
+    "notILike(s, upper(s))": [False, False, None, False, False, False],
+    "replaceAll(s, substring(s, 1, 1), '-')": [
+        "-bc", "", None, "-ello World", "-yz", "-bc"
+    ],
+}
+AGGREGATE_CALLS = {
+    "argMaxIf(s, i, k > 1)": "xyz",
+    "argMinIf(s, i, k > 1)": "",
+    "arraySort(groupArrayIf(i, k > 1))": [-4, 0, 5, 300],
+    "stddevPopIf(f, k > 1)": 534.411753122066,
+    "varSampIf(f, k > 1)": 380794.5625,
+}
+
+
+@pytest.mark.parametrize("call", sorted(ROW_CALLS))
+def test_deleted_entry_row_calls_keep_their_answers(probe, call):
+    got = ch_sql(probe, f"SELECT {call} AS v FROM __probe ORDER BY k").collect()
+    assert [_norm(r["v"]) for r in got] == _norm(ROW_CALLS[call])
+
+
+@pytest.mark.parametrize("call", sorted(AGGREGATE_CALLS))
+def test_deleted_entry_aggregate_calls_keep_their_answers(probe, call):
+    got = ch_sql(probe, f"SELECT {call} AS v FROM __probe").collect()
+    assert [_norm(r["v"]) for r in got] == [_norm(AGGREGATE_CALLS[call])]

@@ -48,6 +48,11 @@ HEADLINE = [
     "ssb_q2_1",
     "ssb_q3_1",
     "ssb_q4_1",
+    # the rest of the pipeline operators (appended, so the earlier entries
+    # keep their positions and totals stay comparable over time)
+    "q_dedup_simhash",
+    "q_ngram_jaccard",
+    "q_embedding_near_dup",
 ]
 
 
@@ -91,6 +96,8 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for name in names:
+        # tag the query's Spark jobs with its name (Spark UI, event log)
+        spark.sparkContext.setJobDescription(name)
         t0 = time.perf_counter()
         _run(queries[name](spark, sf_dir))
         timings[name] = round(time.perf_counter() - t0, 4)

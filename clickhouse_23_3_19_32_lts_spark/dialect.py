@@ -259,8 +259,6 @@ TEMPLATES: dict[str, str] = {
     "rand": "CAST(rand(42) * 4294967296 AS BIGINT)",  # seeded: CH CSE makes rand()=rand() true
     "rand64": "CAST(rand(43) * 9.223372036854776e18 AS BIGINT)",
     "any": "first({0}, true)",
-    "countDistinct": "count(DISTINCT {0})",
-    "uniqExact": "count(DISTINCT {0})",
     # uniqState/Merge use the exact array carrier: the reference's uniq is
     # EXACT below ~4096 distinct (HyperLogLogWithSmallSetOptimization), so
     # golden-scale results only match the exact form; the sketch tier for
@@ -504,11 +502,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
         2: "approx_count_distinct(struct({0}, {1}))",
         3: "approx_count_distinct(struct({0}, {1}, {2}))",
         4: "approx_count_distinct(struct({0}, {1}, {2}, {3}))",
-    },
-    "uniqExact": {
-        2: "count(DISTINCT {0}, {1})",
-        3: "count(DISTINCT {0}, {1}, {2})",
-        4: "count(DISTINCT {0}, {1}, {2}, {3})",
     },
     # default precision 12 (geohashEncode.cpp); the 3-arg form resolves to
     # the registered SQL pandas UDF (functions/sql_udfs.py)
@@ -1518,13 +1511,43 @@ def _literal_params(builder, nargs: int) -> list[bool] | None:
     return out
 
 
+def _column_sql(spark, expr) -> str:
+    """`expr.sql()`, keeping the DISTINCT of a distinct function call:
+    `Expression.sql()` renders `count(DISTINCT x)` as `count(x)`. Each
+    distinct call is swapped for a placeholder column before rendering and
+    written back with its DISTINCT after (outermost first, so a nested
+    one's placeholder is written back too)."""
+    if "(distinct " not in expr.toString():
+        return expr.sql()
+    from pyspark.sql import functions as F
+
+    jvm = spark._jvm
+    calls: dict[str, str] = {}
+
+    def strip(node):
+        kids = node.children()
+        new = [strip(kids.apply(i)) for i in range(kids.size())]
+        if new:
+            node = node.withNewChildren(jvm.PythonUtils.toSeq(new))
+        if node.getClass().getSimpleName() == "UnresolvedFunction" and node.isDistinct():
+            name = f"__dlt_distinct{len(calls)}"
+            calls[name] = f"{node.prettyName()}(DISTINCT {', '.join(k.sql() for k in new)})"
+            return spark._jsparkSession.expression(F.col(name)._jc)
+        return node
+
+    sql = strip(expr).sql()
+    for name in reversed(calls):
+        sql = re.sub(rf"\b{name}\b", lambda _m, c=calls[name]: c, sql)
+    return sql
+
+
 def _render_call(spark, builder, args) -> str | None:
     """builder(args…) → parse-validated Spark SQL fragment, or None."""
     from clickhouse_23_3_19_32_lts_spark.functions.catalog import UdfRegistrationError
 
     try:
         col = builder(*args)
-        sql = spark._jsparkSession.expression(col._jc).sql()
+        sql = _column_sql(spark, spark._jsparkSession.expression(col._jc))
         if "Column<" in sql:
             return None  # a builder formatted a Column into a literal
         if "lambdafunction" in sql:

@@ -12,7 +12,7 @@ Reference anchors (what the reference ships natively):
   - language/charset detection: src/Functions/FunctionsLanguageClassification.cpp
 """
 
-from clickhouse_23_3_19_32_lts_spark.pipeline.hashing import portable_hash64, sql_hash64
+from clickhouse_23_3_19_32_lts_spark.pipeline.hashing import spark_sql_hash64, sql_hash64
 from clickhouse_23_3_19_32_lts_spark.pipeline.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -38,7 +38,7 @@ from clickhouse_23_3_19_32_lts_spark.pipeline.text import (
 )
 
 __all__ = [
-    "portable_hash64",
+    "spark_sql_hash64",
     "sql_hash64",
     "exact_dedup",
     "word_shingles",

@@ -12,20 +12,20 @@ whole-stage codegen — at 100 TB the scan, not the hash, dominates.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+def spark_sql_hash64(expr: str) -> str:
+    """Spark SQL fragment: the 60-bit hash of the string expression `expr`."""
+    return f"cast(conv(substring(md5({expr}), 1, 15), 16, 10) as bigint)"
 
 
-def portable_hash64(c: Column | str, seed: int | None = None) -> Column:
-    """60-bit deterministic hash of a string column; equals sql_hash64()."""
-    col = F.col(c) if isinstance(c, str) else c
-    if seed is not None:
-        col = F.concat(col, F.lit(f"|{seed}"))
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+def spark_sql_hash28(expr: str) -> str:
+    """Spark SQL fragment: the 28-bit base hash (first 7 md5 hex chars) of
+    the string expression `expr`, for MinHash and the doc fingerprint."""
+    return f"cast(conv(substring(md5({expr}), 1, 7), 16, 10) as bigint)"
 
 
 def sql_hash64(expr: str, seed: int | None = None) -> str:
-    """DuckDB SQL fragment computing the same 60-bit hash as portable_hash64."""
+    """DuckDB SQL fragment computing the same 60-bit hash as spark_sql_hash64."""
     if seed is not None:
         expr = f"({expr} || '|{seed}')"
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"

@@ -18,31 +18,37 @@ Spark-first design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clickhouse_23_3_19_32_lts_spark.pipeline.spread import spread
+from clickhouse_23_3_19_32_lts_spark.pipeline.dedup import _bind, _q
+from clickhouse_23_3_19_32_lts_spark.pipeline.spread import spread, spread_sql
+
+# Vector kernels as Spark SQL over two array expressions (the SQL of one
+# column each): one definition for the SQL operators and the Column forms.
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
+        " 0.0D, (acc, e) -> acc + e)"
     )
 
 
-def l2_norm(a: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
+def _l2_norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0.0D, (acc, e) -> acc + cast(e as double) * cast(e as double)))"
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    return f"{_dot_sql(a, b)} / ({_l2_norm_sql(a)} * {_l2_norm_sql(b)})"
+
+
+def _l2_sq_sql(a: str, b: str) -> str:
+    """Squared L2 distance."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> power(cast(x as double) - cast(y as double), 2)),"
+        " 0.0D, (acc, e) -> acc + e)"
     )
-
-
-def cosine_sim(a: Column | str, b: Column | str) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def brute_force_topk(
@@ -59,36 +65,48 @@ def brute_force_topk(
 
     Baseline the approximate variants are measured against. Probe set is
     broadcast; ranking shuffles on probe_id only.
+
+    Two-phase top-k: partition-local rank first (keys = probe × source
+    partition, so no single reducer ever sorts all n scores for a probe),
+    then the global per-probe rank over only k × n_partitions survivors.
     """
-    score = {
-        "cosine": cosine_sim(vec_col, probe_vec_col),
-        "dot": dot(vec_col, probe_vec_col),
-        "l2": -F.sqrt(
-            F.aggregate(
-                F.zip_with(vec_col, probe_vec_col, lambda x, y: (x.cast("double") - y.cast("double")) ** 2),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
+    return _bind(
+        brute_force_topk_sql(
+            "{vectors}", "{probes}", k, id_col, vec_col, probe_id_col, probe_vec_col, metric
         ),
+        vectors=vectors,
+        probes=probes,
+    )
+
+
+def brute_force_topk_sql(
+    vectors: str,
+    probes: str,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    probe_id_col: str = "probe_id",
+    probe_vec_col: str = "probe_vec",
+    metric: str = "cosine",
+) -> str:
+    """brute_force_topk over the relation SQLs `vectors` and `probes`."""
+    v, p = f"v.{_q(vec_col)}", f"p.{_q(probe_vec_col)}"
+    score = {
+        "cosine": _cosine_sql(v, p),
+        "dot": _dot_sql(v, p),
+        "l2": f"-sqrt({_l2_sq_sql(v, p)})",
     }[metric]
-    scored = vectors.crossJoin(F.broadcast(probes)).select(
-        F.col(probe_id_col),
-        F.col(id_col),
-        score.alias("score"),
-        F.spark_partition_id().alias("__part"),
-    )
-    # two-phase top-k: partition-local rank first (keys = probe × source
-    # partition, so no single reducer ever sorts all n scores for a probe),
-    # then the global per-probe rank over only k × n_partitions survivors.
-    w_local = W.partitionBy(probe_id_col, "__part").orderBy(F.desc("score"), F.asc(id_col))
-    w = W.partitionBy(probe_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("__lr", F.row_number().over(w_local))
-        .filter(F.col("__lr") <= k)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("__part", "__lr")
-    )
+    pid, vid = _q(probe_id_col), _q(id_col)
+    order = f"ORDER BY score DESC, {vid} ASC"
+    return f"""SELECT {pid}, {vid}, score, `rank` FROM (
+          SELECT *, row_number() OVER (PARTITION BY {pid} {order}) AS `rank` FROM (
+            SELECT * FROM (
+              SELECT *, row_number() OVER (PARTITION BY {pid}, __part {order}) AS __lr FROM (
+                SELECT /*+ BROADCAST(p) */ p.{pid}, v.{vid}, {score} AS score,
+                       spark_partition_id() AS __part
+                FROM {vectors} v CROSS JOIN {probes} p))
+            WHERE __lr <= {k}))
+        WHERE `rank` <= {k}"""
 
 
 def assign_clusters(
@@ -104,11 +122,7 @@ def assign_clusters(
     Map-only: centroids broadcast, min_by picks the closest — no shuffle
     of the vector table.
     """
-    d2 = F.aggregate(
-        F.zip_with(vec_col, centroid_vec_col, lambda x, y: (x.cast("double") - y.cast("double")) ** 2),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    d2 = F.expr(_l2_sq_sql(_q(vec_col), _q(centroid_vec_col)))
     return (
         spread(vectors, id_col).crossJoin(F.broadcast(centroids))
         .groupBy(id_col)
@@ -116,6 +130,35 @@ def assign_clusters(
             F.min_by(centroid_id_col, d2).alias("cluster"),
             F.first(vec_col).alias(vec_col),
         )
+    )
+
+
+def _probe_clusters(
+    centroids: DataFrame, probes: DataFrame, nprobe: int, probe_id_col: str, probe_vec_col: str
+) -> DataFrame:
+    """(probe_id, cluster): each probe's nprobe nearest centroids (L2)."""
+    pid = _q(probe_id_col)
+    nearest = brute_force_topk_sql(
+        "(SELECT centroid_id AS vec_id, centroid_vec AS embedding FROM {centroids})",
+        "{probes}", nprobe, probe_id_col=probe_id_col, probe_vec_col=probe_vec_col, metric="l2",
+    )
+    return _bind(
+        f"SELECT {pid}, vec_id AS cluster FROM ({nearest})", centroids=centroids, probes=probes
+    )
+
+
+def _rank(
+    candidates: DataFrame, k: int, id_col: str, vec_col: str, probe_id_col: str, probe_vec_col: str
+) -> DataFrame:
+    """Top-k candidates per probe by cosine: (probe_id, vec_id, score, rank)."""
+    pid, vid = _q(probe_id_col), _q(id_col)
+    return _bind(
+        f"""SELECT * FROM (
+          SELECT *, row_number() OVER (PARTITION BY {pid} ORDER BY score DESC, {vid} ASC) AS `rank`
+          FROM (SELECT {pid}, {vid}, {_cosine_sql(_q(vec_col), _q(probe_vec_col))} AS score
+                FROM {{candidates}}))
+        WHERE `rank` <= {k}""",
+        candidates=candidates,
     )
 
 
@@ -137,31 +180,11 @@ def ivf_topk(
     recall vs brute_force_topk rises with nprobe (tested in unit tests).
     """
     assigned = assign_clusters(vectors, centroids, id_col, vec_col)
-    probe_clusters = brute_force_topk(
-        centroids.select(
-            F.col("centroid_id").alias(id_col), F.col("centroid_vec").alias(vec_col)
-        ),
-        probes,
-        k=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        probe_id_col=probe_id_col,
-        probe_vec_col=probe_vec_col,
-        metric="l2",
-    ).select(F.col(probe_id_col), F.col(id_col).alias("cluster"))
+    probe_clusters = _probe_clusters(centroids, probes, nprobe, probe_id_col, probe_vec_col)
     candidates = assigned.join(
         F.broadcast(probe_clusters), on="cluster"
     ).join(F.broadcast(probes), on=probe_id_col)
-    w = W.partitionBy(probe_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        candidates.select(
-            F.col(probe_id_col),
-            F.col(id_col),
-            cosine_sim(vec_col, probe_vec_col).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank(candidates, k, id_col, vec_col, probe_id_col, probe_vec_col)
 
 
 def build_ivf_index(
@@ -197,20 +220,7 @@ def ivf_index_topk(
     """Search a materialized IVF index: pick nprobe clusters per probe, read
     ONLY those partitions (partition-pruned scan — asserted in tests), score
     and rank. At 100 TB the scan cost is |index|·nprobe/n_centroids."""
-    from pyspark.sql import functions as F  # local alias for clarity
-
-    probe_clusters = brute_force_topk(
-        centroids.select(
-            F.col("centroid_id").alias(id_col), F.col("centroid_vec").alias(vec_col)
-        ),
-        probes,
-        k=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        probe_id_col=probe_id_col,
-        probe_vec_col=probe_vec_col,
-        metric="l2",
-    ).select(F.col(probe_id_col), F.col(id_col).alias("cluster"))
+    probe_clusters = _probe_clusters(centroids, probes, nprobe, probe_id_col, probe_vec_col)
 
     wanted = [r["cluster"] for r in probe_clusters.select("cluster").distinct().collect()]
     index = spark.read.parquet(index_path).filter(F.col("cluster").isin(wanted))
@@ -218,16 +228,7 @@ def ivf_index_topk(
     candidates = index.join(F.broadcast(probe_clusters), on="cluster").join(
         F.broadcast(probes), on=probe_id_col
     )
-    w = W.partitionBy(probe_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        candidates.select(
-            F.col(probe_id_col),
-            F.col(id_col),
-            cosine_sim(vec_col, probe_vec_col).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank(candidates, k, id_col, vec_col, probe_id_col, probe_vec_col)
 
 
 def nearest_centroid_blocks(
@@ -246,21 +247,34 @@ def nearest_centroid_blocks(
     rows — map-side work only, no shuffle of the vector table. Deterministic
     (no RNG), so an external engine can recompute identical blocks.
     """
-    d2 = F.aggregate(
-        F.zip_with(
-            vec_col, centroid_vec_col, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
+    return _bind(
+        nearest_centroid_blocks_sql(
+            spread_sql(vectors, id_col, "{vectors}"), "{centroids}", nprobe, id_col, vec_col,
+            centroid_id_col, centroid_vec_col,
         ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+        vectors=vectors,
+        centroids=centroids,
     )
-    w = W.partitionBy(id_col).orderBy(F.asc("__d2"), F.asc("block"))
-    return (
-        spread(vectors, id_col).crossJoin(F.broadcast(centroids))
-        .select(F.col(id_col), F.col(centroid_id_col).alias("block"), d2.alias("__d2"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= nprobe)
-        .select(id_col, "block")
-    )
+
+
+def nearest_centroid_blocks_sql(
+    vectors: str,
+    centroids: str,
+    nprobe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    centroid_id_col: str = "centroid_id",
+    centroid_vec_col: str = "centroid_vec",
+) -> str:
+    """nearest_centroid_blocks over the relation SQLs `vectors` and
+    `centroids`."""
+    vid = _q(id_col)
+    d2 = _l2_sq_sql(f"v.{_q(vec_col)}", f"c.{_q(centroid_vec_col)}")
+    return f"""SELECT {vid}, block FROM (
+          SELECT *, row_number() OVER (PARTITION BY {vid} ORDER BY __d2 ASC, block ASC) AS __rn
+          FROM (SELECT /*+ BROADCAST(c) */ v.{vid}, c.{_q(centroid_id_col)} AS block, {d2} AS __d2
+                FROM {vectors} v CROSS JOIN {centroids} c))
+        WHERE __rn <= {nprobe}"""
 
 
 def embedding_near_dup_pairs(
@@ -268,7 +282,6 @@ def embedding_near_dup_pairs(
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    block_on: Column | None = None,
     blocks: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cos_sim).
@@ -276,66 +289,60 @@ def embedding_near_dup_pairs(
     `blocks` ((id_col, block), possibly several blocks per id — e.g. from
     nearest_centroid_blocks) is the scale path: candidate pairs come from a
     keyed equi-join on block (shuffles (id, block) tuples, never n²/2
-    pairs), deduped, then scored by joining the vectors back. `block_on`
-    (a Column over `vectors`) is the single-key variant. Default (neither)
-    is the exact O(n²) pair scan — verification tiers only.
+    pairs), deduped, then scored by joining the vectors back. Default
+    (no blocks) is the exact O(n²) pair scan — verification tiers only.
     """
-    vectors = spread(vectors, id_col)
-    a = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-    if blocks is not None:
-        # attach each vector to its block rows ONCE, score inline on the
-        # keyed block join, then dedup pairs on a double. The previous
-        # shape (pair distinct, then two joins back to the vector table)
-        # shuffled the vector table twice more and planned an SMJ on the
-        # candidate ids; a pair's cosine is identical in every shared
-        # block, so first() after the (id_a, id_b) groupBy equals the old
-        # distinct-then-score form.
-        # the L2 norm rides along from a projection BELOW the block join:
-        # one norm per vector instead of two norm folds per candidate pair
-        # (the HOF aggregates are interpreted, so per-pair folds are the
-        # dominant cost — this cuts 3 array walks per pair to 1). Same
-        # doubles: dot/(norm_a*norm_b) is the exact cosine_sim expression
-        # with the norms evaluated on the identical vectors.
-        bv = blocks.select(F.col(id_col).alias("__id"), "block").join(
-            vectors.select(
-                F.col(id_col).alias("__id"),
-                F.col(vec_col).alias("__v"),
-                l2_norm(vec_col).alias("__n"),
-            ),
-            "__id",
-        )
-        x = bv.select(
-            F.col("__id").alias("id_a"), "block",
-            F.col("__v").alias("__va"), F.col("__n").alias("__na"),
-        )
-        y = bv.select(
-            F.col("__id").alias("id_b"), "block",
-            F.col("__v").alias("__vb"), F.col("__n").alias("__nb"),
-        )
-        # a pair's cos_sim is identical in every shared block, so the
-        # threshold filter commutes with the pair dedup — filtering BEFORE
-        # the groupBy keeps one-or-more copies of every qualifying pair
-        # and drops all copies of the rest, so the dedup exchange carries
-        # only matches (guide §2.3 filter-before-the-exchange)
-        cos = dot("__va", "__vb") / (F.col("__na") * F.col("__nb"))
-        return (
-            x.join(y, "block")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", cos.alias("cos_sim"))
-            .filter(F.col("cos_sim") >= threshold)
-            .groupBy("id_a", "id_b")
-            .agg(F.first("cos_sim").alias("cos_sim"))
-        )
-    if block_on is not None:
-        blocked = vectors.select(F.col(id_col).alias("__id"), block_on.alias("__blk"))
-        a = a.join(blocked.withColumnRenamed("__id", "id_a"), "id_a")
-        b = b.join(blocked.withColumnRenamed("__id", "id_b"), "id_b")
-        cond = (F.col("id_a") < F.col("id_b")) & (a["__blk"] == b["__blk"])
-    else:
-        cond = F.col("id_a") < F.col("id_b")
-    return (
-        a.join(b, cond)
-        .select("id_a", "id_b", cosine_sim("__va", "__vb").alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
+    return _bind(
+        embedding_near_dup_pairs_sql(
+            spread_sql(vectors, id_col, "{vectors}"), threshold, id_col, vec_col,
+            None if blocks is None else "{blocks}",
+        ),
+        vectors=vectors,
+        blocks=blocks,
     )
+
+
+def embedding_near_dup_pairs_sql(
+    vectors: str,
+    threshold: float = 0.4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    blocks: str | None = None,
+) -> str:
+    """embedding_near_dup_pairs over the relation SQLs `vectors` and
+    `blocks`."""
+    vid, vec = _q(id_col), _q(vec_col)
+    if blocks is None:
+        return f"""SELECT * FROM (
+              SELECT a.{vid} AS id_a, b.{vid} AS id_b,
+                     {_cosine_sql(f"a.{vec}", f"b.{vec}")} AS cos_sim
+              FROM {vectors} a JOIN {vectors} b ON a.{vid} < b.{vid})
+            WHERE cos_sim >= {float(threshold)}D"""
+    # Attach each vector to its block rows ONCE, score inline on the keyed
+    # block join, then dedup pairs on a double: a pair's cosine is
+    # identical in every shared block, so first() after the (id_a, id_b)
+    # GROUP BY equals a distinct-then-score form, which shuffled the vector
+    # table twice more and planned an SMJ on the candidate ids.
+    # The L2 norm rides along from a projection BELOW the block join: one
+    # norm per vector instead of two norm folds per candidate pair (the HOF
+    # aggregates are interpreted, so per-pair folds are the dominant cost).
+    # Same doubles: dot/(norm_a*norm_b) is the exact cosine expression with
+    # the norms evaluated on the identical vectors.
+    # The cosine is bound once per candidate row by a one-element
+    # LATERAL VIEW: a plain WHERE on it would be pushed into the join
+    # condition and the dot fold evaluated there and again in the
+    # projection. The threshold filter commutes with the pair dedup, so it
+    # runs BEFORE the GROUP BY and the dedup exchange carries only matches
+    # (guide §2.3 filter-before-the-exchange).
+    return f"""WITH bv AS (
+          SELECT b.__id, b.block, v.__v, v.__n
+          FROM (SELECT {vid} AS __id, block FROM {blocks}) b
+          JOIN (SELECT {vid} AS __id, {vec} AS __v, {_l2_norm_sql(vec)} AS __n
+                FROM {vectors}) v ON b.__id = v.__id)
+        SELECT id_a, id_b, first(cos_sim) AS cos_sim FROM (
+          SELECT x.__id AS id_a, y.__id AS id_b,
+                 {_dot_sql("x.__v", "y.__v")} / (x.__n * y.__n) AS __cos
+          FROM bv x JOIN bv y ON x.block = y.block AND x.__id < y.__id)
+        LATERAL VIEW explode(array(__cos)) AS cos_sim
+        WHERE cos_sim >= {float(threshold)}D
+        GROUP BY id_a, id_b"""

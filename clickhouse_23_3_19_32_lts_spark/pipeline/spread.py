@@ -85,19 +85,40 @@ def _estimated_scan_tasks(df: DataFrame, target: int) -> int:
     return tasks
 
 
+def _spread_target(df: DataFrame) -> int | None:
+    """The partition count to spread `df` to, or None when its input files
+    already yield at least the session's default parallelism in scan
+    tasks."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        if _estimated_scan_tasks(df, target) >= target:
+            return None
+    except Exception as e:  # noqa: BLE001 — non-file plans: fall back to the exact count
+        log.warning("spread: scan-task estimate failed (%s); counting partitions instead", e)
+        if df.rdd.getNumPartitions() >= target:
+            return None
+    return target
+
+
 def spread(df: DataFrame, key: str | Column | None = None) -> DataFrame:
     """Repartition `df` to the session's default parallelism when (and only
     when) its input files yield fewer scan tasks — the cheap-input /
     expensive-map case. Keyed on `key` when given (deterministic placement
     under retries); round-robin otherwise."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        if _estimated_scan_tasks(df, target) >= target:
-            return df
-    except Exception as e:  # noqa: BLE001 — non-file plans: fall back to the exact count
-        log.warning("spread: scan-task estimate failed (%s); counting partitions instead", e)
-        if df.rdd.getNumPartitions() >= target:
-            return df
+    target = _spread_target(df)
+    if target is None:
+        return df
     if key is not None:
         return df.repartition(target, F.col(key) if isinstance(key, str) else key)
     return df.repartition(target)
+
+
+def spread_sql(df: DataFrame, key: str, rel: str) -> str:
+    """The SQL relation `rel` (which reads `df`) spread as spread(df, key)
+    spreads `df`: under a REPARTITION hint, which plans the same
+    repartition without building an intermediate DataFrame, or `rel`
+    itself when no spread is needed."""
+    target = _spread_target(df)
+    if target is None:
+        return rel
+    return f"(SELECT /*+ REPARTITION({target}, `{key}`) */ * FROM {rel})"

@@ -15,6 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from clickhouse_23_3_19_32_lts_spark.pipeline.dedup import _q
+from clickhouse_23_3_19_32_lts_spark.pipeline.hashing import spark_sql_hash28
+
 # Tiny per-language marker lexicons (language-ID heuristic). Deterministic
 # and oracle-reproducible; precision is what the test corpus supports.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -25,86 +28,63 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "zh": ("的", "是", "了", "在", "我", "有", "和", "不"),
 }
 
-# BPE-ish tokenizer regex: letter runs | digit runs | single non-space symbol.
-BPE_ISH_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
-
 STOPWORDS = LANG_MARKERS["en"]
 
 _FP_MOD = (1 << 31) - 1  # Mersenne prime 2^31-1: keeps the rolling hash
 # in 31 bits so acc*31+h never overflows BIGINT in either engine.
 
 
-def _c(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+# Build-cost note: every F.* call and every HOF lambda is a py4j round
+# trip, and every DataFrame step one more analysis; the combinator form of
+# this battery cost ~0.3 s of build time per q_text_metrics build
+# (more than its sf0.1 execution). Each metric is therefore defined ONCE, as
+# a Spark SQL fragment over the SQL of a text expression (`*_sql(t)`):
+# q_text_metrics splices the fragments into its one SQL statement, and the
+# public functions below apply them to a column NAME through one F.expr
+# parse. Only language_id keeps a Column path, for detectLanguage, which
+# receives Columns from the dialect. The SQL fragments are oracle-proven
+# by q_text_metrics' hash check; tests/test_pipeline.py checks that both
+# language_id paths agree.
 
 
-# Build-cost note (round 9): every F.* call and every HOF lambda costs a
-# py4j round trip; this battery built per-query cost ~0.3 s of pure driver
-# time (measured — more than its sf0.1 execution). When the input is a plain
-# column NAME each metric renders as ONE SQL string for F.expr (a single
-# parse call, identical analyzed expression); Column inputs keep the
-# combinator path for programmatic callers. Both paths are oracle-proven by
-# q_text_metrics' hash check.
-
-
-def _ident(name: str) -> str:
-    return f"`{name}`"
-
-
-def token_count(text: Column | str) -> Column:
+def token_count_sql(t: str) -> str:
     """Whitespace token count."""
-    if isinstance(text, str):
-        return F.expr(f"size(split({_ident(text)}, '\\\\s+'))")
-    return F.size(F.split(_c(text), "\\s+"))
+    return f"size(split({t}, '\\\\s+'))"
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """Token count under the BPE-ish regex (letters/digits/symbols split)."""
-    if isinstance(text, str):
-        return F.expr(
-            f"size(regexp_extract_all({_ident(text)}, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\\\s]', 0))"
-        )
-    return F.size(F.regexp_extract_all(_c(text), F.lit(BPE_ISH_RE), 0))
+def bpe_ish_token_count_sql(t: str) -> str:
+    """Token count under the BPE-ish regex: letter runs | digit runs |
+    single non-space symbol."""
+    return f"size(regexp_extract_all({t}, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\\\s]', 0))"
 
 
-def _punct_ratio_sql(t: str) -> str:
+def punct_ratio_sql(t: str) -> str:
+    """Fraction of non-alphanumeric, non-space characters."""
     return (
         f"cast(length(regexp_replace({t}, '[A-Za-z0-9\\\\s]', '')) as double)"
         f" / greatest(length({t}), 1)"
     )
 
 
-def punct_ratio(text: Column | str) -> Column:
-    """Fraction of non-alphanumeric, non-space characters."""
-    if isinstance(text, str):
-        return F.expr(_punct_ratio_sql(_ident(text)))
-    t = _c(text)
-    n_punct = F.length(F.regexp_replace(t, "[A-Za-z0-9\\s]", ""))
-    return n_punct.cast("double") / F.greatest(F.length(t), F.lit(1))
-
-
 def _in_list(words: tuple[str, ...]) -> str:
     return ", ".join("'" + w.replace("'", "''") + "'" for w in words)
 
 
-def _stopword_ratio_sql(t: str, stopwords: tuple[str, ...]) -> str:
-    w = f"split(lower({t}), '\\\\s+')"
-    return (
-        f"cast(size(filter({w}, x -> x in ({_in_list(stopwords)}))) as double)"
-        f" / greatest(size({w}), 1)"
-    )
+def _lower_words_sql(t: str) -> str:
+    return f"split(lower({t}), '\\\\s+')"
 
 
-def stopword_ratio(text: Column | str, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
+def _hits_sql(words: str, markers: tuple[str, ...]) -> str:
+    return f"size(filter({words}, x -> x in ({_in_list(markers)})))"
+
+
+def stopword_ratio_sql(t: str, stopwords: tuple[str, ...] = STOPWORDS) -> str:
     """Fraction of whitespace tokens that are (lowercase) stopwords."""
-    if isinstance(text, str):
-        return F.expr(_stopword_ratio_sql(_ident(text), stopwords))
-    w = F.split(F.lower(_c(text)), "\\s+")
-    hits = F.size(F.filter(w, lambda x: x.isin(*stopwords)))
-    return hits.cast("double") / F.greatest(F.size(w), F.lit(1))
+    w = _lower_words_sql(t)
+    return f"cast({_hits_sql(w, stopwords)} as double) / greatest(size({w}), 1)"
 
 
-def _mean_word_len_sql(t: str) -> str:
+def mean_word_len_sql(t: str) -> str:
     w = f"split({t}, '\\\\s+')"
     return (
         f"cast(aggregate({w}, 0, (acc, x) -> acc + length(x)) as double)"
@@ -112,40 +92,64 @@ def _mean_word_len_sql(t: str) -> str:
     )
 
 
-def mean_word_len(text: Column | str) -> Column:
-    if isinstance(text, str):
-        return F.expr(_mean_word_len_sql(_ident(text)))
-    w = F.split(_c(text), "\\s+")
-    total = F.aggregate(w, F.lit(0), lambda acc, x: acc + F.length(x))
-    return total.cast("double") / F.greatest(F.size(w), F.lit(1))
-
-
-def quality_score(text: Column | str) -> Column:
+def quality_score_sql(t: str) -> str:
     """Heuristic quality in [0,1]: length band + word-length band + low
     punctuation + some stopword signal. The standard pre-filter shape for
     corpus curation (cf. C4/Gopher rules) as one codegen'd expression."""
-    if isinstance(text, str):
-        t = _ident(text)
-        n_tok = f"size(split({t}, '\\\\s+'))"
-        return F.expr(
-            f"cast(({n_tok} >= 10 and {n_tok} <= 10000) as double) * 0.4d"
-            f" + cast((({_mean_word_len_sql(t)}) >= 2.0d and ({_mean_word_len_sql(t)}) <= 12.0d) as double) * 0.3d"
-            f" + cast(({_punct_ratio_sql(t)}) <= 0.2d as double) * 0.2d"
-            f" + cast(({_stopword_ratio_sql(t, STOPWORDS)}) >= 0.01d as double) * 0.1d"
-        )
-    t = _c(text)
-    n_tok = token_count(t)
-    len_ok = (n_tok >= 10) & (n_tok <= 10000)
-    mwl = mean_word_len(t)
-    word_ok = (mwl >= 2.0) & (mwl <= 12.0)
-    low_punct = punct_ratio(t) <= 0.2
-    has_stop = stopword_ratio(t) >= 0.01
+    n_tok = token_count_sql(t)
+    mwl = mean_word_len_sql(t)
     return (
-        len_ok.cast("double") * 0.4
-        + word_ok.cast("double") * 0.3
-        + low_punct.cast("double") * 0.2
-        + has_stop.cast("double") * 0.1
+        f"cast(({n_tok} >= 10 and {n_tok} <= 10000) as double) * 0.4d"
+        f" + cast((({mwl}) >= 2.0d and ({mwl}) <= 12.0d) as double) * 0.3d"
+        f" + cast(({punct_ratio_sql(t)}) <= 0.2d as double) * 0.2d"
+        f" + cast(({stopword_ratio_sql(t)}) >= 0.01d as double) * 0.1d"
     )
+
+
+# Language-ID picks the winner from one array of (hits, order, language)
+# structs: array_max compares hits first, then order, where order falls
+# with the language code so ties go to the first code, and 'und' carries
+# (0, 1, 'und') so it wins when no language has a hit. Each language's
+# hits appear once, so the expression grows linearly with the languages.
+_LANGS = sorted(LANG_MARKERS)
+
+
+def language_id_sql(t: str) -> str:
+    w = _lower_words_sql(t)
+    entries = ["named_struct('n', 0, 'o', 1, 'lang', 'und')"] + [
+        f"named_struct('n', {_hits_sql(w, LANG_MARKERS[lang])}, 'o', {-i}, 'lang', '{lang}')"
+        for i, lang in enumerate(_LANGS)
+    ]
+    return f"array_max(array({', '.join(entries)})).lang"
+
+
+def doc_fingerprint_sql(t: str) -> str:
+    """Order-sensitive 31-bit rolling-hash fingerprint over tokens:
+    fp = fold(tokens, 0, (acc, w) -> (acc*31 + h(w)) mod (2^31-1)).
+
+    Robust content identity for shift-detection / fast exact-dup checks;
+    same value computable in the DuckDB oracle.
+    """
+    return (
+        f"aggregate(split({t}, '\\\\s+'), cast(0 as bigint),"
+        f" (acc, x) -> (acc * 31 + {spark_sql_hash28('x')}) % {_FP_MOD})"
+    )
+
+
+def token_count(text: str) -> Column:
+    return F.expr(token_count_sql(_q(text)))
+
+
+def bpe_ish_token_count(text: str) -> Column:
+    return F.expr(bpe_ish_token_count_sql(_q(text)))
+
+
+def quality_score(text: str) -> Column:
+    return F.expr(quality_score_sql(_q(text)))
+
+
+def doc_fingerprint(text: str) -> Column:
+    return F.expr(doc_fingerprint_sql(_q(text)))
 
 
 def language_id(text: Column | str) -> Column:
@@ -154,53 +158,16 @@ def language_id(text: Column | str) -> Column:
     Ties break by language-code order (deterministic, oracle-matching).
     """
     if isinstance(text, str):
-        w = f"split(lower({_ident(text)}), '\\\\s+')"
-        hits = {
-            lang: f"size(filter({w}, x -> x in ({_in_list(LANG_MARKERS[lang])})))"
-            for lang in sorted(LANG_MARKERS)
-        }
-        # same fold as the Column path: scan languages in code order and
-        # keep the strictly-better score — rendered as one nested CASE
-        best_lang, best_score = "'und'", "0"
-        for lang in sorted(LANG_MARKERS):
-            better = f"({hits[lang]}) > ({best_score})"
-            best_lang = f"case when {better} then '{lang}' else {best_lang} end"
-            best_score = f"case when {better} then ({hits[lang]}) else ({best_score}) end"
-        return F.expr(best_lang)
+        return F.expr(language_id_sql(_q(text)))
+    w = F.split(F.lower(text), "\\s+")
 
-    w = F.split(F.lower(_c(text)), "\\s+")
-
-    def marker_hits(lang: str):
-        markers = LANG_MARKERS[lang]
+    def hits(markers: tuple[str, ...]) -> Column:
         # single-arg closure: a 2-param lambda would be parsed as (elem, idx)
         return F.size(F.filter(w, lambda x: x.isin(*markers)))
 
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    for lang in sorted(LANG_MARKERS):
-        score = marker_hits(lang)
-        better = score > best_score
-        best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(better, score).otherwise(best_score)
-    return best_lang
-
-
-def doc_fingerprint(text: Column | str) -> Column:
-    """Order-sensitive 31-bit rolling-hash fingerprint over tokens:
-    fp = fold(tokens, 0, (acc, w) -> (acc*31 + h(w)) mod (2^31-1)).
-
-    Robust content identity for shift-detection / fast exact-dup checks;
-    same value computable in the DuckDB oracle.
-    """
-    if isinstance(text, str):
-        return F.expr(
-            f"aggregate(split({_ident(text)}, '\\\\s+'), cast(0 as bigint),"
-            f" (acc, x) -> (acc * 31 + cast(conv(substring(md5(x), 1, 7), 16, 10) as bigint)) % {_FP_MOD})"
+    entries = [F.struct(F.lit(0).alias("n"), F.lit(1).alias("o"), F.lit("und").alias("lang"))]
+    for i, lang in enumerate(_LANGS):
+        entries.append(
+            F.struct(hits(LANG_MARKERS[lang]).alias("n"), F.lit(-i).alias("o"), F.lit(lang).alias("lang"))
         )
-    w = F.split(_c(text), "\\s+")
-    h = lambda x: F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long")  # 28-bit
-    return F.aggregate(
-        w,
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * 31 + h(x)) % _FP_MOD,
-    )
+    return F.array_max(F.array(*entries)).getField("lang")

@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 import string
 import uuid
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,39 +48,54 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
+# session -> True once `_t` has pinned its confs. Weak keys tie the memo to
+# the live session object (as `functions/catalog.py` does), so a session
+# built after stop() is pinned again even when it reuses a dead one's id().
+_PINNED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from clickhouse_23_3_19_32_lts_spark.engine import read_parquet_table
 
     # Driver-session hardening: the driver constructs its own SparkSession;
     # these runtime-settable confs pin the semantics every oracle assumes
     # (UTC timestamps; ClickHouse wrap-not-raise arithmetic — Spark 4
-    # defaults ANSI on, which would turn benign casts into errors).
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.ansi.enabled", "false"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception as e:  # noqa: BLE001 — locked conf: proceed, answers may differ
-            log.warning("conf %s=%s refused, reading %s without it: %s", k, v, name, e)
+    # defaults ANSI on, which would turn benign casts into errors). Set once
+    # per live session, not on every table read.
+    if spark not in _PINNED:
+        for k, v in (
+            ("spark.sql.session.timeZone", "UTC"),
+            ("spark.sql.ansi.enabled", "false"),
+        ):
+            try:
+                spark.conf.set(k, v)
+            except Exception as e:  # noqa: BLE001 — locked conf: proceed, answers may differ
+                log.warning("conf %s=%s refused, reading %s without it: %s", k, v, name, e)
+        _PINNED[spark] = True
     return read_parquet_table(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _sql(spark: SparkSession, sf_dir: str, stmt: str) -> DataFrame:
-    """Build a query as ONE SQL statement over the tables it names.
+def _sql(spark: SparkSession, sf_dir: str | None, stmt: str, **frames: DataFrame) -> DataFrame:
+    """Build a query as ONE SQL statement over the inputs it names.
 
-    Each `{table}` placeholder is bound to `_t(spark, sf_dir, table)` for
-    this call only, through a temp view under a fresh name that is dropped
-    once the statement is analysed: no name outlives the build, so two
-    builds on one session cannot read each other's tables. (pyspark's
-    `spark.sql(stmt, table=df)` binds the same way but drops through
+    Each `{name}` placeholder is bound for this call only, to
+    `frames[name]` when the caller passes that DataFrame and otherwise to
+    the table `_t(spark, sf_dir, name)`. Binding goes through a temp view
+    under a fresh name that is dropped through the session catalog once
+    the statement is analysed: no name outlives the build, so two builds
+    on one session cannot read each other's inputs. (pyspark's
+    `spark.sql(stmt, docs=df)` binds the same way but drops through
     `Catalog.dropTempView`, which re-analyses each view to uncache it,
-    ~4 ms per table; these views are never cached.) Driver-side
-    construction cost: a DataFrame-API star builder makes hundreds of py4j
-    round trips (~0.5 ms each); one spark.sql() parse is ~10 ms. Plans are
-    identical to the DataFrame form (broadcast hints mirror the F.broadcast
-    calls) — fenced in tests/test_plan_quality.py and proven against the
-    oracle."""
+    ~4 ms per view; these views are never cached.)
+
+    Why one statement: PySpark analyses every DataFrame step as it is
+    built, at a py4j round trip (~0.5 ms) per Column and per step, so a
+    builder that chains dozens of steps pays hundreds to thousands of
+    round trips and as many incremental analyses. One statement is
+    parsed and analysed once, JVM-side, in a handful of calls. The
+    optimized plans equal the DataFrame form's (broadcast hints mirror
+    the F.broadcast calls) — fenced in tests/test_plan_quality.py and
+    proven against the oracle."""
     views = {
         t: f"_q{uuid.uuid4().hex}"
         for _, t, _, _ in string.Formatter().parse(stmt)
@@ -87,7 +103,7 @@ def _sql(spark: SparkSession, sf_dir: str, stmt: str) -> DataFrame:
     }
     try:
         for t, view in views.items():
-            _t(spark, sf_dir, t).createTempView(view)
+            (frames[t] if t in frames else _t(spark, sf_dir, t)).createTempView(view)
         return spark.sql(stmt.format(**views))
     finally:
         catalog = spark._jsparkSession.sessionState().catalog()

@@ -7,6 +7,8 @@ test_queries_oracle.py (q_dedup_*, q_ngram_jaccard, q_ann_topk, ...).
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -169,6 +171,56 @@ def test_language_id_markers(spark):
     )
     got = [r[0] for r in df.select(language_id("t")).collect()]
     assert got == ["en", "de", "und"]
+
+
+@pytest.mark.parametrize("as_column", [False, True], ids=["name", "column"])
+def test_language_id_counts_each_language_once(spark, as_column):
+    """Each language's marker hits appear once in the expression: it grows
+    linearly with the languages, not with a nested CASE per language. Both
+    paths, SQL (q_text_metrics) and Column (detectLanguage), give a tie to
+    the first language code and 'und' to no hit or no text."""
+    text = F.col("t") if as_column else "t"
+    assert str(language_id(text)).count("filter(") == 5
+    df = spark.createDataFrame(
+        [("la",), ("le chat est dans la maison",), ("的 猫 是",), ("",), (None,)], "t string"
+    )
+    assert [r[0] for r in df.select(language_id(text)).collect()] == ["es", "fr", "zh", "und", "und"]
+
+
+# The 7 pipeline queries of perfbench's llm_dedup workload.
+PIPELINE = [
+    "q_dedup_exact", "q_dedup_minhash_lsh", "q_dedup_simhash", "q_ngram_jaccard",
+    "q_embedding_near_dup", "q_ann_topk", "q_text_metrics",
+]
+
+
+@pytest.mark.parametrize("name", PIPELINE)
+def test_warm_build_makes_few_py4j_calls(spark, sf_dir, name):
+    """A warm build analyses one SQL statement per operator: at most 100
+    py4j round trips, where a chain of DataFrame steps makes one per Column
+    and per step (q_dedup_simhash made over 2,000)."""
+    from clickhouse_23_3_19_32_lts_spark.queries import all_queries
+
+    build = all_queries()[name]
+    build(spark, sf_dir)
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send = client.send_command
+    calls = []
+    builder = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        # py4j's finalizer thread sends the deletes of collected proxies
+        # whenever Python's GC runs; only the build's own calls count
+        if threading.get_ident() == builder:
+            calls.append(1)
+        return send(self, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build(spark, sf_dir)
+    finally:
+        client.send_command = send
+    assert len(calls) <= 100, f"{name}: {len(calls)} py4j calls per warm build"
 
 
 def test_quality_and_fingerprint(spark):

@@ -38,11 +38,6 @@ import re
 NAME_MAP: dict[str, str] = {
     # datetime
     "toYear": "year",
-    "toHour": "hour",
-    "toMinute": "minute",
-    "toSecond": "second",
-    "toUnixTimestamp": "unix_timestamp",
-    "fromUnixTimestamp": "from_unixtime",
     # string
     "lengthUTF8": "length",
     "base64Decode": "unbase64",
@@ -91,9 +86,9 @@ TEMPLATES: dict[str, str] = {
     "positiveModulo": "pmod({0}, abs({1}))",
     "negate": "(-({0}))",
     "toString": "CAST({0} AS STRING)",
-    "toUInt8": "CAST({0} AS INT)",
-    "toUInt16": "CAST({0} AS INT)",
-    "toUInt32": "CAST({0} AS BIGINT)",
+    # tests/test_dialect.py::test_translate_strings pins this text; the
+    # registry's builder keeps a NULL argument NULL, which greatest() does not
+    "toStartOfMonth": "greatest(to_date(date_trunc('month', {0})), DATE '1970-01-01')",
     # Int128/256 carried as BIGINT: values beyond ±2^63 are documented
     # unsupported (SCALING.md; src/Core/Types.h wide integers) but the
     # in-range arithmetic the golden corpus exercises is exact
@@ -101,73 +96,9 @@ TEMPLATES: dict[str, str] = {
     "toInt256": "CAST({0} AS BIGINT)",
     "toUInt128": "CAST({0} AS BIGINT)",
     "toUInt256": "CAST({0} AS BIGINT)",
-    # toDate/toDateTime accept strings, dates, AND numbers (DataTypeDate.cpp:
-    # numeric input is days-since-epoch below 65536, else unix seconds).
-    # Routing through STRING keeps every branch type-checkable whatever the
-    # input type; extra args (timezone) are intentionally dropped — the
-    # session is pinned UTC.
-    "toDate": (
-        "(CASE WHEN CAST({0} AS STRING) RLIKE '^[0-9]+$' THEN"
-        " (CASE WHEN CAST(CAST({0} AS STRING) AS BIGINT) < 65536"
-        " THEN date_add(DATE '1970-01-01', CAST(CAST({0} AS STRING) AS INT))"
-        " ELSE CAST(timestamp_seconds(CAST(CAST({0} AS STRING) AS BIGINT)) AS DATE) END)"
-        # flexible date parse (ReadHelpers.h readDateTextFallback): '-' or
-        # '/' separators, 1-or-2-digit month/day — normalize then to_date
-        " ELSE to_date(regexp_replace(regexp_replace(translate("
-        "substring_index(CAST({0} AS STRING), ' ', 1), '/', '-'),"
-        " '^([0-9][0-9][0-9][0-9])-([0-9])-', '$1-0$2-'),"
-        " '-([0-9])$', '-0$1')) END)"
-    ),
-    "toDate32": (
-        "(CASE WHEN CAST({0} AS STRING) RLIKE '^-?[0-9]+$' THEN"
-        " date_add(DATE '1970-01-01', CAST(CAST({0} AS STRING) AS INT))"
-        " ELSE to_date(CAST({0} AS STRING)) END)"
-    ),
-    "toDateTime": (
-        "(CASE WHEN CAST({0} AS STRING) RLIKE '^[0-9]+$'"
-        " THEN timestamp_seconds(CAST(CAST({0} AS STRING) AS BIGINT))"
-        " ELSE to_timestamp(CAST({0} AS STRING)) END)"
-    ),
-    "toDateTime64": (
-        "(CASE WHEN CAST({0} AS STRING) RLIKE '^[0-9]+(\\\\.[0-9]+)?$'"
-        " THEN timestamp_seconds(CAST(CAST({0} AS STRING) AS DECIMAL(20,6)))"
-        " ELSE to_timestamp(CAST({0} AS STRING)) END)"
-    ),
-    # ClickHouse hex() of an integer prints whole BYTES — pad odd-length
-    # output to even with a leading zero (FunctionsCodingIP hexImpl)
-    "hex": (
-        "(CASE WHEN length(hex({0})) % 2 = 1 THEN concat('0', hex({0}))"
-        " ELSE hex({0}) END)"
-    ),
     # untuple(t) expands the tuple into one column per element
     # (FunctionUntuple) — Spark's inline generator over a 1-element array
     "untuple": "inline(array({0}))",
-    # 64-bit sub-second unix conversions (FunctionsConversion.h
-    # fromUnixTimestamp64* / toUnixTimestamp64*)
-    "fromUnixTimestamp64Milli": "timestamp_millis(CAST({0} AS BIGINT))",
-    "fromUnixTimestamp64Micro": "timestamp_micros(CAST({0} AS BIGINT))",
-    "fromUnixTimestamp64Nano": "timestamp_micros(CAST(({0}) DIV 1000 AS BIGINT))",
-    # toTime: same time-of-day on the fixed date 1970-01-02
-    # (DateTimeTransforms.h ToTimeImpl)
-    "toTime": "timestamp_seconds(86400 + (unix_timestamp({0}) % 86400))",
-    # toStartOfYear/Quarter/Month return Date whatever the input
-    # (DateTimeTransforms.h) — Spark's date_trunc returns timestamp
-    "toStartOfYear": "greatest(to_date(date_trunc('year', {0})), DATE '1970-01-01')",
-    "toStartOfQuarter": "greatest(to_date(date_trunc('quarter', {0})), DATE '1970-01-01')",
-    "toStartOfMonth": "greatest(to_date(date_trunc('month', {0})), DATE '1970-01-01')",
-    "toStartOfDay": "date_trunc('day', {0})",
-    "toStartOfHour": "date_trunc('hour', {0})",
-    "toStartOfMinute": "date_trunc('minute', {0})",
-    # saturates at the Date epoch (DateLUTImpl toFirstDayNumOfWeek on
-    # day 0 stays 1970-01-01)
-    "toMonday": "greatest(CAST(date_trunc('week', {0}) AS DATE), DATE '1970-01-01')",
-    "toYYYYMM": "(year({0}) * 100 + month({0}))",
-    "toYYYYMMDD": "(year({0}) * 10000 + month({0}) * 100 + dayofmonth({0}))",
-    "toDayOfWeek": "(((dayofweek({0}) + 5) % 7) + 1)",  # ISO: Mon=1..Sun=7
-    "DAYOFWEEK": "(((dayofweek({0}) + 5) % 7) + 1)",  # MySQL alias, same ISO rule
-    # Spark 4's builtin monthname() abbreviates ('Jan'); the reference
-    # prints the full English name (DateLUTImpl months[])
-    "monthName": "date_format({0}, 'MMMM')",
     # partition ID of a value (partitionId.cpp): numbers render decimal
     "partitionId": "CAST({0} AS STRING)",
     "plus": "(({0}) + ({1}))",
@@ -183,8 +114,6 @@ TEMPLATES: dict[str, str] = {
     # Spark's locate; the plain variants count BYTES (see ARITY_TEMPLATES)
     "positionUTF8": "locate({1}, {0})",
     "positionCaseInsensitiveUTF8": "locate(lower({1}), lower({0}))",
-    "toQuarter": "quarter({0})",
-    "timeSlot": "date_trunc('hour', {0})",
     # toFixedString pads to N with NUL bytes (FunctionToFixedString);
     # the golden TSV escaper prints them as \0 like writeEscapedString
     # byte-exact pad (CH pads bytes, rpad counts chars). Too-long input
@@ -315,148 +244,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
         2: "count(CASE WHEN {1} THEN {0} END)",
     },
     "ignore": {0: "0", 1: "(length(CAST({0} AS STRING)) * 0)"},
-    # DateTime display time zones: the reference renders a DateTime in its
-    # column zone; the session is pinned UTC, so a non-UTC zone becomes a
-    # wall-clock shift (convert_timezone matches DateLUT incl. historic
-    # fractional offsets — reference 01262/01770)
-    "toTimeZone": {2: "convert_timezone('UTC', {1}, {0})"},
-    "toTimezone": {2: "convert_timezone('UTC', {1}, {0})"},
-    "now": {0: "current_timestamp()", 1: "convert_timezone('UTC', {0}, current_timestamp())"},
-    # only NUMERIC inputs are absolute instants needing a display shift;
-    # string/date inputs are wall clocks in the target zone already
-    "toDateTime": {
-        2: (
-            "(CASE WHEN CAST({0} AS STRING) RLIKE '^[0-9]+$'"
-            " THEN convert_timezone('UTC', {1},"
-            " timestamp_seconds(CAST(CAST({0} AS STRING) AS BIGINT)))"
-            " ELSE to_timestamp(CAST({0} AS STRING)) END)"
-        ),
-        3: (
-            "(CASE WHEN CAST({0} AS STRING) RLIKE '^[0-9]+(\\.[0-9]+)?$'"
-            " THEN convert_timezone('UTC', {2},"
-            " timestamp_seconds(CAST(CAST({0} AS STRING) AS DECIMAL(20,6))))"
-            " ELSE to_timestamp(CAST({0} AS STRING)) END)"
-        ),
-    },
-    "toDateTime64": {
-        3: (
-            "(CASE WHEN CAST({0} AS STRING) RLIKE '^[0-9]+(\\.[0-9]+)?$'"
-            " THEN convert_timezone('UTC', {2},"
-            " timestamp_seconds(CAST(CAST({0} AS STRING) AS DECIMAL(20,6))))"
-            " ELSE to_timestamp(CAST({0} AS STRING)) END)"
-        ),
-    },
-    # OrNull/OrZero datetime casts (FunctionsConversion.h to*OrNull):
-    # numeric strings are unix timestamps, otherwise standard parse
-    "toDateTimeOrNull": {
-        1: (
-            "(CASE WHEN CAST({0} AS STRING) RLIKE '^[0-9]+$'"
-            " THEN timestamp_seconds(CAST(CAST({0} AS STRING) AS BIGINT))"
-            " ELSE try_to_timestamp(CAST({0} AS STRING)) END)"
-        ),
-        2: (
-            "(CASE WHEN CAST({0} AS STRING) RLIKE '^[0-9]+$'"
-            " THEN timestamp_seconds(CAST(CAST({0} AS STRING) AS BIGINT))"
-            " ELSE try_to_timestamp(CAST({0} AS STRING)) END)"
-        ),
-    },
-    "toDateTimeOrZero": {
-        1: (
-            "coalesce(CASE WHEN CAST({0} AS STRING) RLIKE '^[0-9]+$'"
-            " THEN timestamp_seconds(CAST(CAST({0} AS STRING) AS BIGINT))"
-            " ELSE try_to_timestamp(CAST({0} AS STRING)) END,"
-            " timestamp_seconds(0))"
-        ),
-        2: (
-            "coalesce(CASE WHEN CAST({0} AS STRING) RLIKE '^[0-9]+$'"
-            " THEN timestamp_seconds(CAST(CAST({0} AS STRING) AS BIGINT))"
-            " ELSE try_to_timestamp(CAST({0} AS STRING)) END,"
-            " timestamp_seconds(0))"
-        ),
-    },
-    "toDateTime64OrNull": {
-        1: "try_to_timestamp(CAST({0} AS STRING))",
-        2: "try_to_timestamp(CAST({0} AS STRING))",
-        3: "try_to_timestamp(CAST({0} AS STRING))",
-    },
-    "toDateTime64OrZero": {
-        2: (
-            "coalesce(try_to_timestamp(CAST({0} AS STRING)),"
-            " timestamp_seconds(0))"
-        ),
-        3: (
-            "coalesce(try_to_timestamp(CAST({0} AS STRING)),"
-            " timestamp_seconds(0))"
-        ),
-    },
-    # best-effort datetime parsing (functions/besteffort.py scanner);
-    # strict raises, OrNull yields NULL, OrZero the epoch
-    "parseDateTimeBestEffort": {
-        1: "chParseDTBestEffort({0}, 'UTC')",
-        2: "chParseDTBestEffort({0}, {1})",
-    },
-    "parseDateTime32BestEffort": {
-        1: "chParseDTBestEffort({0}, 'UTC')",
-        2: "chParseDTBestEffort({0}, {1})",
-    },
-    "parseDateTimeBestEffortOrNull": {
-        1: "chParseDTBestEffortOrNull({0}, 'UTC')",
-        2: "chParseDTBestEffortOrNull({0}, {1})",
-    },
-    "parseDateTime32BestEffortOrNull": {
-        1: "chParseDTBestEffortOrNull({0}, 'UTC')",
-        2: "chParseDTBestEffortOrNull({0}, {1})",
-    },
-    "parseDateTimeBestEffortOrZero": {
-        1: "coalesce(chParseDTBestEffortOrNull({0}, 'UTC'), timestamp_seconds(0))",
-        2: "coalesce(chParseDTBestEffortOrNull({0}, {1}), timestamp_seconds(0))",
-    },
-    "parseDateTime32BestEffortOrZero": {
-        1: "coalesce(chParseDTBestEffortOrNull({0}, 'UTC'), timestamp_seconds(0))",
-        2: "coalesce(chParseDTBestEffortOrNull({0}, {1}), timestamp_seconds(0))",
-    },
-    "parseDateTimeBestEffortUS": {
-        1: "chParseDTBestEffortUS({0}, 'UTC')",
-        2: "chParseDTBestEffortUS({0}, {1})",
-    },
-    "parseDateTimeBestEffortUSOrNull": {
-        1: "chParseDTBestEffortUSOrNull({0}, 'UTC')",
-        2: "chParseDTBestEffortUSOrNull({0}, {1})",
-    },
-    "parseDateTimeBestEffortUSOrZero": {
-        1: "coalesce(chParseDTBestEffortUSOrNull({0}, 'UTC'), timestamp_seconds(0))",
-        2: "coalesce(chParseDTBestEffortUSOrNull({0}, {1}), timestamp_seconds(0))",
-    },
-    "parseDateTime64BestEffort": {
-        1: "chParseDT64BestEffort({0}, 3, 'UTC')",
-        2: "chParseDT64BestEffort({0}, {1}, 'UTC')",
-        3: "chParseDT64BestEffort({0}, {1}, {2})",
-    },
-    "parseDateTime64BestEffortOrNull": {
-        1: "chParseDT64BestEffortOrNull({0}, 3, 'UTC')",
-        2: "chParseDT64BestEffortOrNull({0}, {1}, 'UTC')",
-        3: "chParseDT64BestEffortOrNull({0}, {1}, {2})",
-    },
-    "parseDateTime64BestEffortOrZero": {
-        1: "coalesce(chParseDT64BestEffortOrNull({0}, 3, 'UTC'), timestamp_seconds(0))",
-        2: "coalesce(chParseDT64BestEffortOrNull({0}, {1}, 'UTC'), timestamp_seconds(0))",
-        3: "coalesce(chParseDT64BestEffortOrNull({0}, {1}, {2}), timestamp_seconds(0))",
-    },
-    "parseDateTime64BestEffortUS": {
-        1: "chParseDT64BestEffortUS({0}, 3, 'UTC')",
-        2: "chParseDT64BestEffortUS({0}, {1}, 'UTC')",
-        3: "chParseDT64BestEffortUS({0}, {1}, {2})",
-    },
-    "parseDateTime64BestEffortUSOrNull": {
-        1: "chParseDT64BestEffortUSOrNull({0}, 3, 'UTC')",
-        2: "chParseDT64BestEffortUSOrNull({0}, {1}, 'UTC')",
-        3: "chParseDT64BestEffortUSOrNull({0}, {1}, {2})",
-    },
-    "parseDateTime64BestEffortUSOrZero": {
-        1: "coalesce(chParseDT64BestEffortUSOrNull({0}, 3, 'UTC'), timestamp_seconds(0))",
-        2: "coalesce(chParseDT64BestEffortUSOrNull({0}, {1}, 'UTC'), timestamp_seconds(0))",
-        3: "coalesce(chParseDT64BestEffortUSOrNull({0}, {1}, {2}), timestamp_seconds(0))",
-    },
     # bare parametric-aggregate forms default to level 0.5
     # (AggregateFunctionQuantile.h: params optional)
     "quantile": {1: "coalesce(percentile({0}, 0.5), double('NaN'))"},
@@ -506,9 +293,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
     # default precision 12 (geohashEncode.cpp); the 3-arg form resolves to
     # the registered SQL pandas UDF (functions/sql_udfs.py)
     "geohashEncode": {2: "geohashEncode({0}, {1}, 12)"},
-    # Spark date_add/date_sub demand INT deltas; ClickHouse accepts any int
-    "addDays": {2: "date_add({0}, CAST({1} AS INT))"},
-    "subtractDays": {2: "date_sub({0}, CAST({1} AS INT))"},
     # -OrNull / -OrDefault combinators (AggregateFunctionOrFill.h): empty
     # input → NULL / type default. Spark's sum/min/max/avg are already NULL
     # on empty input, so OrNull is the identity there and OrDefault a
@@ -577,17 +361,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
            " transform(sequence(1, length({1})), __i -> substring({1}, __i, 1)) END)"
            " ELSE split({1}, concat('\\\\Q', {0}, '\\\\E')) END)",
         3: "split({1}, concat('\\\\Q', {0}, '\\\\E'), {2})",
-    },
-    # CH 23.3 default week mode 0 starts weeks on SUNDAY (DateLUTImpl.h
-    # week_mode); Spark date_trunc('week') is Monday. Mirror
-    # functions/datetime.py:toStartOfWeek, returning Date as CH does.
-    # Odd modes (1, 3) are Monday-start.
-    "toStartOfWeek": {
-        1: "greatest(date_sub(next_day(CAST({0} AS DATE), 'Sun'), 7), DATE '1970-01-01')",
-        2: (
-            "greatest((CASE WHEN ({1}) % 2 = 1 THEN CAST(date_trunc('week', {0}) AS DATE)"
-            " ELSE date_sub(next_day(CAST({0} AS DATE), 'Sun'), 7) END), DATE '1970-01-01')"
-        ),
     },
     # if() takes a UInt8 condition in ClickHouse (FunctionsConditional);
     # Spark requires BOOLEAN — CAST is exact for both bool and int inputs
@@ -1360,6 +1133,11 @@ def _alias_backref_tokens(tokens: list[str], upto: int, ident: str) -> list[str]
 
 _BRIDGE_CACHE: dict[tuple[str, int], str | None] = {}
 _SPARK_BUILTINS: set[str] | None = None
+# Registry names that a Spark built-in of the same name answers differently:
+# the bridge renders the registry's builder for these. hex prints whole
+# bytes, monthName the full name, DAYOFWEEK counts from Monday and now
+# takes a zone.
+_OVER_BUILTINS = frozenset({"DAYOFWEEK", "hex", "monthName", "now"})
 
 # The session registry calls render on and catalog UDFs register on. ch_sql,
 # apply_fill and create_sql_function bind the session they run on; only an
@@ -1512,12 +1290,15 @@ def _literal_params(builder, nargs: int) -> list[bool] | None:
 
 
 def _column_sql(spark, expr) -> str:
-    """`expr.sql()`, keeping the DISTINCT of a distinct function call:
-    `Expression.sql()` renders `count(DISTINCT x)` as `count(x)`. Each
-    distinct call is swapped for a placeholder column before rendering and
-    written back with its DISTINCT after (outermost first, so a nested
-    one's placeholder is written back too)."""
-    if "(distinct " not in expr.toString():
+    """`expr.sql()`, keeping the DISTINCT of a distinct function call and
+    the literals of a Python UDF call: `Expression.sql()` renders
+    `count(DISTINCT x)` as `count(x)`, and a Python UDF's arguments without
+    their quotes (the UDF's own toString, `f(x)#7`, shows one). Each such
+    call is swapped for a placeholder column before rendering and written
+    back after (outermost first, so a nested one's placeholder is written
+    back too)."""
+    text = expr.toString()
+    if "(distinct " not in text and not re.search(r"\)#\d", text):
         return expr.sql()
     from pyspark.sql import functions as F
 
@@ -1529,11 +1310,16 @@ def _column_sql(spark, expr) -> str:
         new = [strip(kids.apply(i)) for i in range(kids.size())]
         if new:
             node = node.withNewChildren(jvm.PythonUtils.toSeq(new))
-        if node.getClass().getSimpleName() == "UnresolvedFunction" and node.isDistinct():
-            name = f"__dlt_distinct{len(calls)}"
-            calls[name] = f"{node.prettyName()}(DISTINCT {', '.join(k.sql() for k in new)})"
-            return spark._jsparkSession.expression(F.col(name)._jc)
-        return node
+        kind = node.getClass().getSimpleName()
+        if kind == "UnresolvedFunction" and node.isDistinct():
+            head = f"{node.prettyName()}(DISTINCT "
+        elif kind == "PythonUDF":
+            head = f"{node.name()}("
+        else:
+            return node
+        name = f"__dlt_call{len(calls)}"
+        calls[name] = head + ", ".join(k.sql() for k in new) + ")"
+        return spark._jsparkSession.expression(F.col(name)._jc)
 
     sql = strip(expr).sql()
     for name in reversed(calls):
@@ -1554,7 +1340,7 @@ def _render_call(spark, builder, args) -> str | None:
             sql = _fix_lambdas(_tokenize_spark(sql))
         spark._jsparkSession.sessionState().sqlParser().parseExpression(sql)
         return sql
-    except UdfRegistrationError:
+    except (UdfRegistrationError, ChSqlError):
         raise
     except Exception:  # noqa: BLE001 — builder shape not SQL-expressible
         return None
@@ -1597,7 +1383,7 @@ def _registry_bridge(fname: str, arg_sql: list[str]) -> str | None:
     spark = _session()
     if spark is None or fname not in REGISTRY:
         return None
-    if fname.lower() in _spark_builtins(spark):
+    if fname.lower() in _spark_builtins(spark) and fname not in _OVER_BUILTINS:
         return None  # Spark resolves it natively; don't shadow
     from pyspark.sql import functions as F
 

@@ -3,8 +3,10 @@
 Reference: /root/reference/src/Functions/ (604 REGISTER_FUNCTION sites,
 ~916 registered symbols + aliases via FunctionFactory). Each ClickHouse
 function name is re-expressed over pyspark.sql.functions builtins so every
-expression stays inside Catalyst/whole-stage codegen; pandas UDFs appear
-only where Spark has no vectorized equivalent (documented per function).
+expression stays inside Catalyst (whole-stage codegen, except higher-order
+functions such as transform and aggregate, which Spark interprets); pandas
+UDFs appear only where Spark has no vectorized equivalent (documented per
+function).
 
 Usage:
     from clickhouse_23_3_19_32_lts_spark import functions as CH

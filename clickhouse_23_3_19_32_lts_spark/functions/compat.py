@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from clickhouse_23_3_19_32_lts_spark.functions.datetime import _in_zone
 from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col
 
 # --- ANSI / MySQL-compat aliases (FunctionFactory case-insensitive set) -----
@@ -155,11 +156,10 @@ def timeZoneOffset(x) -> Column:
     return F.lit(0).cast("int")
 
 
-@chfn("toTimeZone")
-def toTimeZone(x, tz: str) -> Column:
-    """Spark timestamps are instants (no attached display zone): the value
-    is unchanged, matching ClickHouse's same-instant semantics."""
-    return col(x)
+@chfn("toTimeZone", "toTimezone")
+def toTimeZone(x, tz) -> Column:
+    """The same instant shown in zone ``tz``: its wall clock there."""
+    return _in_zone(col(x).cast("timestamp"), tz)
 
 
 @chfn("query_id", "initial_query_id", "queryID", "initialQueryID")

@@ -24,7 +24,7 @@ def if_(cond, then, else_) -> Column:
     return F.when(col(cond), lit_or_col(then)).otherwise(lit_or_col(else_))
 
 
-@chfn("multiIf", "multi_if", "caseWithoutExpression")
+@chfn("multiIf", "multi_if")
 def multiIf(*args) -> Column:
     """multiIf(c1, v1, c2, v2, ..., else) — CASE WHEN chain."""
     if len(args) < 3 or len(args) % 2 == 0:

@@ -10,17 +10,24 @@ produces the same ISO forms.
 
 from __future__ import annotations
 
+import datetime as _dt
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col
+from clickhouse_23_3_19_32_lts_spark.functions.catalog import udf_call
+from clickhouse_23_3_19_32_lts_spark.functions.datetime import _in_zone
+from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col, lit_or_col
 
 __all__ = [
     "toUInt8", "toUInt16", "toUInt32", "toUInt64", "toInt8", "toInt16",
     "toInt32", "toInt64", "toFloat32", "toFloat64", "toString", "toDate",
-    "toDate32", "toDateTime", "toDateTime64", "toDecimal", "toDecimal32",
+    "toDate32", "toDateTime", "toDateTime64", "toDateTimeOrNull",
+    "toDateTimeOrZero", "toDateTime64OrNull", "toDateTime64OrZero",
+    "toDecimal", "toDecimal32",
     "toDecimal64", "toDecimal128", "toUnixTimestamp", "fromUnixTimestamp",
-    "toFixedString", "parseDateTimeBestEffort", "parseDateTime",
+    "toFixedString", "parseDateTime", "parseDateTimeOrNull",
+    "parseDateTimeOrZero",
     "formatDateTime", "cast_", "accurateCast", "accurateCastOrNull",
     "toIntervalSecond", "toIntervalMinute", "toIntervalHour", "toIntervalDay",
     "toIntervalWeek", "toIntervalMonth", "toIntervalYear", "toTypeName",
@@ -82,26 +89,92 @@ def toString(x) -> Column:
     return col(x).cast("string")
 
 
+def _epoch() -> Column:
+    return F.timestamp_seconds(F.lit(0))
+
+
+# Dates, numbers and text all convert through their text, so one
+# expression type-checks whatever the argument's type (DataTypeDate.cpp,
+# ReadHelpers.h readDateTimeText). A number or an all-digit text is a day
+# number below 65536 for Date and unix seconds otherwise; DateTime and Date
+# are unsigned, so negative numbers saturate at the epoch
+# (FunctionsConversion.h ToDateTransform32Or64Signed,
+# ToDateTimeTransformSigned).
+
+
+def _date_text(s: Column) -> Column:
+    """Date text with '-' or '/' separators and 1- or 2-digit month and day
+    (ReadHelpers.h readDateTextFallback); a time part is dropped."""
+    s = F.translate(F.substring_index(s, " ", 1), "/", "-")
+    s = F.regexp_replace(s, "^([0-9]{4})-([0-9])-", "$1-0$2-")
+    return F.to_date(F.regexp_replace(s, "-([0-9])$", "-0$1"))
+
+
 @chfn("toDate", "DATE")
-def toDate(x) -> Column:
-    return col(x).cast("date")
+def toDate(x, tz=None) -> Column:
+    c = col(x)
+    s = c.cast("string")
+    n = F.greatest(s.cast("long"), F.lit(0))
+    number = F.when(
+        n < 65536, F.date_add(F.lit(_dt.date(1970, 1, 1)), n.cast("int"))
+    ).otherwise(_in_zone(F.timestamp_seconds(n), tz).cast("date"))
+    date = F.when(s.rlike("^-?[0-9]+$"), number).otherwise(_date_text(s))
+    if tz is None:
+        return date
+    return F.when(F.typeof(c) == "timestamp", _in_zone(c, tz).cast("date")).otherwise(date)
 
 
 @chfn("toDate32")
 def toDate32(x) -> Column:
-    return col(x).cast("date")
+    """Date32 counts days either side of the epoch."""
+    s = col(x).cast("string")
+    return F.when(
+        s.rlike("^-?[0-9]+$"), F.date_add(F.lit(_dt.date(1970, 1, 1)), s.cast("int"))
+    ).otherwise(F.to_date(s))
+
+
+def _datetime(x, tz, frac: bool = False, parse=F.to_timestamp) -> Column:
+    """toDateTime's rule; ``frac`` admits DateTime64's fractional seconds
+    and times before the epoch. Numbers are instants, shown as the wall
+    clock in ``tz``; text is a wall clock in ``tz`` already."""
+    c = col(x)
+    s = c.cast("string")
+    num = s.rlike(r"^-?[0-9]+(\.[0-9]+)?$" if frac else "^-?[0-9]+$")
+    secs = s.cast("decimal(20,6)") if frac else F.greatest(s.cast("long"), F.lit(0))
+    ts = F.when(num, F.timestamp_seconds(secs)).otherwise(parse(s))
+    return _in_zone(ts, tz, num | (F.typeof(c) == "timestamp"))
 
 
 @chfn("toDateTime")
-def toDateTime(x) -> Column:
-    """Strings parse as ISO; numerics are unix seconds (ClickHouse rule)."""
-    c = col(x)
-    return c.cast("timestamp")
+def toDateTime(x, tz=None) -> Column:
+    """Numbers and all-digit text are unix seconds, other text a wall clock."""
+    return _datetime(x, tz)
 
 
 @chfn("toDateTime64")
-def toDateTime64(x, scale: int = 3) -> Column:
-    return col(x).cast("timestamp")
+def toDateTime64(x, scale: int = 3, tz=None) -> Column:
+    """Spark timestamps hold microseconds, so ``scale`` above 6 truncates."""
+    return _datetime(x, tz, frac=True)
+
+
+@chfn("toDateTimeOrNull")
+def toDateTimeOrNull(x, tz=None) -> Column:
+    return _datetime(x, tz, parse=F.try_to_timestamp)
+
+
+@chfn("toDateTimeOrZero")
+def toDateTimeOrZero(x, tz=None) -> Column:
+    return F.coalesce(toDateTimeOrNull(x, tz), _in_zone(_epoch(), tz))
+
+
+@chfn("toDateTime64OrNull")
+def toDateTime64OrNull(x, scale: int = 3, tz=None) -> Column:
+    return _datetime(x, tz, frac=True, parse=F.try_to_timestamp)
+
+
+@chfn("toDateTime64OrZero")
+def toDateTime64OrZero(x, scale: int = 3, tz=None) -> Column:
+    return F.coalesce(toDateTime64OrNull(x, scale, tz), _in_zone(_epoch(), tz))
 
 
 @chfn("toDecimal", "toDecimal128")
@@ -123,13 +196,19 @@ toDecimal128 = toDecimal
 
 
 @chfn("toUnixTimestamp")
-def toUnixTimestamp(x) -> Column:
-    return F.unix_timestamp(col(x).cast("timestamp")).cast("long")
+def toUnixTimestamp(x, tz=None) -> Column:
+    """A DateTime is an instant, so ``tz`` leaves it alone; text is read as
+    a wall clock in ``tz``."""
+    c = col(x)
+    ts = c.cast("timestamp")
+    if tz is not None:
+        ts = F.when(F.typeof(c) == "string", F.to_utc_timestamp(ts, lit_or_col(tz))).otherwise(ts)
+    return F.unix_timestamp(ts).cast("long")
 
 
 @chfn("fromUnixTimestamp", "FROM_UNIXTIME")
-def fromUnixTimestamp(x, fmt: str | None = None) -> Column:
-    ts = F.timestamp_seconds(col(x).cast("long"))
+def fromUnixTimestamp(x, fmt: str | None = None, tz=None) -> Column:
+    ts = _in_zone(F.timestamp_seconds(col(x).cast("long")), tz)
     return F.date_format(ts, _ch_to_spark_datetime_format(fmt)) if fmt else ts
 
 
@@ -190,27 +269,48 @@ def parseDateTime(x, fmt: str) -> Column:
     return F.to_timestamp(col(x), _ch_to_spark_datetime_format(fmt))
 
 
-@chfn("parseDateTimeBestEffort", "parseDateTimeBestEffortOrNull")
-def parseDateTimeBestEffort(x, tz: str | None = None) -> Column:
-    """Best-effort: try common formats in order, first non-null wins.
-    With a timezone argument, naive strings are wall times IN that zone and
-    the result renders as wall time in the same zone (identity), while
-    offset-bearing strings resolve to an instant and convert into the zone
-    (parseDateTimeBestEffort.cpp's DateTime(tz) return type)."""
-    c = col(x)
-    naive = F.coalesce(
-        F.to_timestamp(c, "yyyy-MM-dd HH:mm:ss"),
-        F.to_timestamp(c, "yyyy-MM-dd'T'HH:mm:ss"),
-        F.to_timestamp(c, "yyyy-MM-dd"),
-        F.to_timestamp(c, "dd/MM/yyyy HH:mm:ss"),
-        F.to_timestamp(c, "yyyyMMddHHmmss"),
-        F.to_timestamp(c, "yyyyMMdd"),
+@chfn("parseDateTimeOrNull")
+def parseDateTimeOrNull(x, fmt: str) -> Column:
+    return F.try_to_timestamp(col(x), F.lit(_ch_to_spark_datetime_format(fmt)))
+
+
+@chfn("parseDateTimeOrZero")
+def parseDateTimeOrZero(x, fmt: str) -> Column:
+    return F.coalesce(parseDateTimeOrNull(x, fmt), _epoch())
+
+
+# parseDateTime*BestEffort* run the scanner of besteffort.py, a port of
+# parseDateTimeBestEffort.cpp, through its chParseDT* UDFs
+# (besteffort_udfs.py). The result is the wall clock in the zone argument,
+# UTC by default. The strict forms raise on text the scanner rejects,
+# OrNull gives NULL and OrZero the epoch in the zone. The DateTime64 forms
+# take a scale before the zone; parseDateTime32* are the DateTime forms.
+def _best_effort(udf: str, zero: bool):
+    def run(x, scale: list, tz) -> Column:
+        tz = lit_or_col("UTC" if tz is None else tz)
+        out = udf_call(udf, col(x), *[lit_or_col(s) for s in scale], tz)
+        return F.coalesce(out, _in_zone(_epoch(), tz)) if zero else out
+
+    if udf.startswith("chParseDT64"):
+        def build(x, scale=3, tz=None) -> Column:
+            return run(x, [scale], tz)
+    else:
+        def build(x, tz=None) -> Column:
+            return run(x, [], tz)
+    build.__doc__ = f"The best-effort scanner through the {udf} UDF" + (
+        ", the epoch when it fails." if zero else "."
     )
-    if tz is None:
-        return F.coalesce(naive, c.cast("timestamp"))
-    return F.coalesce(
-        naive, F.from_utc_timestamp(c.cast("timestamp"), str(tz))
-    )
+    return build
+
+
+for _us in ("", "US"):
+    for _sfx in ("", "OrNull", "OrZero"):
+        _udf_sfx = _sfx and "OrNull"
+        chfn(f"parseDateTimeBestEffort{_us}{_sfx}",
+             *([f"parseDateTime32BestEffort{_sfx}"] if not _us else []))(
+            _best_effort(f"chParseDTBestEffort{_us}{_udf_sfx}", _sfx == "OrZero"))
+        chfn(f"parseDateTime64BestEffort{_us}{_sfx}")(
+            _best_effort(f"chParseDT64BestEffort{_us}{_udf_sfx}", _sfx == "OrZero"))
 
 
 @chfn("CAST", "cast")

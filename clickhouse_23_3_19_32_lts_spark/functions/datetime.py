@@ -4,24 +4,27 @@ Reference: src/Functions/toStartOfInterval.cpp:535, dateDiff.cpp:448,
 DateTimeTransforms.h (toYear..toSecond, toStartOf*), addDays etc. via
 FunctionDateOrDateTimeAddInterval, toYYYYMM.cpp, timeSlot, now.cpp.
 
-Time zone: engine runs with spark.sql.session.timeZone=UTC; ClickHouse tz
-arguments are accepted but only 'UTC' is honored (documented divergence —
-add from_utc_timestamp wrappers if a test demands a named zone).
+Time zone: sessions run with spark.sql.session.timeZone=UTC. A ClickHouse
+zone argument means the wall clock in that zone (DateLUT of the zone): the
+builders return it as a session-zone TIMESTAMP through ``_in_zone``.
+Date results saturate at 1970-01-01, ClickHouse's smallest Date.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col
+from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col, lit_or_col
 
 __all__ = [
     "toYear", "toQuarter", "toMonth", "toDayOfYear", "toDayOfMonth",
     "toDayOfWeek", "toHour", "toMinute", "toSecond", "toMonday",
     "toStartOfYear", "toStartOfQuarter", "toStartOfMonth", "toStartOfWeek",
     "toStartOfDay", "toStartOfHour", "toStartOfMinute", "toStartOfSecond",
-    "toStartOfFiveMinutes", "toStartOfTenMinutes", "toStartOfFifteenMinutes",
+    "toStartOfTenMinutes", "toStartOfFifteenMinutes",
     "toStartOfInterval", "toLastDayOfMonth", "toTime", "toYYYYMM",
     "toYYYYMMDD", "toYYYYMMDDhhmmss", "toWeek", "toISOWeek", "toISOYear",
     "addYears", "addMonths", "addWeeks", "addDays", "addHours", "addMinutes",
@@ -36,14 +39,35 @@ __all__ = [
 ]
 
 
+def _in_zone(x, tz, instant: Column | None = None) -> Column:
+    """The wall clock of ``x`` in zone ``tz`` as a session-zone TIMESTAMP;
+    ``x`` itself when ``tz`` is None. Instants (TIMESTAMP values, or the rows
+    where ``instant`` holds) shift through from_utc_timestamp; dates and
+    text are wall clocks in the zone already."""
+    c = col(x)
+    if tz is None:
+        return c
+    if instant is None:
+        instant = F.typeof(c) == "timestamp"
+    return F.when(instant, F.from_utc_timestamp(c, lit_or_col(tz))).otherwise(
+        c.cast("timestamp")
+    )
+
+
+def _from_epoch(d: Column) -> Column:
+    """A Date result saturated at 1970-01-01; NULL stays NULL."""
+    epoch = F.lit(_dt.date(1970, 1, 1))
+    return F.when(d < epoch, epoch).otherwise(d)
+
+
 @chfn("toYear", "YEAR")
 def toYear(x) -> Column:
     return F.year(col(x))
 
 
 @chfn("toQuarter", "QUARTER")
-def toQuarter(x) -> Column:
-    return F.quarter(col(x))
+def toQuarter(x, tz=None) -> Column:
+    return F.quarter(_in_zone(x, tz))
 
 
 @chfn("toMonth", "MONTH")
@@ -62,68 +86,76 @@ def toDayOfMonth(x) -> Column:
 
 
 @chfn("toDayOfWeek", "DAYOFWEEK")
-def toDayOfWeek(x) -> Column:
-    """ClickHouse: Monday=1..Sunday=7 (ISO). Spark dayofweek: Sunday=1."""
-    return F.weekday(col(x)) + 1
+def toDayOfWeek(x, mode: int = 0, tz=None) -> Column:
+    """Day of the week (DateTimeTransforms.h ToDayOfWeekImpl). Mode 0:
+    Monday=1..Sunday=7; 1: Monday=0..Sunday=6; 2: Sunday=0..Saturday=6;
+    3: Sunday=1..Saturday=7."""
+    if mode not in (0, 1, 2, 3):
+        from clickhouse_23_3_19_32_lts_spark.dialect import ChSqlError
+
+        raise ChSqlError(f"toDayOfWeek: mode {mode} is not one of 0, 1, 2, 3")
+    iso = F.weekday(_in_zone(x, tz)) + 1
+    return {0: iso, 1: iso - 1, 2: iso % 7, 3: iso % 7 + 1}[mode]
 
 
 @chfn("toHour", "HOUR")
-def toHour(x) -> Column:
-    return F.hour(col(x))
+def toHour(x, tz=None) -> Column:
+    return F.hour(_in_zone(x, tz))
 
 
 @chfn("toMinute", "MINUTE")
-def toMinute(x) -> Column:
-    return F.minute(col(x))
+def toMinute(x, tz=None) -> Column:
+    return F.minute(_in_zone(x, tz))
 
 
 @chfn("toSecond", "SECOND")
-def toSecond(x) -> Column:
-    return F.second(col(x))
+def toSecond(x, tz=None) -> Column:
+    return F.second(_in_zone(x, tz))
 
 
 @chfn("toMonday")
 def toMonday(x) -> Column:
-    return F.date_trunc("week", col(x)).cast("date")
+    return _from_epoch(F.date_trunc("week", col(x)).cast("date"))
 
 
 @chfn("toStartOfYear")
 def toStartOfYear(x) -> Column:
-    return F.date_trunc("year", col(x)).cast("date")
+    return _from_epoch(F.date_trunc("year", col(x)).cast("date"))
 
 
 @chfn("toStartOfQuarter")
 def toStartOfQuarter(x) -> Column:
-    return F.date_trunc("quarter", col(x)).cast("date")
+    return _from_epoch(F.date_trunc("quarter", col(x)).cast("date"))
 
 
 @chfn("toStartOfMonth")
 def toStartOfMonth(x) -> Column:
-    return F.date_trunc("month", col(x)).cast("date")
+    return _from_epoch(F.date_trunc("month", col(x)).cast("date"))
 
 
 @chfn("toStartOfWeek")
 def toStartOfWeek(x, mode: int = 0) -> Column:
-    """mode 0: week starts Sunday (ClickHouse default); mode 1: Monday."""
-    if mode == 1:
-        return F.date_trunc("week", col(x)).cast("date")
+    """Even modes start weeks on Sunday (the default), odd modes on Monday
+    (DateLUTImpl.h toFirstDayNumOfWeek)."""
+    if mode % 2 == 1:
+        return toMonday(x)
     # next_day is strictly-after, so next_day(d,'Sun')-7 maps a Sunday to itself
-    return F.date_sub(F.next_day(col(x).cast("date"), "Sun"), 7)
+    return _from_epoch(F.date_sub(F.next_day(col(x).cast("date"), "Sun"), 7))
 
 
 @chfn("toStartOfDay")
-def toStartOfDay(x) -> Column:
-    return F.date_trunc("day", col(x))
+def toStartOfDay(x, tz=None) -> Column:
+    return F.date_trunc("day", _in_zone(x, tz))
 
 
 @chfn("toStartOfHour")
-def toStartOfHour(x) -> Column:
-    return F.date_trunc("hour", col(x))
+def toStartOfHour(x, tz=None) -> Column:
+    return F.date_trunc("hour", _in_zone(x, tz))
 
 
 @chfn("toStartOfMinute")
-def toStartOfMinute(x) -> Column:
-    return F.date_trunc("minute", col(x))
+def toStartOfMinute(x, tz=None) -> Column:
+    return F.date_trunc("minute", _in_zone(x, tz))
 
 
 @chfn("toStartOfSecond")
@@ -134,11 +166,6 @@ def toStartOfSecond(x) -> Column:
 def _start_of_n_minutes(x, n: int) -> Column:
     secs = F.unix_timestamp(col(x))
     return F.timestamp_seconds((secs - secs % (n * 60)))
-
-
-@chfn("toStartOfFiveMinutes")
-def toStartOfFiveMinutes(x) -> Column:
-    return _start_of_n_minutes(x, 5)
 
 
 @chfn("toStartOfTenMinutes")
@@ -183,9 +210,9 @@ def toLastDayOfMonth(x) -> Column:
 
 
 @chfn("toTime")
-def toTime(x) -> Column:
+def toTime(x, tz=None) -> Column:
     """Keep time-of-day, date pinned to 1970-01-02 (ClickHouse convention)."""
-    c = col(x)
+    c = _in_zone(x, tz)
     return F.timestamp_seconds(
         86400 + F.hour(c) * 3600 + F.minute(c) * 60 + F.second(c)
     )
@@ -247,10 +274,10 @@ def addWeeks(x, n) -> Column:
 
 @chfn("addDays")
 def addDays(x, n) -> Column:
-    """Timestamp-preserving (our tables store timestamps; ClickHouse keeps
-    the argument type — cast to date at the call site when needed)."""
+    """Keeps the argument type, as ClickHouse does: a Date stays a Date and
+    a DateTime keeps its time of day."""
     nn = col(n) if isinstance(n, Column) else F.lit(n)
-    return F.timestamp_seconds(F.unix_timestamp(col(x)) + nn * 86400)
+    return col(x) + F.make_interval(days=nn.cast("int"))
 
 
 @chfn("addHours")
@@ -374,8 +401,8 @@ def age(unit: str, start, end) -> Column:
 
 
 @chfn("now")
-def now() -> Column:
-    return F.current_timestamp()
+def now(tz=None) -> Column:
+    return _in_zone(F.current_timestamp(), tz)
 
 
 @chfn("today")

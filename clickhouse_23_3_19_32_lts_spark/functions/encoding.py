@@ -21,7 +21,9 @@ __all__ = [
 
 @chfn("hex")
 def hex_(x) -> Column:
-    return F.upper(F.hex(col(x)))
+    """Whole bytes, as ClickHouse prints them: hex(5) is '05'."""
+    h = F.upper(F.hex(col(x)))
+    return F.lpad(h, F.length(h) + F.length(h) % 2, "0")
 
 
 @chfn("unhex")

@@ -1,8 +1,8 @@
 """Introspection / formatting / row-order misc family.
 
-Reference: src/Functions/currentDatabase.cpp, hostName.cpp, version.cpp,
-formatReadableSize.cpp, bar.cpp, runningDifference.h, neighbor.cpp,
-sleep.cpp, isConstant.cpp, identity.cpp.
+Reference: src/Functions/hostName.cpp, version.cpp, formatReadableSize.cpp,
+bar.cpp, runningDifference.h, neighbor.cpp, sleep.cpp, isConstant.cpp,
+identity.cpp, greatCircleDistance.cpp.
 
 runningDifference/neighbor are deprecated row-order functions in the
 reference; here they are window expressions requiring an explicit ordering
@@ -21,17 +21,12 @@ from clickhouse_23_3_19_32_lts_spark.functions.catalog import udf_call
 from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col, lit_or_col
 
 __all__ = [
-    "currentDatabase", "hostName", "version", "uptime", "sleep_",
+    "hostName", "version", "uptime", "sleep_",
     "identity", "materialize", "ignore", "isConstant", "rowNumberInAllBlocks",
     "formatReadableSize", "formatReadableQuantity", "formatReadableDecimalSize",
     "formatReadableTimeDelta", "bar", "runningDifference", "neighbor",
-    "greatCircleDistance", "geoDistance",
+    "greatCircleDistance", "geoDistance", "greatCircleAngle",
 ]
-
-
-@chfn("currentDatabase")
-def currentDatabase() -> Column:
-    return F.lit("default")
 
 
 @chfn("hostName", "hostname")

@@ -15,9 +15,14 @@ def chfn(*names: str):
 
     ClickHouse resolves names case-sensitively with explicit aliases
     (src/Functions/FunctionFactory.cpp); we register each alias literally.
+    A name has one definition: registering it again raises, as
+    FunctionFactory::registerFunction does.
     """
 
     def deco(fn: Callable[..., Column]) -> Callable[..., Column]:
+        taken = [n for n in names if n in REGISTRY]
+        if taken:
+            raise ValueError(f"functions {taken} are registered twice")
         for n in names:
             REGISTRY[n] = fn
         return fn

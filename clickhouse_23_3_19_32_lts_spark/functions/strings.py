@@ -28,7 +28,7 @@ __all__ = [
     "position", "positionCaseInsensitive", "locate", "instr", "match",
     "like", "notLike", "ilike", "notILike", "countSubstrings", "hasToken",
     "hasTokenCaseInsensitive", "multiSearchAny", "multiSearchAnyCaseInsensitive",
-    "multiSearchFirstPosition", "multiSearchFirstIndex", "extract",
+    "extract",
     "extractAll", "extractGroups", "countMatches", "replaceOne", "replaceAll",
     "replaceRegexpOne", "replaceRegexpAll", "translate", "splitByChar",
     "splitByString", "splitByRegexp", "splitByWhitespace", "alphaTokens",
@@ -300,27 +300,6 @@ def multiSearchAny(haystack, needles: list[str]) -> Column:
 @chfn("multiSearchAnyCaseInsensitive")
 def multiSearchAnyCaseInsensitive(haystack, needles: list[str]) -> Column:
     return multiSearchAny(F.lower(col(haystack)), [n.lower() for n in needles])
-
-
-@chfn("multiSearchFirstPosition")
-def multiSearchFirstPosition(haystack, needles: list[str]) -> Column:
-    positions = F.array_compact(
-        F.array(*[F.nullif(F.locate(n, col(haystack)), F.lit(0)) for n in needles])
-    )
-    return F.coalesce(F.array_min(positions), F.lit(0)).cast("long")
-
-
-@chfn("multiSearchFirstIndex")
-def multiSearchFirstIndex(haystack, needles: list[str]) -> Column:
-    c = col(haystack)
-    out = F.lit(0)
-    for i in range(len(needles) - 1, -1, -1):
-        out = F.when(c.contains(needles[i]), F.lit(i + 1)).otherwise(out)
-    # first match wins: evaluate in order
-    result = F.lit(0)
-    for i, n in enumerate(needles):
-        result = F.when((result == 0) & c.contains(n), F.lit(i + 1)).otherwise(result)
-    return result.cast("long")
 
 
 @chfn("extract")

@@ -1,11 +1,10 @@
 """Mechanical function-name families: conversion OrZero/OrNull/OrDefault,
-wide integers, parseDateTime* variants, sub-second datetime arithmetic,
+wide integers, parseDateTime*InJodaSyntax, sub-second datetime arithmetic,
 UTF8/CaseInsensitive search variants, scalar sketch hashes.
 
 Reference registration sites:
   - to*OrZero/OrNull/OrDefault — src/Functions/FunctionsConversion.h
     (ConvertOrZeroImpl / ConvertOrNullImpl; accurateCastOrDefault.cpp)
-  - parseDateTime*BestEffort*   — src/Functions/parseDateTimeBestEffort.cpp
   - add/subtract{Quarters,Milliseconds,Microseconds,Nanoseconds} —
     src/Functions/FunctionDateOrDateTimeAddInterval.h
   - toStartOf{FiveMinutes,ISOYear,Millisecond,…} —
@@ -28,6 +27,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from clickhouse_23_3_19_32_lts_spark.functions.conversion import (
+    _epoch,
+    toDateTime64OrNull,
+    toDateTimeOrNull,
+)
+from clickhouse_23_3_19_32_lts_spark.functions.datetime import _in_zone
 from clickhouse_23_3_19_32_lts_spark.functions.registry import REGISTRY, chfn, col
 
 # --------------------------------------------------------------------------
@@ -50,11 +55,6 @@ def _date(x) -> Column:
     return col(x).try_cast("date")
 
 
-def _datetime(x) -> Column:
-    c = col(x)
-    return c.try_cast("timestamp")
-
-
 _CONV: dict[str, tuple] = {
     # name suffix -> (try-convert builder, LAZY zero-default literal —
     # module import happens before any SparkSession exists)
@@ -74,8 +74,8 @@ _CONV: dict[str, tuple] = {
     "Float64": (_num("double"), lambda: F.lit(0.0)),
     "Date": (_date, lambda: F.lit("1970-01-01").cast("date")),
     "Date32": (_date, lambda: F.lit("1970-01-01").cast("date")),
-    "DateTime": (_datetime, lambda: F.lit("1970-01-01 00:00:00").cast("timestamp")),
-    "DateTime64": (_datetime, lambda: F.lit("1970-01-01 00:00:00").cast("timestamp")),
+    "DateTime": (toDateTimeOrNull, _epoch),
+    "DateTime64": (toDateTime64OrNull, _epoch),
     "UUID": (
         lambda x: F.when(
             col(x).rlike("^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"),
@@ -88,8 +88,9 @@ _CONV: dict[str, tuple] = {
 
 def _register_conv_variants() -> None:
     for suffix, (conv, zero) in _CONV.items():
-        chfn(f"to{suffix}OrNull")(lambda x, _c=conv: _c(x))
-        chfn(f"to{suffix}OrZero")(lambda x, _c=conv, _z=zero: F.coalesce(_c(x), _z()))
+        if suffix not in ("DateTime", "DateTime64"):  # these take a zone: conversion.py
+            chfn(f"to{suffix}OrNull")(lambda x, _c=conv: _c(x))
+            chfn(f"to{suffix}OrZero")(lambda x, _c=conv, _z=zero: F.coalesce(_c(x), _z()))
         chfn(f"to{suffix}OrDefault")(
             lambda x, d=None, _c=conv, _z=zero: F.coalesce(
                 _c(x), col(d) if d is not None else _z()
@@ -159,52 +160,8 @@ def toDecimalString(x, scale: int = 10) -> Column:
 
 
 # --------------------------------------------------------------------------
-# parseDateTime* variants
+# parseDateTime*InJodaSyntax variants
 # --------------------------------------------------------------------------
-# The repo's parseDateTimeBestEffort handles ISO-ish forms via Spark's
-# permissive timestamp cast; the 32/64/US/OrZero variants share it.
-
-def _EPOCH_TS() -> Column:
-    return F.lit("1970-01-01 00:00:00").cast("timestamp")
-
-
-def _best_effort(x) -> Column:
-    c = col(x)
-    # unix-seconds strings parse as numbers (BestEffort rule); everything
-    # else goes through the permissive timestamp cast
-    return F.when(
-        c.cast("string").rlike("^[0-9]{9,10}$"),
-        F.timestamp_seconds(c.cast("long")),
-    ).otherwise(c.try_cast("timestamp"))
-
-
-for _n in (
-    "parseDateTime32BestEffort",
-    "parseDateTime64BestEffort",
-    "parseDateTimeBestEffortUS",
-    "parseDateTime64BestEffortUS",
-):
-    chfn(_n)(_best_effort)
-
-for _n in (
-    "parseDateTime32BestEffortOrNull",
-    "parseDateTime64BestEffortOrNull",
-    "parseDateTimeBestEffortUSOrNull",
-    "parseDateTime64BestEffortUSOrNull",
-    "parseDateTimeOrNull",
-):
-    chfn(_n)(_best_effort)
-
-for _n in (
-    "parseDateTimeBestEffortOrZero",
-    "parseDateTime32BestEffortOrZero",
-    "parseDateTime64BestEffortOrZero",
-    "parseDateTimeBestEffortUSOrZero",
-    "parseDateTime64BestEffortUSOrZero",
-    "parseDateTimeOrZero",
-):
-    chfn(_n)(lambda x: F.coalesce(_best_effort(x), _EPOCH_TS()))
-
 
 @chfn("parseDateTimeInJodaSyntax", "parseDateTimeInJodaSyntaxOrNull")
 def parseDateTimeInJodaSyntax(x, fmt) -> Column:
@@ -216,7 +173,7 @@ def parseDateTimeInJodaSyntax(x, fmt) -> Column:
 
 @chfn("parseDateTimeInJodaSyntaxOrZero")
 def parseDateTimeInJodaSyntaxOrZero(x, fmt) -> Column:
-    return F.coalesce(parseDateTimeInJodaSyntax(x, fmt), _EPOCH_TS())
+    return F.coalesce(parseDateTimeInJodaSyntax(x, fmt), _epoch())
 
 
 @chfn("formatDateTimeInJodaSyntax")
@@ -367,18 +324,18 @@ def toUnixTimestamp64Nano(x) -> Column:
 
 
 @chfn("fromUnixTimestamp64Milli")
-def fromUnixTimestamp64Milli(x) -> Column:
-    return F.timestamp_millis(col(x).cast("long"))
+def fromUnixTimestamp64Milli(x, tz=None) -> Column:
+    return _in_zone(F.timestamp_millis(col(x).cast("long")), tz)
 
 
 @chfn("fromUnixTimestamp64Micro")
-def fromUnixTimestamp64Micro(x) -> Column:
-    return F.timestamp_micros(col(x).cast("long"))
+def fromUnixTimestamp64Micro(x, tz=None) -> Column:
+    return _in_zone(F.timestamp_micros(col(x).cast("long")), tz)
 
 
 @chfn("fromUnixTimestamp64Nano")
-def fromUnixTimestamp64Nano(x) -> Column:
-    return F.timestamp_micros((col(x).cast("long") / 1000).cast("long"))
+def fromUnixTimestamp64Nano(x, tz=None) -> Column:
+    return _in_zone(F.timestamp_micros((col(x).cast("long") / 1000).cast("long")), tz)
 
 
 @chfn("now64", "nowInBlock")
@@ -447,7 +404,7 @@ def ULIDStringToDateTime(x) -> Column:
 
 def _alias(new: str, base: str) -> None:
     if base in REGISTRY:
-        REGISTRY[new] = REGISTRY[base]
+        chfn(new)(REGISTRY[base])
 
 
 for _base, _variants in {
@@ -455,18 +412,12 @@ for _base, _variants in {
     "positionCaseInsensitive": ["positionCaseInsensitiveUTF8"],
     "ngramDistance": ["ngramDistanceUTF8"],
     "ngramDistanceCaseInsensitive": ["ngramDistanceCaseInsensitiveUTF8"],
-    "ngramSearch": ["ngramSearchUTF8"],
-    "ngramSearchCaseInsensitive": ["ngramSearchCaseInsensitiveUTF8"],
     "countSubstrings": ["countSubstringsUTF8"],
     "countSubstringsCaseInsensitive": ["countSubstringsCaseInsensitiveUTF8"],
     "hasToken": ["hasTokenOrNull"],
     "hasTokenCaseInsensitive": ["hasTokenCaseInsensitiveOrNull"],
     "translate": ["translateUTF8"],
     "substring": ["substringUTF8"],
-    "lower": ["lowerUTF8"],
-    "upper": ["upperUTF8"],
-    "reverse": ["reverseUTF8"],
-    "length": ["lengthUTF8"],
 }.items():
     for _v in _variants:
         _alias(_v, _base)
@@ -481,13 +432,11 @@ def _ci_wrap(base_name: str):
 
 for _base, _ci in {
     "ngramDistance": "ngramDistanceCaseInsensitive",
-    "ngramSearch": "ngramSearchCaseInsensitive",
     "countSubstrings": "countSubstringsCaseInsensitive",
 }.items():
     _w = _ci_wrap(_base)
     if _w is not None:
-        chfn(_ci)(_w)
-        REGISTRY[_ci + "UTF8"] = REGISTRY[_ci]
+        chfn(_ci, _ci + "UTF8")(_w)
 
 
 @chfn("countMatchesCaseInsensitive")

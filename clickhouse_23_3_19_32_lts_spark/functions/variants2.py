@@ -1028,7 +1028,7 @@ for _new, _base in (
     ("cutToFirstSignificantSubdomainWithWWWRFC", "cutToFirstSignificantSubdomain"),
 ):
     if _base in REGISTRY:
-        REGISTRY[_new] = REGISTRY[_base]
+        chfn(_new)(REGISTRY[_base])
 
 
 @chfn("cutURLParameter")
@@ -1587,12 +1587,6 @@ def pointInPolygon(point, polygon) -> Column:
     # boundary points count as inside (the reference's default strategy)
     boundary = F.exists(idx, on_edge)
     return boundary | (F.pmod(hits, F.lit(2)) == 1)
-
-
-@chfn("greatCircleAngle")
-def greatCircleAngle(lon1, lat1, lon2, lat2) -> Column:
-    dist = REGISTRY["greatCircleDistance"](lon1, lat1, lon2, lat2)
-    return dist / F.lit(111194.93)  # meters per degree of arc
 
 
 @chfn("svg", "SVG")

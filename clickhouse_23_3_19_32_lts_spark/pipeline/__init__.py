@@ -1,7 +1,8 @@
 """Training-data pipeline operators: dedup, similarity search, text analysis,
 multimodal plumbing — the operations a 100 TB LLM-corpus pipeline needs,
-expressed Spark-first (codegen'd higher-order functions; shuffles only where
-a distributed algorithm genuinely requires them).
+expressed Spark-first (JVM-side higher-order functions, which Spark
+interprets rather than compiles; shuffles only where a distributed algorithm
+genuinely requires them).
 
 Reference anchors (what the reference ships natively):
   - ngramMinHash* / wordShingleMinHash* / ngramSimHash* families:

@@ -3,7 +3,7 @@
 Reference: ngramMinHash*/wordShingleMinHash*/ngramSimHash*/wordShingleSimHash*
 (src/Functions/FunctionsStringHash.cpp:766-793) compute the sketches; the
 reference leaves candidate generation to the user. Here the full pipeline is
-provided: sketch (map-only, codegen'd HOFs — no Python, no shuffle) →
+provided: sketch (map-only, interpreted HOFs — no Python, no shuffle) →
 candidate blocking (one shuffle on band/block key) → verify (pair join).
 
 Scale design:
@@ -80,7 +80,7 @@ def _shingles_sql(t: str, k: int, distinct: bool = True) -> str:
 
 
 def word_shingles(text: str, k: int = 3, distinct: bool = True) -> Column:
-    """k-word shingles of the space-tokenized text column `text` (codegen'd).
+    """k-word shingles of the space-tokenized text column `text`.
 
     Short docs (< k words) produce one shingle = the whole doc, matching
     the oracle's concat_ws-with-null-skip behavior.
@@ -102,7 +102,7 @@ def shingle_base_hash(s: Column) -> Column:
 
 def minhash_signature(shingles: Column, n_hashes: int = 16) -> Column:
     """MinHash signature: array of n_hashes mins over the universal-hash
-    family. Pure expression — codegen'd, no UDF, no shuffle. (For corpus-
+    family. Pure expression — no UDF, no shuffle. (For corpus-
     scale runs minhash_lsh_pairs uses the explode+agg form instead: same
     math, vectorized partial aggregation.)
     """

@@ -4,7 +4,8 @@ Reference: vector distances at src/Functions/array/arrayDistance.cpp:514-519
 (L1/L2/cosine/dot); ANN index at src/Storages/MergeTree/MergeTreeIndexAnnoy.h:21.
 
 Spark-first design:
-  - distances are zip_with/aggregate expressions — codegen'd, no Python;
+  - distances are zip_with/aggregate expressions — JVM-side, no Python
+    (Spark interprets these higher-order functions: CodegenFallback);
   - brute-force top-k: broadcast the (small) probe set, map-side distance,
     per-probe top-k via window. The shuffle carries only (probe, candidate,
     score) tuples that survive an optional score floor — at 100 TB with P

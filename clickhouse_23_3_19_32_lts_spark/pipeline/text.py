@@ -5,9 +5,10 @@ Reference: detectLanguage/detectCharset (src/Functions/
 FunctionsLanguageClassification.cpp, FunctionsTextClassification.h), tokens/
 stem (src/Functions/FunctionsStringArray.cpp). The reference backs these
 with compiled models; here they are deterministic heuristics expressed as
-codegen'd column expressions so they run JVM-side at full scan speed AND are
-reproducible by the SQL oracle — the shape a 100 TB filter pass wants (a
-model-based scorer slots in later as a pandas_udf with the same signature).
+column expressions so they run JVM-side (their higher-order functions
+interpreted, not compiled) AND are reproducible by the SQL oracle — the
+shape a 100 TB filter pass wants (a model-based scorer slots in later as a
+pandas_udf with the same signature).
 """
 
 from __future__ import annotations
@@ -95,7 +96,7 @@ def mean_word_len_sql(t: str) -> str:
 def quality_score_sql(t: str) -> str:
     """Heuristic quality in [0,1]: length band + word-length band + low
     punctuation + some stopword signal. The standard pre-filter shape for
-    corpus curation (cf. C4/Gopher rules) as one codegen'd expression."""
+    corpus curation (cf. C4/Gopher rules) as one expression."""
     n_tok = token_count_sql(t)
     mwl = mean_word_len_sql(t)
     return (

@@ -70,18 +70,10 @@ KEPT = {
     ("NAME_MAP", "JSONLength"): (DIFFERS, "JSONLength(j)"),
     ("NAME_MAP", "anyLast"): (DIFFERS, "anyLast(if(k = 6, NULL, i))"),
     ("NAME_MAP", "base64Decode"): (DIFFERS, "base64Decode('YWJj')"),
-    ("NAME_MAP", "fromUnixTimestamp"): (DIFFERS, "fromUnixTimestamp(i)"),
     ("NAME_MAP", "lengthUTF8"): (DIFFERS, "lengthUTF8(s)"),
-    ("NAME_MAP", "toHour"): (NO_RENDER, "toHour(ts, 'Asia/Shanghai')"),
-    ("NAME_MAP", "toMinute"): (NO_RENDER, "toMinute(ts, 'Asia/Shanghai')"),
-    ("NAME_MAP", "toSecond"): (NO_RENDER, "toSecond(ts, 'Asia/Shanghai')"),
-    ("NAME_MAP", "toUnixTimestamp"): (
-        NO_RENDER, "toUnixTimestamp(ts, 'Asia/Shanghai')"
-    ),
     ("NAME_MAP", "toYear"): (PINNED, "toYear(d)"),
     ("NAME_MAP", "uniq"): (PINNED, "uniq(i)"),
     ("NAME_MAP", "xxHash32"): (NO_RENDER, "xxHash32(s)"),
-    ("TEMPLATES", "DAYOFWEEK"): (DIFFERS, "DAYOFWEEK(d)"),
     ("TEMPLATES", "JSONExtractBool"): (DIFFERS, "JSONExtractBool(j, 1)"),
     ("TEMPLATES", "JSONExtractFloat"): (DIFFERS, "JSONExtractFloat(j, 2)"),
     ("TEMPLATES", "JSONExtractInt"): (DIFFERS, "JSONExtractInt(j, 2)"),
@@ -98,22 +90,11 @@ KEPT = {
     ("TEMPLATES", "domain"): (DIFFERS, "domain(u)"),
     ("TEMPLATES", "empty"): (DIFFERS, "empty(s)"),
     ("TEMPLATES", "extractURLParameter"): (DIFFERS, "extractURLParameter(u, 'x')"),
-    ("TEMPLATES", "fromUnixTimestamp64Micro"): (
-        NO_RENDER, "fromUnixTimestamp64Micro(i, 'Asia/Shanghai')"
-    ),
-    ("TEMPLATES", "fromUnixTimestamp64Milli"): (
-        NO_RENDER, "fromUnixTimestamp64Milli(i, 'Asia/Shanghai')"
-    ),
-    ("TEMPLATES", "fromUnixTimestamp64Nano"): (
-        NO_RENDER, "fromUnixTimestamp64Nano(i, 'Asia/Shanghai')"
-    ),
-    ("TEMPLATES", "hex"): (DIFFERS, "hex(i)"),
     ("TEMPLATES", "indexOf"): (DIFFERS, "indexOf(a, 2)"),
     ("TEMPLATES", "intDiv"): (PINNED, "intDiv(i, 2)"),
     ("TEMPLATES", "intDivOrZero"): (DIFFERS, "intDivOrZero(9007199254740993, 1)"),
     ("TEMPLATES", "minus"): (NO_RENDER, "minus(i = 5, k = 2)"),
     ("TEMPLATES", "modulo"): (NO_RENDER, "modulo(i = 5, 2)"),
-    ("TEMPLATES", "monthName"): (DIFFERS, "monthName(d)"),
     ("TEMPLATES", "multiply"): (NO_RENDER, "multiply(i = 5, 2)"),
     ("TEMPLATES", "negate"): (NO_RENDER, "negate(i = 5)"),
     ("TEMPLATES", "notEmpty"): (DIFFERS, "notEmpty(s)"),
@@ -131,39 +112,17 @@ KEPT = {
     ("TEMPLATES", "rand"): (RANDOM, "rand()"),
     ("TEMPLATES", "rand64"): (RANDOM, "rand64()"),
     ("TEMPLATES", "replaceOne"): (DIFFERS, "replaceOne(s, '', 'x')"),
-    ("TEMPLATES", "timeSlot"): (DIFFERS, "timeSlot(ts)"),
-    ("TEMPLATES", "toDate"): (NO_RENDER, "toDate(i)"),
-    ("TEMPLATES", "toDate32"): (NO_RENDER, "toDate32(i)"),
-    ("TEMPLATES", "toDateTime"): (DIFFERS, "toDateTime(i)"),
-    ("TEMPLATES", "toDateTime64"): (DIFFERS, "toDateTime64(i, 3)"),
-    ("TEMPLATES", "toDayOfWeek"): (NO_RENDER, "toDayOfWeek(d, 1)"),
     ("TEMPLATES", "toFixedString"): (DIFFERS, "toFixedString('абв', 4)"),
     ("TEMPLATES", "toInt128"): (DIFFERS, "toInt128(i)"),
     ("TEMPLATES", "toInt256"): (DIFFERS, "toInt256(i)"),
-    ("TEMPLATES", "toMonday"): (DIFFERS, "toMonday(d)"),
-    ("TEMPLATES", "toQuarter"): (NO_RENDER, "toQuarter(ts, 'Asia/Shanghai')"),
-    ("TEMPLATES", "toStartOfDay"): (NO_RENDER, "toStartOfDay(ts, 'Asia/Shanghai')"),
-    ("TEMPLATES", "toStartOfHour"): (NO_RENDER, "toStartOfHour(ts, 'Asia/Shanghai')"),
-    ("TEMPLATES", "toStartOfMinute"): (
-        NO_RENDER, "toStartOfMinute(ts, 'Asia/Shanghai')"
-    ),
-    ("TEMPLATES", "toStartOfMonth"): (DIFFERS, "toStartOfMonth(d)"),
-    ("TEMPLATES", "toStartOfQuarter"): (DIFFERS, "toStartOfQuarter(d)"),
-    ("TEMPLATES", "toStartOfYear"): (DIFFERS, "toStartOfYear(d)"),
+    ("TEMPLATES", "toStartOfMonth"): (PINNED, "toStartOfMonth(d)"),
     ("TEMPLATES", "toString"): (PINNED, "toString(i)"),
-    ("TEMPLATES", "toTime"): (NO_RENDER, "toTime(ts, 'Asia/Shanghai')"),
     ("TEMPLATES", "toTypeName"): (DIFFERS, "toTypeName(i)"),
     ("TEMPLATES", "toUInt128"): (DIFFERS, "toUInt128(i)"),
-    ("TEMPLATES", "toUInt16"): (DIFFERS, "toUInt16(i)"),
     ("TEMPLATES", "toUInt256"): (DIFFERS, "toUInt256(i)"),
-    ("TEMPLATES", "toUInt32"): (DIFFERS, "toUInt32(i)"),
-    ("TEMPLATES", "toUInt8"): (DIFFERS, "toUInt8(i)"),
-    ("TEMPLATES", "toYYYYMM"): (DIFFERS, "toYYYYMM(d)"),
-    ("TEMPLATES", "toYYYYMMDD"): (DIFFERS, "toYYYYMMDD(d)"),
     ("TEMPLATES", "uniqMerge"): (NO_RENDER, "uniqMerge(a)"),
     ("TEMPLATES", "uniqState"): (DIFFERS, "uniqState(i)"),
     ("TEMPLATES", "untuple"): (DIFFERS, "untuple(tuple(i, s))"),
-    ("ARITY_TEMPLATES", "addDays"): (DIFFERS, "addDays(d, 2)"),
     ("ARITY_TEMPLATES", "arrayEnumerateUniq"): (NO_RENDER, "arrayEnumerateUniq(a, a)"),
     ("ARITY_TEMPLATES", "arrayUniq"): (DIFFERS, "arrayUniq([1, 1], [1, 2])"),
     ("ARITY_TEMPLATES", "countIf"): (NO_RENDER, "countIf(i, i > 0)"),
@@ -178,52 +137,6 @@ KEPT = {
     ("ARITY_TEMPLATES", "multiSearchAnyCaseInsensitive"): (
         NO_RENDER, "multiSearchAnyCaseInsensitive(s, ['B', 'X'])"
     ),
-    ("ARITY_TEMPLATES", "now"): (NO_RENDER, "now('Asia/Shanghai')"),
-    ("ARITY_TEMPLATES", "parseDateTime32BestEffort"): (
-        DIFFERS, "parseDateTime32BestEffort('15/03/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTime32BestEffortOrNull"): (
-        DIFFERS, "parseDateTime32BestEffortOrNull('15/03/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTime32BestEffortOrZero"): (
-        DIFFERS, "parseDateTime32BestEffortOrZero('15/03/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffort"): (
-        DIFFERS, "parseDateTime64BestEffort('15/03/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffortOrNull"): (
-        DIFFERS, "parseDateTime64BestEffortOrNull('15/03/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffortOrZero"): (
-        DIFFERS, "parseDateTime64BestEffortOrZero('15/03/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffortUS"): (
-        DIFFERS, "parseDateTime64BestEffortUS('03/15/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffortUSOrNull"): (
-        DIFFERS, "parseDateTime64BestEffortUSOrNull('03/15/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffortUSOrZero"): (
-        DIFFERS, "parseDateTime64BestEffortUSOrZero('03/15/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffort"): (
-        DIFFERS, "parseDateTimeBestEffort('15/03/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffortOrNull"): (
-        DIFFERS, "parseDateTimeBestEffortOrNull('15/03/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffortOrZero"): (
-        DIFFERS, "parseDateTimeBestEffortOrZero('15/03/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffortUS"): (
-        DIFFERS, "parseDateTimeBestEffortUS('03/15/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffortUSOrNull"): (
-        DIFFERS, "parseDateTimeBestEffortUSOrNull('03/15/2024')"
-    ),
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffortUSOrZero"): (
-        DIFFERS, "parseDateTimeBestEffortUSOrZero('03/15/2024')"
-    ),
     ("ARITY_TEMPLATES", "position"): (DIFFERS, "position(s, 'l')"),
     ("ARITY_TEMPLATES", "quantile"): (DIFFERS, "quantile(if(k = 0, f, NULL))"),
     ("ARITY_TEMPLATES", "quantileExact"): (
@@ -236,21 +149,6 @@ KEPT = {
     ("ARITY_TEMPLATES", "splitByString"): (DIFFERS, "splitByString('', s)"),
     ("ARITY_TEMPLATES", "substr"): (DIFFERS, "substr(s, -3, -1)"),
     ("ARITY_TEMPLATES", "substring"): (DIFFERS, "substring(s, 2, -1)"),
-    ("ARITY_TEMPLATES", "subtractDays"): (DIFFERS, "subtractDays(d, 2)"),
-    ("ARITY_TEMPLATES", "toDateTime"): (DIFFERS, "toDateTime(i, 'Asia/Shanghai')"),
-    ("ARITY_TEMPLATES", "toDateTime64"): (
-        DIFFERS, "toDateTime64(i, 3, 'Asia/Shanghai')"
-    ),
-    ("ARITY_TEMPLATES", "toDateTime64OrNull"): (NO_RENDER, "toDateTime64OrNull(s, 3)"),
-    ("ARITY_TEMPLATES", "toDateTime64OrZero"): (NO_RENDER, "toDateTime64OrZero(s, 3)"),
-    ("ARITY_TEMPLATES", "toDateTimeOrNull"): (
-        DIFFERS, "toDateTimeOrNull('1710498030')"
-    ),
-    ("ARITY_TEMPLATES", "toDateTimeOrZero"): (
-        DIFFERS, "toDateTimeOrZero('1710498030')"
-    ),
-    ("ARITY_TEMPLATES", "toStartOfWeek"): (DIFFERS, "toStartOfWeek(d)"),
-    ("ARITY_TEMPLATES", "toTimeZone"): (DIFFERS, "toTimeZone(ts, 'Asia/Shanghai')"),
     ("ARITY_TEMPLATES", "uniq"): (NO_RENDER, "uniq(i, s)"),
     ("PARAMETRIC", "groupArray"): (NO_RENDER, "groupArray(2)(i)"),
     ("PARAMETRIC", "groupArrayMovingAvg"): (NO_RENDER, "groupArrayMovingAvg(2)(i)"),
@@ -305,6 +203,88 @@ KEPT = {
     ("PARAMETRIC", "topKWeighted"): (NO_RENDER, "topKWeighted(2)(i, k)"),
 }
 
+
+# Entries deleted once ClickHouse's documented answer settled the difference
+# for the registry's builder, with the call that showed it. Their tests stay:
+# the entry is out of its table and translate renders the call through the
+# registry bridge, on the probe table. tests/test_ch_answers.py checks the
+# answers.
+SETTLED = {
+    ("NAME_MAP", "fromUnixTimestamp"): "fromUnixTimestamp(i)",
+    ("NAME_MAP", "toHour"): "toHour(ts, 'Asia/Shanghai')",
+    ("NAME_MAP", "toMinute"): "toMinute(ts, 'Asia/Shanghai')",
+    ("NAME_MAP", "toSecond"): "toSecond(ts, 'Asia/Shanghai')",
+    ("NAME_MAP", "toUnixTimestamp"): "toUnixTimestamp(ts, 'Asia/Shanghai')",
+    ("TEMPLATES", "DAYOFWEEK"): "DAYOFWEEK(d)",
+    ("TEMPLATES", "fromUnixTimestamp64Micro"):
+        "fromUnixTimestamp64Micro(i, 'Asia/Shanghai')",
+    ("TEMPLATES", "fromUnixTimestamp64Milli"):
+        "fromUnixTimestamp64Milli(i, 'Asia/Shanghai')",
+    ("TEMPLATES", "fromUnixTimestamp64Nano"):
+        "fromUnixTimestamp64Nano(i, 'Asia/Shanghai')",
+    ("TEMPLATES", "hex"): "hex(i)",
+    ("TEMPLATES", "monthName"): "monthName(d)",
+    ("TEMPLATES", "timeSlot"): "timeSlot(ts)",
+    ("TEMPLATES", "toDate"): "toDate(i)",
+    ("TEMPLATES", "toDate32"): "toDate32(i)",
+    ("TEMPLATES", "toDateTime"): "toDateTime(i)",
+    ("TEMPLATES", "toDateTime64"): "toDateTime64(i, 3)",
+    ("TEMPLATES", "toDayOfWeek"): "toDayOfWeek(d, 1)",
+    ("TEMPLATES", "toMonday"): "toMonday(d)",
+    ("TEMPLATES", "toQuarter"): "toQuarter(ts, 'Asia/Shanghai')",
+    ("TEMPLATES", "toStartOfDay"): "toStartOfDay(ts, 'Asia/Shanghai')",
+    ("TEMPLATES", "toStartOfHour"): "toStartOfHour(ts, 'Asia/Shanghai')",
+    ("TEMPLATES", "toStartOfMinute"): "toStartOfMinute(ts, 'Asia/Shanghai')",
+    ("TEMPLATES", "toStartOfQuarter"): "toStartOfQuarter(d)",
+    ("TEMPLATES", "toStartOfYear"): "toStartOfYear(d)",
+    ("TEMPLATES", "toTime"): "toTime(ts, 'Asia/Shanghai')",
+    ("TEMPLATES", "toUInt16"): "toUInt16(i)",
+    ("TEMPLATES", "toUInt32"): "toUInt32(i)",
+    ("TEMPLATES", "toUInt8"): "toUInt8(i)",
+    ("TEMPLATES", "toYYYYMM"): "toYYYYMM(d)",
+    ("TEMPLATES", "toYYYYMMDD"): "toYYYYMMDD(d)",
+    ("ARITY_TEMPLATES", "addDays"): "addDays(d, 2)",
+    ("ARITY_TEMPLATES", "now"): "now('Asia/Shanghai')",
+    ("ARITY_TEMPLATES", "parseDateTime32BestEffort"):
+        "parseDateTime32BestEffort('15/03/2024')",
+    ("ARITY_TEMPLATES", "parseDateTime32BestEffortOrNull"):
+        "parseDateTime32BestEffortOrNull('15/03/2024')",
+    ("ARITY_TEMPLATES", "parseDateTime32BestEffortOrZero"):
+        "parseDateTime32BestEffortOrZero('15/03/2024')",
+    ("ARITY_TEMPLATES", "parseDateTime64BestEffort"):
+        "parseDateTime64BestEffort('15/03/2024')",
+    ("ARITY_TEMPLATES", "parseDateTime64BestEffortOrNull"):
+        "parseDateTime64BestEffortOrNull('15/03/2024')",
+    ("ARITY_TEMPLATES", "parseDateTime64BestEffortOrZero"):
+        "parseDateTime64BestEffortOrZero('15/03/2024')",
+    ("ARITY_TEMPLATES", "parseDateTime64BestEffortUS"):
+        "parseDateTime64BestEffortUS('03/15/2024')",
+    ("ARITY_TEMPLATES", "parseDateTime64BestEffortUSOrNull"):
+        "parseDateTime64BestEffortUSOrNull('03/15/2024')",
+    ("ARITY_TEMPLATES", "parseDateTime64BestEffortUSOrZero"):
+        "parseDateTime64BestEffortUSOrZero('03/15/2024')",
+    ("ARITY_TEMPLATES", "parseDateTimeBestEffort"):
+        "parseDateTimeBestEffort('15/03/2024')",
+    ("ARITY_TEMPLATES", "parseDateTimeBestEffortOrNull"):
+        "parseDateTimeBestEffortOrNull('15/03/2024')",
+    ("ARITY_TEMPLATES", "parseDateTimeBestEffortOrZero"):
+        "parseDateTimeBestEffortOrZero('15/03/2024')",
+    ("ARITY_TEMPLATES", "parseDateTimeBestEffortUS"):
+        "parseDateTimeBestEffortUS('03/15/2024')",
+    ("ARITY_TEMPLATES", "parseDateTimeBestEffortUSOrNull"):
+        "parseDateTimeBestEffortUSOrNull('03/15/2024')",
+    ("ARITY_TEMPLATES", "parseDateTimeBestEffortUSOrZero"):
+        "parseDateTimeBestEffortUSOrZero('03/15/2024')",
+    ("ARITY_TEMPLATES", "subtractDays"): "subtractDays(d, 2)",
+    ("ARITY_TEMPLATES", "toDateTime"): "toDateTime(i, 'Asia/Shanghai')",
+    ("ARITY_TEMPLATES", "toDateTime64"): "toDateTime64(i, 3, 'Asia/Shanghai')",
+    ("ARITY_TEMPLATES", "toDateTime64OrNull"): "toDateTime64OrNull(s, 3)",
+    ("ARITY_TEMPLATES", "toDateTime64OrZero"): "toDateTime64OrZero(s, 3)",
+    ("ARITY_TEMPLATES", "toDateTimeOrNull"): "toDateTimeOrNull('1710498030')",
+    ("ARITY_TEMPLATES", "toDateTimeOrZero"): "toDateTimeOrZero('1710498030')",
+    ("ARITY_TEMPLATES", "toStartOfWeek"): "toStartOfWeek(d)",
+    ("ARITY_TEMPLATES", "toTimeZone"): "toTimeZone(ts, 'Asia/Shanghai')",
+}
 
 # --- the Column-repr leak and the worker-thread session ---------------------
 
@@ -472,8 +452,22 @@ def test_every_duplicate_is_listed():
     assert sorted(set(KEPT) - dups) == [], "listed entries that are no longer duplicates"
 
 
-@pytest.mark.parametrize("table, name", sorted(KEPT))
+def _settled(spark, table: str, name: str, call: str) -> None:
+    """A settled entry is gone, and translate renders its call as the
+    registry bridge does, to SQL that runs on the probe table."""
+    assert name not in TABLES[table], f"{table} holds {name} again"
+    with D._on_session(spark):
+        sql = D._expr_sql(call)
+        args = D._split_args(D._tokenize(call)[2:-1])
+        bridged = _registry_bridge(name, [D._expr_sql(" ".join(a)) for a in args])
+    assert sql == bridged, f"{call}: translate {sql!r}, the bridge {bridged!r}"
+    _answers(spark, [sql])
+
+
+@pytest.mark.parametrize("table, name", sorted(KEPT) + sorted(SETTLED))
 def test_kept_reason_holds(probe, table, name):
+    if (table, name) in SETTLED:
+        return _settled(probe, table, name, SETTLED[(table, name)])
     reason, call = KEPT[(table, name)]
     status, table_sql, bridged_sql = _status(probe, table, name, call)
     detail = f"{call}: table {table_sql!r}, without the entry {bridged_sql!r}"

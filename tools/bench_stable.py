@@ -13,7 +13,7 @@ means the codegen cache no longer holds it. It changes nothing about
 bench.py (the driver contract artifact); it exists so optimization
 decisions are made against stable numbers.
 
-Usage: python tools/bench_stable.py [K] [--plans plans/r09 --suffix _before]
+Usage: python tools/bench_stable.py [K] [--plans DIR --suffix _before]
 """
 
 from __future__ import annotations

@@ -93,13 +93,23 @@ def _epoch() -> Column:
     return F.timestamp_seconds(F.lit(0))
 
 
-# Dates, numbers and text all convert through their text, so one
-# expression type-checks whatever the argument's type (DataTypeDate.cpp,
-# ReadHelpers.h readDateTimeText). A number or an all-digit text is a day
-# number below 65536 for Date and unix seconds otherwise; DateTime and Date
-# are unsigned, so negative numbers saturate at the epoch
+# The branch follows the argument's type, which typeof folds at analysis;
+# every branch casts only what every type casts, so each type-checks
+# whatever the type (DataTypeDate.cpp, ReadHelpers.h readDateTimeText).
+# TIMESTAMP and DATE cast directly. A number, or an all-digit text, is a
+# day number below 65536 for Date and unix seconds otherwise; DateTime and
+# Date are unsigned, so negative numbers saturate at the epoch
 # (FunctionsConversion.h ToDateTransform32Or64Signed,
-# ToDateTimeTransformSigned).
+# ToDateTimeTransformSigned). Other text is parsed.
+_TIMES = ("date", "timestamp", "timestamp_ntz")
+
+
+def _seconds(c: Column, t: Column) -> Column:
+    """A number, or number text, as a TIMESTAMP that many seconds after the
+    epoch: Spark casts a numeric type to TIMESTAMP as unix seconds."""
+    return F.when(
+        t == "string", c.cast("string").cast("decimal(20,6)").cast("timestamp")
+    ).otherwise(c.cast("timestamp"))
 
 
 def _date_text(s: Column) -> Column:
@@ -112,37 +122,49 @@ def _date_text(s: Column) -> Column:
 
 @chfn("toDate", "DATE")
 def toDate(x, tz=None) -> Column:
-    c = col(x)
+    c, t = col(x), F.typeof(col(x))
     s = c.cast("string")
-    n = F.greatest(s.cast("long"), F.lit(0))
+    n = F.greatest(_seconds(c, t).cast("long"), F.lit(0))
     number = F.when(
         n < 65536, F.date_add(F.lit(_dt.date(1970, 1, 1)), n.cast("int"))
     ).otherwise(_in_zone(F.timestamp_seconds(n), tz).cast("date"))
-    date = F.when(s.rlike("^-?[0-9]+$"), number).otherwise(_date_text(s))
-    if tz is None:
-        return date
-    return F.when(F.typeof(c) == "timestamp", _in_zone(c, tz).cast("date")).otherwise(date)
+    return (
+        F.when(t.isin(*_TIMES), _in_zone(c.cast("timestamp"), tz, t == "timestamp").cast("date"))
+        .when((t != "string") | s.rlike("^-?[0-9]+$"), number)
+        .otherwise(_date_text(s))
+    )
 
 
 @chfn("toDate32")
 def toDate32(x) -> Column:
     """Date32 counts days either side of the epoch."""
-    s = col(x).cast("string")
-    return F.when(
-        s.rlike("^-?[0-9]+$"), F.date_add(F.lit(_dt.date(1970, 1, 1)), s.cast("int"))
-    ).otherwise(F.to_date(s))
+    c, t = col(x), F.typeof(col(x))
+    s = c.cast("string")
+    days = F.date_add(F.lit(_dt.date(1970, 1, 1)), _seconds(c, t).cast("long").cast("int"))
+    return (
+        F.when(t.isin(*_TIMES), c.cast("timestamp").cast("date"))
+        .when((t != "string") | s.rlike("^-?[0-9]+$"), days)
+        .otherwise(F.to_date(s))
+    )
 
 
 def _datetime(x, tz, frac: bool = False, parse=F.to_timestamp) -> Column:
     """toDateTime's rule; ``frac`` admits DateTime64's fractional seconds
-    and times before the epoch. Numbers are instants, shown as the wall
-    clock in ``tz``; text is a wall clock in ``tz`` already."""
-    c = col(x)
+    and times before the epoch, where DateTime truncates a number to whole
+    seconds. Numbers and TIMESTAMPs are instants, shown as the wall clock
+    in ``tz``; DATEs and text are wall clocks in ``tz`` already."""
+    c, t = col(x), F.typeof(col(x))
     s = c.cast("string")
-    num = s.rlike(r"^-?[0-9]+(\.[0-9]+)?$" if frac else "^-?[0-9]+$")
-    secs = s.cast("decimal(20,6)") if frac else F.greatest(s.cast("long"), F.lit(0))
-    ts = F.when(num, F.timestamp_seconds(secs)).otherwise(parse(s))
-    return _in_zone(ts, tz, num | (F.typeof(c) == "timestamp"))
+    digits = s.rlike(r"^-?[0-9]+(\.[0-9]+)?$" if frac else "^-?[0-9]+$")
+    secs = _seconds(c, t)
+    if not frac:
+        secs = F.timestamp_seconds(F.greatest(secs.cast("long"), F.lit(0)))
+    ts = (
+        F.when(t.isin(*_TIMES), c.cast("timestamp"))
+        .when((t != "string") | digits, secs)
+        .otherwise(parse(s))
+    )
+    return _in_zone(ts, tz, ~t.isin("string", "date", "timestamp_ntz") | digits)
 
 
 @chfn("toDateTime")

@@ -12,6 +12,7 @@ runs through the SQL dialect (`ch_sql`) and through the Python builders
 from __future__ import annotations
 
 import datetime as dt
+import decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -84,6 +85,16 @@ CALLS = {
     "toDate(1685457500)": (
         lambda: CH.toDate(F.lit(1685457500)),
         dt.date(2023, 5, 30), f"{CONV}#todate",
+    ),
+    # a number is unix seconds; DateTime keeps whole seconds
+    "toDateTime(toFloat64(1710498030.5))": (
+        lambda: CH.toDateTime(CH.toFloat64(F.lit(1710498030.5))),
+        dt.datetime(2024, 3, 15, 10, 20, 30), f"{CONV}#todatetime",
+    ),
+    # the page's example
+    "toDateTime64(1546300800.000, 3)": (
+        lambda: CH.toDateTime64(F.lit(decimal.Decimal("1546300800.000")), 3),
+        dt.datetime(2019, 1, 1), f"{CONV}#todatetime64",
     ),
     # DD/MM/YYYY, as in the page's '12/12/2020 12:12:57' example
     "parseDateTimeBestEffort('15/03/2024')": (

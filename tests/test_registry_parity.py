@@ -115,7 +115,7 @@ KEPT = {
     ("TEMPLATES", "toFixedString"): (DIFFERS, "toFixedString('абв', 4)"),
     ("TEMPLATES", "toInt128"): (DIFFERS, "toInt128(i)"),
     ("TEMPLATES", "toInt256"): (DIFFERS, "toInt256(i)"),
-    ("TEMPLATES", "toStartOfMonth"): (PINNED, "toStartOfMonth(d)"),
+    ("TEMPLATES", "toStartOfMonth"): (DIFFERS, "toStartOfMonth(d)"),
     ("TEMPLATES", "toString"): (PINNED, "toString(i)"),
     ("TEMPLATES", "toTypeName"): (DIFFERS, "toTypeName(i)"),
     ("TEMPLATES", "toUInt128"): (DIFFERS, "toUInt128(i)"),
@@ -205,86 +205,36 @@ KEPT = {
 
 
 # Entries deleted once ClickHouse's documented answer settled the difference
-# for the registry's builder, with the call that showed it. Their tests stay:
-# the entry is out of its table and translate renders the call through the
-# registry bridge, on the probe table. tests/test_ch_answers.py checks the
-# answers.
-SETTLED = {
-    ("NAME_MAP", "fromUnixTimestamp"): "fromUnixTimestamp(i)",
-    ("NAME_MAP", "toHour"): "toHour(ts, 'Asia/Shanghai')",
-    ("NAME_MAP", "toMinute"): "toMinute(ts, 'Asia/Shanghai')",
-    ("NAME_MAP", "toSecond"): "toSecond(ts, 'Asia/Shanghai')",
-    ("NAME_MAP", "toUnixTimestamp"): "toUnixTimestamp(ts, 'Asia/Shanghai')",
-    ("TEMPLATES", "DAYOFWEEK"): "DAYOFWEEK(d)",
-    ("TEMPLATES", "fromUnixTimestamp64Micro"):
-        "fromUnixTimestamp64Micro(i, 'Asia/Shanghai')",
-    ("TEMPLATES", "fromUnixTimestamp64Milli"):
-        "fromUnixTimestamp64Milli(i, 'Asia/Shanghai')",
-    ("TEMPLATES", "fromUnixTimestamp64Nano"):
-        "fromUnixTimestamp64Nano(i, 'Asia/Shanghai')",
-    ("TEMPLATES", "hex"): "hex(i)",
-    ("TEMPLATES", "monthName"): "monthName(d)",
-    ("TEMPLATES", "timeSlot"): "timeSlot(ts)",
-    ("TEMPLATES", "toDate"): "toDate(i)",
-    ("TEMPLATES", "toDate32"): "toDate32(i)",
-    ("TEMPLATES", "toDateTime"): "toDateTime(i)",
-    ("TEMPLATES", "toDateTime64"): "toDateTime64(i, 3)",
-    ("TEMPLATES", "toDayOfWeek"): "toDayOfWeek(d, 1)",
-    ("TEMPLATES", "toMonday"): "toMonday(d)",
-    ("TEMPLATES", "toQuarter"): "toQuarter(ts, 'Asia/Shanghai')",
-    ("TEMPLATES", "toStartOfDay"): "toStartOfDay(ts, 'Asia/Shanghai')",
-    ("TEMPLATES", "toStartOfHour"): "toStartOfHour(ts, 'Asia/Shanghai')",
-    ("TEMPLATES", "toStartOfMinute"): "toStartOfMinute(ts, 'Asia/Shanghai')",
-    ("TEMPLATES", "toStartOfQuarter"): "toStartOfQuarter(d)",
-    ("TEMPLATES", "toStartOfYear"): "toStartOfYear(d)",
-    ("TEMPLATES", "toTime"): "toTime(ts, 'Asia/Shanghai')",
-    ("TEMPLATES", "toUInt16"): "toUInt16(i)",
-    ("TEMPLATES", "toUInt32"): "toUInt32(i)",
-    ("TEMPLATES", "toUInt8"): "toUInt8(i)",
-    ("TEMPLATES", "toYYYYMM"): "toYYYYMM(d)",
-    ("TEMPLATES", "toYYYYMMDD"): "toYYYYMMDD(d)",
-    ("ARITY_TEMPLATES", "addDays"): "addDays(d, 2)",
-    ("ARITY_TEMPLATES", "now"): "now('Asia/Shanghai')",
-    ("ARITY_TEMPLATES", "parseDateTime32BestEffort"):
-        "parseDateTime32BestEffort('15/03/2024')",
-    ("ARITY_TEMPLATES", "parseDateTime32BestEffortOrNull"):
-        "parseDateTime32BestEffortOrNull('15/03/2024')",
-    ("ARITY_TEMPLATES", "parseDateTime32BestEffortOrZero"):
-        "parseDateTime32BestEffortOrZero('15/03/2024')",
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffort"):
-        "parseDateTime64BestEffort('15/03/2024')",
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffortOrNull"):
-        "parseDateTime64BestEffortOrNull('15/03/2024')",
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffortOrZero"):
-        "parseDateTime64BestEffortOrZero('15/03/2024')",
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffortUS"):
-        "parseDateTime64BestEffortUS('03/15/2024')",
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffortUSOrNull"):
-        "parseDateTime64BestEffortUSOrNull('03/15/2024')",
-    ("ARITY_TEMPLATES", "parseDateTime64BestEffortUSOrZero"):
-        "parseDateTime64BestEffortUSOrZero('03/15/2024')",
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffort"):
-        "parseDateTimeBestEffort('15/03/2024')",
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffortOrNull"):
-        "parseDateTimeBestEffortOrNull('15/03/2024')",
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffortOrZero"):
-        "parseDateTimeBestEffortOrZero('15/03/2024')",
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffortUS"):
-        "parseDateTimeBestEffortUS('03/15/2024')",
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffortUSOrNull"):
-        "parseDateTimeBestEffortUSOrNull('03/15/2024')",
-    ("ARITY_TEMPLATES", "parseDateTimeBestEffortUSOrZero"):
-        "parseDateTimeBestEffortUSOrZero('03/15/2024')",
-    ("ARITY_TEMPLATES", "subtractDays"): "subtractDays(d, 2)",
-    ("ARITY_TEMPLATES", "toDateTime"): "toDateTime(i, 'Asia/Shanghai')",
-    ("ARITY_TEMPLATES", "toDateTime64"): "toDateTime64(i, 3, 'Asia/Shanghai')",
-    ("ARITY_TEMPLATES", "toDateTime64OrNull"): "toDateTime64OrNull(s, 3)",
-    ("ARITY_TEMPLATES", "toDateTime64OrZero"): "toDateTime64OrZero(s, 3)",
-    ("ARITY_TEMPLATES", "toDateTimeOrNull"): "toDateTimeOrNull('1710498030')",
-    ("ARITY_TEMPLATES", "toDateTimeOrZero"): "toDateTimeOrZero('1710498030')",
-    ("ARITY_TEMPLATES", "toStartOfWeek"): "toStartOfWeek(d)",
-    ("ARITY_TEMPLATES", "toTimeZone"): "toTimeZone(ts, 'Asia/Shanghai')",
-}
+# (tests/test_ch_answers.py checks the answers). Each keeps its
+# test_kept_reason_holds case, which checks that the registry is now the
+# name's one definition.
+SETTLED = [
+    (table, name)
+    for table, names in {
+        "NAME_MAP": "fromUnixTimestamp toHour toMinute toSecond toUnixTimestamp",
+        "TEMPLATES": (
+            "DAYOFWEEK fromUnixTimestamp64Micro fromUnixTimestamp64Milli "
+            "fromUnixTimestamp64Nano hex monthName timeSlot toDate toDate32 "
+            "toDateTime toDateTime64 toDayOfWeek toMonday toQuarter toStartOfDay "
+            "toStartOfHour toStartOfMinute toStartOfQuarter toStartOfYear toTime "
+            "toUInt16 toUInt32 toUInt8 toYYYYMM toYYYYMMDD"
+        ),
+        "ARITY_TEMPLATES": (
+            "addDays now parseDateTime32BestEffort "
+            "parseDateTime32BestEffortOrNull parseDateTime32BestEffortOrZero "
+            "parseDateTime64BestEffort parseDateTime64BestEffortOrNull "
+            "parseDateTime64BestEffortOrZero parseDateTime64BestEffortUS "
+            "parseDateTime64BestEffortUSOrNull parseDateTime64BestEffortUSOrZero "
+            "parseDateTimeBestEffort parseDateTimeBestEffortOrNull "
+            "parseDateTimeBestEffortOrZero parseDateTimeBestEffortUS "
+            "parseDateTimeBestEffortUSOrNull parseDateTimeBestEffortUSOrZero "
+            "subtractDays toDateTime toDateTime64 toDateTime64OrNull "
+            "toDateTime64OrZero toDateTimeOrNull toDateTimeOrZero toStartOfWeek "
+            "toTimeZone"
+        ),
+    }.items()
+    for name in names.split()
+]
 
 # --- the Column-repr leak and the worker-thread session ---------------------
 
@@ -452,22 +402,11 @@ def test_every_duplicate_is_listed():
     assert sorted(set(KEPT) - dups) == [], "listed entries that are no longer duplicates"
 
 
-def _settled(spark, table: str, name: str, call: str) -> None:
-    """A settled entry is gone, and translate renders its call as the
-    registry bridge does, to SQL that runs on the probe table."""
-    assert name not in TABLES[table], f"{table} holds {name} again"
-    with D._on_session(spark):
-        sql = D._expr_sql(call)
-        args = D._split_args(D._tokenize(call)[2:-1])
-        bridged = _registry_bridge(name, [D._expr_sql(" ".join(a)) for a in args])
-    assert sql == bridged, f"{call}: translate {sql!r}, the bridge {bridged!r}"
-    _answers(spark, [sql])
-
-
 @pytest.mark.parametrize("table, name", sorted(KEPT) + sorted(SETTLED))
 def test_kept_reason_holds(probe, table, name):
     if (table, name) in SETTLED:
-        return _settled(probe, table, name, SETTLED[(table, name)])
+        assert name in REGISTRY and name not in TABLES[table]
+        return
     reason, call = KEPT[(table, name)]
     status, table_sql, bridged_sql = _status(probe, table, name, call)
     detail = f"{call}: table {table_sql!r}, without the entry {bridged_sql!r}"

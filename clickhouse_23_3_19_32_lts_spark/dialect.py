@@ -36,8 +36,6 @@ import re
 
 # --- 1:1 function renames (CH name → Spark SQL name) -----------------------
 NAME_MAP: dict[str, str] = {
-    # datetime
-    "toYear": "year",
     # string
     "lengthUTF8": "length",
     "base64Decode": "unbase64",
@@ -49,7 +47,6 @@ NAME_MAP: dict[str, str] = {
     # the ch_*_elem/_comb pandas UDFs — see _render_exact_hash below)
     "xxHash32": "crc32",
     # aggregates
-    "uniq": "approx_count_distinct",
     "anyLast": "last",
 }
 
@@ -85,10 +82,6 @@ TEMPLATES: dict[str, str] = {
     "modulo": "(({0}) % ({1}))",
     "positiveModulo": "pmod({0}, abs({1}))",
     "negate": "(-({0}))",
-    "toString": "CAST({0} AS STRING)",
-    # tests/test_dialect.py::test_translate_strings pins this text; the
-    # registry's builder keeps a NULL argument NULL, which greatest() does not
-    "toStartOfMonth": "greatest(to_date(date_trunc('month', {0})), DATE '1970-01-01')",
     # Int128/256 carried as BIGINT: values beyond ±2^63 are documented
     # unsupported (SCALING.md; src/Core/Types.h wide integers) but the
     # in-range arithmetic the golden corpus exercises is exact
@@ -244,25 +237,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
         2: "count(CASE WHEN {1} THEN {0} END)",
     },
     "ignore": {0: "0", 1: "(length(CAST({0} AS STRING)) * 0)"},
-    # bare parametric-aggregate forms default to level 0.5
-    # (AggregateFunctionQuantile.h: params optional)
-    "quantile": {1: "coalesce(percentile({0}, 0.5), double('NaN'))"},
-    "quantileExact": {
-        1: (
-            "coalesce(cast(element_at(array_sort(collect_list({0})),"
-            " cast(least(floor(count({0}) * 0.5) + 1, count({0})) as int))"
-            " as double), double('NaN'))"
-        )
-    },
-    "quantileTiming": {
-        1: (
-            "coalesce(cast(element_at(array_sort(collect_list("
-            "cast(least(greatest({0}, 0), 30000) as int))),"
-            " cast(least(floor(count({0}) * 0.5) + 1, count({0})) as int))"
-            " as double), cast('NaN' as double))"
-        )
-    },
-    "quantileTDigest": {1: "coalesce(percentile_approx({0}, 0.5), double('NaN'))"},
     # multi-array form ranks occurrences of equal TUPLES
     # (arrayEnumerateUniq.cpp)
     "arrayEnumerateUniq": {
@@ -282,13 +256,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
     "arrayUniq": {
         2: "size(array_distinct(arrays_zip({0}, {1})))",
         3: "size(array_distinct(arrays_zip({0}, {1}, {2})))",
-    },
-    # multi-arg uniq* count distinct tuples (IAggregateFunction uniq.h);
-    # Spark's approx_count_distinct reads arg 2 as rsd, so pack a struct
-    "uniq": {
-        2: "approx_count_distinct(struct({0}, {1}))",
-        3: "approx_count_distinct(struct({0}, {1}, {2}))",
-        4: "approx_count_distinct(struct({0}, {1}, {2}, {3}))",
     },
     # default precision 12 (geohashEncode.cpp); the 3-arg form resolves to
     # the registered SQL pandas UDF (functions/sql_udfs.py)
@@ -750,150 +717,10 @@ _CH_TYPE_MAP: dict[str, str] = {
     "Array(Float64)": "ARRAY<DOUBLE>",
 }
 
-# parametric aggregates: name(params)(args) → template with p* and a*
+# parametric aggregates name(params)(args) → template with p* and a*, for
+# the two that the registry refuses: a moving sum needs a row order, which
+# a distributed aggregate lacks (functions/variants3.py)
 PARAMETRIC: dict[str, str] = {
-    # empty set → NaN (QuantileExact returns default NaN on no values)
-    "quantile": "coalesce(percentile({a0}, {p0}), double('NaN'))",
-    # QuantileExact.h: nth_element at floor(n*level), never interpolates
-    "quantileExact": "coalesce(cast(element_at(array_sort(collect_list({a0})), cast(least(floor(count({a0}) * ({p0})) + 1, count({a0})) as int)) as double), double('NaN'))",
-    "quantileTDigest": "coalesce(percentile_approx({a0}, {p0}), double('NaN'))",
-    "quantileDeterministic": "coalesce(percentile({a0}, {p0}), double('NaN'))",
-    "quantiles": "array({percentiles})",
-    # k MOST FREQUENT values (AggregateFunctionTopK.h), most-frequent first,
-    # value-ascending tiebreak; exact (the reference's space-saving sketch is
-    # an approximation of this same ordering)
-    # count-desc, first-seen tiebreak (space-saving keeps insertion order
-    # for equal counts — AggregateFunctionTopK.h)
-    "topK": (
-        "transform(slice(array_sort(transform(array_distinct(collect_list({a0})),"
-        " v -> struct(-size(filter(collect_list({a0}), y -> y = v)) AS neg,"
-        " array_position(collect_list({a0}), v) AS pos, v AS val))),"
-        " 1, {p0}), s -> s.val)"
-    ),
-    # weight-sum-desc, first-seen tiebreak (AggregateFunctionTopK.h weighted)
-    "topKWeighted": (
-        "transform(slice(array_sort(transform("
-        "array_distinct(collect_list({a0})),"
-        " v -> struct(-aggregate(filter(collect_list(named_struct('x', {a0}, 'w', CAST({a1} AS DOUBLE))),"
-        " __p -> __p.x = v), CAST(0 AS DOUBLE), (__s, __p) -> __s + __p.w) AS neg,"
-        " array_position(collect_list({a0}), v) AS pos, v AS val))),"
-        " 1, {p0}), s -> s.val)"
-    ),
-    "groupArraySample": "slice(collect_list({a0}), 1, {p0})",
-    # groupUniqArray(max_size)(x): at most max_size distinct elements
-    # (AggregateFunctionGroupUniqArray.h) — which subset is unspecified
-    "groupUniqArray": "slice(array_distinct(collect_list({a0})), 1, {p0})",
-    "groupArray": "slice(collect_list({a0}), 1, {p0})",
-    # QuantileTiming.h: values clamped to [0, 30000] (BIG_THRESHOLD), stored
-    # exactly below 1024 at small counts; rank rule is elems[floor(count *
-    # level)] (0-based), elems[count-1] at level 1; empty set → NaN
-    "quantileTiming": (
-        "coalesce(cast(element_at(array_sort(collect_list("
-        "cast(least(greatest({a0}, 0), 30000) as int))),"
-        " cast(least(floor(count({a0}) * ({p0})) + 1, count({a0})) as int))"
-        " as double), cast('NaN' as double))"
-    ),
-    "quantilesTiming": "array({percentiles})",
-    # weighted Timing form — weighted counting-sort rank rule: first value
-    # whose cumulative weight exceeds floor(total*level); elems[count-1] cap.
-    # Fidelity note: this matches the reference's Tiny/Medium states
-    # (QuantileTiming.h:113,198 — elems[floor(count*level)], i.e. cum >=
-    # floor+1 in 1-based terms). The Large counting state (:419) switches to
-    # ceil(count*level), which differs by one element exactly when
-    # total*level is an integer; we keep the small/medium rule because the
-    # test corpus exercises small states. Threshold math, not
-    # repeat-expansion, so huge weights stay finite.
-    "quantileTimingWeighted": (
-        # zero-weight pairs are never added to the Timing state
-        # (QuantileTiming.h insertWeighted: repeat count 0 → no-op), so an
-        # all-zero-weight set is EMPTY → NaN, not the first value
-        "element_at(transform(array("
-        "filter(collect_list(named_struct('v', cast(least(greatest({a0}, 0), 30000) as int),"
-        " 'w', CAST({a1} AS DOUBLE))), __q -> __q.w <> 0)"
-        "), __p0 -> element_at(transform(array("
-        "transform(array_sort(array_distinct(transform(__p0, __q -> __q.v))), __v ->"
-        " named_struct('v', __v, 'w', aggregate(filter(__p0, __q -> __q.v = __v),"
-        " CAST(0 AS DOUBLE), (__s, __q) -> __s + __q.w)))"
-        "), __ws -> CASE WHEN size(__ws) = 0 THEN double('NaN') ELSE"
-        " cast(coalesce(element_at(filter(transform(sequence(1, size(__ws)), __i ->"
-        " named_struct('v', element_at(__ws, __i).v,"
-        " 'c', aggregate(slice(__ws, 1, __i), CAST(0 AS DOUBLE), (__s, __q) -> __s + __q.w))),"
-        " __e -> __e.c >= floor(({p0}) * aggregate(__ws, CAST(0 AS DOUBLE),"
-        " (__s, __q) -> __s + __q.w)) + 1) , 1).v,"
-        " element_at(__ws, size(__ws)).v) as double) END), 1)), 1)"
-    ),
-    "quantilesTimingWeighted": "array({percentiles})",
-    # PERCENTILE.INC/.EXC (QuantileExactInclusive/Exclusive in
-    # AggregateFunctionQuantile.cpp): INC is Spark's percentile; EXC
-    # interpolates at h = level*(n+1)
-    "quantileExactInclusive": "coalesce(percentile({a0}, {p0}), double('NaN'))",
-    "quantilesExactInclusive": "array({percentiles})",
-    "quantileExactExclusive": (
-        "element_at(transform(array(array_sort(collect_list(CAST({a0} AS DOUBLE)))), __a ->"
-        " CASE WHEN size(__a) = 0 THEN double('NaN')"
-        " WHEN ({p0}) * (size(__a) + 1) < 1 THEN element_at(__a, 1)"
-        " WHEN ({p0}) * (size(__a) + 1) >= size(__a) THEN element_at(__a, size(__a))"
-        " ELSE element_at(transform(array(floor(({p0}) * (size(__a) + 1))), __h ->"
-        " element_at(__a, cast(__h as int)) + (({p0}) * (size(__a) + 1) - __h)"
-        " * (element_at(__a, cast(__h as int) + 1) - element_at(__a, cast(__h as int)))), 1)"
-        " END), 1)"
-    ),
-    "quantilesExactExclusive": "array({percentiles})",
-    # weighted-percentile linear interpolation over the per-distinct-value
-    # cumulative weight CDF h_i = (cum_i - w_i/2) / total
-    # (QuantileInterpolatedWeighted.h); single-element transform() arrays
-    # act as let-bindings for the intermediate pair/CDF arrays
-    "quantileInterpolatedWeighted": (
-        "element_at(transform(array("
-        "collect_list(named_struct('v', CAST({a0} AS DOUBLE), 'w', CAST({a1} AS DOUBLE)))"
-        "), __p0 -> element_at(transform(array("
-        "transform(array_sort(array_distinct(transform(__p0, __q -> __q.v))), __v ->"
-        " named_struct('v', __v, 'w', aggregate(filter(__p0, __q -> __q.v = __v),"
-        " CAST(0 AS DOUBLE), (__s, __q) -> __s + __q.w)))"
-        "), __ws -> element_at(transform(array("
-        "CASE WHEN size(__ws) = 0 THEN array() ELSE"
-        " transform(sequence(1, size(__ws)), __i -> named_struct("
-        "'y', element_at(__ws, __i).v,"
-        " 'x', (aggregate(slice(__ws, 1, __i), CAST(0 AS DOUBLE),"
-        " (__s, __q) -> __s + __q.w) - 0.5 * element_at(__ws, __i).w)"
-        " / aggregate(__ws, CAST(0 AS DOUBLE), (__s, __q) -> __s + __q.w))) END"
-        "), __h -> CASE"
-        " WHEN size(__h) = 0 THEN double('NaN')"
-        " WHEN ({p0}) <= element_at(__h, 1).x THEN element_at(__h, 1).y"
-        " WHEN ({p0}) >= element_at(__h, size(__h)).x THEN element_at(__h, size(__h)).y"
-        " ELSE element_at(transform(array(element_at(transform("
-        "array(size(filter(__h, __e -> __e.x <= ({p0})))),"
-        " __i -> element_at(__h, __i).y + (element_at(__h, __i + 1).y - element_at(__h, __i).y)"
-        " * (({p0}) - element_at(__h, __i).x)"
-        " / (element_at(__h, __i + 1).x - element_at(__h, __i).x)), 1)),"
-        # integer inputs keep the integer type in ClickHouse — the C++
-        # conversion truncates the interpolated value toward zero
-        " __r -> CASE WHEN forall(__ws, __q -> __q.v = floor(__q.v))"
-        " THEN CAST(CAST(__r AS BIGINT) AS DOUBLE) ELSE __r END), 1)"
-        " END), 1)), 1)), 1)"
-    ),
-    "quantilesInterpolatedWeighted": "array({percentiles})",
-    "quantilesExact": "array({percentiles})",
-    "quantilesTDigest": "array({percentiles})",
-    "quantilesDeterministic": "array({percentiles})",
-    # QuantileExactWeighted.h:108: first value whose cumulative weight
-    # reaches ceil(total*level); no interpolation
-    "quantileExactWeighted": (
-        "element_at(transform(array("
-        "collect_list(named_struct('v', CAST({a0} AS DOUBLE), 'w', CAST({a1} AS DOUBLE)))"
-        "), __p0 -> element_at(transform(array("
-        "transform(array_sort(array_distinct(transform(__p0, __q -> __q.v))), __v ->"
-        " named_struct('v', __v, 'w', aggregate(filter(__p0, __q -> __q.v = __v),"
-        " CAST(0 AS DOUBLE), (__s, __q) -> __s + __q.w)))"
-        "), __ws -> CASE WHEN size(__ws) = 0 THEN double('NaN') ELSE"
-        " coalesce(element_at(filter(transform(sequence(1, size(__ws)), __i ->"
-        " named_struct('v', element_at(__ws, __i).v,"
-        " 'c', aggregate(slice(__ws, 1, __i), CAST(0 AS DOUBLE), (__s, __q) -> __s + __q.w))),"
-        " __e -> __e.c >= ceiling(aggregate(__ws, CAST(0 AS DOUBLE),"
-        " (__s, __q) -> __s + __q.w) * ({p0}))), 1).v,"
-        " element_at(__ws, size(__ws)).v) END), 1)), 1)"
-    ),
-    "quantilesExactWeighted": "array({percentiles})",
     # sliding aggregates over the collected group (per-row array result,
     # AggregateFunctionGroupArrayMoving.cpp)
     "groupArrayMovingSum": (
@@ -915,10 +742,10 @@ _TOKEN_RE = re.compile(
     | "(?:[^"\\]|\\.)*"            # double-quoted identifier
     | `(?:[^`\\]|\\.)*`            # backtick identifier
     | [A-Za-z_][A-Za-z0-9_]*       # identifier
-    | \d+\.\d+(?:[eE][+-]?\d+)?    # number (incl. scientific exponent)
-    | \.\d+(?:[eE][+-]?\d+)?
-    | \d+[eE][+-]?\d+
-    | \d+
+    # number (incl. scientific exponent), keeping a typed-literal suffix
+    # of rendered Spark SQL (0.9D, 10L) in the token
+    | (?:\d+\.\d+(?:[eE][+-]?\d+)? | \.\d+(?:[eE][+-]?\d+)? | \d+[eE][+-]?\d+ | \d+)
+      (?:(?:BD|[DLSYF])(?![A-Za-z0-9_]))?
     | ==                           # CH equality
     | ::                           # CH/Postgres cast operator
     | \|\|                         # string concatenation
@@ -1257,36 +1084,50 @@ def _as_py_literal(sql: str):
     return None
 
 
-def _literal_params(builder, nargs: int) -> list[bool] | None:
-    """Which of the first nargs parameters want a PYTHON literal (annotated
-    str/int/float/bool without Column) rather than a Column. None = the
-    builder can't take nargs positional args."""
+def _wants_literal(p) -> bool:
+    """Whether a builder parameter wants a PYTHON literal: annotated
+    str/int/float/bool, without Column."""
+    ann = p.annotation if p.annotation is not p.empty else None
+    ann_s = ann if isinstance(ann, str) else getattr(ann, "__name__", "")
+    return (
+        bool(ann_s)
+        and "Column" not in ann_s
+        and any(k in ann_s for k in ("str", "int", "float", "bool"))
+    )
+
+
+def _bind(builder, args: list[str], params: list[str] | None = None):
+    """[(argument SQL, whether its slot wants a Python literal)] in the
+    order of the builder's positional slots, or None when the call does not
+    fit them. A plain call f(args) fills the slots in order. A parametric
+    call f(params)(args) fills the literal slots with params and the other
+    slots with args, each in order; a variadic slot takes what is left of
+    its kind."""
     import inspect
 
     try:
-        params = [
+        slots = [
             p
             for p in inspect.signature(builder).parameters.values()
             if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD, p.VAR_POSITIONAL)
         ]
     except (TypeError, ValueError):
-        return [False] * nargs
-    out: list[bool] = []
-    for j in range(nargs):
-        p = params[min(j, len(params) - 1)] if params else None
-        if p is None or (p.kind != p.VAR_POSITIONAL and j >= len(params)):
+        return None if params is not None else [(a, False) for a in args]
+    left = {False: list(args)} if params is None else {True: list(params), False: list(args)}
+    out: list[tuple[str, bool]] = []
+    for p in slots:
+        lit = _wants_literal(p)
+        queue = left[False] if params is None else left[lit]
+        if p.kind == p.VAR_POSITIONAL:
+            out += [(a, lit) for a in queue]
+            queue.clear()
+        elif queue:
+            out.append((queue.pop(0), lit))
+        elif p.default is p.empty:
             return None
-        ann = p.annotation if p.annotation is not p.empty else None
-        ann_s = ann if isinstance(ann, str) else getattr(ann, "__name__", "")
-        out.append(
-            bool(ann_s)
-            and "Column" not in ann_s
-            and any(k in ann_s for k in ("str", "int", "float", "bool"))
-        )
-    required = sum(1 for p in params if p.default is p.empty and p.kind != p.VAR_POSITIONAL)
-    if nargs < required:
-        return None
-    return out
+        else:
+            break
+    return None if any(left.values()) else out
 
 
 def _column_sql(spark, expr) -> str:
@@ -1377,30 +1218,70 @@ def _registry() -> dict:
     return REGISTRY
 
 
-def _registry_bridge(fname: str, arg_sql: list[str]) -> str | None:
-    """SQL fragment for a registry function call, or None to fall through."""
+# arguments spliced into a rendered template without parentheses:
+# identifiers (qualified or back-quoted), unsigned numbers, string literals
+_ATOM_RE = re.compile(
+    r"(?:[A-Za-z_]\w*|`(?:[^`]|``)*`)(?:\.(?:[A-Za-z_]\w*|`(?:[^`]|``)*`))*"
+    r"|\d+(?:\.\d*)?(?:[eE][+-]?\d+)?"
+    r"|'(?:[^'\\]|\\.)*'"
+)
+
+
+def _splice(tpl: str, subst: dict[int, str]) -> str:
+    """Write each argument's SQL over its placeholder column, bare if it is
+    an atom and parenthesised otherwise."""
+
+    def arg(m):
+        a = subst[int(m.group(1))]
+        return a if _ATOM_RE.fullmatch(a) else f"({a})"
+
+    return re.sub(r"\b__dlt_a(\d+)\b", arg, tpl)
+
+
+def _registry_bridge(
+    fname: str, arg_sql: list[str], params: list[str] | None = None
+) -> str | None:
+    """SQL fragment for a registry function call, or None to fall through.
+    ``params`` are the parameters of a parametric call f(params)(args),
+    a shape no Spark built-in takes; a call that cannot be bound or
+    rendered raises ChSqlError naming f."""
     REGISTRY = _registry()
     spark = _session()
     if spark is None or fname not in REGISTRY:
         return None
-    if fname.lower() in _spark_builtins(spark) and fname not in _OVER_BUILTINS:
+    if (
+        params is None
+        and fname.lower() in _spark_builtins(spark)
+        and fname not in _OVER_BUILTINS
+    ):
         return None  # Spark resolves it natively; don't shadow
+    sql = _bridge_render(spark, fname, REGISTRY[fname], arg_sql, params)
+    if sql is None and params is not None:
+        raise ChSqlError(
+            f"{fname}({', '.join(params)})({', '.join(arg_sql)}): the parameters"
+            f" must be literals and, with the arguments, fit {fname}"
+        )
+    return sql
+
+
+def _bridge_render(spark, fname, builder, arg_sql, params) -> str | None:
+    """The builder's call rendered as SQL, or None when it cannot be."""
     from pyspark.sql import functions as F
 
-    builder = REGISTRY[fname]
-    lit_mask = _literal_params(builder, len(arg_sql))
-    if lit_mask is None:
+    bound = _bind(builder, arg_sql, params)
+    if bound is None:
         return None
-    if not any(lit_mask):
+    subst = {j: a for j, (a, lit) in enumerate(bound) if not lit}
+    if len(subst) == len(bound):
         # pure-Column call: render once per (name, arity), splice args in
-        key = (fname, len(arg_sql))
+        key = (fname, len(bound))
         tpl = _BRIDGE_CACHE.get(key)
         if tpl is None:
             # never cache a failed render: _render_call goes through py4j,
             # so a transient JVM/socket failure would otherwise poison this
             # (name, arity) for the rest of the process — long scans then
             # report registered functions as UNRESOLVED_ROUTINE
-            placeholders = [F.col(f"__dlt_a{j}") for j in range(len(arg_sql))]
+            placeholders = [F.col(f"__dlt_a{j}") for j in range(len(bound))]
             tpl = _render_call(spark, builder, placeholders)
             if tpl is None:
                 return None
@@ -1409,31 +1290,19 @@ def _registry_bridge(fname: str, arg_sql: list[str]) -> str | None:
             # every query
             if _render_call(spark, builder, placeholders) == tpl:
                 _BRIDGE_CACHE[key] = tpl
-        for j, a in enumerate(arg_sql):
-            # lambda repl: arg SQL may contain backslashes (regex literals)
-            tpl = re.sub(rf"\b__dlt_a{j}\b", lambda _m, a=a: f"({a})", tpl)
-        return tpl
+        return _splice(tpl, subst)
     # literal-annotated params must be given literal SQL; inline them into
     # the builder call (template is value-specific — not cached). Non-literal
     # args go in as PLACEHOLDER columns and are text-spliced afterwards — a
     # rendered nested py-UDF argument would otherwise corrupt the SQL.
     args = []
-    subst: dict[int, str] = {}
-    for j, a in enumerate(arg_sql):
-        if lit_mask[j]:
-            v = _as_py_literal(a)
-            if v is None:
-                return None
-            args.append(v)
-        else:
-            args.append(F.col(f"__dlt_a{j}"))
-            subst[j] = a
+    for j, (a, lit) in enumerate(bound):
+        v = _as_py_literal(a) if lit else F.col(f"__dlt_a{j}")
+        if v is None:
+            return None
+        args.append(v)
     tpl = _render_call(spark, builder, args)
-    if tpl is None:
-        return None
-    for j, a in subst.items():
-        tpl = re.sub(rf"\b__dlt_a{j}\b", lambda _m, a=a: f"({a})", tpl)
-    return tpl
+    return None if tpl is None else _splice(tpl, subst)
 
 # keywords that can precede an array literal (so a following [ is NOT a
 # subscript of them)
@@ -2902,46 +2771,16 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             if isinstance(v, (int, float)) and not 0 <= v <= 100:
                 raise ChSqlError(f"uniqUpTo threshold out of range: {arg_sql[0]}")
 
-        # median<Variant>(args) ≡ quantile<Variant>(0.5)(args)
-        # (AggregateFunctionQuantile.cpp registers a median alias per
-        # quantile variant); plain `median` keeps its dedicated path below
-        if t.startswith("median") and len(t) > len("median"):
-            _qt = "quantile" + t[len("median"):]
-            _qtpl = PARAMETRIC.get(_qt)
-            if _qtpl and _qtpl != "array({percentiles})" and not (
-                close + 1 < len(tokens) and tokens[close + 1] == "("
-            ):
-                s = _qtpl.replace("{p0}", "0.5")
-                for j, a in enumerate(arg_sql):
-                    s = s.replace(f"{{a{j}}}", a)
-                out.append(s)
-                i = close + 1
-                continue
-
-        # parametric aggregate: name(params)(args)
+        # parametric aggregate the registry refuses: name(params)(args)
         if t in PARAMETRIC and close + 1 < len(tokens) and tokens[close + 1] == "(":
             close2 = _find_call_end(tokens, close + 1)
             args2 = _split_args(tokens[close + 2 : close2])
-            arg2_sql = [_rewrite(a) for a in args2]
-            tpl = PARAMETRIC[t]
-            if tpl == "array({percentiles})":
-                base = PARAMETRIC.get(t.replace("quantiles", "quantile", 1))
-                if base is None:
-                    base = "percentile({a0}, {p0})"
-                per_p = [
-                    base.replace("{p0}", p).replace("{a0}", arg2_sql[0]).replace(
-                        "{a1}", arg2_sql[1] if len(arg2_sql) > 1 else "1"
-                    )
-                    for p in arg_sql
-                ]
-                out.append(f"array({', '.join(per_p)})")
-            else:
-                s = tpl
-                for j, p in enumerate(arg_sql):
-                    s = s.replace(f"{{p{j}}}", p)
-                for j, a in enumerate(arg2_sql):
-                    s = s.replace(f"{{a{j}}}", a)
-                out.append(s)
+            s = PARAMETRIC[t]
+            for j, p in enumerate(arg_sql):
+                s = s.replace(f"{{p{j}}}", p)
+            for j, a in enumerate(args2):
+                s = s.replace(f"{{a{j}}}", _rewrite(a))
+            out.append(s)
             i = close2 + 1
             continue
 
@@ -3044,19 +2883,15 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 i = j
                 continue
 
-        # generic parametric aggregate f(params)(args): ClickHouse library
-        # builders take (params..., args...) positionally — route the
-        # flattened call through the registry bridge (windowFunnel,
-        # sequenceMatch/Count, retention-style families)
-        if (
-            close + 1 < len(tokens)
-            and tokens[close + 1] == "("
-            and t not in PARAMETRIC
-        ):
+        # parametric aggregate f(params)(args): the registry bridge binds the
+        # parameters to the builder's literal slots and the arguments to the
+        # others (windowFunnel, uniqUpTo, the quantile, topK and groupArray
+        # families)
+        if close + 1 < len(tokens) and tokens[close + 1] == "(":
             close2 = _find_call_end(tokens, close + 1)
             args2 = _split_args(tokens[close + 2 : close2])
             arg2_sql = [_rewrite(a) for a in args2]
-            bridged = _registry_bridge(t, arg_sql + arg2_sql)
+            bridged = _registry_bridge(t, arg2_sql, params=arg_sql)
             if bridged is not None:
                 out.append(bridged)
                 i = close2 + 1

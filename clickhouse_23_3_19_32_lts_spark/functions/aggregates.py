@@ -9,10 +9,12 @@ way ClickHouse materializes them at parse time.
 
 from __future__ import annotations
 
+import inspect
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col
+from clickhouse_23_3_19_32_lts_spark.functions.registry import REGISTRY, chfn, col
 
 
 # -- core --------------------------------------------------------------------
@@ -98,27 +100,189 @@ def uniqUpTo(n: int, c) -> Column:
 
 
 # -- quantiles ---------------------------------------------------------------
+# One builder per variant of AggregateFunctionQuantile.cpp, called
+# quantile<V>(x[, weight | determinator], level), and registered under
+# median<V> too, which is the same function with level 0.5 by default; the
+# loop at the end of the section derives quantiles<V> from it. The sketch
+# variants (TDigest, BFloat16) answer Spark's approximate percentile, the
+# others answer exactly.
 
 
-@chfn("quantile", "quantileExact", "quantileExactWeighted", "quantileDeterministic")
-def quantile(c, q: float = 0.5) -> Column:
-    return F.percentile(col(c), F.lit(q))
+def _or_nan(value: Column) -> Column:
+    """A quantile of no values is NaN, each quantile state's default."""
+    return F.coalesce(value, F.lit(float("nan")))
 
 
-@chfn("quantiles", "quantilesExact")
-def quantiles(c, *qs: float) -> Column:
-    return F.percentile(col(c), F.array(*[F.lit(q) for q in qs]))
+def _sorted_at(values: Column, rank) -> Column:
+    """The sorted values' element at 0-based rank(n), at most the last one,
+    as a double; NULL for no values."""
+    s = F.array_sort(values)
+    return F.get(s, F.least(rank(F.size(s)), F.size(s) - 1)).cast("double")
 
 
-@chfn("median")
-def median(c) -> Column:
-    return F.median(col(c))
+def _floor_rank(level: float):
+    """QuantileExact.h's rank, floor(n * level), never interpolated."""
+    return lambda n: F.floor(n * float(level)).cast("int")
 
 
-@chfn("quantileTDigest", "quantileBFloat16", "quantileTiming")
-def quantileTDigest(c, q: float = 0.5) -> Column:
-    """Sketch-based quantiles → percentile_approx (engine-specific sketch)."""
-    return F.percentile_approx(col(c), F.lit(q))
+def _timing(x) -> Column:
+    """QuantileTiming.h keeps each value as an integer clamped to [0, 30000]."""
+    v = col(x)
+    return F.when(v.isNotNull(), F.least(F.greatest(v, F.lit(0)), F.lit(30000)).cast("int"))
+
+
+def _weighted(x, w) -> Column:
+    """The (v, w) pairs of rows with both arguments set, as doubles."""
+    pair = F.struct(col(x).cast("double").alias("v"), col(w).cast("double").alias("w"))
+    return F.collect_list(F.when(col(x).isNotNull() & col(w).isNotNull(), pair))
+
+
+def _weighted_pick(pairs: Column, threshold) -> Column:
+    """The first value, ascending, at which the running weight reaches
+    threshold(total weight), else the last value; NULL for no pairs. Sorted,
+    equal values sit together, so this is the first distinct value whose
+    cumulative weight reaches the threshold (QuantileExactWeighted.h)."""
+    pairs = F.array_sort(pairs)
+    bar = threshold(F.aggregate(pairs, F.lit(0.0), lambda s, p: s + p["w"]))
+    hit = F.aggregate(
+        pairs,
+        F.struct(F.lit(0.0).alias("run"), F.lit(None).cast("double").alias("v")),
+        lambda s, p: F.struct(
+            (s["run"] + p["w"]).alias("run"),
+            F.coalesce(s["v"], F.when(s["run"] + p["w"] >= bar, p["v"])).alias("v"),
+        ),
+    )
+    return F.coalesce(hit["v"], F.get(pairs, F.size(pairs) - 1)["v"])
+
+
+@chfn("quantile", "median", "quantileExactInclusive")
+def quantile(x, level: float = 0.5) -> Column:
+    """Linear interpolation at rank (n - 1) * level: quantile's answer for
+    a set its reservoir holds whole, and PERCENTILE.INC."""
+    return _or_nan(F.percentile(col(x), F.lit(float(level))))
+
+
+@chfn("quantileDeterministic", "medianDeterministic")
+def quantileDeterministic(x, determinator, level: float = 0.5) -> Column:
+    """quantile; the determinator only seeds the reservoir's sampling."""
+    return quantile(x, level)
+
+
+@chfn("quantileExact", "quantileExactHigh", "medianExact", "medianExactHigh")
+def quantileExact(x, level: float = 0.5) -> Column:
+    """The sorted values' element at rank floor(n * level); the upper
+    median of quantileExactHigh is the same rank (QuantileExact.h)."""
+    return _or_nan(_sorted_at(F.collect_list(col(x)), _floor_rank(level)))
+
+
+@chfn("quantileExactLow", "medianExactLow")
+def quantileExactLow(x, level: float = 0.5) -> Column:
+    """quantileExact, but the lower middle value for the median of an even
+    count (QuantileExactLow)."""
+    rank = (lambda n: F.ceil(n * 0.5).cast("int") - 1) if level == 0.5 else _floor_rank(level)
+    return _or_nan(_sorted_at(F.collect_list(col(x)), rank))
+
+
+@chfn("quantileExactExclusive")
+def quantileExactExclusive(x, level: float = 0.5) -> Column:
+    """PERCENTILE.EXC: linear interpolation at 1-based rank
+    level * (n + 1), clamped to [1, n]."""
+    s = F.array_sort(F.collect_list(col(x).cast("double")))
+    n = F.size(s)
+    h = F.least(F.greatest((n + 1) * float(level), F.lit(1.0)), n)
+    k = F.floor(h).cast("int")
+    lo = F.get(s, k - 1)
+    return _or_nan(lo + (h - k) * (F.coalesce(F.get(s, k), lo) - lo))
+
+
+@chfn("quantileTDigest", "quantileBFloat16", "medianTDigest", "medianBFloat16")
+def quantileTDigest(x, level: float = 0.5) -> Column:
+    """Spark's approximate percentile, a sketch of the same order
+    statistic as the t-digest and bfloat16 sketches."""
+    return _or_nan(F.percentile_approx(col(x), F.lit(float(level))))
+
+
+@chfn(
+    "quantileExactWeighted", "quantileTDigestWeighted", "quantileBFloat16Weighted",
+    "medianExactWeighted", "medianTDigestWeighted", "medianBFloat16Weighted",
+)
+def quantileExactWeighted(x, w, level: float = 0.5) -> Column:
+    """The first value whose cumulative weight reaches
+    ceil(total * level) (QuantileExactWeighted.h); the weighted sketch
+    variants answer it exactly."""
+    return _or_nan(_weighted_pick(_weighted(x, w), lambda t: F.ceil(t * float(level))))
+
+
+@chfn("quantileTiming", "medianTiming")
+def quantileTiming(x, level: float = 0.5) -> Column:
+    """quantileExact over the clamped integers (QuantileTiming.h)."""
+    return _or_nan(_sorted_at(F.collect_list(_timing(x)), _floor_rank(level)))
+
+
+@chfn("quantileTimingWeighted", "medianTimingWeighted")
+def quantileTimingWeighted(x, w, level: float = 0.5) -> Column:
+    """The first clamped value whose cumulative weight exceeds
+    floor(total * level); a zero weight adds no value (QuantileTiming.h)."""
+    pairs = _weighted(_timing(x), F.when(col(w) != 0, col(w)))
+    return _or_nan(_weighted_pick(pairs, lambda t: F.floor(t * float(level)) + 1))
+
+
+@chfn("quantileInterpolatedWeighted", "medianInterpolatedWeighted")
+def quantileInterpolatedWeighted(x, w, level: float = 0.5) -> Column:
+    """Linear interpolation over the distinct values, each placed at
+    (cumulative weight - half its weight) / total weight; all-integer
+    values truncate the answer toward zero, as the cast back to the
+    argument's type does (QuantileInterpolatedWeighted.h)."""
+    pairs = _weighted(x, w)
+    vals = F.array_sort(F.array_distinct(F.transform(pairs, lambda p: p["v"])))
+    ws = F.transform(
+        vals,
+        lambda v: F.aggregate(
+            F.filter(pairs, lambda p: p["v"] == v), F.lit(0.0), lambda s, p: s + p["w"]
+        ),
+    )
+    total = F.aggregate(ws, F.lit(0.0), lambda s, e: s + e)
+    h = F.transform(
+        ws,
+        lambda e, i: (
+            F.aggregate(F.slice(ws, 1, i + 1), F.lit(0.0), lambda s, a: s + a) - e / 2
+        ) / total,
+    )
+    n = F.size(vals)
+    k = F.size(F.filter(h, lambda e: e <= float(level)))
+    x0, y0, x1, y1 = F.get(h, k - 1), F.get(vals, k - 1), F.get(h, k), F.get(vals, k)
+    r = y0 + (y1 - y0) * (float(level) - x0) / (x1 - x0)
+    r = F.when(F.forall(vals, lambda v: v == F.floor(v)), r.cast("long").cast("double")).otherwise(r)
+    return _or_nan(
+        F.when(F.get(h, 0) >= float(level), F.get(vals, 0))
+        .when(F.get(h, n - 1) <= float(level), F.get(vals, n - 1))
+        .otherwise(r)
+    )
+
+
+def _at_levels(one):
+    """quantiles<V>(x[, y], *levels): quantile<V> at each level, as an array."""
+    if len(inspect.signature(one).parameters) == 3:
+
+        def at_levels(x, y, *levels: float) -> Column:
+            """quantile<V> at each level, as an array."""
+            return F.array(*[one(x, y, lv) for lv in levels])
+
+    else:
+
+        def at_levels(x, *levels: float) -> Column:
+            """quantile<V> at each level, as an array."""
+            return F.array(*[one(x, lv) for lv in levels])
+
+    return at_levels
+
+
+for _v in (
+    "", "Deterministic", "Exact", "ExactLow", "ExactHigh", "ExactInclusive",
+    "ExactExclusive", "ExactWeighted", "InterpolatedWeighted", "Timing",
+    "TimingWeighted", "TDigest", "TDigestWeighted", "BFloat16", "BFloat16Weighted",
+):
+    chfn("quantiles" + _v)(_at_levels(REGISTRY["quantile" + _v]))
 
 
 # -- statistics --------------------------------------------------------------
@@ -189,13 +353,19 @@ def kurtSamp(c) -> Column:
 
 
 @chfn("groupArray")
-def groupArray(c) -> Column:
-    return F.collect_list(col(c))
+def groupArray(c, max_size: int | None = None) -> Column:
+    """groupArray([max_size])(x): the values, at most the first max_size."""
+    vals = F.collect_list(col(c))
+    return vals if max_size is None else F.slice(vals, 1, int(max_size))
 
 
 @chfn("groupUniqArray")
-def groupUniqArray(c) -> Column:
-    return F.collect_set(col(c))
+def groupUniqArray(c, max_size: int | None = None) -> Column:
+    """groupUniqArray([max_size])(x): the distinct values, at most max_size
+    of them; which ones is unspecified (AggregateFunctionGroupUniqArray.h)."""
+    if max_size is None:
+        return F.collect_set(col(c))
+    return F.slice(F.array_distinct(F.collect_list(col(c))), 1, int(max_size))
 
 
 @chfn("groupArraySorted")
@@ -257,8 +427,11 @@ def maxIf(c, cond) -> Column:
 
 
 @chfn("uniqIf")
-def uniqIf(c, cond) -> Column:
-    return F.approx_count_distinct(F.when(col(cond) if isinstance(cond, str) else cond, col(c)))
+def uniqIf(*args) -> Column:
+    """uniqIf(x…, cond): uniq over the rows where cond holds."""
+    *cs, cond = args
+    x = F.struct(*[col(c) for c in cs]) if len(cs) > 1 else col(cs[0])
+    return F.approx_count_distinct(F.when(col(cond) if isinstance(cond, str) else cond, x))
 
 
 @chfn("sumOrNull")

@@ -233,26 +233,6 @@ def groupArraySample(x, n: int = 10) -> Column:
     return F.slice(F.collect_list(col(x)), 1, int(n))
 
 
-# --- weighted / variant medians (percentile's frequency argument) -----------
-
-
-@chfn("medianExact", "medianDeterministic", "medianExactHigh", "medianExactLow",
-      "medianBFloat16", "medianTiming")
-def medianExact(x) -> Column:
-    return F.percentile(col(x), F.lit(0.5))
-
-
-@chfn("medianTDigest")
-def medianTDigest(x) -> Column:
-    return F.percentile_approx(col(x), F.lit(0.5))
-
-
-@chfn("medianExactWeighted", "medianInterpolatedWeighted", "medianTimingWeighted",
-      "medianBFloat16Weighted", "medianTDigestWeighted")
-def medianExactWeighted(x, w) -> Column:
-    return F.percentile(col(x), F.lit(0.5), col(w).cast("long"))
-
-
 @chfn("quantileExactWeighted2", "quantileWeighted")
 def quantileWeighted(x, w, q: float = 0.5) -> Column:
     return F.percentile(col(x), F.lit(float(q)), col(w).cast("long"))

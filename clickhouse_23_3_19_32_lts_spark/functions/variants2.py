@@ -1,14 +1,9 @@
-"""Second mechanical-family batch: aggregate names (quantile* forms,
-deltaSum, topK, retention/funnel, test statistics, regressions), the
+"""Second mechanical-family batch: aggregate names (deltaSum, topK,
+retention/funnel, test statistics, regressions), the
 reinterpretAs* family, window-view time functions, consistent hashing,
 IP/MAC rendering, and introspection constants.
 
 Reference registration sites:
-  - quantile*/quantiles* forms — src/AggregateFunctions/AggregateFunctionQuantile.cpp
-    (registerAggregateFunctionsQuantile* — Exact/Low/High/Inclusive/Exclusive/
-    Timing/BFloat16/TDigest/Deterministic map onto Spark percentile /
-    percentile_approx; the reference's sketches are themselves approximations
-    of the same order statistic)
   - deltaSum / deltaSumTimestamp — AggregateFunctionDeltaSum.cpp (sum of
     positive deltas between consecutive values)
   - topK — AggregateFunctionTopK.cpp (space-saving sketch; here exact)
@@ -33,84 +28,6 @@ from pyspark.sql import functions as F
 
 from clickhouse_23_3_19_32_lts_spark.functions.catalog import udf_call
 from clickhouse_23_3_19_32_lts_spark.functions.registry import REGISTRY, chfn, col, lit_or_col
-
-# --------------------------------------------------------------------------
-# quantile / quantiles name forms
-# --------------------------------------------------------------------------
-# Exact forms → percentile (exact in Spark); sketch forms → percentile_approx.
-# Low/High/Inclusive/Exclusive differ in which order statistic is returned
-# for non-integral ranks — Low = floor index, High = ceil index.
-
-
-def _rank_index(n: Column, q: float, kind: str) -> Column:
-    pos = (n - 1) * F.lit(float(q))
-    if kind == "low":
-        return F.floor(pos).cast("int") + 1
-    if kind == "high":
-        return F.ceil(pos).cast("int") + 1
-    return F.round(pos).cast("int") + 1  # nearest
-
-
-def _exact_pick(x, q: float, kind: str) -> Column:
-    s = F.array_sort(F.collect_list(col(x)))
-    return F.element_at(s, _rank_index(F.size(s), q, kind))
-
-
-for _name, _kind in (
-    ("quantileExactLow", "low"),
-    ("quantileExactHigh", "high"),
-    ("quantileExactInclusive", "low"),
-    ("quantileExactExclusive", "high"),
-):
-    def _mk(kind=_kind):
-        def _b(x, q: float = 0.5):
-            return _exact_pick(x, q, kind)
-
-        return _b
-
-    chfn(_name)(_mk())
-
-
-def _pctl(x, q: float = 0.5) -> Column:
-    return F.percentile(col(x).cast("double"), F.lit(float(q)))
-
-
-def _pctl_approx(x, q: float = 0.5) -> Column:
-    return F.percentile_approx(col(x).cast("double"), F.lit(float(q)))
-
-
-for _name in (
-    "quantileInterpolatedWeighted",
-    "quantileBFloat16Weighted",
-    "quantileTimingWeighted",
-    "quantileTDigestWeighted",
-):
-    chfn(_name)(_pctl_approx)
-
-
-def _quantiles(x, *qs: float) -> Column:
-    return F.percentile(
-        col(x).cast("double"), F.array(*[F.lit(float(q)) for q in qs])
-    )
-
-
-for _name in (
-    "quantilesDeterministic",
-    "quantilesExactWeighted",
-    "quantilesInterpolatedWeighted",
-    "quantilesTiming",
-    "quantilesTimingWeighted",
-    "quantilesBFloat16",
-    "quantilesBFloat16Weighted",
-    "quantilesTDigest",
-    "quantilesTDigestWeighted",
-    "quantilesExactLow",
-    "quantilesExactHigh",
-    "quantilesExactInclusive",
-    "quantilesExactExclusive",
-):
-    chfn(_name)(_quantiles)
-
 
 # --------------------------------------------------------------------------
 # Ordered-fold aggregates: deltaSum, moving sums, EMA
@@ -292,7 +209,7 @@ def retention(*conds) -> Column:
 
 
 @chfn("windowFunnel")
-def windowFunnel(window, ts, *conds) -> Column:
+def windowFunnel(window: int, ts, *conds) -> Column:
     """Longest chain cond1→cond2→… with each step within `window` of the
     chain start (AggregateFunctionWindowFunnel.cpp). Exact: collect events,
     fold over sorted (ts, level) pairs per chain level."""
@@ -562,11 +479,11 @@ def entropy(x) -> Column:
 
 
 @chfn("histogram")
-def histogram(bins, x) -> Column:
+def histogram(bins: int, x) -> Column:
     """Equal-width histogram → array of (lo, hi, height) structs. The
     reference's adaptive-bin sketch (AggregateFunctionHistogram.h) degrades
     to ~equal-width on uniform data; exact bin policy is documented."""
-    b = int(bins) if not isinstance(bins, Column) else 10
+    b = int(bins)
     v = col(x).cast("double")
     vals = F.collect_list(v)
     lo, hi = F.array_min(vals), F.array_max(vals)
@@ -587,39 +504,39 @@ def histogram(bins, x) -> Column:
     return F.array(*[bucket(i) for i in range(b)])
 
 
-@chfn("topK2", "topKExact")
-def topKExact(x, k: int = 10) -> Column:
-    """k most frequent values, most-frequent first, value-ascending tiebreak
-    (AggregateFunctionTopK.cpp; reference sketch approximates this exact
-    ordering)."""
+@chfn("topK", "topK2", "topKExact")
+def topK(x, k: int = 10) -> Column:
+    """The k most frequent values, most frequent first; equal counts keep
+    the order of first appearance, as the space-saving sketch of
+    AggregateFunctionTopK.h does (here counted exactly)."""
     vals = F.collect_list(col(x))
-    uniq = F.array_distinct(vals)
-    scored = F.transform(
-        uniq,
-        lambda v: F.struct((-F.size(F.filter(vals, lambda a: a == v))).alias("neg"), v.alias("val")),
-    )
-    return F.transform(F.slice(F.array_sort(scored), 1, int(k)), lambda s: s["val"])
-
-
-REGISTRY.setdefault("topK", topKExact)
+    return _top(vals, lambda v: F.size(F.filter(vals, lambda a: a == v)), k)
 
 
 @chfn("topKWeighted")
 def topKWeighted(x, w, k: int = 10) -> Column:
+    """topK by summed weight (AggregateFunctionTopK.h, weighted)."""
+    vals = F.collect_list(col(x))
     pairs = F.collect_list(F.struct(col(x).alias("v"), col(w).cast("double").alias("w")))
-    uniq = F.array_distinct(F.transform(pairs, lambda p: p["v"]))
-    scored = F.transform(
-        uniq,
+    return _top(
+        vals,
+        lambda v: F.aggregate(
+            F.filter(pairs, lambda p: p["v"] == v), F.lit(0.0), lambda a, p: a + p["w"]
+        ),
+        k,
+    )
+
+
+def _top(vals: Column, score, k: int) -> Column:
+    """The k distinct values of highest score(v), first appearance first
+    among equal scores."""
+    ranked = F.transform(
+        F.array_distinct(vals),
         lambda v: F.struct(
-            (
-                -F.aggregate(
-                    F.filter(pairs, lambda p: p["v"] == v), F.lit(0.0), lambda a, p: a + p["w"]
-                )
-            ).alias("neg"),
-            v.alias("val"),
+            (-score(v)).alias("neg"), F.array_position(vals, v).alias("pos"), v.alias("val")
         ),
     )
-    return F.transform(F.slice(F.array_sort(scored), 1, int(k)), lambda s: s["val"])
+    return F.transform(F.slice(F.array_sort(ranked), 1, int(k)), lambda s: s["val"])
 
 
 @chfn("first_value", "FIRST_VALUE")

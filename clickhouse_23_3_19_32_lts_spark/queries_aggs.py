@@ -576,7 +576,7 @@ def q_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM counts) WHERE rn = 1)
     SELECT o.o_orderstatus,
            any_value(h.heavy) AS heavy,
-           (SELECT CAST(quantile_cont(e.o_totalprice, 0.5) AS DOUBLE) FROM expanded e
+           (SELECT CAST(quantile_disc(e.o_totalprice, 0.5) AS DOUBLE) FROM expanded e
              WHERE e.o_orderstatus = o.o_orderstatus) AS wmedian,
            CAST(sum(o.o_totalprice) AS DOUBLE) AS total
     FROM orders o JOIN heavy h ON h.o_orderstatus = o.o_orderstatus
@@ -588,8 +588,9 @@ def q_compat_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compat aggregate family (§2.4 long tail): anyHeavy — gated as the
     exact heavy hitter with a deterministic (count, value) tie-break, since
     both anyHeavy (AggregateFunctionAnyHeavy) and DuckDB's mode() leave ties
-    unspecified — medianExactWeighted (percentile with frequency weights,
-    mirrored in DuckDB by row expansion), sumKahan."""
+    unspecified — medianExactWeighted (the first value whose cumulative
+    weight reaches half the total, QuantileExactWeighted.h: DuckDB's
+    quantile_disc over the rows repeated by weight), sumKahan."""
     from clickhouse_23_3_19_32_lts_spark import functions as CH
 
     orders = _t(spark, sf_dir, "orders")

@@ -72,6 +72,10 @@ CALLS = {
         lambda: CH.timeSlot(CH.toDateTime(F.lit("2000-02-29 23:59:59"))),
         dt.datetime(2000, 2, 29, 23, 30), f"{DT}#timeslot",
     ),
+    # a function of NULL is NULL
+    "toStartOfMonth(CAST(NULL AS DATE))": (
+        lambda: CH.toStartOfMonth(F.lit(None).cast("date")), None, f"{DT}#tostartofmonth",
+    ),
     "monthName(toDate('2024-03-15'))": (
         lambda: CH.monthName(CH.toDate(F.lit("2024-03-15"))),
         "March", f"{DT}#monthname",
@@ -141,6 +145,119 @@ def test_builders_give_the_documented_answer(spark, call):
     build, want, _ = CALLS[call]
     df = spark.sql(f"SELECT * FROM {ONE_ROW}")
     assert df.select(build().alias("v")).first()["v"] == want
+
+
+AGG = "https://clickhouse.com/docs/en/sql-reference/aggregate-functions/"
+REF = AGG + "reference/"
+
+
+class _Len:
+    """Equal to any answer of n items, where the page fixes only that."""
+
+    def __init__(self, n):
+        self.n = n
+
+    def __eq__(self, got):
+        return len(got) == self.n
+
+    def __repr__(self):
+        return f"<{self.n} items>"
+
+
+# The tables of the aggregate answers below: numbers(10), and the pages'
+# own example tables.
+AGG_TABLES = {
+    "n10": "SELECT id AS x FROM range(10)",
+    "t": "SELECT * FROM VALUES (0, 3), (1, 2), (2, 1), (5, 4) AS t(n, val)",
+    "response_times": (
+        "SELECT * FROM VALUES (72), (112), (126), (145), (104), (242), (313),"
+        " (168), (108) AS t(response_time)"
+    ),
+    "kw": (
+        "SELECT * FROM VALUES ('y', 1), ('y', 1), ('x', 5), ('y', 1), ('z', 10)"
+        " AS t(k, w)"
+    ),
+}
+
+# ClickHouse call -> (table, the same call through the builders, answer,
+# docs page). Calls over n10 run the pages' numbers(10) examples or, where
+# a page uses numbers(1000), the same rank on numbers(10).
+AGG_CALLS = {
+    "quantileExact(x)": (
+        "n10", lambda: CH.quantileExact("x"), 5, f"{REF}quantileexact#quantileexact",
+    ),
+    "quantileExactLow(x)": (
+        "n10", lambda: CH.quantileExactLow("x"), 4, f"{REF}quantileexact#quantileexactlow",
+    ),
+    "quantileExactHigh(x)": (
+        "n10", lambda: CH.quantileExactHigh("x"), 5, f"{REF}quantileexact#quantileexacthigh",
+    ),
+    # medianExact is quantileExact(0.5)
+    "medianExact(x)": ("n10", lambda: CH.medianExact("x"), 5, f"{REF}median"),
+    # 599.4 on numbers(1000)
+    "quantileExactInclusive(0.6)(x)": (
+        "n10", lambda: CH.quantileExactInclusive("x", 0.6), pytest.approx(5.4),
+        f"{REF}quantileexact#quantileexactinclusive",
+    ),
+    # 599.6 on numbers(1000)
+    "quantileExactExclusive(0.6)(x)": (
+        "n10", lambda: CH.quantileExactExclusive("x", 0.6), pytest.approx(5.6),
+        f"{REF}quantileexact#quantileexactexclusive",
+    ),
+    "quantileExactWeighted(n, val)": (
+        "t", lambda: CH.quantileExactWeighted("n", "val"), 1, f"{REF}quantileexactweighted",
+    ),
+    "quantileInterpolatedWeighted(n, val)": (
+        "t", lambda: CH.quantileInterpolatedWeighted("n", "val"), 1,
+        f"{REF}quantileinterpolatedweighted",
+    ),
+    "quantileTiming(response_time)": (
+        "response_times", lambda: CH.quantileTiming("response_time"), 126,
+        f"{REF}quantiletiming",
+    ),
+    "topKWeighted(2)(k, w)": (
+        "kw", lambda: CH.topKWeighted("k", "w", 2), ["z", "x"], f"{REF}topkweighted",
+    ),
+    "groupArray(2)(x)": ("n10", lambda: CH.groupArray("x", 2), [0, 1], f"{REF}grouparray"),
+    "groupArrayLast(2)(x)": (
+        "n10", lambda: CH.groupArrayLast("x", 2), [8, 9], f"{REF}grouparraylast",
+    ),
+    # the bins adapt to the data; the parameter fixes their count
+    "histogram(2)(x)": (
+        "n10", lambda: CH.histogram(2, "x"), _Len(2), f"{AGG}parametric-functions#histogram",
+    ),
+    # one bar character per bucket
+    "sparkbar(4)(x, x)": ("n10", lambda: CH.sparkbar("x", "x", 4), _Len(4), f"{REF}sparkbar"),
+}
+
+
+@pytest.fixture(scope="module")
+def agg_tables(spark):
+    for name, sql in AGG_TABLES.items():
+        spark.sql(sql).createOrReplaceTempView(name)
+    yield spark
+    for name in AGG_TABLES:
+        spark.catalog.dropTempView(name)
+
+
+@pytest.mark.parametrize("call", sorted(AGG_CALLS))
+def test_ch_sql_gives_the_documented_aggregate(agg_tables, call):
+    table, _, want, _ = AGG_CALLS[call]
+    assert ch_sql(agg_tables, f"SELECT {call} AS v FROM {table}").first()["v"] == want
+
+
+@pytest.mark.parametrize("call", sorted(AGG_CALLS))
+def test_builders_give_the_documented_aggregate(agg_tables, call):
+    table, build, want, _ = AGG_CALLS[call]
+    assert agg_tables.table(table).select(build().alias("v")).first()["v"] == want
+
+
+def test_an_unbindable_parametric_call_names_the_function(spark):
+    """groupArrayLast takes one parameter, a literal max_size
+    (reference/grouparraylast)."""
+    for call in ("groupArrayLast(2, 3)(x)", "groupArrayLast(x)(x)", "groupArrayLast(2)()"):
+        with pytest.raises(ChSqlError, match="groupArrayLast"):
+            ch_sql(spark, f"SELECT {call} AS v FROM (SELECT 1 AS x)")
 
 
 def test_an_unsupported_mode_raises(spark):

@@ -16,6 +16,7 @@ import contextlib
 import datetime
 import decimal
 import math
+import re
 import threading
 
 import pytest
@@ -56,8 +57,8 @@ TABLES = {
 
 DIFFERS = "answers differ"
 NO_RENDER = "the bridge cannot render the call shape"
-# tests/test_dialect.py::test_translate_strings expects the table's text;
-# the bridge parenthesises its arguments (year((d))) or renders another form
+# tests/test_dialect.py::test_translate_strings expects the table's text,
+# and the bridge renders another form
 PINNED = "an existing test pins the table's rendering"
 # two random draws never agree, so these compare the result type and whether
 # a second query repeats the first: the table's copy draws from a literal
@@ -71,8 +72,6 @@ KEPT = {
     ("NAME_MAP", "anyLast"): (DIFFERS, "anyLast(if(k = 6, NULL, i))"),
     ("NAME_MAP", "base64Decode"): (DIFFERS, "base64Decode('YWJj')"),
     ("NAME_MAP", "lengthUTF8"): (DIFFERS, "lengthUTF8(s)"),
-    ("NAME_MAP", "toYear"): (PINNED, "toYear(d)"),
-    ("NAME_MAP", "uniq"): (PINNED, "uniq(i)"),
     ("NAME_MAP", "xxHash32"): (NO_RENDER, "xxHash32(s)"),
     ("TEMPLATES", "JSONExtractBool"): (DIFFERS, "JSONExtractBool(j, 1)"),
     ("TEMPLATES", "JSONExtractFloat"): (DIFFERS, "JSONExtractFloat(j, 2)"),
@@ -115,8 +114,6 @@ KEPT = {
     ("TEMPLATES", "toFixedString"): (DIFFERS, "toFixedString('абв', 4)"),
     ("TEMPLATES", "toInt128"): (DIFFERS, "toInt128(i)"),
     ("TEMPLATES", "toInt256"): (DIFFERS, "toInt256(i)"),
-    ("TEMPLATES", "toStartOfMonth"): (DIFFERS, "toStartOfMonth(d)"),
-    ("TEMPLATES", "toString"): (PINNED, "toString(i)"),
     ("TEMPLATES", "toTypeName"): (DIFFERS, "toTypeName(i)"),
     ("TEMPLATES", "toUInt128"): (DIFFERS, "toUInt128(i)"),
     ("TEMPLATES", "toUInt256"): (DIFFERS, "toUInt256(i)"),
@@ -138,86 +135,32 @@ KEPT = {
         NO_RENDER, "multiSearchAnyCaseInsensitive(s, ['B', 'X'])"
     ),
     ("ARITY_TEMPLATES", "position"): (DIFFERS, "position(s, 'l')"),
-    ("ARITY_TEMPLATES", "quantile"): (DIFFERS, "quantile(if(k = 0, f, NULL))"),
-    ("ARITY_TEMPLATES", "quantileExact"): (
-        DIFFERS, "quantileExact(if(k = 6, NULL, i))"
-    ),
-    ("ARITY_TEMPLATES", "quantileTDigest"): (DIFFERS, "quantileTDigest(i)"),
-    ("ARITY_TEMPLATES", "quantileTiming"): (DIFFERS, "quantileTiming(i)"),
     ("ARITY_TEMPLATES", "range"): (NO_RENDER, "range(5)"),
     ("ARITY_TEMPLATES", "splitByChar"): (NO_RENDER, "splitByChar(',', 'a,b,c', 2)"),
     ("ARITY_TEMPLATES", "splitByString"): (DIFFERS, "splitByString('', s)"),
     ("ARITY_TEMPLATES", "substr"): (DIFFERS, "substr(s, -3, -1)"),
     ("ARITY_TEMPLATES", "substring"): (DIFFERS, "substring(s, 2, -1)"),
-    ("ARITY_TEMPLATES", "uniq"): (NO_RENDER, "uniq(i, s)"),
-    ("PARAMETRIC", "groupArray"): (NO_RENDER, "groupArray(2)(i)"),
     ("PARAMETRIC", "groupArrayMovingAvg"): (NO_RENDER, "groupArrayMovingAvg(2)(i)"),
     ("PARAMETRIC", "groupArrayMovingSum"): (NO_RENDER, "groupArrayMovingSum(2)(i)"),
-    ("PARAMETRIC", "groupArraySample"): (NO_RENDER, "groupArraySample(2)(i)"),
-    ("PARAMETRIC", "groupUniqArray"): (NO_RENDER, "groupUniqArray(2)(i)"),
-    ("PARAMETRIC", "quantile"): (NO_RENDER, "quantile(0.5)(i)"),
-    ("PARAMETRIC", "quantileDeterministic"): (
-        NO_RENDER, "quantileDeterministic(0.5)(i)"
-    ),
-    ("PARAMETRIC", "quantileExact"): (NO_RENDER, "quantileExact(0.5)(i)"),
-    ("PARAMETRIC", "quantileExactExclusive"): (
-        NO_RENDER, "quantileExactExclusive(0.5)(i)"
-    ),
-    ("PARAMETRIC", "quantileExactInclusive"): (
-        NO_RENDER, "quantileExactInclusive(0.5)(i)"
-    ),
-    ("PARAMETRIC", "quantileExactWeighted"): (
-        NO_RENDER, "quantileExactWeighted(0.5)(i, k)"
-    ),
-    ("PARAMETRIC", "quantileInterpolatedWeighted"): (
-        NO_RENDER, "quantileInterpolatedWeighted(0.5)(i, k)"
-    ),
-    ("PARAMETRIC", "quantileTDigest"): (NO_RENDER, "quantileTDigest(0.5)(i)"),
-    ("PARAMETRIC", "quantileTiming"): (NO_RENDER, "quantileTiming(0.5)(i)"),
-    ("PARAMETRIC", "quantileTimingWeighted"): (
-        NO_RENDER, "quantileTimingWeighted(0.5)(i, k)"
-    ),
-    ("PARAMETRIC", "quantiles"): (NO_RENDER, "quantiles(0.5, 0.9)(i)"),
-    ("PARAMETRIC", "quantilesDeterministic"): (
-        NO_RENDER, "quantilesDeterministic(0.5, 0.9)(i)"
-    ),
-    ("PARAMETRIC", "quantilesExact"): (NO_RENDER, "quantilesExact(0.5, 0.9)(i)"),
-    ("PARAMETRIC", "quantilesExactExclusive"): (
-        NO_RENDER, "quantilesExactExclusive(0.5, 0.9)(i)"
-    ),
-    ("PARAMETRIC", "quantilesExactInclusive"): (
-        NO_RENDER, "quantilesExactInclusive(0.5, 0.9)(i)"
-    ),
-    ("PARAMETRIC", "quantilesExactWeighted"): (
-        NO_RENDER, "quantilesExactWeighted(0.5, 0.9)(i, k)"
-    ),
-    ("PARAMETRIC", "quantilesInterpolatedWeighted"): (
-        NO_RENDER, "quantilesInterpolatedWeighted(0.5, 0.9)(i, k)"
-    ),
-    ("PARAMETRIC", "quantilesTDigest"): (NO_RENDER, "quantilesTDigest(0.5, 0.9)(i)"),
-    ("PARAMETRIC", "quantilesTiming"): (NO_RENDER, "quantilesTiming(0.5, 0.9)(i)"),
-    ("PARAMETRIC", "quantilesTimingWeighted"): (
-        NO_RENDER, "quantilesTimingWeighted(0.5, 0.9)(i, k)"
-    ),
-    ("PARAMETRIC", "topK"): (NO_RENDER, "topK(2)(i)"),
-    ("PARAMETRIC", "topKWeighted"): (NO_RENDER, "topKWeighted(2)(i, k)"),
 }
 
 
 # Entries deleted once ClickHouse's documented answer settled the difference
-# (tests/test_ch_answers.py checks the answers). Each keeps its
-# test_kept_reason_holds case, which checks that the registry is now the
-# name's one definition.
+# (tests/test_ch_answers.py checks the answers), or once the bridge rendered
+# the table's text (toYear, uniq, toString) or the parametric call shape.
+# Each keeps its test_kept_reason_holds case, which checks that the
+# registry is now the name's one definition.
 SETTLED = [
     (table, name)
     for table, names in {
-        "NAME_MAP": "fromUnixTimestamp toHour toMinute toSecond toUnixTimestamp",
+        "NAME_MAP": "fromUnixTimestamp toHour toMinute toSecond toUnixTimestamp toYear uniq",
         "TEMPLATES": (
             "DAYOFWEEK fromUnixTimestamp64Micro fromUnixTimestamp64Milli "
             "fromUnixTimestamp64Nano hex monthName timeSlot toDate toDate32 "
             "toDateTime toDateTime64 toDayOfWeek toMonday toQuarter toStartOfDay "
-            "toStartOfHour toStartOfMinute toStartOfQuarter toStartOfYear toTime "
-            "toUInt16 toUInt32 toUInt8 toYYYYMM toYYYYMMDD"
+            "toStartOfHour toStartOfMinute toStartOfMonth toStartOfQuarter "
+            "toStartOfYear toString toTime toUInt16 toUInt32 toUInt8 toYYYYMM "
+            "toYYYYMMDD"
         ),
         "ARITY_TEMPLATES": (
             "addDays now parseDateTime32BestEffort "
@@ -230,7 +173,18 @@ SETTLED = [
             "parseDateTimeBestEffortUSOrNull parseDateTimeBestEffortUSOrZero "
             "subtractDays toDateTime toDateTime64 toDateTime64OrNull "
             "toDateTime64OrZero toDateTimeOrNull toDateTimeOrZero toStartOfWeek "
-            "toTimeZone"
+            "toTimeZone quantile quantileExact quantileTDigest quantileTiming uniq"
+        ),
+        "PARAMETRIC": (
+            "groupArray groupArraySample groupUniqArray quantile "
+            "quantileDeterministic quantileExact quantileExactExclusive "
+            "quantileExactInclusive quantileExactWeighted "
+            "quantileInterpolatedWeighted quantileTDigest quantileTiming "
+            "quantileTimingWeighted quantiles quantilesDeterministic "
+            "quantilesExact quantilesExactExclusive quantilesExactInclusive "
+            "quantilesExactWeighted quantilesInterpolatedWeighted "
+            "quantilesTDigest quantilesTiming quantilesTimingWeighted topK "
+            "topKWeighted"
         ),
     }.items()
     for name in names.split()
@@ -261,6 +215,24 @@ def test_bridge_never_renders_a_column_repr(spark):
             for args in (["c0", "c1", "c2"][:n], ["c0", "'k'", "'1 hour'"][:n]):
                 got = _registry_bridge(name, args)
                 assert got is None or "Column<" not in got, (name, args, got)
+
+
+# The parametric families: the bridge binds a parameter to the builder's
+# literal slot, so no call leaves ClickHouse's f(params)(args) shape behind.
+PARAMETRIC_FAMILIES = (
+    r"(?!\w*(State|Merge)$)(quantile|median|topK)\w*"
+    r"|groupArray(Last|Sample|MovingSum|MovingAvg)?|groupUniqArray"
+)
+
+
+def test_parametric_families_render_through_translate(spark):
+    names = sorted(n for n in REGISTRY if re.fullmatch(PARAMETRIC_FAMILIES, n))
+    assert len(names) > 40
+    for name in names:
+        param = "0.5" if name.startswith(("quantile", "median")) else "2"
+        args = "i, k" if re.search("Weighted|Deterministic", name) else "i"
+        got = D.translate(f"SELECT {name}({param})({args}) FROM t")
+        assert not re.search(r"\)\s*\(", got), (name, got)
 
 
 def test_json_key_literals_render_through_the_bridge(spark):

@@ -37,7 +37,6 @@ import re
 # --- 1:1 function renames (CH name → Spark SQL name) -----------------------
 NAME_MAP: dict[str, str] = {
     # string
-    "lengthUTF8": "length",
     "base64Decode": "unbase64",
     # arrays
     "arraysOverlap": "arrays_overlap",
@@ -102,11 +101,6 @@ TEMPLATES: dict[str, str] = {
     "bitShiftLeft": "shiftleft({0}, CAST({1} AS INT))",
     "bitShiftRight": "shiftright({0}, CAST({1} AS INT))",
     "bitTest": "((shiftright({0}, CAST({1} AS INT)) & 1) = 1)",
-    "positionCaseInsensitive": "locate(lower({1}), lower({0}))",
-    # the UTF8 variants count characters (positionUTF8.cpp) — exactly
-    # Spark's locate; the plain variants count BYTES (see ARITY_TEMPLATES)
-    "positionUTF8": "locate({1}, {0})",
-    "positionCaseInsensitiveUTF8": "locate(lower({1}), lower({0}))",
     # toFixedString pads to N with NUL bytes (FunctionToFixedString);
     # the golden TSV escaper prints them as \0 like writeEscapedString
     # byte-exact pad (CH pads bytes, rpad counts chars). Too-long input
@@ -118,13 +112,6 @@ TEMPLATES: dict[str, str] = {
     "toFixedString": (
         "(CASE WHEN octet_length({0}) > ({1}) THEN substr({0}, 1, {1})"
         " ELSE concat({0}, repeat(char(0), ({1}) - octet_length({0}))) END)"
-    ),
-    # first literal occurrence only (ReplaceStringImpl replace_one): splice
-    # at locate(); empty/missing needle leaves the haystack unchanged
-    "replaceOne": (
-        "(CASE WHEN length({1}) = 0 OR locate({1}, {0}) = 0 THEN {0}"
-        " ELSE concat(substr({0}, 1, locate({1}, {0}) - 1), {2},"
-        " substr({0}, locate({1}, {0}) + length({1}))) END)"
     ),
     # typeof() with Spark→ClickHouse type-name mapping (covers cast results;
     # ClickHouse literal-inference types like UInt8 are not recoverable)
@@ -145,13 +132,6 @@ TEMPLATES: dict[str, str] = {
         " THEN {0} ELSE concat('http://', {0}) END, 'HOST'), '')"
     ),
     "protocol": "coalesce(parse_url({0}, 'PROTOCOL'), '')",
-    # string semantics; for arrays use size()/cardinality (Spark type-checks
-    # every branch, so a both-types coalesce can't analyze)
-    # plain String is size-only (EmptyImpl::vector); the zero-byte-blind
-    # form applies ONLY to FixedString and is emitted by the static-typed
-    # rewrite below — empty(unhex('00')) must be 0 here
-    "empty": "(coalesce(length({0}), 0) = 0)",
-    "notEmpty": "(coalesce(length({0}), 0) > 0)",
     "indexOf": "array_position({0}, {1})",
     # consecutive-duplicate removal (arrayCompact.cpp), NOT array_distinct:
     # [1,2,1] keeps all three; the reference compares binary reps, so
@@ -222,9 +202,7 @@ TEMPLATES: dict[str, str] = {
 
 # --- arity-dependent templates: CH call → {n_args: Spark template} -----------
 # Functions whose translation depends on how many arguments were passed; an
-# arity with no entry falls through to the NAME_MAP/default path (e.g. the
-# SQL-standard `position(needle IN haystack)` single-arg form, which Spark
-# accepts verbatim with needle-first semantics on both sides).
+# arity with no entry falls through to the NAME_MAP/default path.
 ARITY_TEMPLATES: dict[str, dict[int, str]] = {
     # zero-arg forms (count() short form extends to its -State alias;
     # ignore() with no args is legal and returns 0)
@@ -273,72 +251,9 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
     "minOrDefault": {1: "coalesce(min({0}), 0)"},
     "maxOrDefault": {1: "coalesce(max({0}), 0)"},
     "avgOrDefault": {1: "coalesce(avg({0}), 0)"},
-    # ClickHouse position/locate are haystack-first (FunctionsStringSearch.h:20)
-    # and count BYTES (PositionImpl, non-UTF8 variant: position('бв' in
-    # 'абв') = 3); Spark locate is (substr, str[, pos]) and counts chars —
-    # swap args and convert the char offset to a byte offset via the
-    # octet-length of the preceding prefix. 3-arg start_pos kept char-based
-    # (byte-offset starts are vanishingly rare in the corpus).
-    "position": {
-        2: "(CASE WHEN locate({1}, {0}) = 0 THEN 0 ELSE"
-           " octet_length(substring({0}, 1, locate({1}, {0}) - 1)) + 1 END)",
-        3: "locate({1}, {0}, {2})",
-    },
-    "locate": {
-        2: "(CASE WHEN locate({1}, {0}) = 0 THEN 0 ELSE"
-           " octet_length(substring({0}, 1, locate({1}, {0}) - 1)) + 1 END)",
-        3: "locate({1}, {0}, {2})",
-    },
-    # negative size = all but the last |size| characters
-    # (GatherUtils sliceDynamicOffsetBounded); negative offset counts from
-    # the end. Spark's substring returns '' for negative length.
-    "substring": {
-        2: "(CASE WHEN ({1}) = 0 THEN '' ELSE substring({0}, {1}) END)",
-        3: "(CASE WHEN ({2}) >= 0 THEN substring({0}, {1}, {2})"
-           " ELSE substring({0}, {1}, greatest(0, length({0})"
-           " - (CASE WHEN ({1}) < 0 THEN length({0}) + ({1}) + 1 ELSE ({1}) END)"
-           " + 1 + ({2}))) END)",
-    },
-    "substr": {
-        2: "(CASE WHEN ({1}) = 0 THEN '' ELSE substring({0}, {1}) END)",
-        3: "(CASE WHEN ({2}) >= 0 THEN substring({0}, {1}, {2})"
-           " ELSE substring({0}, {1}, greatest(0, length({0})"
-           " - (CASE WHEN ({1}) < 0 THEN length({0}) + ({1}) + 1 ELSE ({1}) END)"
-           " + 1 + ({2}))) END)",
-    },
-    "mid": {
-        2: "(CASE WHEN ({1}) = 0 THEN '' ELSE substring({0}, {1}) END)",
-        3: "(CASE WHEN ({2}) >= 0 THEN substring({0}, {1}, {2})"
-           " ELSE substring({0}, {1}, greatest(0, length({0})"
-           " - (CASE WHEN ({1}) < 0 THEN length({0}) + ({1}) + 1 ELSE ({1}) END)"
-           " + 1 + ({2}))) END)",
-    },
-    # splitByChar(sep, s[, max]): swap to Spark (str, regex[, limit]) and
-    # regex-quote the separator (Spark split treats it as a regex; CH treats it
-    # as a literal char — '\\Q…\\E' makes '|', '.' etc. safe).
-    "splitByChar": {
-        2: "split({1}, concat('\\\\Q', {0}, '\\\\E'))",
-        3: "split({1}, concat('\\\\Q', {0}, '\\\\E'), {2})",
-    },
-    "splitByString": {
-        # empty separator = split into characters, no trailing empty
-        # (FunctionsStringArray.h SplitByStringImpl)
-        2: "(CASE WHEN ({0}) = '' THEN"
-           " (CASE WHEN ({1}) = '' THEN array() ELSE"
-           " transform(sequence(1, length({1})), __i -> substring({1}, __i, 1)) END)"
-           " ELSE split({1}, concat('\\\\Q', {0}, '\\\\E')) END)",
-        3: "split({1}, concat('\\\\Q', {0}, '\\\\E'), {2})",
-    },
     # if() takes a UInt8 condition in ClickHouse (FunctionsConditional);
     # Spark requires BOOLEAN — CAST is exact for both bool and int inputs
     "if": {3: "if(CAST(({0}) AS BOOLEAN), {1}, {2})"},
-    # multi-pattern search (FunctionsMultiStringSearch.h): HOF over the
-    # pattern array — no per-pattern column needed
-    "multiMatchAny": {2: "exists({1}, __p -> ({0}) rlike __p)"},
-    "multiSearchAny": {2: "exists({1}, __p -> locate(__p, {0}) > 0)"},
-    "multiSearchAnyCaseInsensitive": {
-        2: "exists({1}, __p -> locate(lower(__p), lower({0})) > 0)"
-    },
     # CH range is END-EXCLUSIVE ([start, end)); Spark sequence is inclusive
     # and auto-descends when start > stop — slice to the exact length instead
     # (src/Functions/array/range.cpp).
@@ -963,8 +878,14 @@ _SPARK_BUILTINS: set[str] | None = None
 # Registry names that a Spark built-in of the same name answers differently:
 # the bridge renders the registry's builder for these. hex prints whole
 # bytes, monthName the full name, DAYOFWEEK counts from Monday and now
-# takes a zone.
-_OVER_BUILTINS = frozenset({"DAYOFWEEK", "hex", "monthName", "now"})
+# takes a zone. length counts bytes, position and locate count bytes and
+# take the haystack first, substring takes a negative length, and instr is
+# positionCaseInsensitive.
+_OVER_BUILTINS = frozenset({
+    "DAYOFWEEK", "hex", "monthName", "now", "length", "LENGTH", "position",
+    "POSITION", "locate", "substring", "SUBSTRING", "subString", "substr",
+    "instr",
+})
 
 # The session registry calls render on and catalog UDFs register on. ch_sql,
 # apply_fill and create_sql_function bind the session they run on; only an
@@ -2948,15 +2869,6 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             i = close + 1
             continue
 
-        if tl == "length" and len(arg_sql) == 1 and not _LENGTH_AS_SIZE:
-            # String length counts BYTES in the reference (lengthString;
-            # lengthUTF8 is the character form) — Spark's length() counts
-            # characters. Arrays fail octet_length and fall back to the
-            # size() retry tier (_LENGTH_AS_SIZE).
-            out.append(f"octet_length({arg_sql[0]})")
-            i = close + 1
-            continue
-
         if tl == "arrayreduce" and len(arg_sql) >= 2 and re.fullmatch(
             r"'[^']*'", arg_sql[0].strip()
         ):
@@ -3749,13 +3661,13 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             i = close + 1
             continue
 
-        # SQL-standard position(needle IN haystack): re-split and route
-        # through the byte-offset template (ClickHouse position counts bytes)
-        if t in ("position", "locate") and len(arg_sql) == 1:
+        # SQL-standard position(needle IN haystack): re-split and render
+        # the registry's position (ClickHouse position counts bytes)
+        if tl in ("position", "locate") and len(arg_sql) == 1:
             parts = _split_top_in(arg_sql[0])
-            if parts is not None:
-                needle, hay = parts
-                out.append(_fill_template(ARITY_TEMPLATES["position"][2], [hay, needle], t))
+            bridged = parts and _registry_bridge("position", [parts[1], parts[0]])
+            if bridged:
+                out.append(bridged)
                 i = close + 1
                 continue
 
@@ -3771,8 +3683,8 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             # CONSTANT offset 0 throws ZERO_ARRAY_OR_TUPLE_INDEX error 135
             # ("Indices in strings are 1-based", substring.cpp:98/114 — the
             # const-offset path; 3-arg needs length const too). The ''
-            # result in the templates models only the dynamic-offset path
-            # (sliceDynamicOffsetUnbounded).
+            # result of the registry's substring models only the
+            # dynamic-offset path (sliceDynamicOffsetUnbounded).
             out.append(
                 "CAST(raise_error('ZERO_ARRAY_OR_TUPLE_INDEX: Indices in"
                 " strings are 1-based') AS STRING)"

@@ -82,10 +82,22 @@ def argMax(arg, val) -> Column:
 # -- uniq family -------------------------------------------------------------
 
 
+def _uniq_key(cs) -> Column:
+    """The value uniq counts for a row: the argument, or the tuple of the
+    arguments, NULL (skipped) when any argument is NULL."""
+    cols = [col(c) for c in cs]
+    if len(cols) == 1:
+        return cols[0]
+    present = cols[0].isNotNull()
+    for c in cols[1:]:
+        present = present & c.isNotNull()
+    return F.when(present, F.struct(*cols))
+
+
 @chfn("uniq", "uniqCombined", "uniqCombined64", "uniqHLL12")
 def uniq(*cs) -> Column:
     """uniq*: HLL approximate distinct (AggregateFunctionUniq.cpp)."""
-    return F.approx_count_distinct(F.struct(*[col(c) for c in cs]) if len(cs) > 1 else col(cs[0]))
+    return F.approx_count_distinct(_uniq_key(cs))
 
 
 @chfn("uniqExact")
@@ -430,8 +442,7 @@ def maxIf(c, cond) -> Column:
 def uniqIf(*args) -> Column:
     """uniqIf(x…, cond): uniq over the rows where cond holds."""
     *cs, cond = args
-    x = F.struct(*[col(c) for c in cs]) if len(cs) > 1 else col(cs[0])
-    return F.approx_count_distinct(F.when(col(cond) if isinstance(cond, str) else cond, x))
+    return F.approx_count_distinct(F.when(col(cond), _uniq_key(cs)))
 
 
 @chfn("sumOrNull")

@@ -102,11 +102,6 @@ def TO_UNIXTIME(x) -> Column:
     return F.unix_timestamp(col(x))
 
 
-@chfn("instr")
-def instr(haystack, needle) -> Column:
-    return F.instr(col(haystack), needle if isinstance(needle, str) else col(needle))
-
-
 @chfn("width_bucket")
 def width_bucket(v, lo, hi, n) -> Column:
     return F.width_bucket(col(v), col(lo), col(hi), col(n))

@@ -5,10 +5,16 @@ position.cpp:20, match.cpp:20, replaceRegexpAll.cpp:20,
 FunctionsStringArray.cpp:29, FunctionsStringSimilarity.cpp:541, trim.cpp,
 padString.cpp, repeat.cpp, reverse.cpp, startsWith.cpp, endsWith.cpp.
 
-ClickHouse strings are byte strings; ours are UTF-8 StringType. The *UTF8
-variants therefore coincide with the base forms (length vs lengthUTF8
-differ in ClickHouse only for non-ASCII: we provide byte length via
-octet_length).
+ClickHouse strings are byte strings; Spark's STRING is UTF-8 text. The
+plain `length`, `position`/`locate` and `positionCaseInsensitive` count
+bytes, as ClickHouse's do: `length` is the octet length, and a position is
+the byte offset of the character match (`_byte_offset`). Their *UTF8 forms
+count characters, which is Spark's own counting. For ASCII the two agree.
+
+One departure: `substring`/`substr`/`mid` and the `start_pos` of the
+position family take character offsets where ClickHouse takes bytes. A
+Spark STRING cannot hold half a character, so a byte slice through one has
+no value here; for ASCII the two agree.
 """
 
 from __future__ import annotations
@@ -25,7 +31,8 @@ __all__ = [
     "startsWith", "endsWith", "trimBoth", "trimLeft", "trimRight",
     "leftPad", "rightPad", "space", "ascii_", "initcap", "soundex",
     "appendTrailingCharIfAbsent", "toValidUTF8", "normalizeQuery",
-    "position", "positionCaseInsensitive", "locate", "instr", "match",
+    "position", "positionCaseInsensitive", "positionUTF8",
+    "positionCaseInsensitiveUTF8", "locate", "instr", "match",
     "like", "notLike", "ilike", "notILike", "countSubstrings", "hasToken",
     "hasTokenCaseInsensitive", "multiSearchAny", "multiSearchAnyCaseInsensitive",
     "extract",
@@ -47,17 +54,18 @@ def notEmpty(s) -> Column:
     return F.length(col(s)) > 0
 
 
-@chfn("length", "lengthUTF8", "char_length", "CHAR_LENGTH", "character_length", "CHARACTER_LENGTH")
+@chfn("length", "LENGTH", "octet_length", "OCTET_LENGTH")
 def length(s) -> Column:
-    return F.length(col(s)).cast("long")
-
-
-lengthUTF8 = length
-
-
-@chfn("octet_length", "OCTET_LENGTH")
-def octet_length(s) -> Column:
+    """Bytes (lengthString): length('Привет') = 12."""
     return F.octet_length(col(s)).cast("long")
+
+
+octet_length = length
+
+
+@chfn("lengthUTF8", "char_length", "CHAR_LENGTH", "character_length", "CHARACTER_LENGTH")
+def lengthUTF8(s) -> Column:
+    return F.length(col(s)).cast("long")
 
 
 @chfn("lower", "lcase", "lowerUTF8")
@@ -96,21 +104,26 @@ def concatWithSeparator(sep: str, *xs) -> Column:
     return F.concat_ws(sep, *[col(x) for x in xs])
 
 
+_INT_MAX = 2**31 - 1
+
+
 @chfn("substring", "substr", "mid", "SUBSTRING", "subString")
 def substring(s, start, length_=None) -> Column:
-    """1-based, negative start counts from the end (both engines agree)."""
+    """Characters from the 1-based start (substring.cpp).
+
+    A negative start counts from the end, a negative length drops that many
+    characters from the end, and a start of 0 gives '' (the non-constant
+    offset path)."""
+    c, off = col(s), lit_or_col(start)
     if length_ is None:
-        return _substr_nolen(s, start)
-    if isinstance(start, Column) or isinstance(length_, Column):
-        return col(s).substr(col(start) if isinstance(start, Column) else F.lit(start),
-                             col(length_) if isinstance(length_, Column) else F.lit(length_))
-    return F.substring(col(s), start, length_)
-
-
-def _substr_nolen(s, start) -> Column:
-    c = col(s)
-    st = F.lit(start) if not isinstance(start, Column) else start
-    return c.substr(st, F.length(c))
+        out = c.substr(off, F.lit(_INT_MAX))
+    else:
+        n = lit_or_col(length_)
+        first = F.when(off < 0, F.length(c) + off + 1).otherwise(off)
+        out = c.substr(
+            off, F.when(n >= 0, n).otherwise(F.greatest(F.lit(0), F.length(c) - first + 1 + n))
+        )
+    return F.when(off == 0, F.lit("")).otherwise(out)
 
 
 substringUTF8 = substring
@@ -220,21 +233,47 @@ def normalizedQueryHash(s) -> Column:
 # -- search -----------------------------------------------------------------
 
 
-@chfn("position", "locate", "POSITION")
-def position(haystack, needle) -> Column:
-    """1-based; 0 when absent (both engines agree on locate/position)."""
-    if isinstance(needle, str):
-        return F.locate(needle, col(haystack)).cast("long")
-    return F.position(lit_or_col(needle), col(haystack)).cast("long")
+def _locate(haystack, needle, start_pos, fold: bool) -> Column:
+    """The 1-based character position of needle in haystack, searching from
+    character start_pos; 0 when absent. fold compares lower-cased."""
+    h, n = col(haystack), lit_or_col(needle)
+    if fold:
+        h, n = F.lower(h), F.lower(n)
+    return F.position(n, h, None if start_pos is None else lit_or_col(start_pos))
+
+
+def _byte_offset(haystack, pos: Column) -> Column:
+    """The byte offset of character position pos in haystack: the octet
+    length of the prefix before it, plus 1; 0 (absent) stays 0."""
+    prefix = col(haystack).substr(F.lit(1), pos - 1)
+    return F.when(pos == 0, F.lit(0)).otherwise(F.octet_length(prefix) + 1).cast("long")
+
+
+@chfn("position", "POSITION", "locate")
+def position(haystack, needle, start_pos=None) -> Column:
+    """The byte offset of needle, haystack first (FunctionsStringSearch.h:20).
+
+    position('Привет, мир!', '!') = 21."""
+    return _byte_offset(haystack, _locate(haystack, needle, start_pos, fold=False))
+
+
+@chfn("positionCaseInsensitive", "instr")
+def positionCaseInsensitive(haystack, needle, start_pos=None) -> Column:
+    return _byte_offset(haystack, _locate(haystack, needle, start_pos, fold=True))
+
+
+@chfn("positionUTF8")
+def positionUTF8(haystack, needle, start_pos=None) -> Column:
+    return _locate(haystack, needle, start_pos, fold=False).cast("long")
+
+
+@chfn("positionCaseInsensitiveUTF8")
+def positionCaseInsensitiveUTF8(haystack, needle, start_pos=None) -> Column:
+    return _locate(haystack, needle, start_pos, fold=True).cast("long")
 
 
 locate = position
-instr = position
-
-
-@chfn("positionCaseInsensitive")
-def positionCaseInsensitive(haystack, needle: str) -> Column:
-    return F.locate(needle.lower(), F.lower(col(haystack))).cast("long")
+instr = positionCaseInsensitive
 
 
 @chfn("match", "REGEXP_MATCHES")
@@ -288,18 +327,23 @@ def _re_escape(s: str) -> str:
     return re.escape(s)
 
 
+def needle_array(needles) -> Column:
+    """An array column, or a literal list of needles or patterns."""
+    if isinstance(needles, (list, tuple)):
+        return F.array(*[F.lit(n) for n in needles])
+    return col(needles)
+
+
 @chfn("multiSearchAny")
-def multiSearchAny(haystack, needles: list[str]) -> Column:
-    c = col(haystack)
-    out = c.contains(needles[0])
-    for n in needles[1:]:
-        out = out | c.contains(n)
-    return out
+def multiSearchAny(haystack, needles) -> Column:
+    h = col(haystack)
+    return F.exists(needle_array(needles), lambda n: F.position(n, h) > 0)
 
 
 @chfn("multiSearchAnyCaseInsensitive")
-def multiSearchAnyCaseInsensitive(haystack, needles: list[str]) -> Column:
-    return multiSearchAny(F.lower(col(haystack)), [n.lower() for n in needles])
+def multiSearchAnyCaseInsensitive(haystack, needles) -> Column:
+    h = F.lower(col(haystack))
+    return F.exists(needle_array(needles), lambda n: F.position(F.lower(n), h) > 0)
 
 
 @chfn("extract")
@@ -336,15 +380,17 @@ def countMatches(s, pattern: str) -> Column:
 
 
 @chfn("replaceOne")
-def replaceOne(s, needle: str, repl: str) -> Column:
-    """First occurrence only: splice at locate()."""
-    c = col(s)
-    pos = F.locate(needle, c)
-    return F.when(pos == 0, c).otherwise(
+def replaceOne(s, needle: Column | str, repl: Column | str) -> Column:
+    """The first occurrence only (ReplaceStringImpl replace_one).
+
+    An empty needle leaves the haystack as it is."""
+    c, n = col(s), lit_or_col(needle)
+    pos = F.position(n, c)
+    return F.when((F.length(n) == 0) | (pos == 0), c).otherwise(
         F.concat(
             c.substr(F.lit(1), pos - 1),
-            F.lit(repl),
-            c.substr(pos + len(needle), F.length(c)),
+            lit_or_col(repl),
+            c.substr(pos + F.length(n), F.lit(_INT_MAX)),
         )
     )
 
@@ -397,20 +443,39 @@ def translate(s, from_chars: str, to_chars: str) -> Column:
     return F.translate(col(s), from_chars, to_chars)
 
 
-@chfn("splitByChar")
-def splitByChar(sep: str, s) -> Column:
-    import re as _re
+def _literal_split(s, sep) -> Column:
+    """s split at the literal text sep (Spark's split takes a regex)."""
+    return F.split(col(s), F.concat(F.lit("\\Q"), lit_or_col(sep), F.lit("\\E")), -1)
 
-    return F.split(col(s), _re.escape(sep), -1)
+
+def _first(parts: Column, max_substrings) -> Column:
+    """The first max_substrings parts when that is positive, else all.
+    ClickHouse after 23.3 has a setting,
+    splitby_max_substrings_includes_remaining_string, whose default 0 drops
+    the rest of the string; 23.3 is taken to do the same."""
+    if max_substrings is None:
+        return parts
+    m = lit_or_col(max_substrings).cast("int")
+    return F.slice(parts, 1, F.when(m > 0, m).otherwise(F.lit(_INT_MAX)))
+
+
+def _chars(s) -> Column:
+    """The characters of s; none for ''."""
+    return F.filter(F.split(col(s), "", -1), lambda t: t != "")
+
+
+@chfn("splitByChar")
+def splitByChar(sep, s, max_substrings=None) -> Column:
+    return _first(_literal_split(s, sep), max_substrings)
 
 
 @chfn("splitByString")
-def splitByString(sep: str, s) -> Column:
-    import re as _re
+def splitByString(sep, s, max_substrings=None) -> Column:
+    """An empty separator splits into characters (SplitByStringImpl).
 
-    if sep == "":
-        return F.split(col(s), "(?!^)(?=.)", -1)
-    return F.split(col(s), _re.escape(sep), -1)
+    splitByString('', '') is [] (FunctionsStringArray.h)."""
+    parts = F.when(lit_or_col(sep) == "", _chars(s)).otherwise(_literal_split(s, sep))
+    return _first(parts, max_substrings)
 
 
 @chfn("splitByRegexp")
@@ -418,7 +483,7 @@ def splitByRegexp(pattern: str, s) -> Column:
     if isinstance(pattern, str) and pattern == "":
         # empty pattern = split into characters, no empties
         # (SplitByRegexpImpl: empty regex falls back to per-char)
-        return F.filter(F.split(col(s), "", -1), lambda t: t != "")
+        return _chars(s)
     return F.split(col(s), pattern, -1)
 
 

@@ -10,9 +10,9 @@ Reference registration sites:
   - toStartOf{FiveMinutes,ISOYear,Millisecond,…} —
     src/Functions/DateTimeTransforms.h
   - multiSearch* family — src/Functions/FunctionsMultiStringSearch.h,
-    FunctionsMultiStringPosition.h (UTF8 / CaseInsensitive variants are
-    separate registrations of the same semantics; Spark strings are
-    Unicode-native so the *UTF8 forms share one implementation)
+    FunctionsMultiStringPosition.h (whether a needle is present does not
+    depend on bytes or characters, so a *UTF8 form shares its base's
+    builder)
   - ngramMinHash / wordShingleMinHash / ngramSimHash / wordShingleSimHash —
     src/Functions/FunctionsStringHash.cpp (scalar per-string sketches;
     implemented over the portable 60-bit md5 hash so results are
@@ -397,9 +397,9 @@ def ULIDStringToDateTime(x) -> Column:
 # --------------------------------------------------------------------------
 # String search variants: UTF8 / CaseInsensitive / multiSearch* tail
 # --------------------------------------------------------------------------
-# Spark strings are Unicode: the *UTF8 registrations share the base
-# implementation (CH splits them because its bytes-vs-codepoints positions
-# differ; Spark positions are codepoint-based == the UTF8 semantics).
+# A *UTF8 form whose answer does not depend on counting bytes or characters
+# shares its base's builder. The position and length forms, which do
+# depend on it, are separate builders in strings.py.
 
 
 def _alias(new: str, base: str) -> None:
@@ -408,8 +408,8 @@ def _alias(new: str, base: str) -> None:
 
 
 for _base, _variants in {
-    "position": ["positionUTF8"],
-    "positionCaseInsensitive": ["positionCaseInsensitiveUTF8"],
+    "multiSearchAny": ["multiSearchAnyUTF8"],
+    "multiSearchAnyCaseInsensitive": ["multiSearchAnyCaseInsensitiveUTF8"],
     "ngramDistance": ["ngramDistanceUTF8"],
     "ngramDistanceCaseInsensitive": ["ngramDistanceCaseInsensitiveUTF8"],
     "countSubstrings": ["countSubstringsUTF8"],
@@ -494,18 +494,6 @@ def multiSearchFirstPosition(h, pats) -> Column:
 )
 def multiSearchFirstPositionCaseInsensitive(h, pats) -> Column:
     return multiSearchFirstPosition(F.lower(col(h)), F.transform(col(pats), F.lower))
-
-
-@chfn("multiSearchAnyUTF8")
-def multiSearchAnyUTF8(h, pats) -> Column:
-    hc = col(h)
-    return F.exists(col(pats), lambda p: F.position(p, hc) > 0)
-
-
-@chfn("multiSearchAnyCaseInsensitiveUTF8")
-def multiSearchAnyCaseInsensitiveUTF8(h, pats) -> Column:
-    hc = F.lower(col(h))
-    return F.exists(col(pats), lambda p: F.position(F.lower(p), hc) > 0)
 
 
 @chfn("multiMatchAnyIndex")

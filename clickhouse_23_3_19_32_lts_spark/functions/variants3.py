@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col, lit_or_col
-from clickhouse_23_3_19_32_lts_spark.functions.strings import ngrams
+from clickhouse_23_3_19_32_lts_spark.functions.strings import needle_array, ngrams
 from clickhouse_23_3_19_32_lts_spark.functions.ipfns import isIPv4String, isIPv6String
 
 # --- bitmap tail (FunctionsBitmap.cpp; carrier = sorted distinct array) -----
@@ -106,11 +106,12 @@ def ngramSearchCaseInsensitive(h, needle, n: int = 4) -> Column:
 
 @chfn("multiMatchAny")
 def multiMatchAny(h, pats) -> Column:
-    """1 if any regex matches (hyperscan-backed in the reference; Java regex
-    via rlike here — same RE2-compatible subset the golden tests use)."""
+    """Whether any regex matches, a BOOLEAN like match's.
+
+    Hyperscan-backed in the reference; Java regex via rlike here — the same
+    RE2-compatible subset the golden tests use."""
     hc = col(h)
-    arr = F.array(*[F.lit(p) for p in pats]) if isinstance(pats, (list, tuple)) else col(pats)
-    return F.exists(arr, lambda p: F.regexp_like(hc, p)).cast("int")
+    return F.exists(needle_array(pats), lambda p: F.regexp_like(hc, p))
 
 
 # --- typed IP conversions (FunctionsCodingIP.cpp) ---------------------------

@@ -4,9 +4,12 @@ the dialect tables' copy and the `functions/` registry's builder.
 No ClickHouse server or source tree is available here, so each expected
 value cites the ClickHouse documentation page that states it: the page's
 own example where it has one, else the rule the page gives (a zone argument
-is the zone the value is shown in, date-time-functions intro). Every call
-runs through the SQL dialect (`ch_sql`) and through the Python builders
-(`functions as CH`); both must give the documented answer.
+is the zone the value is shown in, date-time-functions intro). Where no
+page states the answer, the row says where it came from instead: a test
+name of the reference corpus (tests/golden_corpus.txt) or the source file
+that the deleted dialect-table entry cited. Those answers are unverified.
+Every call runs through the SQL dialect (`ch_sql`) and through the Python
+builders (`functions as CH`); both must give the expected answer.
 """
 
 from __future__ import annotations
@@ -131,18 +134,99 @@ CALLS = {
     "hex(5)": (lambda: CH.hex_(F.lit(5)), "05", f"{DOCS}encoding-functions#hex"),
 }
 
+STR = DOCS + "string-functions"
+SEARCH = DOCS + "string-search-functions"
+REPLACE = DOCS + "string-replace-functions"
+SPLIT = DOCS + "splitting-merging-functions"
+CORPUS = "reference corpus test "
+
+# ClickHouse strings are bytes: the plain length and position forms count
+# bytes, the *UTF8 forms characters ('Привет' is 6 characters, 12 bytes).
+STRING_CALLS = {
+    # the page's example
+    "position('Привет, мир!', '!')": (
+        lambda: CH.position(F.lit("Привет, мир!"), "!"), 21, f"{SEARCH}#position",
+    ),
+    # the page's example
+    "positionUTF8('Привет, мир!', '!')": (
+        lambda: CH.positionUTF8(F.lit("Привет, мир!"), "!"), 12, f"{SEARCH}#positionutf8",
+    ),
+    # the page's example
+    "positionCaseInsensitive('Hello, world!', 'hello')": (
+        lambda: CH.positionCaseInsensitive(F.lit("Hello, world!"), "hello"), 1,
+        f"{SEARCH}#positioncaseinsensitive",
+    ),
+    # the search starts at start_pos
+    "position('ababab', 'ab', 3)": (
+        lambda: CH.position(F.lit("ababab"), "ab", 3), 3, f"{SEARCH}#position",
+    ),
+    # instr is an alias of positionCaseInsensitive
+    "instr('Hello', 'h')": (
+        lambda: CH.instr(F.lit("Hello"), "h"), 1,
+        CORPUS + "02680_instr_alias_for_position_case_insensitive",
+    ),
+    # 1 when at least one needle is in the haystack
+    "multiSearchAny('hello', ['xyz', 'ell'])": (
+        lambda: CH.multiSearchAny(F.lit("hello"), ["xyz", "ell"]), True,
+        f"{SEARCH}#multisearchany",
+    ),
+    # the length of a string in bytes
+    "length('Привет')": (lambda: CH.length(F.lit("Привет")), 12, f"{STR}#length"),
+    "lengthUTF8('Привет')": (
+        lambda: CH.lengthUTF8(F.lit("Привет")), 6, f"{STR}#lengthutf8",
+    ),
+    # a negative length drops that many characters from the end
+    "substring('hello', 2, -1)": (
+        lambda: CH.substring(F.lit("hello"), 2, -1), "ell",
+        CORPUS + "01060_substring_negative_size",
+    ),
+    # the name is case-insensitive, as SQL's SUBSTRING is
+    "SUBSTRING('hello', 2, -1)": (
+        lambda: CH.substring(F.lit("hello"), 2, -1), "ell",
+        CORPUS + "01060_substring_negative_size; " + f"{STR}#substring",
+    ),
+    # a function of NULL is NULL
+    "empty(CAST(NULL AS String))": (
+        lambda: CH.empty(F.lit(None).cast("string")), None, f"{DOCS}#null-processing",
+    ),
+    # an empty needle leaves the haystack as it is
+    "replaceOne('abc', '', 'x')": (
+        lambda: CH.replaceOne(F.lit("abc"), "", "x"), "abc",
+        "ReplaceStringImpl replace_one, cited by the deleted TEMPLATES entry; "
+        f"{REPLACE}#replaceone",
+    ),
+    # the page's example
+    "splitByString('', 'abcde')": (
+        lambda: CH.splitByString("", F.lit("abcde")), ["a", "b", "c", "d", "e"],
+        f"{SPLIT}#splitbystring",
+    ),
+    "splitByString('', '')": (
+        lambda: CH.splitByString("", F.lit("")), [],
+        "FunctionsStringArray.h SplitByStringImpl, cited by the deleted"
+        " ARITY_TEMPLATES entry",
+    ),
+    # The page describes the setting
+    # splitby_max_substrings_includes_remaining_string, whose default 0
+    # drops the rest of the string. The setting is newer than 23.3, so the
+    # 23.3 answer is inferred from it.
+    "splitByChar(',', 'a,b,c', 2)": (
+        lambda: CH.splitByChar(",", F.lit("a,b,c"), 2), ["a", "b"], f"{SPLIT}#splitbychar",
+    ),
+}
+
 ONE_ROW = "(SELECT -4 AS i) AS t"
+SCALAR_CALLS = {**CALLS, **STRING_CALLS}
 
 
-@pytest.mark.parametrize("call", sorted(CALLS))
+@pytest.mark.parametrize("call", sorted(SCALAR_CALLS))
 def test_ch_sql_gives_the_documented_answer(spark, call):
-    _, want, _ = CALLS[call]
+    _, want, _ = SCALAR_CALLS[call]
     assert ch_sql(spark, f"SELECT {call} AS v FROM {ONE_ROW}").first()["v"] == want
 
 
-@pytest.mark.parametrize("call", sorted(CALLS))
+@pytest.mark.parametrize("call", sorted(SCALAR_CALLS))
 def test_builders_give_the_documented_answer(spark, call):
-    build, want, _ = CALLS[call]
+    build, want, _ = SCALAR_CALLS[call]
     df = spark.sql(f"SELECT * FROM {ONE_ROW}")
     assert df.select(build().alias("v")).first()["v"] == want
 
@@ -177,6 +261,7 @@ AGG_TABLES = {
         "SELECT * FROM VALUES ('y', 1), ('y', 1), ('x', 5), ('y', 1), ('z', 10)"
         " AS t(k, w)"
     ),
+    "nulls": "SELECT * FROM VALUES (1, 'x'), (NULL, NULL), (2, NULL) AS t(a, b)",
 }
 
 # ClickHouse call -> (table, the same call through the builders, answer,
@@ -228,6 +313,11 @@ AGG_CALLS = {
     ),
     # one bar character per bucket
     "sparkbar(4)(x, x)": ("n10", lambda: CH.sparkbar("x", "x", 4), _Len(4), f"{REF}sparkbar"),
+    # aggregation skips a row with a NULL argument, as uniqExact(a, b) does
+    "uniq(a, b)": ("nulls", lambda: CH.uniq("a", "b"), 1, f"{AGG}#null-processing"),
+    "uniqIf(a, b, a > 0)": (
+        "nulls", lambda: CH.uniqIf("a", "b", F.col("a") > 0), 1, f"{AGG}#null-processing",
+    ),
 }
 
 

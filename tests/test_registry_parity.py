@@ -71,7 +71,6 @@ KEPT = {
     ("NAME_MAP", "JSONLength"): (DIFFERS, "JSONLength(j)"),
     ("NAME_MAP", "anyLast"): (DIFFERS, "anyLast(if(k = 6, NULL, i))"),
     ("NAME_MAP", "base64Decode"): (DIFFERS, "base64Decode('YWJj')"),
-    ("NAME_MAP", "lengthUTF8"): (DIFFERS, "lengthUTF8(s)"),
     ("NAME_MAP", "xxHash32"): (NO_RENDER, "xxHash32(s)"),
     ("TEMPLATES", "JSONExtractBool"): (DIFFERS, "JSONExtractBool(j, 1)"),
     ("TEMPLATES", "JSONExtractFloat"): (DIFFERS, "JSONExtractFloat(j, 2)"),
@@ -87,7 +86,6 @@ KEPT = {
     ("TEMPLATES", "bitShiftRight"): (DIFFERS, "bitShiftRight(300, 3)"),
     ("TEMPLATES", "bitTest"): (DIFFERS, "bitTest(i, 2)"),
     ("TEMPLATES", "domain"): (DIFFERS, "domain(u)"),
-    ("TEMPLATES", "empty"): (DIFFERS, "empty(s)"),
     ("TEMPLATES", "extractURLParameter"): (DIFFERS, "extractURLParameter(u, 'x')"),
     ("TEMPLATES", "indexOf"): (DIFFERS, "indexOf(a, 2)"),
     ("TEMPLATES", "intDiv"): (PINNED, "intDiv(i, 2)"),
@@ -96,21 +94,12 @@ KEPT = {
     ("TEMPLATES", "modulo"): (NO_RENDER, "modulo(i = 5, 2)"),
     ("TEMPLATES", "multiply"): (NO_RENDER, "multiply(i = 5, 2)"),
     ("TEMPLATES", "negate"): (NO_RENDER, "negate(i = 5)"),
-    ("TEMPLATES", "notEmpty"): (DIFFERS, "notEmpty(s)"),
     ("TEMPLATES", "partitionId"): (DIFFERS, "partitionId(i)"),
     ("TEMPLATES", "plus"): (NO_RENDER, "plus(i = 5, k = 2)"),
-    ("TEMPLATES", "positionCaseInsensitive"): (
-        DIFFERS, "positionCaseInsensitive(s, 'B')"
-    ),
-    ("TEMPLATES", "positionCaseInsensitiveUTF8"): (
-        DIFFERS, "positionCaseInsensitiveUTF8(s, 'B')"
-    ),
-    ("TEMPLATES", "positionUTF8"): (DIFFERS, "positionUTF8(s, 'l')"),
     ("TEMPLATES", "positiveModulo"): (NO_RENDER, "positiveModulo(i = 5, 2)"),
     ("TEMPLATES", "protocol"): (DIFFERS, "protocol(u)"),
     ("TEMPLATES", "rand"): (RANDOM, "rand()"),
     ("TEMPLATES", "rand64"): (RANDOM, "rand64()"),
-    ("TEMPLATES", "replaceOne"): (DIFFERS, "replaceOne(s, '', 'x')"),
     ("TEMPLATES", "toFixedString"): (DIFFERS, "toFixedString('абв', 4)"),
     ("TEMPLATES", "toInt128"): (DIFFERS, "toInt128(i)"),
     ("TEMPLATES", "toInt256"): (DIFFERS, "toInt256(i)"),
@@ -127,19 +116,7 @@ KEPT = {
     ("ARITY_TEMPLATES", "geohashEncode"): (DIFFERS, "geohashEncode(f, f)"),
     ("ARITY_TEMPLATES", "if"): (NO_RENDER, "if(i, s, 'z')"),
     ("ARITY_TEMPLATES", "ignore"): (DIFFERS, "ignore(i)"),
-    ("ARITY_TEMPLATES", "locate"): (DIFFERS, "locate(s, 'b')"),
-    ("ARITY_TEMPLATES", "mid"): (DIFFERS, "mid(s, 2, -1)"),
-    ("ARITY_TEMPLATES", "multiMatchAny"): (DIFFERS, "multiMatchAny(s, ['b', 'l+'])"),
-    ("ARITY_TEMPLATES", "multiSearchAny"): (NO_RENDER, "multiSearchAny(s, ['b', 'x'])"),
-    ("ARITY_TEMPLATES", "multiSearchAnyCaseInsensitive"): (
-        NO_RENDER, "multiSearchAnyCaseInsensitive(s, ['B', 'X'])"
-    ),
-    ("ARITY_TEMPLATES", "position"): (DIFFERS, "position(s, 'l')"),
     ("ARITY_TEMPLATES", "range"): (NO_RENDER, "range(5)"),
-    ("ARITY_TEMPLATES", "splitByChar"): (NO_RENDER, "splitByChar(',', 'a,b,c', 2)"),
-    ("ARITY_TEMPLATES", "splitByString"): (DIFFERS, "splitByString('', s)"),
-    ("ARITY_TEMPLATES", "substr"): (DIFFERS, "substr(s, -3, -1)"),
-    ("ARITY_TEMPLATES", "substring"): (DIFFERS, "substring(s, 2, -1)"),
     ("PARAMETRIC", "groupArrayMovingAvg"): (NO_RENDER, "groupArrayMovingAvg(2)(i)"),
     ("PARAMETRIC", "groupArrayMovingSum"): (NO_RENDER, "groupArrayMovingSum(2)(i)"),
 }
@@ -153,10 +130,15 @@ KEPT = {
 SETTLED = [
     (table, name)
     for table, names in {
-        "NAME_MAP": "fromUnixTimestamp toHour toMinute toSecond toUnixTimestamp toYear uniq",
+        "NAME_MAP": (
+            "fromUnixTimestamp lengthUTF8 toHour toMinute toSecond "
+            "toUnixTimestamp toYear uniq"
+        ),
         "TEMPLATES": (
-            "DAYOFWEEK fromUnixTimestamp64Micro fromUnixTimestamp64Milli "
-            "fromUnixTimestamp64Nano hex monthName timeSlot toDate toDate32 "
+            "DAYOFWEEK empty fromUnixTimestamp64Micro fromUnixTimestamp64Milli "
+            "fromUnixTimestamp64Nano hex monthName notEmpty "
+            "positionCaseInsensitive positionCaseInsensitiveUTF8 positionUTF8 "
+            "replaceOne timeSlot toDate toDate32 "
             "toDateTime toDateTime64 toDayOfWeek toMonday toQuarter toStartOfDay "
             "toStartOfHour toStartOfMinute toStartOfMonth toStartOfQuarter "
             "toStartOfYear toString toTime toUInt16 toUInt32 toUInt8 toYYYYMM "
@@ -173,7 +155,9 @@ SETTLED = [
             "parseDateTimeBestEffortUSOrNull parseDateTimeBestEffortUSOrZero "
             "subtractDays toDateTime toDateTime64 toDateTime64OrNull "
             "toDateTime64OrZero toDateTimeOrNull toDateTimeOrZero toStartOfWeek "
-            "toTimeZone quantile quantileExact quantileTDigest quantileTiming uniq"
+            "toTimeZone quantile quantileExact quantileTDigest quantileTiming uniq "
+            "locate mid multiMatchAny multiSearchAny multiSearchAnyCaseInsensitive "
+            "position splitByChar splitByString substr substring"
         ),
         "PARAMETRIC": (
             "groupArray groupArraySample groupUniqArray quantile "

@@ -25,7 +25,10 @@ from __future__ import annotations
 
 import contextlib
 import contextvars
+import dataclasses
 import re
+
+from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
 
 # The functions/ registry is the one definition of every function it
 # implements: translate renders those names through the registry bridge
@@ -1114,9 +1117,7 @@ def _avgw_nullable(val_args, rewritten) -> bool:
     the STATIC TYPE first — a Nullable table column carries no textual
     marker for a regex to see — and fall back to the regex only when the
     type is unknown."""
-    from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
-    tys = [static_type(list(a), _COL_CH_TYPES) for a in val_args]
+    tys = [_ch_type(a) for a in val_args]
     if any(ty is not None and ty.startswith("Nullable") for ty in tys):
         return True
     if all(ty is not None for ty in tys):
@@ -1737,11 +1738,11 @@ def _rewrite_datetime_col_arith(tokens: list[str]) -> list[str]:
     `ts > 0` and `ts + 3600` are valid CH. Rewrite in CH space using the
     declared column types (toUnixTimestamp / toDateTime keep everything
     translatable downstream)."""
-    if not _COL_CH_TYPES:
+    if not _CALL.get().ch_types:
         return tokens
     dt_cols = {
         c
-        for c, t in _COL_CH_TYPES.items()
+        for c, t in _CALL.get().ch_types.items()
         if re.match(r"(?i)DateTime", t.strip())
     }
     if not dt_cols:
@@ -1790,11 +1791,11 @@ def _rewrite_ipv4_col_arith(tokens: list[str]) -> list[str]:
     (FunctionsCodingIP: IPv4 is a UInt32 domain type; `ip % n` operates on
     the number) — our IPv4 carrier is the dotted STRING, so wrap typed
     identifiers with IPv4StringToNum when an arithmetic op touches them."""
-    if not _COL_CH_TYPES:
+    if not _CALL.get().ch_types:
         return tokens
     ip_cols = {
         c
-        for c, t in _COL_CH_TYPES.items()
+        for c, t in _CALL.get().ch_types.items()
         if re.fullmatch(r"(?i)(Nullable\()?IPv4\)?", t.strip())
     }
     if not ip_cols:
@@ -2200,7 +2201,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 if len(inner_sql) != 1:
                     raise ChSqlError("subscript needs one index")
                 base = out.pop()
-                if _SAFE_SUBSCRIPT:
+                if _CALL.get().safe_subscript:
                     idx = inner_sql[0]
                     out.append(
                         f"(CASE WHEN ({idx}) <> 0 THEN try_element_at({base}, CAST({idx} AS INT)) END)"
@@ -2375,9 +2376,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             ))
             _dty0 = None
             if not _is_dt:
-                from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
-                _dty0 = static_type(list(args[0]), _COL_CH_TYPES)
+                _dty0 = _ch_type(args[0])
                 _is_dt = bool(_dty0) and _dty0.replace(
                     "Nullable(", ""
                 ).lower().startswith("datetime")
@@ -2402,12 +2401,10 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
         if tl == "range" and args and 1 <= len(args) <= 3:
             # range() over IPv4 values iterates the UInt32 representation
             # (range.cpp takes unsigned ints) — convert dotted carriers
-            from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
             _wr, _chg = [], False
             for _a9 in args:
                 _r9 = _rewrite(_a9)
-                if static_type(list(_a9), _COL_CH_TYPES) == "IPv4":
+                if _ch_type(_a9) == "IPv4":
                     _r9 = _registry_bridge("IPv4StringToNum", [_r9]) or (
                         f"aggregate(split({_r9}, '\\\\.'), CAST(0 AS BIGINT),"
                         f" (__a, __x) -> __a * 256 + CAST(__x AS BIGINT))"
@@ -2475,7 +2472,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                     if len(arg_sql0) > 1
                     else f"grouping({arg_sql0[0]})"
                 )
-                if _GROUPING_LEGACY:
+                if _CALL.get().grouping_legacy:
                     out.append(
                         f"({(1 << len(arg_sql0)) - 1} - {gid})"
                     )
@@ -2511,7 +2508,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             t = "toDateTime"
 
         if (
-            _DT_BEST_EFFORT
+            _CALL.get().dt_best_effort
             and t in (
                 "toDateTime", "toDateTimeOrNull", "toDateTimeOrZero",
                 "toDateTime64", "toDateTime64OrNull", "toDateTime64OrZero",
@@ -2519,12 +2516,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             and args
             and (
                 (len(args[0]) == 1 and args[0][0].startswith("'"))
-                or (lambda _ty: _ty is not None and "String" in _ty)(
-                    __import__(
-                        "clickhouse_23_3_19_32_lts_spark.chtypes",
-                        fromlist=["static_type"],
-                    ).static_type(list(args[0]), _COL_CH_TYPES)
-                )
+                or "String" in (_ch_type(args[0]) or "")
             )
         ):
             # date_time_input_format='best_effort' (Settings.h): string
@@ -2674,7 +2666,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             and not re.search(r"(?i)null", arg_sql[0])
             and not any(
                 re.search(rf"(?i)\b{re.escape(c)}\b", arg_sql[0])
-                for c in _NULLABLE_COLS
+                for c in _CALL.get().nullable_cols
             )
         ):
             # sum over a never-true condition is 0 for non-Nullable values
@@ -2842,7 +2834,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
         if (
             t in ("length", "empty", "notEmpty")
             and len(arg_sql) == 1
-            and _LENGTH_AS_SIZE
+            and _CALL.get().length_as_size
         ):
             sz = f"size({arg_sql[0]})"
             out.append(
@@ -3414,9 +3406,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             if _asm is not None and [
                 x.strip() for x in args[0][_asm + 1 :]
             ] == ["String"]:
-                from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
-                _cty1 = static_type(list(args[0][:_asm]), _COL_CH_TYPES)
+                _cty1 = _ch_type(args[0][:_asm])
                 if _cty1 is not None and re.match(
                     r"(?i)(Array|Tuple)\(", _cty1
                 ):
@@ -3463,9 +3453,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             if ch_type.strip() == "String":
                 # CAST(composite AS String) = CH text serialization, not
                 # Spark's bracket style (FunctionsConversion toString path)
-                from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
-                _cty0 = static_type(list(args[0]), _COL_CH_TYPES)
+                _cty0 = _ch_type(args[0])
                 if _cty0 is not None and re.match(r"(?i)(Array|Tuple)\(", _cty0):
                     _r0 = _ch_render_sql(arg_sql[0], _cty0)
                     if _r0 is not None:
@@ -3592,7 +3580,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 i = close + 1
                 continue
 
-        if _SAFE_SUBSCRIPT and t == "arrayElement" and len(arg_sql) == 2:
+        if _CALL.get().safe_subscript and t == "arrayElement" and len(arg_sql) == 2:
             out.append(
                 f"(CASE WHEN ({arg_sql[1]}) <> 0 THEN try_element_at({arg_sql[0]}, CAST({arg_sql[1]} AS INT)) END)"
             )
@@ -3650,7 +3638,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             )
             and not any(
                 re.search(rf"(?i)\b{re.escape(c)}\b", arg_sql[0])
-                for c in _NULLABLE_COLS
+                for c in _CALL.get().nullable_cols
             )
         ):
             # empty-set avg/median is NaN in ClickHouse (AggregateFunctionAvg
@@ -3708,13 +3696,11 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             # runtime typeof() mapping when not statically inferable.
             # toColumnTypeName additionally wraps fully-constant expressions
             # in Const(...) (IColumn::isConst — toColumnTypeName.cpp)
-            from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
             _arg_toks = list(args[0])
             if (
                 len(_arg_toks) == 1
                 and re.match(r"[A-Za-z_]\w*$", _arg_toks[0])
-                and _arg_toks[0] not in _DECLARED_CH_TYPES
+                and _arg_toks[0] not in _CALL.get().col_ch_types
             ):
                 # sibling select-item alias (CH inlines these): walk back to
                 # `expr AS ident` earlier in the statement
@@ -3722,7 +3708,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 if expanded:
                     _arg_toks = expanded
             _st: dict = {}
-            inferred = static_type(_arg_toks, _COL_CH_TYPES, _st)
+            inferred = _ch_type(_arg_toks, _st)
             if inferred is not None:
                 if t == "toColumnTypeName" and not (
                     _st.get("col") or _st.get("materialize")
@@ -3747,10 +3733,8 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             # isConstant.cpp: 1 for Const columns. Static inference tracks
             # column refs / materialize(); non-inferable stays the library
             # builder's conservative 0
-            from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
             _st2: dict = {}
-            if static_type(list(args[0]), _COL_CH_TYPES, _st2) is not None:
+            if _ch_type(args[0], _st2) is not None:
                 out.append(
                     "0" if (_st2.get("col") or _st2.get("materialize")) else "1"
                 )
@@ -3758,9 +3742,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 continue
 
         if t == "defaultValueOfArgumentType" and len(args) == 1:
-            from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
-            typ = static_type(list(args[0]), _COL_CH_TYPES)
+            typ = _ch_type(args[0])
             dsql = _ch_default_sql(typ) if typ else None
             if dsql is not None:
                 out.append(dsql)
@@ -3879,9 +3861,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             # OrZero also covers the overflow case min_int / -1
             # (src/Functions/DivisionUtils.h checkedDivision): guard it when
             # the dividend's CH type is statically known
-            from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
-            _dty = static_type(list(args[0]), _COL_CH_TYPES)
+            _dty = _ch_type(args[0])
             _mins = {
                 "Int8": -128, "Int16": -32768, "Int32": -2147483648,
                 "Int64": -9223372036854775808,
@@ -3910,9 +3890,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
         if t in ("empty", "notEmpty") and len(arg_sql) == 1:
             # FixedString only: zero bytes don't count (EmptyImpl
             # vectorFixedToVector skips zeros); plain String stays size-only
-            from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
-            _ety = static_type(list(args[0]), _COL_CH_TYPES)
+            _ety = _ch_type(args[0])
             if _ety is not None and _ety.replace("Nullable(", "").rstrip(
                 ")"
             ) in ("IPv4", "IPv6"):
@@ -3931,9 +3909,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 continue
 
         if t == "toString" and len(arg_sql) == 1:
-            from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
-            _sty = static_type(list(args[0]), _COL_CH_TYPES)
+            _sty = _ch_type(args[0])
             if _sty is not None and re.match(
                 r"(?i)(Array|Tuple)\(", _sty
             ):
@@ -3961,9 +3937,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             # number (DataTypeDate is UInt16 days, DateTime is UInt32
             # seconds — src/Functions/FunctionsConversion.h), which Spark's
             # CAST(date AS INT) refuses: emit the epoch arithmetic instead
-            from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
-
-            _ity = static_type(list(args[0]), _COL_CH_TYPES)
+            _ity = _ch_type(args[0])
             if _ity in ("Date", "Date32"):
                 out.append(
                     f"CAST(datediff({arg_sql[0]}, DATE '1970-01-01')"
@@ -4510,7 +4484,7 @@ def _rewrite_rollup_key_defaults(s: str) -> str:
     must happen in the SELECT list, not at render time."""
     if re.search(r"(?i)group_by_use_nulls\s*=\s*'?1", s):
         return s
-    if not _COL_CH_TYPES:
+    if not _CALL.get().ch_types:
         return s
     blank = _blank_strings(s)
     keys: list[str] = []
@@ -4550,7 +4524,7 @@ def _rewrite_rollup_key_defaults(s: str) -> str:
             c = c.strip()
             if re.fullmatch(r"[A-Za-z_]\w*", c) and c not in keys:
                 keys.append(c)
-    keys = [k for k in keys if k in _COL_CH_TYPES]
+    keys = [k for k in keys if k in _CALL.get().ch_types]
     if not keys:
         return s
     sm = re.match(r"(?i)\s*SELECT\s+(DISTINCT\s+)?", blank)
@@ -4568,7 +4542,7 @@ def _rewrite_rollup_key_defaults(s: str) -> str:
     for ix, it in enumerate(items):
         k = it.strip()
         if k in keys:
-            dflt = _ch_join_default_sql(_COL_CH_TYPES[k])
+            dflt = _ch_join_default_sql(_CALL.get().ch_types[k])
             items[ix] = (
                 f" CASE WHEN __ch_grouping__({k}) = 1 THEN {dflt}"
                 f" ELSE {k} END AS {k} "
@@ -4583,7 +4557,7 @@ def _rewrite_totals_clause(s: str) -> str:
     # a trivial `SELECT * FROM (sub WITH TOTALS)` passes the subquery's
     # totals block through to the client (NullableTransform keeps the
     # totals stream) — hoist the subquery so the marker machinery applies
-    if _TOTALS_MARKER:
+    if _CALL.get().totals_marker:
         while True:
             mt = re.match(r"(?is)^\s*SELECT\s+\*\s+FROM\s*\(", s)
             if not mt:
@@ -4661,7 +4635,7 @@ def _rewrite_totals_clause(s: str) -> str:
                     "NOT_IMPLEMENTED: WITH TOTALS and WITH ROLLUP or CUBE"
                     " are not supported together in presence of HAVING"
                 )
-    if _TOTALS_MARKER:
+    if _CALL.get().totals_marker:
         m = _TOTALS_RE.search(s)
         if m is not None:
             blank = _blank_strings(s)
@@ -4855,7 +4829,7 @@ def _rewrite_asof_join(s: str) -> str:
                     else None
                 )
                 if al_i2:
-                    sch_i = _TABLE_SCHEMAS.get(rel_i)
+                    sch_i = _CALL.get().table_schemas.get(rel_i)
                     lrels.append((
                         al_i2,
                         frozenset(c.lower() for c, _t in sch_i) if sch_i else None,
@@ -4981,7 +4955,7 @@ def _rewrite_asof_join(s: str) -> str:
         raise ChSqlError("ASOF join over right-table Nullable column")
     where = " AND ".join(conds)
     inner_rel = rel if rel.startswith("(") else f"(SELECT * FROM {rel})"
-    schema = _TABLE_SCHEMAS.get(rel) if not rel.startswith("(") else None
+    schema = _CALL.get().table_schemas.get(rel) if not rel.startswith("(") else None
     if kind == "LEFT" and schema:
         # join misses fill with TYPE DEFAULTS (join_use_nulls=0,
         # Core/Settings.h) — a sentinel default row loses to any real match
@@ -6099,7 +6073,7 @@ def _order_by_nulls(s: str) -> str:
                 continue
             if has_join and not any(
                 re.search(rf"(?i)\b{re.escape(c)}\b", body)
-                for c in _NULLABLE_COLS
+                for c in _CALL.get().nullable_cols
             ):
                 # join queries fill non-joined columns with type DEFAULTS
                 # before sorting (join_use_nulls=0), which matches Spark's
@@ -6423,7 +6397,7 @@ def _inline_select_aliases_fn(s: str, only_shadowing: bool = False) -> str:
             # (IdentifierSemantic: alias wins, prefer_column_name_to_alias=0)
             aliases = {
                 k: v for k, v in aliases.items()
-                if v != [k] and (k in v or k in _DECLARED_CH_TYPES)
+                if v != [k] and (k in v or k in _CALL.get().col_ch_types)
             }
         new_items = []
         for it in items:
@@ -6447,33 +6421,61 @@ def _inline_select_aliases_fn(s: str, only_shadowing: bool = False) -> str:
     return " ".join(out_parts)
 
 
-_SAFE_SUBSCRIPT = False
-_INLINE_SELECT_ALIASES = False
-_NULLABLE_COLS: frozenset = frozenset()
-# CH-declared column types of the statement's tables (name -> CH type),
-# threaded by the golden runner so toTypeName(column) can fold statically
-_COL_CH_TYPES: dict = {}
-# the DECLARED (table-schema) column types only — never polluted by the
-# select-alias type registration; shadowing decisions use this
-_DECLARED_CH_TYPES: dict = {}
-_TABLE_SCHEMAS: dict = {}  # table → ordered [(col, CH type)] (ASOF defaults)
-# table → (sampling key column, domain bits): SAMPLE k rewrites into a
-# deterministic range predicate over the key's type domain
-# (MergeTreeDataSelectExecutor.cpp:496-610 relative-range arithmetic)
-_TABLE_SAMPLING: dict = {}
-# session setting date_time_input_format='best_effort': toDateTime* of a
-# STRING routes through the best-effort scanner (parseDateTimeBestEffort)
-_DT_BEST_EFFORT = False
-# retry mode: render 1-arg length()/empty()/notEmpty() with size() — CH
-# length() is polymorphic over arrays; Spark's is string/binary-only
-_LENGTH_AS_SIZE = False
-# force_grouping_standard_compatibility=0 (Settings.h:681): GROUPING bits
-# invert (1 = used as an aggregation key), vs the standard/Spark sense
-_GROUPING_LEGACY = False
-# runner mode: tag the WITH TOTALS row with a grouping_id() marker column
-# so output formatting can split it out (TotalsHavingTransform renders the
-# totals row after a blank separator)
-_TOTALS_MARKER = False
+@dataclasses.dataclass(frozen=True)
+class _Call:
+    """One translate() call: its keyword options, then the facts that
+    _translate_impl derives from the statement. translate() binds it in
+    _CALL for the call, so concurrent calls never see each other's; outside
+    any call (_expr_sql, create_sql_function) the defaults hold."""
+
+    # retry mode: arr[i] with a zero/out-of-range guard returning NULL (CH
+    # returns the type default there — ArrayElement.cpp); not the default
+    # because the guard's `idx <> 0` breaks string-keyed Map subscripts
+    safe_subscript: bool = False
+    # retry mode: macro-expand sibling select-item aliases (Spark's
+    # lateral-alias-in-window restriction)
+    inline_aliases: bool = False
+    # lower-cased names of columns declared Nullable(...) in the statement's
+    # tables: the avg/median empty-set NaN rewrites skip an argument that
+    # references one (ClickHouse gives NULL for a Nullable empty set)
+    nullable_cols: frozenset = frozenset()
+    # retry mode: 1-arg length()/empty()/notEmpty() render size() — CH
+    # length() is polymorphic over arrays; Spark's is string/binary-only
+    length_as_size: bool = False
+    # retry mode: numeric-truthiness operands under infix AND/OR/NOT
+    bool_ops: bool = False
+    # tag the WITH TOTALS row with a grouping_id() marker column so output
+    # formatting can split it out (TotalsHavingTransform renders the totals
+    # row after a blank separator)
+    totals_marker: bool = False
+    # CH-declared column types of the statement's tables (name -> CH type),
+    # so toTypeName(column) folds statically; only these decide whether an
+    # alias shadows a column
+    col_ch_types: dict = dataclasses.field(default_factory=dict)
+    # date_time_input_format='best_effort': toDateTime* of a STRING goes
+    # through the best-effort scanner (parseDateTimeBestEffort)
+    dt_best_effort: bool = False
+    # table -> ordered [(column, CH type)] (ASOF join defaults)
+    table_schemas: dict = dataclasses.field(default_factory=dict)
+    # table -> (sampling key column, domain bits): SAMPLE k becomes a
+    # deterministic range predicate over the key's type domain
+    # (MergeTreeDataSelectExecutor.cpp:496-610 relative-range arithmetic)
+    table_sampling: dict = dataclasses.field(default_factory=dict)
+    # derived: col_ch_types plus the types of the statement's typed select
+    # aliases (`toFixedString(x, N) AS a`, `<typed expr> AS a`)
+    ch_types: dict = dataclasses.field(default_factory=dict)
+    # derived: force_grouping_standard_compatibility=0 (Settings.h:681)
+    # inverts the GROUPING bits (1 = used as an aggregation key)
+    grouping_legacy: bool = False
+
+
+_CALL: contextvars.ContextVar = contextvars.ContextVar("_CALL", default=_Call())
+
+
+def _ch_type(tokens: list[str], state: "dict | None" = None) -> "str | None":
+    """The static CH type of an expression over the call's column and alias
+    types (chtypes.static_type), or None."""
+    return static_type(tokens, _CALL.get().ch_types, state)
 
 
 def translate(
@@ -6493,63 +6495,36 @@ def translate(
     the library operators instead (INTERPOLATE, multi-column WITH FILL,
     bare ARRAY JOIN clause).
 
-    safe_subscript renders arr[i] with a zero/out-of-range guard returning
-    NULL (ClickHouse returns the type default there — ArrayElement.cpp);
-    it is a retry mode because the guard's `idx <> 0` comparison would
-    break string-keyed Map subscripts, which share this syntax.
-    inline_aliases macro-expands sibling select-item aliases (retry mode
-    for Spark's lateral-alias-in-window restriction).
-    nullable_cols: column names declared Nullable(...) in the statement's
-    tables — empty-set rewrites that only apply to non-Nullable arguments
-    (avg/median NaN) are skipped when the argument references one, since
-    ClickHouse returns NULL, not NaN, for Nullable empty sets.
-    Registry calls render, and catalog UDFs register, on the session that
-    ch_sql/apply_fill bound (_on_session); unbound, on the active one."""
-    global _SAFE_SUBSCRIPT, _INLINE_SELECT_ALIASES, _NULLABLE_COLS
-    global _LENGTH_AS_SIZE, _TOTALS_MARKER, _COL_CH_TYPES, _DT_BEST_EFFORT
-    global _DECLARED_CH_TYPES
-    global _TABLE_SCHEMAS, _TABLE_SAMPLING
-    prev, prev2, prev3 = _SAFE_SUBSCRIPT, _INLINE_SELECT_ALIASES, _NULLABLE_COLS
-    prev4 = _LENGTH_AS_SIZE
-    prev5 = _TOTALS_MARKER
-    prev6 = _COL_CH_TYPES
-    prev6d = _DECLARED_CH_TYPES
-    prev7 = _DT_BEST_EFFORT
-    prev8 = _TABLE_SCHEMAS
-    prev9 = _TABLE_SAMPLING
-    _TABLE_SCHEMAS = table_schemas or {}
-    _TABLE_SAMPLING = table_sampling or {}
-    _COL_CH_TYPES = col_ch_types or {}
-    _DECLARED_CH_TYPES = dict(_COL_CH_TYPES)
-    _DT_BEST_EFFORT = dt_best_effort
-    _SAFE_SUBSCRIPT = safe_subscript
-    _INLINE_SELECT_ALIASES = inline_aliases
-    _NULLABLE_COLS = frozenset(c.lower() for c in (nullable_cols or ()))
-    _LENGTH_AS_SIZE = length_as_size
-    _TOTALS_MARKER = totals_marker
+    Each keyword option is documented on its _Call field; the call's
+    options hold only inside this call. Registry calls render, and catalog
+    UDFs register, on the session that ch_sql/apply_fill bound
+    (_on_session); unbound, on the active one."""
+    call = _Call(
+        safe_subscript=safe_subscript,
+        inline_aliases=inline_aliases,
+        nullable_cols=frozenset(c.lower() for c in (nullable_cols or ())),
+        length_as_size=length_as_size,
+        bool_ops=bool_ops,
+        totals_marker=totals_marker,
+        col_ch_types=col_ch_types or {},
+        dt_best_effort=dt_best_effort,
+        table_schemas=table_schemas or {},
+        table_sampling=table_sampling or {},
+    )
+    token = _CALL.set(call)
     try:
         res = _translate_impl(ch_sql)
         # late placeholder: internal grouping() markers inserted by the
         # totals/rollup rewrites, shielded from the GROUPING-compat pass
         res = res.replace("__ch_grouping__(", "grouping(")
-        if bool_ops:
-            # retry mode: numeric-truthiness operands under infix AND/OR/NOT
+        if call.bool_ops:
             res = _wrap_logical_operands(res)
         res = _wrap_case_conditions(res)
         if re.search(r"(?i)\bORDER\s+BY\b", res):
             res = _order_by_nulls(res)
         return _ensure_udfs(res)
     finally:
-        _SAFE_SUBSCRIPT = prev
-        _INLINE_SELECT_ALIASES = prev2
-        _NULLABLE_COLS = prev3
-        _LENGTH_AS_SIZE = prev4
-        _TOTALS_MARKER = prev5
-        _COL_CH_TYPES = prev6
-        _DECLARED_CH_TYPES = prev6d
-        _DT_BEST_EFFORT = prev7
-        _TABLE_SCHEMAS = prev8
-        _TABLE_SAMPLING = prev9
+        _CALL.reset(token)
 
 
 _SAMPLE_NUM = r"\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"
@@ -6591,7 +6566,7 @@ def _rewrite_sample_clause(s: str) -> str:
         if m is None:
             return s
         tbl = m.group(1).split(".")[-1]
-        reg = _TABLE_SAMPLING.get(tbl)
+        reg = _CALL.get().table_sampling.get(tbl)
         if reg is None:
             return s  # unknown sampling key: leave for the error path
         key, bits = reg
@@ -7218,12 +7193,10 @@ def _rewrite_from_first(s: str) -> str:
 
 
 def _translate_impl(ch_sql: str) -> str:
-    global _COL_CH_TYPES, _GROUPING_LEGACY
     s = _strip_block_comments(ch_sql).strip().rstrip(";")
     s = _rewrite_heredoc(s)
-    _GROUPING_LEGACY = bool(
-        re.search(r"(?i)force_grouping_standard_compatibility\s*=\s*'?0", s)
-    )
+    call = _CALL.get()
+    ch_types = call.col_ch_types
     if re.search(r"(?i)toFixedString", s):
         # select-item aliases of toFixedString(..., N) carry FixedString(N)
         # so downstream type-gated rewrites (empty/toString NUL handling)
@@ -7250,7 +7223,7 @@ def _translate_impl(ch_sql: str) -> str:
                 if am_ and re.fullmatch(r"\d+", narg):
                     extra_fs[am_.group(1)] = f"FixedString({narg})"
         if extra_fs:
-            _COL_CH_TYPES = {**extra_fs, **_COL_CH_TYPES}
+            ch_types = {**extra_fs, **ch_types}
     # general select-alias type registration: `<statically-typed expr> AS x`
     # gives downstream type-gated rewrites (composite toString, FixedString
     # handling, tz propagation) the alias's CH type — mirrors the typed
@@ -7293,22 +7266,24 @@ def _translate_impl(ch_sql: str) -> str:
                     # bare alias directly after a call/quoted literal
                     r"(?is)^(.*[)'])\s+([A-Za-z_]\w*)$", it_al.strip()
                 )
-                if not am_al or am_al.group(2) in _COL_CH_TYPES:
+                if not am_al or am_al.group(2) in ch_types:
                     continue
                 try:
-                    from clickhouse_23_3_19_32_lts_spark.chtypes import (
-                        static_type,
-                    )
-
-                    ty_al = static_type(
-                        _tokenize(am_al.group(1)), _COL_CH_TYPES
-                    )
+                    ty_al = static_type(_tokenize(am_al.group(1)), ch_types)
                 except Exception:  # noqa: BLE001 — inference is best-effort
                     ty_al = None
                 if ty_al:
                     extra_al[am_al.group(2)] = ty_al
         if extra_al:
-            _COL_CH_TYPES = {**extra_al, **_COL_CH_TYPES}
+            ch_types = {**extra_al, **ch_types}
+    # translate() resets _CALL when the call ends
+    _CALL.set(dataclasses.replace(
+        call,
+        ch_types=ch_types,
+        grouping_legacy=bool(
+            re.search(r"(?i)force_grouping_standard_compatibility\s*=\s*'?0", s)
+        ),
+    ))
     if " 24:" in s or "T24:" in s:
         # hour 24 rolls into the next day (ReadHelpers readDateTimeText
         # tolerance) — but ONLY when the literal is actually parsed as a
@@ -7378,7 +7353,7 @@ def _translate_impl(ch_sql: str) -> str:
         # set (bounded sources fill whole blocks); the default-block compat
         # constant lives in functions/variants2.py
         s = re.sub(r"(?i)\bblockSize\s*\(\s*\)", f"CAST({mbs} AS BIGINT)", s)
-    if _TABLE_SAMPLING and re.search(r"(?i)\bSAMPLE\s", _blank_strings(s)):
+    if call.table_sampling and re.search(r"(?i)\bSAMPLE\s", _blank_strings(s)):
         # before settings-stripping: the rewrite reads parallel_replica
         # settings from the statement tail
         s = _rewrite_sample_clause(s)
@@ -7530,7 +7505,7 @@ def _translate_impl(ch_sql: str) -> str:
     s = _rewrite_distinct_on(s)  # before alias passes: `ON (k) expr` would
     # otherwise parse as an aliased select item and macro-expand
     s = _expand_aliases_scoped(s)
-    if _INLINE_SELECT_ALIASES:
+    if call.inline_aliases:
         s = _inline_select_aliases_fn(s)
     else:
         # always-on narrow pass: only column-shadowing aliases, where

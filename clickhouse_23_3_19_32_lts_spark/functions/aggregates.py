@@ -143,28 +143,35 @@ def _timing(x) -> Column:
     return F.when(v.isNotNull(), F.least(F.greatest(v, F.lit(0)), F.lit(30000)).cast("int"))
 
 
-def _weighted(x, w) -> Column:
-    """The (v, w) pairs of rows with both arguments set, as doubles."""
+def _weighted(x, w) -> tuple[Column, Column]:
+    """The (v, w) pairs of rows with both arguments set, as doubles, sorted;
+    and their total weight as an aggregate of its own, which a lambda over
+    the pairs then reads once per group instead of re-summing the pairs."""
+    both = col(x).isNotNull() & col(w).isNotNull()
     pair = F.struct(col(x).cast("double").alias("v"), col(w).cast("double").alias("w"))
-    return F.collect_list(F.when(col(x).isNotNull() & col(w).isNotNull(), pair))
+    pairs = F.array_sort(F.collect_list(F.when(both, pair)))
+    return pairs, F.sum(F.when(both, col(w).cast("double")))
 
 
-def _weighted_pick(pairs: Column, threshold) -> Column:
+def _weighted_pick(x, w, threshold) -> Column:
     """The first value, ascending, at which the running weight reaches
     threshold(total weight), else the last value; NULL for no pairs. Sorted,
     equal values sit together, so this is the first distinct value whose
     cumulative weight reaches the threshold (QuantileExactWeighted.h)."""
-    pairs = F.array_sort(pairs)
-    bar = threshold(F.aggregate(pairs, F.lit(0.0), lambda s, p: s + p["w"]))
-    hit = F.aggregate(
+    pairs, total = _weighted(x, w)
+    none = F.lit(None).cast("double")
+    bar = threshold(total).alias("bar")
+    return F.aggregate(
         pairs,
-        F.struct(F.lit(0.0).alias("run"), F.lit(None).cast("double").alias("v")),
+        F.struct(bar, F.lit(0.0).alias("run"), none.alias("v"), none.alias("last")),
         lambda s, p: F.struct(
+            s["bar"].alias("bar"),
             (s["run"] + p["w"]).alias("run"),
-            F.coalesce(s["v"], F.when(s["run"] + p["w"] >= bar, p["v"])).alias("v"),
+            F.coalesce(s["v"], F.when(s["run"] + p["w"] >= s["bar"], p["v"])).alias("v"),
+            p["v"].alias("last"),
         ),
+        lambda s: F.coalesce(s["v"], s["last"]),
     )
-    return F.coalesce(hit["v"], F.get(pairs, F.size(pairs) - 1)["v"])
 
 
 @chfn("quantile", "median", "quantileExactInclusive")
@@ -222,7 +229,7 @@ def quantileExactWeighted(x, w, level: float = 0.5) -> Column:
     """The first value whose cumulative weight reaches
     ceil(total * level) (QuantileExactWeighted.h); the weighted sketch
     variants answer it exactly."""
-    return _or_nan(_weighted_pick(_weighted(x, w), lambda t: F.ceil(t * float(level))))
+    return _or_nan(_weighted_pick(x, w, lambda t: F.ceil(t * float(level))))
 
 
 @chfn("quantileTiming", "medianTiming")
@@ -235,8 +242,8 @@ def quantileTiming(x, level: float = 0.5) -> Column:
 def quantileTimingWeighted(x, w, level: float = 0.5) -> Column:
     """The first clamped value whose cumulative weight exceeds
     floor(total * level); a zero weight adds no value (QuantileTiming.h)."""
-    pairs = _weighted(_timing(x), F.when(col(w) != 0, col(w)))
-    return _or_nan(_weighted_pick(pairs, lambda t: F.floor(t * float(level)) + 1))
+    w = F.when(col(w) != 0, col(w))
+    return _or_nan(_weighted_pick(_timing(x), w, lambda t: F.floor(t * float(level)) + 1))
 
 
 @chfn("quantileInterpolatedWeighted", "medianInterpolatedWeighted")
@@ -245,31 +252,43 @@ def quantileInterpolatedWeighted(x, w, level: float = 0.5) -> Column:
     (cumulative weight - half its weight) / total weight; all-integer
     values truncate the answer toward zero, as the cast back to the
     argument's type does (QuantileInterpolatedWeighted.h)."""
-    pairs = _weighted(x, w)
-    vals = F.array_sort(F.array_distinct(F.transform(pairs, lambda p: p["v"])))
-    ws = F.transform(
-        vals,
-        lambda v: F.aggregate(
-            F.filter(pairs, lambda p: p["v"] == v), F.lit(0.0), lambda s, p: s + p["w"]
-        ),
+    lv = float(level)
+    pairs, total = _weighted(x, w)
+    none = F.lit(None).cast("double")
+
+    def step(s, p):
+        """Add pair p. A new value first ends the run of equal values
+        before it, which sits at h = (weight before it + half its weight) /
+        total: the lower end (x0, y0) of the bracket around the level while
+        h <= level, else its upper end (x1, y1) unless one came before."""
+        new = s["v"].isNotNull() & ~s["v"].eqNullSafe(p["v"])
+        h = (s["cum"] + s["w"] - s["w"] / 2) / s["total"]
+        low, high = new & (h <= lv), new & (h > lv) & s["x1"].isNull()
+        return F.struct(
+            F.when(low, h).otherwise(s["x0"]).alias("x0"),
+            F.when(low, s["v"]).otherwise(s["y0"]).alias("y0"),
+            F.when(high, h).otherwise(s["x1"]).alias("x1"),
+            F.when(high, s["v"]).otherwise(s["y1"]).alias("y1"),
+            s["total"].alias("total"),
+            (s["ints"] & p["v"].eqNullSafe(F.floor(p["v"]))).alias("ints"),
+            p["v"].alias("v"),
+            F.when(new, s["cum"] + s["w"]).otherwise(s["cum"]).alias("cum"),
+            F.when(new, p["w"]).otherwise(s["w"] + p["w"]).alias("w"),
+        )
+
+    def finish(s):
+        r = s["y0"] + (s["y1"] - s["y0"]) * (lv - s["x0"]) / (s["x1"] - s["x0"])
+        r = F.when(s["ints"], r.cast("long").cast("double")).otherwise(r)
+        return F.when(s["x0"].isNull(), s["y1"]).when(s["x1"].isNull(), s["y0"]).otherwise(r)
+
+    start = F.struct(
+        none.alias("x0"), none.alias("y0"), none.alias("x1"), none.alias("y1"),
+        total.alias("total"), F.lit(True).alias("ints"), none.alias("v"),
+        F.lit(0.0).alias("cum"), F.lit(0.0).alias("w"),
     )
-    total = F.aggregate(ws, F.lit(0.0), lambda s, e: s + e)
-    h = F.transform(
-        ws,
-        lambda e, i: (
-            F.aggregate(F.slice(ws, 1, i + 1), F.lit(0.0), lambda s, a: s + a) - e / 2
-        ) / total,
-    )
-    n = F.size(vals)
-    k = F.size(F.filter(h, lambda e: e <= float(level)))
-    x0, y0, x1, y1 = F.get(h, k - 1), F.get(vals, k - 1), F.get(h, k), F.get(vals, k)
-    r = y0 + (y1 - y0) * (float(level) - x0) / (x1 - x0)
-    r = F.when(F.forall(vals, lambda v: v == F.floor(v)), r.cast("long").cast("double")).otherwise(r)
-    return _or_nan(
-        F.when(F.get(h, 0) >= float(level), F.get(vals, 0))
-        .when(F.get(h, n - 1) <= float(level), F.get(vals, n - 1))
-        .otherwise(r)
-    )
+    # a NULL value after the last pair ends the last run
+    end = F.array(F.struct(none.alias("v"), F.lit(0.0).alias("w")))
+    return _or_nan(F.aggregate(F.concat(pairs, end), start, step, finish))
 
 
 def _at_levels(one):

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_uniq_approx_relative_error(spark, sf_dir):
     from clickhouse_23_3_19_32_lts_spark.queries import all_queries
@@ -46,3 +48,56 @@ def test_aggregate_builders(spark):
     assert row["si"] == 50.0
     assert abs(row["aw"] - (100 + 400 + 900) / 60) < 1e-9
     assert abs(row["ss"]) < 1e-9  # symmetric sample => 0 skew
+
+
+def _lambda_invariants(plan) -> list[str]:
+    """The SQL of each subexpression of ``plan`` that sits inside a lambda
+    body, reads none of the lambda variables bound around it, and is
+    neither a leaf, a constant nor an aggregate. Spark evaluates a lambda
+    body once per array element and hoists nothing out of it, so such a
+    subexpression is re-evaluated per element; over a whole group's array
+    that makes a linear aggregate quadratic. An aggregate counts as a leaf:
+    the plan reads its result once per group."""
+    found: list[str] = []
+
+    def seq(s) -> list:
+        return [s.apply(i) for i in range(s.size())]
+
+    def free(e, in_lambda: bool) -> set:
+        # the ids of the lambda variables e reads that e does not bind
+        kind = e.getClass().getSimpleName()
+        if kind == "NamedLambdaVariable":
+            return {e.exprId().id()}
+        if kind == "AggregateExpression":
+            return set()
+        kids = seq(e.children())
+        ids = set().union(*(free(k, in_lambda or kind == "LambdaFunction") for k in kids))
+        if kind == "LambdaFunction":
+            ids -= {a.exprId().id() for a in seq(e.arguments())}
+        elif in_lambda and kids and not ids and not e.foldable():
+            found.append(e.sql())
+        return ids
+
+    def walk(p) -> None:
+        for e in seq(p.expressions()):
+            free(e, False)
+        for c in seq(p.children()):
+            walk(c)
+
+    walk(plan)
+    return found
+
+
+@pytest.mark.parametrize(
+    "name", ["quantileExactWeighted", "quantileTimingWeighted", "quantileInterpolatedWeighted"]
+)
+def test_weighted_quantile_lambdas_read_no_group_invariant(spark, name):
+    """A weighted quantile sorts its group once and scans it once: no lambda
+    body re-reads the collected pairs or re-sums their weights."""
+    from pyspark.sql import functions as F
+
+    from clickhouse_23_3_19_32_lts_spark import functions as CH
+
+    df = spark.range(4).select(F.col("id").alias("x"), (F.col("id") % 3 + 1).alias("w"))
+    plan = df.agg(getattr(CH, name)("x", "w", 0.3))._jdf.queryExecution().analyzed()
+    assert _lambda_invariants(plan) == []

@@ -555,3 +555,62 @@ def test_ipv4_column_comparisons_and_order_by_use_uint32():
     # a plain (non-IPv4) ORDER BY key is untouched
     out3 = translate("SELECT * FROM t ORDER BY ip, x", col_ch_types=ct)
     assert _converted(out3, "ip") and not _converted(out3, "x")
+
+
+# --- per-call options ---------------------------------------------------------
+
+_ROLLUP_Q = "SELECT a, grouping(a) AS g, arr[i] AS e FROM t GROUP BY ROLLUP(a)"
+_LEGACY_GROUPING = " SETTINGS force_grouping_standard_compatibility=0"
+
+
+def test_translate_calls_on_two_threads_keep_their_own_options():
+    """Each thread keeps its own call's options and statement facts: one
+    translates with the legacy GROUPING setting and safe_subscript, the
+    other with neither, and every output equals its single-threaded one."""
+    import sys
+    import threading
+    import time
+
+    jobs = [(_ROLLUP_Q + _LEGACY_GROUPING, {"safe_subscript": True}), (_ROLLUP_Q, {})]
+    want = [translate(q, **kw) for q, kw in jobs]
+    assert "(1 - grouping(a))" in want[0] and "try_element_at" in want[0]
+    assert "(1 - grouping" not in want[1] and "try_element_at" not in want[1]
+    runs, mismatches = [0, 0], [0, 0]
+    stop = time.monotonic() + 2.0
+
+    def run(k: int) -> None:
+        q, kw = jobs[k]
+        while time.monotonic() < stop:
+            runs[k] += 1
+            if translate(q, **kw) != want[k]:
+                mismatches[k] += 1
+
+    threads = [threading.Thread(target=run, args=(k,)) for k in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often, mid-translate
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        sys.setswitchinterval(interval)
+    assert min(runs) > 0
+    assert mismatches == [0, 0], f"{mismatches} mismatches in {runs} translations"
+
+
+def test_translate_options_end_with_the_call(spark, monkeypatch):
+    """A statement's legacy GROUPING setting does not outlive its translate
+    call: later expression renders see plain grouping()."""
+    from clickhouse_23_3_19_32_lts_spark.dialect import _expr_sql
+    from clickhouse_23_3_19_32_lts_spark.udf import create_sql_function
+
+    assert "(1 - grouping(a))" in translate(_ROLLUP_Q + _LEGACY_GROUPING)
+    assert _expr_sql("grouping(a)") == "grouping(a)"
+    # Spark refuses grouping() in a function body, so catch the statement
+    sent: list[str] = []
+    monkeypatch.setattr(spark, "sql", sent.append)
+    create_sql_function(spark, "CREATE FUNCTION grouping_probe AS (x) -> grouping(x)")
+    assert sent == [
+        "CREATE OR REPLACE TEMPORARY FUNCTION grouping_probe(x DOUBLE) RETURN grouping(x)"
+    ]

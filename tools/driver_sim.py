@@ -5,6 +5,9 @@ stand-in for the driver's value hash): the compare of tests/oracle_check.py,
 which tests/test_queries_oracle.py runs over every registry query.
 
 Usage: python tools/driver_sim.py [name ...]   (default: all registered)
+
+The summary names the five slowest queries with their wall times, so that
+a query that became slower shows in the output.
 """
 
 from __future__ import annotations
@@ -32,6 +35,7 @@ def main() -> int:
     con = duck_views(SF_DIR)
 
     n_ok = n_bad = n_noorc = 0
+    walls: dict[str, float] = {}
     for name in names:
         t0 = time.time()
         try:
@@ -50,7 +54,7 @@ def main() -> int:
             print(f"FAIL {name}: duckdb raised {exc!r}")
             n_bad += 1
             continue
-        dt = time.time() - t0
+        dt = walls[name] = time.time() - t0
         ok, msg = compare(got, want)
         if ok:
             print(f"ok   {name} ({len(got)} rows, {dt:.1f}s)")
@@ -59,6 +63,8 @@ def main() -> int:
             print(f"FAIL {name}: {msg}")
             n_bad += 1
     print(f"\n{n_ok} ok, {n_bad} bad, {n_noorc} no-oracle of {len(names)}")
+    slowest = sorted(walls, key=walls.get, reverse=True)[:5]
+    print("slowest: " + ", ".join(f"{n} {walls[n]:.1f}s" for n in slowest))
     return 1 if n_bad else 0
 
 

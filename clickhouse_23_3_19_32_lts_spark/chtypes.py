@@ -200,6 +200,16 @@ def _norm_type_tokens(toks: list[str]) -> str:
     return s
 
 
+def resolve_function(name: str) -> str | None:
+    """The registered spelling of a function name (functions.resolve), or
+    None, also while the package is still importing."""
+    try:
+        from clickhouse_23_3_19_32_lts_spark.functions import resolve
+    except ImportError:  # circular import during bootstrap
+        return None
+    return resolve(name)
+
+
 def static_type(
     tokens: list[str],
     col_types: dict[str, str] | None = None,
@@ -323,7 +333,7 @@ def static_type(
     if re.match(r"[A-Za-z_][A-Za-z0-9_]*$", toks[0]) and len(toks) >= 3 and toks[1] == "(":
         if _matching_paren(toks, 1) != len(toks) - 1:
             return None
-        f = toks[0]
+        f = resolve_function(toks[0]) or toks[0]
         args = _split_top(toks[2:-1], {","}) if len(toks) > 3 else []
         if args == [[]]:
             args = []

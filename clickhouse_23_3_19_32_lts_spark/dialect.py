@@ -28,7 +28,7 @@ import contextvars
 import dataclasses
 import re
 
-from clickhouse_23_3_19_32_lts_spark.chtypes import static_type
+from clickhouse_23_3_19_32_lts_spark.chtypes import resolve_function as _resolve, static_type
 
 # The functions/ registry is the one definition of every function it
 # implements: translate renders those names through the registry bridge
@@ -878,16 +878,16 @@ def _alias_backref_tokens(tokens: list[str], upto: int, ident: str) -> list[str]
 
 _BRIDGE_CACHE: dict[tuple[str, int], str | None] = {}
 _SPARK_BUILTINS: set[str] | None = None
-# Registry names that a Spark built-in of the same name answers differently:
-# the bridge renders the registry's builder for these. hex prints whole
-# bytes, monthName the full name, DAYOFWEEK counts from Monday and now
-# takes a zone. length counts bytes, position and locate count bytes and
-# take the haystack first, substring takes a negative length, and instr is
-# positionCaseInsensitive.
+# Registry names that a Spark built-in of the same lower-cased name answers
+# differently: the bridge renders the registry's builder for these. hex
+# prints whole bytes, monthName the full name, DAYOFWEEK counts from Monday
+# and now takes a zone. The lengths are BIGINTs, counting bytes or (char_)
+# characters; position and locate count bytes and take the haystack first,
+# substring takes a negative length, and instr is positionCaseInsensitive.
 _OVER_BUILTINS = frozenset({
-    "DAYOFWEEK", "hex", "monthName", "now", "length", "LENGTH", "position",
-    "POSITION", "locate", "substring", "SUBSTRING", "subString", "substr",
-    "instr",
+    "DAYOFWEEK", "hex", "monthName", "now", "length", "octet_length",
+    "char_length", "character_length", "position", "locate", "substring",
+    "substr", "instr",
 })
 
 # The session registry calls render on and catalog UDFs register on. ch_sql,
@@ -1131,15 +1131,6 @@ def _avgw_nullable(val_args, rewritten) -> bool:
     ))
 
 
-def _registry() -> dict:
-    """The function registry, or {} while the package is still importing."""
-    try:
-        from clickhouse_23_3_19_32_lts_spark.functions import REGISTRY
-    except ImportError:  # circular import during bootstrap
-        return {}
-    return REGISTRY
-
-
 # arguments spliced into a rendered template without parentheses:
 # identifiers (qualified or back-quoted), unsigned numbers, string literals
 _ATOM_RE = re.compile(
@@ -1167,17 +1158,19 @@ def _registry_bridge(
     ``params`` are the parameters of a parametric call f(params)(args),
     a shape no Spark built-in takes; a call that cannot be bound or
     rendered raises ChSqlError naming f."""
-    REGISTRY = _registry()
+    name = _resolve(fname)
     spark = _session()
-    if spark is None or fname not in REGISTRY:
+    if spark is None or name is None:
         return None
     if (
         params is None
         and fname.lower() in _spark_builtins(spark)
-        and fname not in _OVER_BUILTINS
+        and name not in _OVER_BUILTINS
     ):
         return None  # Spark resolves it natively; don't shadow
-    sql = _bridge_render(spark, fname, REGISTRY[fname], arg_sql, params)
+    from clickhouse_23_3_19_32_lts_spark.functions import REGISTRY
+
+    sql = _bridge_render(spark, name, REGISTRY[name], arg_sql, params)
     if sql is None and params is not None:
         raise ChSqlError(
             f"{fname}({', '.join(params)})({', '.join(arg_sql)}): the parameters"
@@ -2352,6 +2345,11 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             i += 1
             continue
 
+        # one spelling per function: a case-insensitive registry name in
+        # any case becomes its registered spelling (FunctionFactory::tryGet)
+        canon = _resolve(t)
+        if canon is not None and canon != t:
+            t, tl = canon, canon.lower()
         close = _find_call_end(tokens, i + 1)
         args = _split_args(tokens[i + 2 : close])
         if (
@@ -2381,22 +2379,17 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                     "Nullable(", ""
                 ).lower().startswith("datetime")
             if _is_dt:
-                _srctz = "'UTC'"
-                if _dty0:
-                    _tzm = re.search(r"'([^']+)'", _dty0)
-                    if _tzm:
-                        _srctz = f"'{_tzm.group(1)}'"
-                _conv = (
-                    f"convert_timezone({_srctz}, {' '.join(args[-1]).strip()},"
-                    f" CAST({_rewrite(args[0])} AS TIMESTAMP))"
-                )
-                out.append(
-                    f"CAST({_conv} AS DATE)"
-                    if t in ("toDate", "toDate32")
-                    else _conv
-                )
-                i = close + 1
-                continue
+                # the registry's toTimeZone, a TIMESTAMP as over a column; a
+                # DateTime('Zone') value holds its wall clock in that zone
+                _src = f"CAST({_rewrite(args[0])} AS TIMESTAMP)"
+                _tzm = re.search(r"'([^']+)'", _dty0 or "")
+                if _tzm:
+                    _src = f"to_utc_timestamp({_src}, '{_tzm.group(1)}')"
+                _conv = _registry_bridge("toTimeZone", [_src, " ".join(args[-1]).strip()])
+                if _conv is not None:
+                    out.append(f"CAST({_conv} AS DATE)" if t in ("toDate", "toDate32") else _conv)
+                    i = close + 1
+                    continue
 
         if tl == "range" and args and 1 <= len(args) <= 3:
             # range() over IPv4 values iterates the UInt32 representation
@@ -2543,7 +2536,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 t[:-2] in NAME_MAP
                 or t[:-2] in TEMPLATES
                 or (t[:-2] in ARITY_TEMPLATES and len(args) - 1 in ARITY_TEMPLATES[t[:-2]])
-                or (t[:-2] in _registry() and t not in _registry())
+                or (_resolve(t[:-2]) and not _resolve(t))
             )
         ):
             base = t[:-2]
@@ -2828,36 +2821,6 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
 
         if t == "tupleElement" and len(arg_sql) == 2 and re.fullmatch(r"\d+", arg_sql[1]):
             out.append(f"({arg_sql[0]})._{arg_sql[1]}")
-            i = close + 1
-            continue
-
-        if (
-            t in ("length", "empty", "notEmpty")
-            and len(arg_sql) == 1
-            and _CALL.get().length_as_size
-        ):
-            sz = f"size({arg_sql[0]})"
-            out.append(
-                sz if t == "length"
-                else f"({sz} = 0)" if t == "empty"
-                else f"({sz} > 0)"
-            )
-            i = close + 1
-            continue
-
-        if t == "length" and len(arg_sql) == 1 and re.match(
-            r"(?:array\(|array_distinct\(|array_sort\(|array_intersect\(|"
-            r"array_except\(|array_union\(|array_repeat\(|array_remove\(|"
-            r"collect_list\(|collect_set\(|slice\(|arrays_zip\(|sequence\(|"
-            r"split\(|flatten\(|transform\(|filter\(|"
-            r"h3kRing\(|h3HexRing\(|h3Line\(|h3GetFaces\(|h3ToGeoBoundary\(|"
-            r"h3ToChildren\(|h3GetUnidirectionalEdgesFromHexagon\(|"
-            r"h3GetUnidirectionalEdgeBoundary\()",
-            arg_sql[0],
-        ):
-            # ClickHouse length() is polymorphic (lengthString/lengthArray);
-            # when the argument is an obvious array producer, use size()
-            out.append(f"size({arg_sql[0]})")
             i = close + 1
             continue
 
@@ -3617,7 +3580,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             i = close + 1
             continue
 
-        if t in ("dateDiff", "date_diff", "age"):
+        if t in ("dateDiff", "date_diff", "timestampDiff", "TIMESTAMP_DIFF", "age"):
             out.append(_datediff_expr("age" if t == "age" else "dateDiff", arg_sql))
             i = close + 1
             continue
@@ -3887,22 +3850,42 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             i = close + 1
             continue
 
-        if t in ("empty", "notEmpty") and len(arg_sql) == 1:
-            # FixedString only: zero bytes don't count (EmptyImpl
-            # vectorFixedToVector skips zeros); plain String stays size-only
+        if t in ("length", "empty", "notEmpty") and len(arg_sql) == 1:
+            # ClickHouse's length, empty and notEmpty take strings, arrays
+            # and maps (length.cpp, EmptyImpl): the argument's static type
+            # picks the form
             _ety = _ch_type(args[0])
-            if _ety is not None and _ety.replace("Nullable(", "").rstrip(
-                ")"
-            ) in ("IPv4", "IPv6"):
+            _bty = (_ety or "").replace("Nullable(", "")
+            if _ety is None and re.match(
+                r"(?:array\(|array_distinct\(|array_sort\(|array_intersect\(|"
+                r"array_except\(|array_union\(|array_repeat\(|array_remove\(|"
+                r"collect_list\(|collect_set\(|slice\(|arrays_zip\(|sequence\(|"
+                r"split\(|flatten\(|transform\(|filter\(|"
+                r"h3kRing\(|h3HexRing\(|h3Line\(|h3GetFaces\(|h3ToGeoBoundary\(|"
+                r"h3ToChildren\(|h3GetUnidirectionalEdgesFromHexagon\(|"
+                r"h3GetUnidirectionalEdgeBoundary\()",
+                arg_sql[0],
+            ):
+                _bty = "Array("  # untyped, but visibly an array producer
+            if _bty.startswith(("Array(", "Map(")):
+                _sz = f"size({arg_sql[0]})"
+                out.append(
+                    f"CAST({_sz} AS BIGINT)" if t == "length"
+                    else f"({_sz} = 0)" if t == "empty"
+                    else f"({_sz} > 0)"
+                )
+                i = close + 1
+                continue
+            if t != "length" and _bty.rstrip(")") in ("IPv4", "IPv6"):
                 # the all-zero address is the IP types' empty value
                 # (EmptyImpl over the numeric domain types)
                 _z9 = f"(({arg_sql[0]}) RLIKE '^[0:.]*$')"
                 out.append(_z9 if t == "empty" else f"(NOT {_z9})")
                 i = close + 1
                 continue
-            if _ety is not None and _ety.replace("Nullable(", "").startswith(
-                "FixedString"
-            ):
+            if t != "length" and _bty.startswith("FixedString"):
+                # zero bytes don't count (EmptyImpl vectorFixedToVector
+                # skips zeros); plain String stays size-only
                 _z = f"coalesce(length(replace({arg_sql[0]}, char(0), '')), 0)"
                 out.append(f"({_z} = 0)" if t == "empty" else f"({_z} > 0)")
                 i = close + 1
@@ -6439,9 +6422,6 @@ class _Call:
     # tables: the avg/median empty-set NaN rewrites skip an argument that
     # references one (ClickHouse gives NULL for a Nullable empty set)
     nullable_cols: frozenset = frozenset()
-    # retry mode: 1-arg length()/empty()/notEmpty() render size() — CH
-    # length() is polymorphic over arrays; Spark's is string/binary-only
-    length_as_size: bool = False
     # retry mode: numeric-truthiness operands under infix AND/OR/NOT
     bool_ops: bool = False
     # tag the WITH TOTALS row with a grouping_id() marker column so output
@@ -6483,7 +6463,6 @@ def translate(
     safe_subscript: bool = False,
     inline_aliases: bool = False,
     nullable_cols: "set[str] | None" = None,
-    length_as_size: bool = False,
     bool_ops: bool = False,
     totals_marker: bool = False,
     col_ch_types: "dict[str, str] | None" = None,
@@ -6503,7 +6482,6 @@ def translate(
         safe_subscript=safe_subscript,
         inline_aliases=inline_aliases,
         nullable_cols=frozenset(c.lower() for c in (nullable_cols or ())),
-        length_as_size=length_as_size,
         bool_ops=bool_ops,
         totals_marker=totals_marker,
         col_ch_types=col_ch_types or {},
@@ -7256,7 +7234,14 @@ def _translate_impl(ch_sql: str) -> str:
                     fpos_al = sm_al.end() + fm_al.start()
                     break
             if fpos_al is None:
+                # no clause follows: the list ends where its scope closes
                 fpos_al = len(s)
+                d_end = 0
+                for k_al in range(sm_al.end(), len(s)):
+                    d_end += {"(": 1, ")": -1}.get(blank_al[k_al], 0)
+                    if d_end < 0:
+                        fpos_al = k_al
+                        break
             scopes_al.append((sm_al.end(), fpos_al))
         for seg_start, seg_end in scopes_al:
             for it_al in _split_top_commas(s[seg_start:seg_end]):

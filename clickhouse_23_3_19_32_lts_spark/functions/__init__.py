@@ -13,12 +13,14 @@ Usage:
     df.select(CH.intDiv(F.col("a"), F.col("b")), CH.toStartOfMonth("ts"))
 
 `REGISTRY` maps every ClickHouse name (and alias) to its builder — the
-SQL-dialect translation layer and the coverage report read it.
+SQL-dialect translation layer and the coverage report read it. Every
+registered name is also a module attribute, in any case for a
+case-insensitive name (`CH.POSITION` is `CH.position`).
 """
 
 from __future__ import annotations
 
-from clickhouse_23_3_19_32_lts_spark.functions.registry import REGISTRY, chfn, fn_names
+from clickhouse_23_3_19_32_lts_spark.functions.registry import REGISTRY, chfn, fn_names, resolve
 
 # Import order only matters for readability of the generated coverage table.
 from clickhouse_23_3_19_32_lts_spark.functions.arithmetic import *  # noqa: F401,F403
@@ -46,3 +48,13 @@ from clickhouse_23_3_19_32_lts_spark.functions.compat import *  # noqa: F401,F40
 from clickhouse_23_3_19_32_lts_spark.functions.variants import *  # noqa: F401,F403
 from clickhouse_23_3_19_32_lts_spark.functions.variants2 import *  # noqa: F401,F403
 from clickhouse_23_3_19_32_lts_spark.functions.geo import *  # noqa: F401,F403
+
+
+def __getattr__(name: str):
+    """The builder of a registered name that no module defines: a
+    loop-registered name (toUInt32OrZero) or another case of a
+    case-insensitive one."""
+    found = resolve(name)
+    if found is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return REGISTRY[found]

@@ -19,7 +19,7 @@ __all__ = [
 ]
 
 
-@chfn("if", "IF")
+@chfn("if", case_insensitive=True)
 def if_(cond, then, else_) -> Column:
     return F.when(col(cond), lit_or_col(then)).otherwise(lit_or_col(else_))
 

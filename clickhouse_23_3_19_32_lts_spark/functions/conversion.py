@@ -25,7 +25,7 @@ __all__ = [
     "toDate32", "toDateTime", "toDateTime64", "toDateTimeOrNull",
     "toDateTimeOrZero", "toDateTime64OrNull", "toDateTime64OrZero",
     "toDecimal", "toDecimal32",
-    "toDecimal64", "toDecimal128", "toUnixTimestamp", "fromUnixTimestamp",
+    "toDecimal64", "toUnixTimestamp", "fromUnixTimestamp",
     "toFixedString", "parseDateTime", "parseDateTimeOrNull",
     "parseDateTimeOrZero",
     "formatDateTime", "cast_", "accurateCast", "accurateCastOrNull",
@@ -214,9 +214,6 @@ def toDecimal64(x, scale: int = 6) -> Column:
     return col(x).cast(f"decimal(18,{scale})")
 
 
-toDecimal128 = toDecimal
-
-
 @chfn("toUnixTimestamp")
 def toUnixTimestamp(x, tz=None) -> Column:
     """A DateTime is an instant, so ``tz`` leaves it alone; text is read as
@@ -335,7 +332,7 @@ for _us in ("", "US"):
             _best_effort(f"chParseDT64BestEffort{_us}{_udf_sfx}", _sfx == "OrZero"))
 
 
-@chfn("CAST", "cast")
+@chfn("CAST", case_insensitive=True)
 def cast_(x, to_type: str) -> Column:
     return col(x).cast(_ch_type_to_spark(to_type))
 

@@ -85,7 +85,8 @@ def toDayOfMonth(x) -> Column:
     return F.dayofmonth(col(x))
 
 
-@chfn("toDayOfWeek", "DAYOFWEEK")
+@chfn("toDayOfWeek")
+@chfn("DAYOFWEEK", case_insensitive=True)
 def toDayOfWeek(x, mode: int = 0, tz=None) -> Column:
     """Day of the week (DateTimeTransforms.h ToDayOfWeekImpl). Mode 0:
     Monday=1..Sunday=7; 1: Monday=0..Sunday=6; 2: Sunday=0..Saturday=6;
@@ -339,7 +340,8 @@ _DIFF_UNITS = {
 }
 
 
-@chfn("dateDiff", "date_diff", "DATE_DIFF", "timestampDiff", "TIMESTAMP_DIFF")
+@chfn("dateDiff", "timestampDiff", "TIMESTAMP_DIFF")
+@chfn("date_diff", case_insensitive=True)
 def dateDiff(unit: str, start, end) -> Column:
     """dateDiff('unit', start, end) (dateDiff.cpp:448) — whole-unit boundary
     crossings, like Spark's timestampdiff for sub-month units."""
@@ -377,7 +379,8 @@ def dateName(part: str, x) -> Column:
     raise ValueError(f"dateName part {part}")
 
 
-@chfn("dateTrunc", "date_trunc", "DATE_TRUNC")
+@chfn("dateTrunc")
+@chfn("date_trunc", case_insensitive=True)
 def dateTrunc(unit: str, x) -> Column:
     return F.date_trunc(unit.lower(), col(x))
 

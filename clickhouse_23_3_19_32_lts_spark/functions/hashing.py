@@ -26,7 +26,7 @@ from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col
 
 __all__ = [
     "cityHash64", "sipHash64", "sipHash128", "halfMD5", "MD5", "SHA1",
-    "SHA224", "SHA256", "SHA512", "xxHash32", "xxHash64", "farmHash64",
+    "SHA224", "SHA256", "SHA512", "xxHash32", "xxHash64",
     "intHash32", "intHash64", "murmurHash2_64", "murmurHash3_64",
     "murmurHash3_32", "javaHash", "hiveHash", "crc32",
 ]
@@ -36,9 +36,6 @@ __all__ = [
 def cityHash64(*xs) -> Column:
     """64-bit stable hash (Spark xxhash64 stands in for cityHash64)."""
     return F.xxhash64(*[col(x) for x in xs])
-
-
-farmHash64 = cityHash64
 
 
 @chfn("sipHash64")
@@ -131,6 +128,6 @@ def hiveHash(x) -> Column:
     return F.hash(col(x)).cast("long")
 
 
-@chfn("CRC32", "crc32")
+@chfn("crc32", case_insensitive=True)
 def crc32(x) -> Column:
     return F.crc32(col(x).cast("string"))

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col
 
 __all__ = [
-    "JSONExtractString", "JSONExtractInt", "JSONExtractUInt",
+    "JSONExtractString", "JSONExtractInt",
     "JSONExtractFloat", "JSONExtractBool", "JSONExtractRaw",
     "JSONExtractArrayRaw", "JSONExtractKeys", "JSONHas", "JSONLength",
     "JSONType", "JSON_VALUE", "JSON_QUERY", "JSON_EXISTS",
@@ -45,9 +45,6 @@ def JSONExtractString(j, *keys: str | int) -> Column:
 @chfn("JSONExtractInt", "JSONExtractUInt")
 def JSONExtractInt(j, *keys: str | int) -> Column:
     return F.get_json_object(col(j), _path(*keys)).cast("long")
-
-
-JSONExtractUInt = JSONExtractInt
 
 
 @chfn("JSONExtractFloat")

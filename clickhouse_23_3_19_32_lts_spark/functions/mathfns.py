@@ -17,10 +17,10 @@ from pyspark.sql import functions as F
 from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col
 
 __all__ = [
-    "e", "pi", "exp", "log", "ln", "exp2", "log2", "exp10", "log10",
+    "e", "pi", "exp", "log", "exp2", "log2", "exp10", "log10",
     "log1p", "sqrt", "cbrt", "sin", "cos", "tan", "asin", "acos", "atan",
     "atan2", "sinh", "cosh", "tanh", "asinh", "acosh", "atanh", "pow",
-    "power", "sign", "degrees", "radians", "factorial", "intExp2",
+    "sign", "degrees", "radians", "factorial", "intExp2",
     "intExp10", "erf", "erfc", "lgamma", "tgamma",
     "round_", "roundBankers", "floor_", "ceil_", "trunc_", "roundToExp2",
     "roundDown", "roundDuration", "roundAge",
@@ -45,9 +45,6 @@ def exp(x) -> Column:
 @chfn("log", "ln")
 def log(x) -> Column:
     return F.log(col(x))
-
-
-ln = log
 
 
 @chfn("exp2")
@@ -156,9 +153,6 @@ def atanh(x) -> Column:
 @chfn("pow", "power")
 def pow(x, y) -> Column:
     return F.pow(col(x), col(y))
-
-
-power = pow
 
 
 @chfn("sign")

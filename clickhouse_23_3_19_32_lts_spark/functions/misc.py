@@ -25,7 +25,7 @@ __all__ = [
     "identity", "materialize", "ignore", "isConstant", "rowNumberInAllBlocks",
     "formatReadableSize", "formatReadableQuantity", "formatReadableDecimalSize",
     "formatReadableTimeDelta", "bar", "runningDifference", "neighbor",
-    "greatCircleDistance", "geoDistance", "greatCircleAngle",
+    "greatCircleDistance", "greatCircleAngle",
 ]
 
 
@@ -225,9 +225,6 @@ def greatCircleDistance(lon1, lat1, lon2, lat2) -> Column:
     dlon = F.radians(col(lon2)) - F.radians(col(lon1))
     a = F.sin(dlat / 2) ** 2 + F.cos(rlat1) * F.cos(rlat2) * F.sin(dlon / 2) ** 2
     return 6371000.0 * 2 * F.asin(F.sqrt(a))
-
-
-geoDistance = greatCircleDistance
 
 
 @chfn("greatCircleAngle")

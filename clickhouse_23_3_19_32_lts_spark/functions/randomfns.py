@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col
 
 __all__ = [
-    "rand", "rand32", "rand64", "randCanonical", "randUniform", "randNormal",
+    "rand", "rand64", "randCanonical", "randUniform", "randNormal",
     "randLogNormal", "randBernoulli", "randExponential", "randomString",
     "randomPrintableASCII",
 ]
@@ -24,9 +24,6 @@ def rand(seed: int | None = None) -> Column:
     """UInt32-range uniform (ClickHouse rand() returns UInt32)."""
     r = F.rand(seed) if seed is not None else F.rand()
     return (r * 4294967296).cast("long")
-
-
-rand32 = rand
 
 
 @chfn("rand64")

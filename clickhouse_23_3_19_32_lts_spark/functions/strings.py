@@ -25,14 +25,13 @@ from pyspark.sql import functions as F
 from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col, lit_or_col
 
 __all__ = [
-    "empty", "notEmpty", "length", "lengthUTF8", "octet_length", "lower",
-    "upper", "lowerUTF8", "upperUTF8", "repeat", "reverse", "concat",
-    "concatWithSeparator", "substring", "substringUTF8", "left", "right",
+    "empty", "notEmpty", "length", "lengthUTF8", "lower", "upper", "repeat",
+    "reverse", "concat", "concatWithSeparator", "substring", "left", "right",
     "startsWith", "endsWith", "trimBoth", "trimLeft", "trimRight",
     "leftPad", "rightPad", "space", "ascii_", "initcap", "soundex",
     "appendTrailingCharIfAbsent", "toValidUTF8", "normalizeQuery",
     "position", "positionCaseInsensitive", "positionUTF8",
-    "positionCaseInsensitiveUTF8", "locate", "instr", "match",
+    "positionCaseInsensitiveUTF8", "match",
     "like", "notLike", "ilike", "notILike", "countSubstrings", "hasToken",
     "hasTokenCaseInsensitive", "multiSearchAny", "multiSearchAnyCaseInsensitive",
     "extract",
@@ -54,16 +53,14 @@ def notEmpty(s) -> Column:
     return F.length(col(s)) > 0
 
 
-@chfn("length", "LENGTH", "octet_length", "OCTET_LENGTH")
+@chfn("length", "octet_length", case_insensitive=True)
 def length(s) -> Column:
     """Bytes (lengthString): length('Привет') = 12."""
     return F.octet_length(col(s)).cast("long")
 
 
-octet_length = length
-
-
-@chfn("lengthUTF8", "char_length", "CHAR_LENGTH", "character_length", "CHARACTER_LENGTH")
+@chfn("lengthUTF8")
+@chfn("char_length", "character_length", case_insensitive=True)
 def lengthUTF8(s) -> Column:
     return F.length(col(s)).cast("long")
 
@@ -73,15 +70,9 @@ def lower(s) -> Column:
     return F.lower(col(s))
 
 
-lowerUTF8 = lower
-
-
 @chfn("upper", "ucase", "upperUTF8")
 def upper(s) -> Column:
     return F.upper(col(s))
-
-
-upperUTF8 = upper
 
 
 @chfn("repeat")
@@ -107,7 +98,7 @@ def concatWithSeparator(sep: str, *xs) -> Column:
 _INT_MAX = 2**31 - 1
 
 
-@chfn("substring", "substr", "mid", "SUBSTRING", "subString")
+@chfn("substring", "substr", "mid", case_insensitive=True)
 def substring(s, start, length_=None) -> Column:
     """Characters from the 1-based start (substring.cpp).
 
@@ -124,9 +115,6 @@ def substring(s, start, length_=None) -> Column:
             off, F.when(n >= 0, n).otherwise(F.greatest(F.lit(0), F.length(c) - first + 1 + n))
         )
     return F.when(off == 0, F.lit("")).otherwise(out)
-
-
-substringUTF8 = substring
 
 
 @chfn("left")
@@ -249,7 +237,7 @@ def _byte_offset(haystack, pos: Column) -> Column:
     return F.when(pos == 0, F.lit(0)).otherwise(F.octet_length(prefix) + 1).cast("long")
 
 
-@chfn("position", "POSITION", "locate")
+@chfn("position", "locate", case_insensitive=True)
 def position(haystack, needle, start_pos=None) -> Column:
     """The byte offset of needle, haystack first (FunctionsStringSearch.h:20).
 
@@ -257,7 +245,8 @@ def position(haystack, needle, start_pos=None) -> Column:
     return _byte_offset(haystack, _locate(haystack, needle, start_pos, fold=False))
 
 
-@chfn("positionCaseInsensitive", "instr")
+@chfn("positionCaseInsensitive")
+@chfn("instr", case_insensitive=True)
 def positionCaseInsensitive(haystack, needle, start_pos=None) -> Column:
     return _byte_offset(haystack, _locate(haystack, needle, start_pos, fold=True))
 
@@ -272,16 +261,12 @@ def positionCaseInsensitiveUTF8(haystack, needle, start_pos=None) -> Column:
     return _locate(haystack, needle, start_pos, fold=True).cast("long")
 
 
-locate = position
-instr = positionCaseInsensitive
-
-
 @chfn("match", "REGEXP_MATCHES")
 def match(s, pattern: Column | str) -> Column:
     return F.rlike(col(s), lit_or_col(pattern))
 
 
-@chfn("like", "LIKE")
+@chfn("like", case_insensitive=True)
 def like(s, pattern: Column | str) -> Column:
     return F.like(col(s), lit_or_col(pattern))
 
@@ -291,7 +276,7 @@ def notLike(s, pattern: Column | str) -> Column:
     return ~like(s, pattern)
 
 
-@chfn("ilike", "ILIKE")
+@chfn("ilike", case_insensitive=True)
 def ilike(s, pattern: Column | str) -> Column:
     return F.ilike(col(s), lit_or_col(pattern))
 
@@ -395,7 +380,8 @@ def replaceOne(s, needle: Column | str, repl: Column | str) -> Column:
     )
 
 
-@chfn("replaceAll", "replace", "REPLACE")
+@chfn("replaceAll")
+@chfn("replace", case_insensitive=True)
 def replaceAll(s, needle: Column | str, repl: Column | str) -> Column:
     return F.replace(col(s), lit_or_col(needle), lit_or_col(repl))
 

@@ -708,19 +708,3 @@ def tupleHammingDistance(a, b) -> Column:
     return sum(
         F.when(ac[f"_{i}"] != bc[f"_{i}"], 1).otherwise(0) for i in (1, 2)
     )
-
-
-# Loop-generated registrations (conv variants, minhash/simhash families,
-# parseDateTime forms) exist only in REGISTRY — mirror them as module
-# attributes so `CH.toUInt32OrZero(...)` works like hand-written builders.
-# Python builtins (range, hex, bin, abs, …) are CH names too — never shadow
-# them here or module code that uses the builtin breaks.
-import builtins as _builtins
-
-for _name, _builder in REGISTRY.items():
-    if (
-        _name.isidentifier()
-        and _name not in globals()
-        and not hasattr(_builtins, _name)
-    ):
-        globals()[_name] = _builder

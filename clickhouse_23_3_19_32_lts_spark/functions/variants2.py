@@ -466,15 +466,14 @@ def proportionsZTest(s1, s2, n1, n2) -> Column:
 def entropy(x) -> Column:
     """Shannon entropy of the value distribution (AggregateFunctionEntropy.h),
     from exact counts over the collected values."""
-    vals = F.collect_list(col(x).cast("string"))
-    n = F.size(vals).cast("double")
-    uniq = F.array_distinct(vals)
+    n = F.count(col(x)).cast("double").alias("n")
     return F.aggregate(
-        uniq,
-        F.lit(0.0),
-        lambda acc, v: acc
-        - (F.size(F.filter(vals, lambda a: a == v)).cast("double") / n)
-        * F.log2(F.size(F.filter(vals, lambda a: a == v)).cast("double") / n),
+        _value_runs(col(x).cast("string")),
+        F.struct(F.lit(0.0).alias("h"), n),
+        lambda s, r: F.struct(
+            (s["h"] - (r["n"] / s["n"]) * F.log2(r["n"] / s["n"])).alias("h"), s["n"].alias("n")
+        ),
+        lambda s: s["h"],
     )
 
 
@@ -509,42 +508,70 @@ def topK(x, k: int = 10) -> Column:
     """The k most frequent values, most frequent first; equal counts keep
     the order of first appearance, as the space-saving sketch of
     AggregateFunctionTopK.h does (here counted exactly)."""
-    vals = F.collect_list(col(x))
-    return _top(vals, lambda v: F.size(F.filter(vals, lambda a: a == v)), k)
+    return _top(_value_runs(x), lambda r: r["n"], k)
 
 
 @chfn("topKWeighted")
 def topKWeighted(x, w, k: int = 10) -> Column:
     """topK by summed weight (AggregateFunctionTopK.h, weighted)."""
-    vals = F.collect_list(col(x))
-    pairs = F.collect_list(F.struct(col(x).alias("v"), col(w).cast("double").alias("w")))
-    return _top(
-        vals,
-        lambda v: F.aggregate(
-            F.filter(pairs, lambda p: p["v"] == v), F.lit(0.0), lambda a, p: a + p["w"]
-        ),
-        k,
+    return _top(_value_runs(x, w), lambda r: r["w"], k)
+
+
+def _let(value: Column, body) -> Column:
+    """body(v) with v bound to ``value`` once. Spark evaluates a lambda's
+    array argument once, but an expression inside a lambda body once per
+    element, so a lambda body reads a shared array through such a v."""
+    return F.get(F.transform(F.array(value), body), 0)
+
+
+def _value_runs(x, w=None) -> Column:
+    """One struct per distinct non-NULL value of the group: the value v,
+    its 0-based first position pos in collect order, its count n and its
+    summed weight w. One sort of the collected values and one scan of
+    their sorted runs; counting each value by re-filtering the whole list
+    is quadratic."""
+    v = col(x)
+    weight = F.lit(None).cast("double") if w is None else col(w).cast("double")
+    items = F.collect_list(F.when(v.isNotNull(), F.struct(v.alias("v"), weight.alias("w"))))
+    tagged = F.transform(
+        items, lambda e, i: F.struct(e["v"].alias("v"), i.alias("pos"), e["w"].alias("w"))
     )
 
+    def runs(s):
+        def same(i, j):
+            return F.get(s, i)["v"].eqNullSafe(F.get(s, j)["v"])
 
-def _top(vals: Column, score, k: int) -> Column:
-    """The k distinct values of highest score(v), first appearance first
-    among equal scores."""
+        def run(b, e):
+            total = F.aggregate(F.slice(s, b + 1, e - b + 1), F.lit(0.0), lambda a, p: a + p["w"])
+            first = F.get(s, b)
+            return F.struct(
+                first["v"].alias("v"), first["pos"].alias("pos"), (e - b + 1).alias("n"),
+                total.alias("w"),
+            )
+
+        idx = F.transform(s, lambda e, i: i)
+        starts = F.filter(idx, lambda i: ~same(i - 1, i))
+        return F.zip_with(starts, F.filter(idx, lambda i: ~same(i + 1, i)), run)
+
+    return _let(F.array_sort(tagged), runs)
+
+
+def _top(runs: Column, score, k: int) -> Column:
+    """The k values of highest score(run), first appearance first among
+    equal scores."""
     ranked = F.transform(
-        F.array_distinct(vals),
-        lambda v: F.struct(
-            (-score(v)).alias("neg"), F.array_position(vals, v).alias("pos"), v.alias("val")
-        ),
+        runs,
+        lambda r: F.struct((-score(r)).alias("neg"), r["pos"].alias("pos"), r["v"].alias("val")),
     )
     return F.transform(F.slice(F.array_sort(ranked), 1, int(k)), lambda s: s["val"])
 
 
-@chfn("first_value", "FIRST_VALUE")
+@chfn("first_value", case_insensitive=True)
 def first_value(x) -> Column:
     return F.first(col(x), ignorenulls=False)
 
 
-@chfn("last_value", "LAST_VALUE")
+@chfn("last_value", case_insensitive=True)
 def last_value(x) -> Column:
     return F.last(col(x), ignorenulls=False)
 
@@ -1672,19 +1699,6 @@ def mortonDecode(dims, code) -> Column:
         lambda acc, i: acc + _bit_at(c, i * 2 + 1) * F.element_at(_pow2(), (i + 1).cast("int")),
     )
     return F.struct(x.alias("_1"), y.alias("_2"))
-
-
-# Mirror loop-generated names as module attributes (same rationale as
-# variants.py; never shadow Python builtins).
-import builtins as _builtins
-
-for _name, _builder in REGISTRY.items():
-    if (
-        _name.isidentifier()
-        and _name not in globals()
-        and not hasattr(_builtins, _name)
-    ):
-        globals()[_name] = _builder
 
 
 def make_udfs() -> dict:

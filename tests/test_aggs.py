@@ -52,12 +52,22 @@ def test_aggregate_builders(spark):
 
 def _lambda_invariants(plan) -> list[str]:
     """The SQL of each subexpression of ``plan`` that sits inside a lambda
-    body, reads none of the lambda variables bound around it, and is
-    neither a leaf, a constant nor an aggregate. Spark evaluates a lambda
-    body once per array element and hoists nothing out of it, so such a
-    subexpression is re-evaluated per element; over a whole group's array
-    that makes a linear aggregate quadratic. An aggregate counts as a leaf:
-    the plan reads its result once per group."""
+    body and re-reads the whole group per element. Spark evaluates a lambda
+    body once per array element and hoists nothing out of it, so over a
+    whole group's array such a subexpression makes a linear aggregate
+    quadratic. Two shapes:
+
+    - a subexpression that reads none of the lambda variables bound around
+      it and is neither a leaf, a constant nor an aggregate (an aggregate
+      counts as a leaf: the plan reads its result once per group);
+    - a higher-order function whose array arguments read none of them,
+      such as filter(vals, a -> a = v) inside a lambda over v: its lambda
+      reads v, but it scans all of vals for each v."""
+    from pyspark import SparkContext
+
+    hof = SparkContext._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.HigherOrderFunction"
+    )
     found: list[str] = []
 
     def seq(s) -> list:
@@ -70,11 +80,13 @@ def _lambda_invariants(plan) -> list[str]:
             return {e.exprId().id()}
         if kind == "AggregateExpression":
             return set()
-        kids = seq(e.children())
-        ids = set().union(*(free(k, in_lambda or kind == "LambdaFunction") for k in kids))
+        kids = [free(k, in_lambda or kind == "LambdaFunction") for k in seq(e.children())]
+        ids = set().union(*kids)
         if kind == "LambdaFunction":
             ids -= {a.exprId().id() for a in seq(e.arguments())}
         elif in_lambda and kids and not ids and not e.foldable():
+            found.append(e.sql())
+        elif in_lambda and hof.isInstance(e) and not set().union(*kids[: e.arguments().size()]):
             found.append(e.sql())
         return ids
 
@@ -100,4 +112,20 @@ def test_weighted_quantile_lambdas_read_no_group_invariant(spark, name):
 
     df = spark.range(4).select(F.col("id").alias("x"), (F.col("id") % 3 + 1).alias("w"))
     plan = df.agg(getattr(CH, name)("x", "w", 0.3))._jdf.queryExecution().analyzed()
+    assert _lambda_invariants(plan) == []
+
+
+@pytest.mark.parametrize("name, args", [
+    ("entropy", ("x",)), ("topK", ("x", 2)), ("topKWeighted", ("x", "w", 2)),
+])
+def test_value_count_lambdas_read_no_group_invariant(spark, name, args):
+    """entropy and topK count each distinct value with one sort of the
+    group and one scan of its runs: no lambda body re-filters the
+    collected values."""
+    from pyspark.sql import functions as F
+
+    from clickhouse_23_3_19_32_lts_spark import functions as CH
+
+    df = spark.range(4).select(F.col("id").alias("x"), (F.col("id") % 3 + 1).alias("w"))
+    plan = df.agg(getattr(CH, name)(*args))._jdf.queryExecution().analyzed()
     assert _lambda_invariants(plan) == []

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from clickhouse_23_3_19_32_lts_spark import functions as CH
 from clickhouse_23_3_19_32_lts_spark.dialect import ChSqlError, ch_sql
 from clickhouse_23_3_19_32_lts_spark.functions import REGISTRY, chfn
+from clickhouse_23_3_19_32_lts_spark.functions.registry import CASE_INSENSITIVE
 
 DOCS = "https://clickhouse.com/docs/en/sql-reference/functions/"
 DT = DOCS + "date-time-functions"
@@ -69,6 +70,26 @@ CALLS = {
     "toDayOfWeek(toDate('2024-03-17'))": (
         lambda: CH.toDayOfWeek(CH.toDate(F.lit("2024-03-17"))),
         7, f"{DT}#todayofweek",
+    ),
+    # DAYOFWEEK is a case-insensitive alias of toDayOfWeek, counting from
+    # Monday; Spark's dayofweek counts from Sunday
+    "dayofweek(toDate('2024-03-17'))": (
+        lambda: CH.dayofweek(CH.toDate(F.lit("2024-03-17"))), 7, f"{DT}#todayofweek",
+    ),
+    # date_diff's aliases; 2024 is a leap year
+    "DATE_DIFF('day', toDate('2024-01-01'), toDate('2024-03-01'))": (
+        lambda: CH.DATE_DIFF("day", CH.toDate(F.lit("2024-01-01")), CH.toDate(F.lit("2024-03-01"))),
+        60, f"{DT}#date_diff",
+    ),
+    "Date_Diff('day', toDate('2024-01-01'), toDate('2024-03-01'))": (
+        lambda: CH.Date_Diff("day", CH.toDate(F.lit("2024-01-01")), CH.toDate(F.lit("2024-03-01"))),
+        60, f"{DT}#date_diff",
+    ),
+    "timestampDiff('day', toDate('2024-01-01'), toDate('2024-03-01'))": (
+        lambda: CH.timestampDiff(
+            "day", CH.toDate(F.lit("2024-01-01")), CH.toDate(F.lit("2024-03-01"))
+        ),
+        60, f"{DT}#date_diff",
     ),
     # rounds down to the half hour
     "timeSlot(toDateTime('2000-02-29 23:59:59'))": (
@@ -185,6 +206,30 @@ STRING_CALLS = {
         lambda: CH.substring(F.lit("hello"), 2, -1), "ell",
         CORPUS + "01060_substring_negative_size; " + f"{STR}#substring",
     ),
+    # position, locate, instr, substring, substr and mid are
+    # case-insensitive names, as in standard SQL
+    "Position('Привет, мир!', '!')": (
+        lambda: CH.Position(F.lit("Привет, мир!"), "!"), 21, f"{SEARCH}#position",
+    ),
+    # locate is an alias of position
+    "LOCATE('Привет, мир!', '!')": (
+        lambda: CH.LOCATE(F.lit("Привет, мир!"), "!"), 21, f"{SEARCH}#position",
+    ),
+    "INSTR('Привет, мир!', 'М')": (
+        lambda: CH.INSTR(F.lit("Привет, мир!"), "М"), 15,
+        CORPUS + "02680_instr_alias_for_position_case_insensitive",
+    ),
+    "SubString('Привет, мир!', 2, -1)": (
+        lambda: CH.SubString(F.lit("Привет, мир!"), 2, -1), "ривет, мир",
+        CORPUS + "01060_substring_negative_size; " + f"{STR}#substring",
+    ),
+    # substr and mid are aliases of substring
+    "SUBSTR('Привет, мир!', 2, -1)": (
+        lambda: CH.SUBSTR(F.lit("Привет, мир!"), 2, -1), "ривет, мир", f"{STR}#substring",
+    ),
+    "MID('Привет, мир!', 2, 3)": (
+        lambda: CH.MID(F.lit("Привет, мир!"), 2, 3), "рив", f"{STR}#substring",
+    ),
     # a function of NULL is NULL
     "empty(CAST(NULL AS String))": (
         lambda: CH.empty(F.lit(None).cast("string")), None, f"{DOCS}#null-processing",
@@ -262,6 +307,11 @@ AGG_TABLES = {
         " AS t(k, w)"
     ),
     "nulls": "SELECT * FROM VALUES (1, 'x'), (NULL, NULL), (2, NULL) AS t(a, b)",
+    "ts": "SELECT TIMESTAMP'2024-03-15 20:00:00' AS ts",
+    "entropy": (
+        "SELECT * FROM VALUES (1, 'A'), (1, 'A'), (1, 'A'), (1, 'A'), (2, 'B'),"
+        " (2, 'B'), (2, 'C'), (2, 'D') AS t(vals, strings)"
+    ),
 }
 
 # ClickHouse call -> (table, the same call through the builders, answer,
@@ -300,6 +350,11 @@ AGG_CALLS = {
         "response_times", lambda: CH.quantileTiming("response_time"), 126,
         f"{REF}quantiletiming",
     ),
+    # the page's example
+    "entropy(vals)": ("entropy", lambda: CH.entropy("vals"), 1.0, f"{REF}entropy"),
+    "entropy(strings)": ("entropy", lambda: CH.entropy("strings"), 1.75, f"{REF}entropy"),
+    # the most frequent first; x and z tie, and x came first
+    "topK(2)(k)": ("kw", lambda: CH.topK("k", 2), ["y", "x"], f"{REF}topk"),
     "topKWeighted(2)(k, w)": (
         "kw", lambda: CH.topKWeighted("k", "w", 2), ["z", "x"], f"{REF}topkweighted",
     ),
@@ -342,6 +397,63 @@ def test_builders_give_the_documented_aggregate(agg_tables, call):
     assert agg_tables.table(table).select(build().alias("v")).first()["v"] == want
 
 
+ARRAYS = DOCS + "array-functions"
+ARRAY = "(SELECT array(1, 2) AS a)"
+
+# Calls whose answer's type is checked too: ClickHouse call -> (table, the
+# same call through the builders, or None where no builder takes the
+# argument, answer, Spark type of the answer, docs page). ClickHouse's
+# lengths are UInt64, a BIGINT here.
+TYPED_CALLS = {
+    "Length('Привет, мир!')": (
+        ONE_ROW, lambda: CH.Length(F.lit("Привет, мир!")), 21, "bigint", f"{STR}#length",
+    ),
+    "octet_length('Привет, мир!')": (
+        ONE_ROW, lambda: CH.octet_length(F.lit("Привет, мир!")), 21, "bigint", f"{STR}#length",
+    ),
+    # CHAR_LENGTH and CHARACTER_LENGTH are aliases of lengthUTF8
+    "Char_Length('Привет, мир!')": (
+        ONE_ROW, lambda: CH.Char_Length(F.lit("Привет, мир!")), 12, "bigint",
+        f"{STR}#lengthutf8",
+    ),
+    # length, empty and notEmpty take arrays too; the select alias's type
+    # picks the array form
+    "length(a)": (ARRAY, None, 2, "bigint", f"{ARRAYS}#length"),
+    "empty(a)": (ARRAY, None, False, "boolean", f"{ARRAYS}#empty"),
+    "notEmpty(a)": (ARRAY, None, True, "boolean", f"{ARRAYS}#notempty"),
+    # an untyped argument that is visibly an array
+    "length(groupArray(x))": ("n10", None, 10, "bigint", f"{ARRAYS}#length"),
+    # both forms show the instant in the zone, as a DateTime
+    "toTimeZone(toDateTime('2024-03-15 20:00:00'), 'Asia/Shanghai')": (
+        ONE_ROW,
+        lambda: CH.toTimeZone(CH.toDateTime(F.lit("2024-03-15 20:00:00")), "Asia/Shanghai"),
+        dt.datetime(2024, 3, 16, 4), "timestamp", f"{DT}#totimezone",
+    ),
+    "toTimeZone(ts, 'Asia/Shanghai')": (
+        "ts", lambda: CH.toTimeZone("ts", "Asia/Shanghai"), dt.datetime(2024, 3, 16, 4),
+        "timestamp", f"{DT}#totimezone",
+    ),
+}
+
+
+def _answer_and_type(df):
+    return df.first()["v"], df.schema["v"].dataType.simpleString()
+
+
+@pytest.mark.parametrize("call", sorted(TYPED_CALLS))
+def test_ch_sql_gives_the_documented_type(agg_tables, call):
+    table, _, want, want_type, _ = TYPED_CALLS[call]
+    got = _answer_and_type(ch_sql(agg_tables, f"SELECT {call} AS v FROM {table}"))
+    assert got == (want, want_type)
+
+
+@pytest.mark.parametrize("call", sorted(c for c, row in TYPED_CALLS.items() if row[1]))
+def test_builders_give_the_documented_type(agg_tables, call):
+    table, build, want, want_type, _ = TYPED_CALLS[call]
+    df = agg_tables.sql(f"SELECT * FROM {table}").select(build().alias("v"))
+    assert _answer_and_type(df) == (want, want_type)
+
+
 def test_an_unbindable_parametric_call_names_the_function(spark):
     """groupArrayLast takes one parameter, a literal max_size
     (reference/grouparraylast)."""
@@ -370,3 +482,34 @@ def test_a_name_is_registered_once():
     finally:
         REGISTRY.clear()
         REGISTRY.update(before)
+
+
+def test_a_case_insensitive_name_has_one_spelling():
+    """FunctionFactory resolves a case-insensitive name in any case, so it
+    refuses a second spelling of one; so does chfn, whichever comes first,
+    and the refused call registers none of its names."""
+    before, folded = dict(REGISTRY), dict(CASE_INSENSITIVE)
+    try:
+        for names, case_insensitive in (
+            (("aNameNoOneRegistered", "POSITION"), False),
+            (("aNameNoOneRegistered", "GreatCircleAngle"), True),
+            (("aNameNoOneRegistered", "ANAMENOONEREGISTERED"), True),
+        ):
+            with pytest.raises(ValueError, match="registered twice"):
+                chfn(*names, case_insensitive=case_insensitive)(lambda *a: None)
+            assert (REGISTRY, CASE_INSENSITIVE) == (before, folded)
+    finally:
+        REGISTRY.clear()
+        REGISTRY.update(before)
+        CASE_INSENSITIVE.clear()
+        CASE_INSENSITIVE.update(folded)
+
+
+def test_every_spelling_is_a_module_attribute():
+    """CH.<name> is the builder of a name that only a loop registers, and
+    of any case of a case-insensitive name."""
+    assert CH.toUInt32OrZero is REGISTRY["toUInt32OrZero"]
+    assert CH.POSITION is REGISTRY["position"]
+    assert CH.CHAR_LENGTH is REGISTRY["char_length"]
+    for low, name in CASE_INSENSITIVE.items():
+        assert getattr(CH, low.upper()) is REGISTRY[name]

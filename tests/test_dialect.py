@@ -225,6 +225,39 @@ def test_translate_idempotent():
         assert translate(once) == once, q
 
 
+# --- one spelling per case-insensitive name ----------------------------------
+
+# arguments of a call per case-insensitive registry name; other names take (s)
+CASE_ARGS = {
+    "CAST": "s AS String", "if": "x > 0, 'a', 'b'", "date_diff": "'day', d, d",
+    "date_trunc": "'day', d", "DAYOFWEEK": "d", "like": "s, 'a%'", "ilike": "s, 'a%'",
+    "replace": "s, 'a', 'b'", "substring": "s, 2, -1", "substr": "s, 2, -1",
+    "mid": "s, 2, 3", "position": "s, 'a'", "locate": "s, 'a'", "instr": "s, 'a'",
+}
+
+
+def _cases(name: str) -> list[str]:
+    mixed = "".join(c.upper() if j % 2 else c.lower() for j, c in enumerate(name))
+    return [name.upper(), name.lower(), mixed, mixed.swapcase()]
+
+
+def test_every_case_of_a_case_insensitive_name_translates_alike(spark):
+    """ClickHouse resolves a case-insensitive name in any case
+    (FunctionFactory::tryGet): each spelling translates, and types, as the
+    registered one."""
+    from clickhouse_23_3_19_32_lts_spark.functions.registry import CASE_INSENSITIVE
+
+    def sql(fn, args):
+        return translate(f"SELECT {fn}({args}) AS v, toTypeName({fn}({args})) AS t FROM t")
+
+    assert len(CASE_INSENSITIVE) >= 20
+    for name in CASE_INSENSITIVE.values():
+        args = CASE_ARGS.get(name, "s")
+        want = sql(name, args)
+        for spelling in _cases(name):
+            assert sql(spelling, args) == want, spelling
+
+
 # --- round-2 advisory fixes (ADVICE.md r1): arg order / units / frequency ---
 
 

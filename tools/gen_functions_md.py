@@ -14,12 +14,17 @@ from collections import defaultdict
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clickhouse_23_3_19_32_lts_spark.functions import REGISTRY  # noqa: E402
+from clickhouse_23_3_19_32_lts_spark.functions.registry import (  # noqa: E402
+    CASE_INSENSITIVE,
+)
 
 
 def main() -> None:
     by_module: dict[str, list[tuple[str, str]]] = defaultdict(list)
     seen_fn = {}
     for name, fn in sorted(REGISTRY.items()):
+        if CASE_INSENSITIVE.get(name.lower()) == name:
+            name += "*"
         mod = fn.__module__.rsplit(".", 1)[-1]
         doc = (inspect.getdoc(fn) or "").splitlines()
         summary = doc[0] if doc else ""
@@ -37,7 +42,10 @@ def main() -> None:
     print()
     print(f"{total} registered ClickHouse function names ({uniq} distinct builders)")
     print("from `clickhouse_23_3_19_32_lts_spark/functions/`. Regenerate with")
-    print("`python tools/gen_functions_md.py > FUNCTIONS.md`.")
+    n_ci = len(CASE_INSENSITIVE)
+    print(f"`python tools/gen_functions_md.py > FUNCTIONS.md`. The {n_ci} names marked")
+    print("`*` are case-insensitive: ClickHouse resolves them in any case, and")
+    print("`translate` renders every case as the spelling shown.")
     print()
     for mod in sorted(by_module):
         rows = by_module[mod]

@@ -3554,8 +3554,7 @@ def run_golden(spark, sql_path: str, reference_path: str) -> tuple[bool, str]:
                 col_ch_types.setdefault("zero", "UInt8")
 
                 def _build(safe: bool = False, inline: bool = False,
-                           length_size: bool = False, boolw: bool = False,
-                           src: str | None = None):
+                           boolw: bool = False, src: str | None = None):
                     if parsed is not None:
                         df = apply_fill(spark, parsed)
                     else:
@@ -3564,7 +3563,6 @@ def run_golden(spark, sql_path: str, reference_path: str) -> tuple[bool, str]:
                                 src or stmt,
                                 safe_subscript=safe,
                                 inline_aliases=inline,
-                                length_as_size=length_size,
                                 bool_ops=boolw,
                                 totals_marker=want_totals,
                                 nullable_cols=set().union(
@@ -3602,21 +3600,6 @@ def run_golden(spark, sql_path: str, reference_path: str) -> tuple[bool, str]:
                     s = str(ex)
                     return "INVALID_INDEX_OF_ZERO" in s or (
                         "DATATYPE_MISMATCH" in s and "element_at" in s
-                    )
-
-                def _length_err(ex) -> bool:
-                    # CH length()/empty() are polymorphic over arrays; the
-                    # string-shaped translation failed on an array column
-                    s = str(ex)
-                    return (
-                        "UNEXPECTED_INPUT_TYPE" in s
-                        or "DATATYPE_MISMATCH" in s
-                    ) and (
-                        "`length`" in s or '"length(' in s
-                        or "`octet_length`" in s or '"octet_length(' in s
-                        # the empty()/notEmpty() NUL-stripping template over
-                        # an array argument
-                        or ('"replace(' in s and "char(0)" in s)
                     )
 
                 def _bool_err(ex) -> bool:
@@ -3746,8 +3729,6 @@ def run_golden(spark, sql_path: str, reference_path: str) -> tuple[bool, str]:
                         or "MISSING_AGGREGATION" in s2
                     ):
                         flags["inline"] = True
-                    if _length_err(ex):
-                        flags["length_size"] = True
                     if _bool_err(ex):
                         flags["boolw"] = True
                     return flags

@@ -394,6 +394,13 @@ def static_type(
                 if elem is None:
                     return None
             return f"Array({elem})"
+        if f == "map" and len(args) % 2 == 0:
+            kv: list[str | None] = ["Nothing", "Nothing"]
+            for j, part in enumerate(args):
+                kv[j % 2] = _super2(kv[j % 2], static_type(part, ct, state))
+                if kv[j % 2] is None:
+                    return None
+            return f"Map({kv[0]}, {kv[1]})"
         if f in ("tuple",):
             els = [static_type(p, ct, state) for p in args]
             if any(e is None for e in els):

@@ -39,17 +39,11 @@ from clickhouse_23_3_19_32_lts_spark.chtypes import resolve_function as _resolve
 
 # --- 1:1 function renames (CH name → Spark SQL name) -----------------------
 NAME_MAP: dict[str, str] = {
-    # string
-    "base64Decode": "unbase64",
     # arrays
     "arraysOverlap": "arrays_overlap",
-    # json
-    "JSONLength": "json_array_length",
     # hash / misc (cityHash64/sipHash64/murmur*/halfMD5 render bit-exact via
     # the ch_*_elem/_comb pandas UDFs — see _render_exact_hash below)
     "xxHash32": "crc32",
-    # aggregates
-    "anyLast": "last",
 }
 
 # numeric-conversion targets (type-aware date/datetime handling in the call
@@ -79,72 +73,6 @@ _AVG_WEIGHTED = (
 
 # --- argument templates: CH call → Spark SQL with {0},{1},... placeholders --
 TEMPLATES: dict[str, str] = {
-    "intDiv": "(({0}) div ({1}))",
-    "intDivOrZero": "(CASE WHEN ({1}) = 0 THEN 0 ELSE ({0}) div ({1}) END)",
-    "modulo": "(({0}) % ({1}))",
-    "positiveModulo": "pmod({0}, abs({1}))",
-    "negate": "(-({0}))",
-    # Int128/256 carried as BIGINT: values beyond ±2^63 are documented
-    # unsupported (SCALING.md; src/Core/Types.h wide integers) but the
-    # in-range arithmetic the golden corpus exercises is exact
-    "toInt128": "CAST({0} AS BIGINT)",
-    "toInt256": "CAST({0} AS BIGINT)",
-    "toUInt128": "CAST({0} AS BIGINT)",
-    "toUInt256": "CAST({0} AS BIGINT)",
-    # untuple(t) expands the tuple into one column per element
-    # (FunctionUntuple) — Spark's inline generator over a 1-element array
-    "untuple": "inline(array({0}))",
-    # partition ID of a value (partitionId.cpp): numbers render decimal
-    "partitionId": "CAST({0} AS STRING)",
-    "plus": "(({0}) + ({1}))",
-    "minus": "(({0}) - ({1}))",
-    "multiply": "(({0}) * ({1}))",
-    "JSONExtractRaw": "get_json_object({0}, concat('$.', {1}))",
-    # bit ops (src/Functions/bitAnd.cpp et al.)
-    "bitShiftLeft": "shiftleft({0}, CAST({1} AS INT))",
-    "bitShiftRight": "shiftright({0}, CAST({1} AS INT))",
-    "bitTest": "((shiftright({0}, CAST({1} AS INT)) & 1) = 1)",
-    # toFixedString pads to N with NUL bytes (FunctionToFixedString);
-    # the golden TSV escaper prints them as \0 like writeEscapedString
-    # byte-exact pad (CH pads bytes, rpad counts chars). Too-long input
-    # throws TOO_LARGE_STRING_SIZE in the reference (toFixedString.h:101):
-    # constant args get a translate-time check (rewriter special-case); a
-    # runtime raise_error here would fire on rows past a streaming LIMIT
-    # that the reference never materializes, so non-constant input
-    # truncates instead
-    "toFixedString": (
-        "(CASE WHEN octet_length({0}) > ({1}) THEN substr({0}, 1, {1})"
-        " ELSE concat({0}, repeat(char(0), ({1}) - octet_length({0}))) END)"
-    ),
-    # typeof() with Spark→ClickHouse type-name mapping (covers cast results;
-    # ClickHouse literal-inference types like UInt8 are not recoverable)
-    "toTypeName": (
-        "(CASE typeof({0}) WHEN 'bigint' THEN 'Int64' WHEN 'int' THEN 'Int32'"
-        " WHEN 'smallint' THEN 'Int16' WHEN 'tinyint' THEN 'Int8'"
-        " WHEN 'double' THEN 'Float64' WHEN 'float' THEN 'Float32'"
-        " WHEN 'string' THEN 'String' WHEN 'binary' THEN 'String'"
-        " WHEN 'date' THEN 'Date'"
-        " WHEN 'timestamp' THEN 'DateTime' WHEN 'boolean' THEN 'Bool'"
-        " ELSE typeof({0}) END)"
-    ),
-    # scheme-less URLs still parse (a missing protocol just reads empty —
-    # protocol.cpp/path.cpp), so prepend one before java's URI parser
-    "extractURLParameter": "parse_url({0}, 'QUERY', {1})",
-    "domain": (
-        "coalesce(parse_url(CASE WHEN ({0}) RLIKE '^[a-zA-Z][a-zA-Z0-9+.-]*://'"
-        " THEN {0} ELSE concat('http://', {0}) END, 'HOST'), '')"
-    ),
-    "protocol": "coalesce(parse_url({0}, 'PROTOCOL'), '')",
-    "indexOf": "array_position({0}, {1})",
-    # consecutive-duplicate removal (arrayCompact.cpp), NOT array_distinct:
-    # [1,2,1] keeps all three; the reference compares binary reps, so
-    # same-bit nan runs collapse too — Spark's <=> matches except for the
-    # -nan/nan sign distinction, which Spark cannot represent
-    "arrayCompact": (
-        "filter({0}, (__x, __i) -> __i = 0"
-        " OR NOT (__x <=> element_at({0}, greatest(__i, 1))))"
-    ),
-    "arrayUniq": "size(array_distinct({0}))",
     # -Array agg combinators (AggregateFunctionArray.cpp): aggregate over
     # all array elements of all rows
     "sumArray": "sum(aggregate({0}, CAST(0 AS DOUBLE), (acc, x) -> acc + x))",
@@ -156,11 +84,6 @@ TEMPLATES: dict[str, str] = {
     "maxArray": "max(array_max({0}))",
     "avgArray": "(sum(aggregate({0}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)) / sum(size({0})))",
     "arrayCount": "size(filter({0}, x -> x is not null and x != 0))",
-    "JSONExtractString": "get_json_object({0}, concat('$.', {1}))",
-    "JSONExtractInt": "CAST(get_json_object({0}, concat('$.', {1})) AS BIGINT)",
-    "JSONExtractFloat": "CAST(get_json_object({0}, concat('$.', {1})) AS DOUBLE)",
-    "JSONExtractBool": "CAST(get_json_object({0}, concat('$.', {1})) AS BOOLEAN)",
-    "JSONHas": "(get_json_object({0}, concat('$.', {1})) IS NOT NULL)",
     "rand": "CAST(rand(42) * 4294967296 AS BIGINT)",  # seeded: CH CSE makes rand()=rand() true
     "rand64": "CAST(rand(43) * 9.223372036854776e18 AS BIGINT)",
     "any": "first({0}, true)",
@@ -207,8 +130,7 @@ TEMPLATES: dict[str, str] = {
 # Functions whose translation depends on how many arguments were passed; an
 # arity with no entry falls through to the NAME_MAP/default path.
 ARITY_TEMPLATES: dict[str, dict[int, str]] = {
-    # zero-arg forms (count() short form extends to its -State alias;
-    # ignore() with no args is legal and returns 0)
+    # zero-arg form (count() short form extends to its -State alias)
     "countState": {0: "count(*)", 1: "count({0})"},
     # countIf counts rows where the condition holds; a NULL condition never
     # holds, and counting a NULL value contributes 0 (AggregateFunctionIf +
@@ -217,7 +139,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
         1: "count_if(CAST(({0}) AS BOOLEAN))",
         2: "count(CASE WHEN {1} THEN {0} END)",
     },
-    "ignore": {0: "0", 1: "(length(CAST({0} AS STRING)) * 0)"},
     # multi-array form ranks occurrences of equal TUPLES
     # (arrayEnumerateUniq.cpp)
     "arrayEnumerateUniq": {
@@ -232,15 +153,6 @@ ARITY_TEMPLATES: dict[str, dict[int, str]] = {
             " __p -> __p = element_at(arrays_zip({0}, {1}, {2}), __i))))"
         ),
     },
-    # multi-array form counts distinct TUPLES of parallel elements
-    # (arrayUniq.cpp: "if multiple arguments, counts unique tuples")
-    "arrayUniq": {
-        2: "size(array_distinct(arrays_zip({0}, {1})))",
-        3: "size(array_distinct(arrays_zip({0}, {1}, {2})))",
-    },
-    # default precision 12 (geohashEncode.cpp); the 3-arg form resolves to
-    # the registered SQL pandas UDF (functions/sql_udfs.py)
-    "geohashEncode": {2: "geohashEncode({0}, {1}, 12)"},
     # -OrNull / -OrDefault combinators (AggregateFunctionOrFill.h): empty
     # input → NULL / type default. Spark's sum/min/max/avg are already NULL
     # on empty input, so OrNull is the identity there and OrDefault a
@@ -402,7 +314,7 @@ def _looks_predicate(s: str) -> bool:
                 return True
             if tl == "is" and k + 1 < len(toks):
                 return True
-            if tl in ("in", "not") and k > 0:
+            if tl == "not" or (tl == "in" and k > 0):
                 return True
     return False
 
@@ -873,10 +785,12 @@ def _alias_backref_tokens(tokens: list[str], upto: int, ident: str) -> list[str]
 # Expression.sql() and splicing the caller's argument SQL back in. Lambda
 # HOFs render as lambdafunction(body, v…) — rewritten to `v -> body` arrow
 # form below. Templates are validated with the JVM parser and cached per
-# (name, arity); builders whose expression can't round-trip (window specs,
-# Python UDFs) fall through to the old loud-failure path.
+# (name, literal arguments, arity), starting over past _BRIDGE_CACHE_SIZE;
+# builders whose expression can't round-trip (window specs, Python UDFs)
+# fall through to the old loud-failure path.
 
-_BRIDGE_CACHE: dict[tuple[str, int], str | None] = {}
+_BRIDGE_CACHE: dict[tuple[str, tuple], str] = {}
+_BRIDGE_CACHE_SIZE = 4096
 _SPARK_BUILTINS: set[str] | None = None
 # Registry names that a Spark built-in of the same lower-cased name answers
 # differently: the bridge renders the registry's builder for these. hex
@@ -887,7 +801,14 @@ _SPARK_BUILTINS: set[str] | None = None
 _OVER_BUILTINS = frozenset({
     "DAYOFWEEK", "hex", "monthName", "now", "length", "octet_length",
     "char_length", "character_length", "position", "locate", "substring",
-    "substr", "instr",
+    "substr", "instr", "geohashEncode",
+})
+
+# Names whose ClickHouse arguments may be UInt8 comparison results: the
+# arithmetic functions and the numeric aggregates
+_UINT8_ARGS = frozenset({
+    "plus", "minus", "multiply", "modulo", "negate", "positiveModulo",
+    "intDiv", "intDivOrZero", "sum", "avg", "sumCount", "min", "max",
 })
 
 # The session registry calls render on and catalog UDFs register on. ch_sql,
@@ -997,8 +918,9 @@ _STR_LIT_RE = re.compile(r"'(?:[^'\\]|\\.)*'")
 
 
 def _as_py_literal(sql: str):
-    """Parse an argument's SQL into a Python literal if it is one."""
-    s = sql.strip()
+    """Parse an argument's SQL into a Python literal if it is one; translate
+    renders a negative number as `- 1` or `(- 1)`."""
+    s = re.sub(r"^(\()?\s*-\s*([^\s()]+)\s*(?(1)\))$", r"-\2", sql.strip())
     if _NUM_LIT_RE.fullmatch(s):
         return int(s)
     if _FLOAT_LIT_RE.fullmatch(s):
@@ -1180,44 +1102,39 @@ def _registry_bridge(
 
 
 def _bridge_render(spark, fname, builder, arg_sql, params) -> str | None:
-    """The builder's call rendered as SQL, or None when it cannot be."""
+    """The builder's call rendered as SQL, or None when it cannot be.
+
+    A literal-annotated slot takes its argument's Python literal, inlined
+    into the builder call; every other argument renders as a placeholder
+    column and is spliced in as text afterwards (a rendered nested Python
+    UDF argument would otherwise corrupt the SQL). A render is cached per
+    (name, the literal arguments' SQL, arity)."""
     from pyspark.sql import functions as F
 
     bound = _bind(builder, arg_sql, params)
     if bound is None:
         return None
-    subst = {j: a for j, (a, lit) in enumerate(bound) if not lit}
-    if len(subst) == len(bound):
-        # pure-Column call: render once per (name, arity), splice args in
-        key = (fname, len(bound))
-        tpl = _BRIDGE_CACHE.get(key)
-        if tpl is None:
-            # never cache a failed render: _render_call goes through py4j,
-            # so a transient JVM/socket failure would otherwise poison this
-            # (name, arity) for the rest of the process — long scans then
-            # report registered functions as UNRESOLVED_ROUTINE
-            placeholders = [F.col(f"__dlt_a{j}") for j in range(len(bound))]
-            tpl = _render_call(spark, builder, placeholders)
-            if tpl is None:
-                return None
-            # nor a random one: a builder that draws a seed renders a new
-            # text each time, and a cached text would replay its draws in
-            # every query
-            if _render_call(spark, builder, placeholders) == tpl:
-                _BRIDGE_CACHE[key] = tpl
-        return _splice(tpl, subst)
-    # literal-annotated params must be given literal SQL; inline them into
-    # the builder call (template is value-specific — not cached). Non-literal
-    # args go in as PLACEHOLDER columns and are text-spliced afterwards — a
-    # rendered nested py-UDF argument would otherwise corrupt the SQL.
-    args = []
-    for j, (a, lit) in enumerate(bound):
-        v = _as_py_literal(a) if lit else F.col(f"__dlt_a{j}")
-        if v is None:
+    key = (fname, tuple(a if lit else None for a, lit in bound))
+    tpl = _BRIDGE_CACHE.get(key)
+    if tpl is None:
+        args = [_as_py_literal(a) if lit else F.col(f"__dlt_a{j}") for j, (a, lit) in enumerate(bound)]
+        if any(v is None for v in args):
             return None
-        args.append(v)
-    tpl = _render_call(spark, builder, args)
-    return None if tpl is None else _splice(tpl, subst)
+        # never cache a failed render: _render_call goes through py4j, so a
+        # transient JVM/socket failure would otherwise poison this key for
+        # the rest of the process — long scans then report registered
+        # functions as UNRESOLVED_ROUTINE
+        tpl = _render_call(spark, builder, args)
+        if tpl is None:
+            return None
+        # nor a random one: a builder that draws a seed renders a new text
+        # each time, and a cached text would replay its draws in every query
+        if _render_call(spark, builder, args) == tpl:
+            if len(_BRIDGE_CACHE) >= _BRIDGE_CACHE_SIZE:
+                _BRIDGE_CACHE.clear()  # one call, so safe for concurrent translates
+            _BRIDGE_CACHE[key] = tpl
+    return _splice(tpl, {j: a for j, (a, lit) in enumerate(bound) if not lit})
+
 
 # keywords that can precede an array literal (so a following [ is NOT a
 # subscript of them)
@@ -2595,15 +2512,11 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             i = close + 1
             continue
 
-        if (
-            t in ("sum", "avg", "sumCount", "min", "max")
-            and len(arg_sql) == 1
-            and _looks_predicate(arg_sql[0])
-        ):
-            # ClickHouse aggregates UInt8 predicates (`sum(x = 1)` counts
-            # matches); Spark rejects boolean aggregation args
-            arg_sql = [f"CAST(({arg_sql[0]}) AS INT)"]
-            args = [_tokenize(arg_sql[0])]
+        if t in _UINT8_ARGS:
+            # ClickHouse computes over a comparison's UInt8 0/1 (sum(x = 1)
+            # counts matches, minus(a = 1, b = 2)); Spark refuses boolean
+            # operands
+            arg_sql = [f"CAST(({a}) AS INT)" if _looks_predicate(a) else a for a in arg_sql]
 
         if (
             t in ("formatDateTime", "formatDateTimeInJodaSyntax")
@@ -3342,12 +3255,6 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 i = close + 1
                 continue
 
-        if t.lower() == "count" and not arg_sql:
-            # ClickHouse count() is zero-arg (AggregateFunctionCount.cpp)
-            out.append("count(*)")
-            i = close + 1
-            continue
-
         if t == "round":
             # ClickHouse round() is banker's rounding (FunctionsRound.cpp)
             out.append(f"bround({', '.join(arg_sql)})")
@@ -3585,13 +3492,6 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             i = close + 1
             continue
 
-        if t.lower() in ("sum", "avg", "min", "max") and len(arg_sql) == 1 and _is_predicate_sql(arg_sql[0]):
-            # ClickHouse aggregates comparisons/logic as UInt8 0/1
-            # (sum(x = 1) is a row count); Spark rejects booleans here
-            out.append(f"{t.lower()}(CAST(({arg_sql[0]}) AS INT))")
-            i = close + 1
-            continue
-
         if (
             t.lower() in ("avg", "median")
             and len(arg_sql) == 1
@@ -3680,17 +3580,6 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
                 out.append("'" + inferred.replace("'", "''") + "'")
                 i = close + 1
                 continue
-
-        if (
-            t in ("sum", "avg", "min", "max")
-            and len(arg_sql) == 1
-            and _looks_predicate(arg_sql[0])
-        ):
-            # CH aggregates UInt8 comparison results numerically
-            # (sum(x = 0) counts matches); Spark needs the explicit INT cast
-            out.append(f"{NAME_MAP.get(t, t)}(CAST(({arg_sql[0]}) AS INT))")
-            i = close + 1
-            continue
 
         if t == "isConstant" and len(args) == 1:
             # isConstant.cpp: 1 for Const columns. Static inference tracks
@@ -3820,25 +3709,6 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             i = close + 1
             continue
 
-        if t == "intDivOrZero" and len(arg_sql) == 2:
-            # OrZero also covers the overflow case min_int / -1
-            # (src/Functions/DivisionUtils.h checkedDivision): guard it when
-            # the dividend's CH type is statically known
-            _dty = _ch_type(args[0])
-            _mins = {
-                "Int8": -128, "Int16": -32768, "Int32": -2147483648,
-                "Int64": -9223372036854775808,
-            }
-            if _dty in _mins:
-                a0, a1 = arg_sql
-                out.append(
-                    f"(CASE WHEN ({a1}) = 0 THEN 0"
-                    f" WHEN ({a0}) = {_mins[_dty]} AND ({a1}) = -1 THEN 0"
-                    f" ELSE ({a0}) div ({a1}) END)"
-                )
-                i = close + 1
-                continue
-
         if (
             t == "toString"
             and len(arg_sql) == 2
@@ -3946,16 +3816,6 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             continue
 
         if t in TEMPLATES and TEMPLATES[t] is not None and not _has_lambda:
-            if t in (
-                "plus", "minus", "multiply", "negate", "intDiv",
-                "intDivOrZero", "modulo", "positiveModulo",
-            ):
-                # CH arithmetic over UInt8 comparison results is numeric
-                # (minus(a = 1, b = 2)); Spark refuses boolean operands
-                arg_sql = [
-                    f"CAST(({a}) AS INT)" if _looks_predicate(a) else a
-                    for a in arg_sql
-                ]
             out.append(_fill_template(TEMPLATES[t], arg_sql, t))
             i = close + 1
             continue
@@ -5367,28 +5227,16 @@ _FILL_ITEM_RE = re.compile(
 )
 
 
+# a string literal: its quote, its content (a backslash escapes the next
+# character; a backslash that ends the text is content), then its closing
+# quote, or the end of an unterminated literal
+_STRING_LITERAL_RE = re.compile(r"'((?:[^'\\]|\\.)*\\?)('?)", re.DOTALL)
+
+
 def _blank_strings(s: str) -> str:
     """Copy of s with string-literal contents replaced by spaces (indices
     preserved) so clause keywords inside literals never match."""
-    out, in_str, i = [], False, 0
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == "\\" and i + 1 < len(s):
-                out.append("  ")
-                i += 2
-                continue
-            if c == "'":
-                in_str = False
-                out.append(c)
-            else:
-                out.append(" ")
-        else:
-            if c == "'":
-                in_str = True
-            out.append(c)
-        i += 1
-    return "".join(out)
+    return _STRING_LITERAL_RE.sub(lambda m: f"'{' ' * len(m.group(1))}{m.group(2)}", s)
 
 
 def _sub_blank(pattern: str, repl: str, s: str, flags: int = 0) -> str:

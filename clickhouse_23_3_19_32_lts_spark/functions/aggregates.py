@@ -19,29 +19,34 @@ from clickhouse_23_3_19_32_lts_spark.functions.registry import REGISTRY, chfn, c
 
 # -- core --------------------------------------------------------------------
 
+# count, sum, min, max and avg are case-insensitive names
+# (AggregateFunctionFactory::CaseInsensitive in AggregateFunctionCount.cpp,
+# AggregateFunctionSum.cpp, AggregateFunctionMinMaxAny.cpp and
+# AggregateFunctionAvg.cpp), as in standard SQL.
 
-@chfn("count")
+
+@chfn("count", case_insensitive=True)
 def count(c=None) -> Column:
     """count() / count(x) (zero-arg form counts rows)."""
     return F.count(F.lit(1)) if c is None else F.count(col(c))
 
 
-@chfn("sum")
+@chfn("sum", case_insensitive=True)
 def sum_(c) -> Column:
     return F.sum(col(c))
 
 
-@chfn("min")
+@chfn("min", case_insensitive=True)
 def min_(c) -> Column:
     return F.min(col(c))
 
 
-@chfn("max")
+@chfn("max", case_insensitive=True)
 def max_(c) -> Column:
     return F.max(col(c))
 
 
-@chfn("avg")
+@chfn("avg", case_insensitive=True)
 def avg(c) -> Column:
     return F.avg(col(c))
 

@@ -47,22 +47,21 @@ def divide(a, b) -> Column:
 
 @chfn("intDiv")
 def intDiv(a, b) -> Column:
-    """Integer division truncating toward zero (src/Functions/intDiv.cpp:129).
-
-    (a - a % b) / b with C-style %: exact for the full 64-bit range.
-    """
-    return _int_div(col(a), col(b))
-
-
-def _int_div(a: Column, b: Column) -> Column:
-    # (a - a % b) / b with C-style % == truncated division; stays integral,
-    # avoids the double round-trip that loses precision past 2^53.
-    return ((a - a % b) / b).cast("long")
+    """Integer division truncating toward zero (src/Functions/intDiv.cpp):
+    Spark's integral `div`, which takes no DOUBLE, over DECIMAL(38,10). That
+    holds every 64-bit integer exactly, so the quotient is exact over the
+    whole 64-bit range, and a float to ten decimal places."""
+    return F.call_function("div", col(a).cast("decimal(38,10)"), col(b).cast("decimal(38,10)"))
 
 
 @chfn("intDivOrZero")
 def intDivOrZero(a, b) -> Column:
-    return F.when(col(b) == 0, F.lit(0)).otherwise(_int_div(col(a), col(b)))
+    """intDiv, but 0 where it would fail: a zero divisor, or the minimum
+    of the dividend's type over -1 (DivisionUtils.h checkedDivision). The
+    minimum is the one nonzero value that negates to itself."""
+    x, y = col(a), col(b)
+    fails = (y == 0) | ((y == -1) & (x != 0) & (-x == x))
+    return F.when(fails, F.lit(0)).otherwise(intDiv(x, y))
 
 
 @chfn("modulo", "mod")

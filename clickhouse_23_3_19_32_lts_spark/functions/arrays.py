@@ -110,7 +110,12 @@ def hasSubstr(a, b) -> Column:
 
 @chfn("indexOf")
 def indexOf(arr, v) -> Column:
-    return F.coalesce(F.array_position(col(arr), lit_or_col(v)), F.lit(0)).cast("long")
+    """The 1-based position of the first element equal to v, 0 if none; a
+    NULL v finds the first NULL element (array-functions#indexof)."""
+    a, x = col(arr), lit_or_col(v)
+    pos = F.when(x.isNull(), F.array_position(F.transform(a, lambda e: e.isNull()), True))
+    pos = pos.otherwise(F.array_position(a, x))
+    return F.when(a.isNotNull(), F.coalesce(pos, F.lit(0))).cast("long")
 
 
 @chfn("countEqual")
@@ -200,8 +205,11 @@ def arrayReverseSort(arr) -> Column:
 
 
 @chfn("arrayUniq")
-def arrayUniq(arr) -> Column:
-    return F.size(F.array_distinct(col(arr))).cast("long")
+def arrayUniq(*arrs) -> Column:
+    """The number of distinct elements, or of distinct tuples of the
+    elements at one position of several arrays (arrayUniq.cpp)."""
+    a = col(arrs[0]) if len(arrs) == 1 else F.arrays_zip(*[col(x) for x in arrs])
+    return F.array_size(F.array_distinct(a)).cast("long")
 
 
 @chfn("arrayDistinct")
@@ -240,15 +248,10 @@ def arrayFlatten(arr) -> Column:
 
 @chfn("arrayCompact")
 def arrayCompact(arr) -> Column:
-    """Remove *consecutive* duplicates."""
+    """Remove *consecutive* duplicates, comparing NULLs as equal
+    (arrayCompact.cpp)."""
     a = col(arr)
-    idx = _idx1(a)
-    keep = F.filter(
-        idx,
-        lambda i: (i == 1)
-        | ~F.element_at(a, i.cast("int")).eqNullSafe(F.element_at(a, (i - 1).cast("int"))),
-    )
-    return F.transform(keep, lambda i: F.element_at(a, i.cast("int")))
+    return F.filter(a, lambda x, i: (i == 0) | ~x.eqNullSafe(F.get(a, i - 1)))
 
 
 @chfn("arrayZip")

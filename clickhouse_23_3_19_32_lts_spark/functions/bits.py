@@ -39,19 +39,20 @@ def bitNot(a) -> Column:
     return F.bitwise_not(col(a))
 
 
+def _shift(name: str, a, n) -> Column:
+    # Spark's SQL shift functions take a column shift amount; the Python
+    # API's take only a literal
+    return F.call_function(name, col(a), col(n).cast("int"))
+
+
 @chfn("bitShiftLeft")
 def bitShiftLeft(a, n) -> Column:
-    if isinstance(n, int):
-        return F.shiftleft(col(a), n)
-    # Column shift amount: Spark's shiftleft only takes a literal int
-    return (col(a) * F.pow(F.lit(2.0), col(n)).cast("long")).cast("long")
+    return _shift("shiftleft", a, n)
 
 
 @chfn("bitShiftRight")
 def bitShiftRight(a, n) -> Column:
-    if isinstance(n, int):
-        return F.shiftright(col(a), n)
-    return F.floor(col(a) / F.pow(F.lit(2.0), col(n))).cast("long")
+    return _shift("shiftright", a, n)
 
 
 @chfn("bitRotateLeft")
@@ -68,9 +69,8 @@ def bitRotateRight(a, n: int, width: int = 64) -> Column:
 
 @chfn("bitTest")
 def bitTest(a, n) -> Column:
-    if isinstance(n, int):
-        return F.shiftrightunsigned(col(a), n).bitwiseAND(F.lit(1)).cast("int")
-    return (F.floor(col(a) / F.pow(F.lit(2.0), col(n))).cast("long") % 2).cast("int")
+    """Bit n of a, 0 or 1 (UInt8), counting from the lowest."""
+    return _shift("shiftright", a, n).bitwiseAND(F.lit(1)).cast("int")
 
 
 @chfn("bitTestAll")

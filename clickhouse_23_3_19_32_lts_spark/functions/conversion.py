@@ -233,7 +233,15 @@ def fromUnixTimestamp(x, fmt: str | None = None, tz=None) -> Column:
 
 @chfn("toFixedString")
 def toFixedString(x, n: int) -> Column:
-    return F.rpad(col(x).cast("string"), n, "\x00")
+    """x padded with zero bytes to n bytes (FunctionToFixedString). A
+    longer x raises TOO_LARGE_STRING_SIZE in ClickHouse; translate raises
+    it for a constant, and a column value is cut to its first n
+    characters, so that rows a LIMIT never reaches raise nothing."""
+    c = col(x).cast("string")
+    size = F.octet_length(c)
+    return F.when(size > n, F.substring(c, 1, n)).otherwise(
+        F.concat(c, F.repeat(F.char(F.lit(0)), F.lit(n) - size))
+    )
 
 
 # ClickHouse formatDateTime syntax (src/Functions/formatDateTime.cpp:1689)
@@ -395,6 +403,22 @@ def toIntervalYear(n) -> Column:
     return F.make_ym_interval(years=col(n))
 
 
+# Spark type name -> the ClickHouse type a value of it comes from
+_CH_TYPE_NAMES = {
+    "bigint": "Int64", "int": "Int32", "smallint": "Int16", "tinyint": "Int8",
+    "double": "Float64", "float": "Float32", "string": "String", "binary": "String",
+    "date": "Date", "timestamp": "DateTime", "boolean": "Bool",
+}
+
+
 @chfn("toTypeName")
 def toTypeName(x) -> Column:
-    return F.typeof(col(x))
+    """The ClickHouse name of x's runtime type; another Spark type keeps
+    its Spark name. translate names the static type of an argument it can
+    type first (ClickHouse's literal types, such as UInt8, have no Spark
+    type to recover them from)."""
+    t = F.typeof(col(x))
+    out = F
+    for spark_name, ch_name in _CH_TYPE_NAMES.items():
+        out = out.when(t == spark_name, F.lit(ch_name))
+    return out.otherwise(t)

@@ -5,7 +5,9 @@ JSONLength, JSONType), FunctionSQLJSON.cpp + src/Functions/JSONPath/
 (JSON_VALUE/JSON_QUERY/JSON_EXISTS), visitParam (simdjson-free fast path).
 
 ClickHouse paths are (key_or_index, ...) varargs; SQL/JSONPath uses $.a[0].b.
-We normalize both to Spark's get_json_object JSONPath.
+The JSONExtract* functions, JSONHas and JSONLength walk the varargs with
+`_node`; JSONType, JSONExtractKeys and JSONExtractArrayRaw still turn them
+into Spark's get_json_object JSONPath, which indexes arrays only.
 """
 
 from __future__ import annotations
@@ -37,29 +39,95 @@ def _path(*keys) -> str:
     return out
 
 
+# A JSON node is a pair: its text, exact for an object or an array (which
+# is what a further step parses), and its value as a VARIANT, which keeps
+# the JSON type. Spark's from_json keeps an object's members in document
+# order in a map, so the n-th member is the n-th map entry; a VARIANT
+# object sorts its keys, so stepping goes through the text.
+
+
+def _node(j, keys) -> tuple[Column, Column]:
+    """(text, VARIANT) of the value at ``keys`` in the JSON document ``j``
+    (FunctionsJSON.h, "indices_or_keys"): a string selects an object
+    member by key; a positive integer n the n-th array element or object
+    member, a negative one counts from the end, and 0 selects nothing. A
+    missing value has a NULL VARIANT; JSON null is a VARIANT null."""
+    text, value = col(j), None
+    for k in keys:
+        # a step's text of a string member is the bare string: parse only
+        # a container's text
+        inner = text if value is None else F.when(
+            F.schema_of_variant(value).rlike("^(OBJECT|ARRAY)"), text
+        )
+        texts = F.from_json(inner, "map<string,string>")
+        values = F.from_json(inner, "map<string,variant>")
+        if isinstance(k, int):
+            if k == 0:
+                return F.lit(None).cast("string"), F.lit(None).cast("variant")
+            n = F.lit(k)
+            text = F.coalesce(
+                F.try_element_at(F.from_json(inner, "array<string>"), n),
+                F.try_element_at(F.map_values(texts), n),
+            )
+            value = F.coalesce(
+                F.try_element_at(F.from_json(inner, "array<variant>"), n),
+                F.try_element_at(F.map_values(values), n),
+            )
+        else:
+            text, value = texts[k], values[k]
+    return text, F.try_parse_json(text) if value is None else value
+
+
+def _extract(j, keys, pick, default) -> Column:
+    """pick(text, JSON type, VARIANT) of the value at ``keys``, or
+    ``default`` where the value is missing or ``pick`` gives NULL (a wrong
+    type); NULL for a NULL document (functions of NULL are NULL)."""
+    text, value = _node(j, keys)
+    kind = F.schema_of_variant(value)
+    return F.when(col(j).isNotNull(), F.coalesce(pick(text, kind, value), default))
+
+
+def _as(kinds: str, spark_type: str):
+    """A pick: the value as ``spark_type`` where its JSON type matches the
+    regex ``kinds``."""
+    return lambda t, kind, v: F.when(kind.rlike(kinds), F.try_variant_get(v, "$", spark_type))
+
+
+_NUMBER = "^(BIGINT|DOUBLE|DECIMAL)"
+
+
 @chfn("JSONExtractString")
 def JSONExtractString(j, *keys: str | int) -> Column:
-    return F.get_json_object(col(j), _path(*keys))
+    """The string at ``keys``; '' for a missing value or another type."""
+    return _extract(j, keys, lambda t, kind, v: F.when(kind == "STRING", t), F.lit(""))
 
 
 @chfn("JSONExtractInt", "JSONExtractUInt")
 def JSONExtractInt(j, *keys: str | int) -> Column:
-    return F.get_json_object(col(j), _path(*keys)).cast("long")
+    """The number at ``keys`` as an integer; 0 for a missing value or
+    another type (a string is one)."""
+    return _extract(j, keys, _as(_NUMBER, "bigint"), F.lit(0).cast("bigint"))
 
 
 @chfn("JSONExtractFloat")
 def JSONExtractFloat(j, *keys: str | int) -> Column:
-    return F.get_json_object(col(j), _path(*keys)).cast("double")
+    return _extract(j, keys, _as(_NUMBER, "double"), F.lit(0.0))
 
 
 @chfn("JSONExtractBool")
 def JSONExtractBool(j, *keys: str | int) -> Column:
-    return F.get_json_object(col(j), _path(*keys)).cast("boolean")
+    return _extract(j, keys, _as("^BOOLEAN$", "boolean"), F.lit(False))
 
 
 @chfn("JSONExtractRaw")
 def JSONExtractRaw(j, *keys: str | int) -> Column:
-    return F.get_json_object(col(j), _path(*keys))
+    """The value's JSON text: a string keeps its quotes, a container its
+    members in document order; '' for a missing value."""
+    return _extract(
+        j, keys,
+        lambda t, kind, v: F.when(kind.rlike("^(STRING|VOID)"), F.to_json(v)).otherwise(t),
+        F.lit(""),
+    )
 
 
 @chfn("JSONExtractArrayRaw")
@@ -78,16 +146,21 @@ def JSONExtractKeys(j, *keys: str | int) -> Column:
 
 @chfn("JSONHas")
 def JSONHas(j, *keys: str | int) -> Column:
-    return F.get_json_object(col(j), _path(*keys)).isNotNull()
+    """Whether a value, JSON null included, is at ``keys``."""
+    return _extract(j, keys, lambda t, kind, v: v.isNotNull(), F.lit(False))
 
 
 @chfn("JSONLength")
 def JSONLength(j, *keys: str | int) -> Column:
-    target = F.get_json_object(col(j), _path(*keys)) if keys else col(j)
-    return F.coalesce(
-        F.json_array_length(target),
-        F.size(F.json_object_keys(target)).cast("int"),
-    ).cast("long")
+    """The number of elements or members of the array or object at
+    ``keys``; 0 for a scalar or a missing value."""
+    return _extract(
+        j, keys,
+        lambda t, kind, v: F.when(kind.startswith("ARRAY"), F.json_array_length(t))
+        .when(kind.startswith("OBJECT"), F.size(F.json_object_keys(t)))
+        .cast("bigint"),
+        F.lit(0).cast("bigint"),
+    )
 
 
 @chfn("JSONType")

@@ -130,7 +130,8 @@ def tupleElement(t, idx) -> Column:
 
 @chfn("untuple")
 def untuple(t) -> Column:
-    return col(t + ".*" if isinstance(t, str) else t)
+    """One column per tuple element (FunctionUntuple): a generator."""
+    return F.inline(F.array(col(t)))
 
 
 def _tuple_zip(a, b, fn) -> Column:

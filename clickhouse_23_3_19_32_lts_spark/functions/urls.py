@@ -32,7 +32,13 @@ def protocol(u) -> Column:
 
 @chfn("domain")
 def domain(u) -> Column:
-    return F.lower(F.coalesce(F.parse_url(col(u), F.lit("HOST")), F.lit("")))
+    """The host, as written: after the scheme and any user info, before the
+    port, path, query or fragment. The scheme may be missing
+    (url-functions#domain: some.svn-hosting.com:80/repo/trunk gives
+    some.svn-hosting.com)."""
+    return F.regexp_extract(
+        col(u), r"^(?:[a-zA-Z][a-zA-Z0-9+.-]*://|//)?(?:[^/?#@]*@)?([^/:?#@]*)", 1
+    )
 
 
 @chfn("domainWithoutWWW")
@@ -99,7 +105,9 @@ def queryStringAndFragment(u) -> Column:
 
 @chfn("extractURLParameter")
 def extractURLParameter(u, name: str) -> Column:
-    return F.coalesce(F.parse_url(col(u), F.lit("QUERY"), F.lit(name)), F.lit(""))
+    """The first value of parameter ``name``; '' without one."""
+    c = col(u)
+    return F.when(c.isNotNull(), F.coalesce(F.parse_url(c, F.lit("QUERY"), F.lit(name)), F.lit("")))
 
 
 @chfn("extractURLParameters")

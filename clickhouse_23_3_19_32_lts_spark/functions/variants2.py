@@ -183,13 +183,31 @@ def maxIntersectionsPosition(start, end) -> Column:
 @chfn("groupArrayInsertAt")
 def groupArrayInsertAt(value, pos) -> Column:
     """Array with each value at its position (AggregateFunctionGroupArrayInsertAt.h);
-    positions are 0-based, gaps become NULL."""
+    positions are 0-based, gaps become NULL, and the first value collected
+    at a position wins. One sort of the positions and one scan of them;
+    looking each position up in the whole list is quadratic."""
     pairs = F.collect_list(F.struct(col(pos).cast("int").alias("p"), col(value).alias("v")))
-    n = F.coalesce(F.array_max(F.transform(pairs, lambda x: x["p"])) + 1, F.lit(0))
-    return F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: F.element_at(F.filter(pairs, lambda x: x["p"] == i), 1)["v"],
-    )
+
+    def build(ps):
+        order = F.array_sort(F.filter(
+            F.transform(ps, lambda e, i: F.struct(e["p"].alias("p"), i.alias("i"))),
+            lambda e: e["p"] >= 0,
+        ))
+
+        def place(s):
+            firsts = F.filter(s, lambda e, j: (j == 0) | (e["p"] != F.get(s, j - 1)["p"]))
+            return _let(firsts, lambda f: F.flatten(F.transform(f, lambda e, j: F.concat(
+                # NULLs for the positions since the previous value
+                F.array_repeat(
+                    F.when(F.lit(False), F.get(ps, e["i"])["v"]),
+                    e["p"] - F.coalesce(F.get(f, j - 1)["p"], F.lit(-1)) - 1,
+                ),
+                F.array(F.get(ps, e["i"])["v"]),
+            ))))
+
+        return _let(order, place)
+
+    return _let(pairs, build)
 
 
 # --------------------------------------------------------------------------
@@ -1327,7 +1345,12 @@ def filesystemAvailable(disk=None) -> Column:
 
 @chfn("partitionId")
 def partitionId(*args) -> Column:
-    return F.concat_ws("-", *[col(a).cast("string") for a in args])
+    """The ID of the partition the values fall in: integers in decimal,
+    joined by '-' (MergeTreePartition::getID; other types hash there);
+    NULL for a NULL value."""
+    pieces = [F.lit("-")] * (2 * len(args) - 1)
+    pieces[::2] = [col(a).cast("string") for a in args]
+    return F.concat(*pieces)
 
 
 @chfn("hasColumnInTable")
@@ -1409,47 +1432,11 @@ def nullIn(x, arr) -> Column:
 
 
 @chfn("geohashEncode")
-def geohashEncode(lon, lat, precision: int = 12) -> Column:
-    """Exact geohash via pandas UDF (pure-python bit interleave; geo fns are
-    not hot-path in this engine's workloads)."""
-    prec = int(precision)
-
-    @pandas_udf("string")
-    def _enc(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
-        b32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-
-        def one(lo, la):
-            if lo is None or la is None:
-                return None
-            lat_r, lon_r = [-90.0, 90.0], [-180.0, 180.0]
-            bits, ch, even, out = 0, 0, True, []
-            while len(out) < prec:
-                if even:
-                    mid = (lon_r[0] + lon_r[1]) / 2
-                    if lo >= mid:
-                        ch = (ch << 1) | 1
-                        lon_r[0] = mid
-                    else:
-                        ch <<= 1
-                        lon_r[1] = mid
-                else:
-                    mid = (lat_r[0] + lat_r[1]) / 2
-                    if la >= mid:
-                        ch = (ch << 1) | 1
-                        lat_r[0] = mid
-                    else:
-                        ch <<= 1
-                        lat_r[1] = mid
-                even = not even
-                bits += 1
-                if bits == 5:
-                    out.append(b32[ch])
-                    bits, ch = 0, 0
-            return "".join(out)
-
-        return pd.Series([one(a, b) for a, b in zip(lon_s, lat_s)])
-
-    return _enc(col(lon).cast("double"), col(lat).cast("double"))
+def geohashEncode(lon, lat, precision=12) -> Column:
+    """The geohash of (lon, lat), ``precision`` characters long; a precision
+    outside 1..12 is 12 (geohashEncode.cpp). The catalog UDF
+    (functions/sql_udfs.py) encodes."""
+    return udf_call("geohashEncode", col(lon).cast("double"), col(lat).cast("double"), col(precision))
 
 
 @chfn("geohashDecode")

@@ -117,11 +117,12 @@ def test_weighted_quantile_lambdas_read_no_group_invariant(spark, name):
 
 @pytest.mark.parametrize("name, args", [
     ("entropy", ("x",)), ("topK", ("x", 2)), ("topKWeighted", ("x", "w", 2)),
+    ("groupArrayInsertAt", ("x", "w")),
 ])
 def test_value_count_lambdas_read_no_group_invariant(spark, name, args):
-    """entropy and topK count each distinct value with one sort of the
-    group and one scan of its runs: no lambda body re-filters the
-    collected values."""
+    """entropy and topK count each distinct value, and groupArrayInsertAt
+    places each value, with one sort of the group and one scan: no lambda
+    body re-filters the collected values."""
     from pyspark.sql import functions as F
 
     from clickhouse_23_3_19_32_lts_spark import functions as CH

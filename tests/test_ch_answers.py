@@ -308,6 +308,8 @@ AGG_TABLES = {
     ),
     "nulls": "SELECT * FROM VALUES (1, 'x'), (NULL, NULL), (2, NULL) AS t(a, b)",
     "ts": "SELECT TIMESTAMP'2024-03-15 20:00:00' AS ts",
+    # an Int64 column holding -4, an Int32 column holding 2 and a NULL array
+    "cols": "SELECT CAST(-4 AS BIGINT) AS i, 2 AS n, CAST(NULL AS ARRAY<BIGINT>) AS na",
     "entropy": (
         "SELECT * FROM VALUES (1, 'A'), (1, 'A'), (1, 'A'), (1, 'A'), (2, 'B'),"
         " (2, 'B'), (2, 'C'), (2, 'D') AS t(vals, strings)"
@@ -373,6 +375,7 @@ AGG_CALLS = {
     "uniqIf(a, b, a > 0)": (
         "nulls", lambda: CH.uniqIf("a", "b", F.col("a") > 0), 1, f"{AGG}#null-processing",
     ),
+    "anyLast(b)": ("nulls", lambda: CH.anyLast("b"), "x", f"{AGG}#null-processing"),
 }
 
 
@@ -399,6 +402,7 @@ def test_builders_give_the_documented_aggregate(agg_tables, call):
 
 ARRAYS = DOCS + "array-functions"
 ARRAY = "(SELECT array(1, 2) AS a)"
+MAP = "(SELECT map('k', 1) AS m)"
 
 # Calls whose answer's type is checked too: ClickHouse call -> (table, the
 # same call through the builders, or None where no builder takes the
@@ -433,7 +437,155 @@ TYPED_CALLS = {
         "ts", lambda: CH.toTimeZone("ts", "Asia/Shanghai"), dt.datetime(2024, 3, 16, 4),
         "timestamp", f"{DT}#totimezone",
     ),
+    # the select alias of a map has a Map type
+    "length(m)": (MAP, None, 1, "bigint", f"{ARRAYS}#length"),
+    "empty(m)": (MAP, None, False, "boolean", f"{ARRAYS}#empty"),
+    "notEmpty(m)": (MAP, None, True, "boolean", f"{ARRAYS}#notempty"),
 }
+
+JSON = DOCS + "json-functions"
+DOC = """'{"a": "hello", "b": [-100, 200.0, 300]}'"""
+URL = DOCS + "url-functions"
+BITS = DOCS + "bit-functions"
+NULL_RULE = f"{DOCS}#null-processing"
+# a view: its column types reach translate only at run time
+COLS = "cols"
+
+
+def _doc():
+    return F.lit(DOC[1:-1])
+
+
+# Answers of the calls whose dialect-table copy was deleted once the
+# registry's builder gave them. An integer key selects the n-th array
+# element or object member, a negative one counts from the end, and a
+# missing value or one of another type gives the type's default
+# (json-functions, "indices_or_keys"). ClickHouse's UInt8 results are a
+# BOOLEAN for a predicate (JSONHas) and an integer for a value (bitTest).
+TYPED_CALLS.update({
+    # the pages' examples
+    f"JSONExtractString({DOC}, 1)": (
+        COLS, lambda: CH.JSONExtractString(_doc(), 1), "hello", "string",
+        f"{JSON}#jsonextractstringjson-indices_or_keys",
+    ),
+    f"JSONExtractUInt({DOC}, 'b', -1)": (
+        COLS, lambda: CH.JSONExtractUInt(_doc(), "b", -1), 300, "bigint",
+        f"{JSON}#jsonextractuintjson-indices_or_keys",
+    ),
+    f"JSONHas({DOC}, 'b', 4)": (
+        COLS, lambda: CH.JSONHas(_doc(), "b", 4), False, "boolean",
+        f"{JSON}#jsonhasjson-indices_or_keys",
+    ),
+    f"JSONLength({DOC})": (
+        COLS, lambda: CH.JSONLength(_doc()), 2, "bigint",
+        f"{JSON}#jsonlengthjson-indices_or_keys",
+    ),
+    "JSONExtractInt('[1, 2, 3]', 2)": (
+        COLS, lambda: CH.JSONExtractInt(F.lit("[1, 2, 3]"), 2), 2, "bigint",
+        f"{JSON}#jsonextractuintjson-indices_or_keys",
+    ),
+    # a string is not a number: the wrong type gives 0
+    """JSONExtractInt('{"a": "5"}', 'a')""": (
+        COLS, lambda: CH.JSONExtractInt(F.lit('{"a": "5"}'), "a"), 0, "bigint",
+        f"{JSON}#jsonextractuintjson-indices_or_keys",
+    ),
+    "JSONLength(CAST(NULL AS String))": (
+        COLS, lambda: CH.JSONLength(F.lit(None).cast("string")), None, "bigint", NULL_RULE,
+    ),
+    # exact past 2^53
+    "intDiv(9007199254740993, 1)": (
+        COLS, lambda: CH.intDiv(F.lit(9007199254740993), F.lit(1)), 9007199254740993,
+        "bigint", f"{DOCS}arithmetic-functions#intdiv",
+    ),
+    # the page's example: a float divides too
+    "intDiv(toFloat64(1), 0.001)": (
+        COLS, lambda: CH.intDiv(CH.toFloat64(F.lit(1)), F.lit(0.001)), 1000, "bigint",
+        f"{DOCS}arithmetic-functions#intdiv",
+    ),
+    "intDivOrZero(9007199254740993, 1)": (
+        COLS, lambda: CH.intDivOrZero(F.lit(9007199254740993), F.lit(1)), 9007199254740993,
+        "bigint", f"{DOCS}arithmetic-functions#intdivorzero",
+    ),
+    # zero when dividing the minimal negative number by minus one
+    "intDivOrZero(-9223372036854775808, -1)": (
+        COLS, lambda: CH.intDivOrZero(F.lit(-9223372036854775808), F.lit(-1)), 0,
+        "bigint", f"{DOCS}arithmetic-functions#intdivorzero",
+    ),
+    # 2^63 is an Int128 (data-types/int-uint); the wide integers are
+    # DECIMAL(38,0) here (SCALING.md)
+    "toInt128(9223372036854775808)": (
+        COLS, lambda: CH.toInt128(F.lit(decimal.Decimal(2**63))),
+        decimal.Decimal(2**63), "decimal(38,0)", f"{CONV}#toint8163264128256",
+    ),
+    "arrayUniq([1, 1], [1, 2])": (
+        COLS, lambda: CH.arrayUniq(F.array(F.lit(1), F.lit(1)), F.array(F.lit(1), F.lit(2))),
+        2, "bigint", f"{ARRAYS}#arrayuniqarr-",
+    ),
+    # the page's example
+    "indexOf([1, 3, NULL, NULL], NULL)": (
+        COLS, lambda: CH.indexOf(F.array(F.lit(1), F.lit(3), F.lit(None), F.lit(None)), None),
+        3, "bigint", f"{ARRAYS}#indexofarr-x",
+    ),
+    "indexOf(na, 2)": (COLS, lambda: CH.indexOf("na", 2), None, "bigint", NULL_RULE),
+    "arrayCompact(na)": (COLS, lambda: CH.arrayCompact("na"), None, "array<bigint>", NULL_RULE),
+    # the page's three examples
+    "domain('svn+ssh://some.svn-hosting.com:80/repo/trunk')": (
+        COLS, lambda: CH.domain(F.lit("svn+ssh://some.svn-hosting.com:80/repo/trunk")),
+        "some.svn-hosting.com", "string", f"{URL}#domain",
+    ),
+    "domain('some.svn-hosting.com:80/repo/trunk')": (
+        COLS, lambda: CH.domain(F.lit("some.svn-hosting.com:80/repo/trunk")),
+        "some.svn-hosting.com", "string", f"{URL}#domain",
+    ),
+    "domain('https://clickhouse.com/time/')": (
+        COLS, lambda: CH.domain(F.lit("https://clickhouse.com/time/")), "clickhouse.com",
+        "string", f"{URL}#domain",
+    ),
+    # the first of several parameters of one name
+    "extractURLParameter('http://a.b/?k=1&k=2', 'k')": (
+        COLS, lambda: CH.extractURLParameter(F.lit("http://a.b/?k=1&k=2"), "k"), "1",
+        "string", f"{URL}#extracturlparameterurl-name",
+    ),
+    "extractURLParameter(CAST(NULL AS String), 'k')": (
+        COLS, lambda: CH.extractURLParameter(F.lit(None).cast("string"), "k"), None,
+        "string", NULL_RULE,
+    ),
+    "protocol(CAST(NULL AS String))": (
+        COLS, lambda: CH.protocol(F.lit(None).cast("string")), None, "string", NULL_RULE,
+    ),
+    # a column shift amount; bits count from 0 at the right
+    "bitTest(i, n)": (COLS, lambda: CH.bitTest("i", "n"), 1, "int", f"{BITS}#bittest"),
+    # the page's examples
+    "bitTest(43, n)": (COLS, lambda: CH.bitTest(F.lit(43), "n"), 0, "int", f"{BITS}#bittest"),
+    "bitShiftLeft(99, n)": (
+        COLS, lambda: CH.bitShiftLeft(F.lit(99), "n"), 396, "int", f"{BITS}#bitshiftlefta-b",
+    ),
+    "bitShiftRight(101, n)": (
+        COLS, lambda: CH.bitShiftRight(F.lit(101), "n"), 25, "int", f"{BITS}#bitshiftrighta-b",
+    ),
+    # the page's example; a String
+    "base64Decode('Y2xpY2tob3VzZQ==')": (
+        COLS, lambda: CH.base64Decode(F.lit("Y2xpY2tob3VzZQ==")), "clickhouse", "string",
+        f"{DOCS}encoding-functions#base64decode",
+    ),
+    # accepts any arguments, NULL included, and always returns 0
+    "ignore(NULL)": (COLS, lambda: CH.ignore(F.lit(None)), 0, "int", f"{DOCS}other-functions#ignore"),
+    # the page's example at the default precision, 12
+    "geohashEncode(-5.60302734375, 42.593994140625)": (
+        COLS, lambda: CH.geohashEncode(F.lit(-5.60302734375), F.lit(42.593994140625)),
+        "ezs42d000000", "string", f"{DOCS}geo/geohash#geohashencode",
+    ),
+    # Int64 is Spark's BIGINT
+    "toTypeName(i)": (
+        COLS, lambda: CH.toTypeName("i"), "Int64", "string", f"{DOCS}other-functions#totypename",
+    ),
+    # padded with zero bytes to N bytes; 'абв' is 6 bytes
+    "toFixedString('абв', 7)": (
+        COLS, lambda: CH.toFixedString(F.lit("абв"), 7), "абв\x00", "string",
+        f"{CONV}#tofixedstrings-n",
+    ),
+    "partitionId(NULL)": (COLS, lambda: CH.partitionId(F.lit(None)), None, "string", NULL_RULE),
+})
 
 
 def _answer_and_type(df):
@@ -452,6 +604,14 @@ def test_builders_give_the_documented_type(agg_tables, call):
     table, build, want, want_type, _ = TYPED_CALLS[call]
     df = agg_tables.sql(f"SELECT * FROM {table}").select(build().alias("v"))
     assert _answer_and_type(df) == (want, want_type)
+
+
+def test_untuple_expands_the_tuple(spark):
+    """untuple gives one column per element (tuple-functions#untuple)."""
+    want = [(1, "a")]
+    assert [tuple(r) for r in ch_sql(spark, "SELECT untuple(tuple(1, 'a'))").collect()] == want
+    got = spark.range(1).select(CH.untuple(CH.tuple_(F.lit(1), F.lit("a")))).collect()
+    assert [tuple(r) for r in got] == want
 
 
 def test_an_unbindable_parametric_call_names_the_function(spark):

@@ -16,7 +16,10 @@ from clickhouse_23_3_19_32_lts_spark.dialect import ChSqlError, ch_sql, translat
     "ch, expected",
     [
         ("SELECT toYear(d) FROM t", "SELECT year(d) FROM t"),
-        ("SELECT intDiv(a, b) FROM t", "SELECT ((a) div (b)) FROM t"),
+        (
+            "SELECT intDiv(a, b) FROM t",
+            "SELECT div(CAST(a AS DECIMAL(38,10)), CAST(b AS DECIMAL(38,10))) FROM t",
+        ),
         ("SELECT toString(x) FROM t", "SELECT CAST(x AS STRING) FROM t"),
         ("SELECT count() FROM t", "SELECT count(*) FROM t"),
         ("SELECT x FROM t WHERE a == 1", "SELECT x FROM t WHERE a = 1"),
@@ -52,6 +55,44 @@ from clickhouse_23_3_19_32_lts_spark.dialect import ChSqlError, ch_sql, translat
 def test_translate_strings(spark, ch, expected):
     # registry functions render through the bridge, on the active session
     assert translate(ch) == expected
+
+
+def _blank_strings_by_character(s: str) -> str:
+    """The character loop _blank_strings was before it became one regex
+    substitution: the reference its output must equal."""
+    out, in_str, i = [], False, 0
+    while i < len(s):
+        c = s[i]
+        if in_str:
+            if c == "\\" and i + 1 < len(s):
+                out.append("  ")
+                i += 2
+                continue
+            if c == "'":
+                in_str = False
+                out.append(c)
+            else:
+                out.append(" ")
+        else:
+            if c == "'":
+                in_str = True
+            out.append(c)
+        i += 1
+    return "".join(out)
+
+
+def test_blank_strings_matches_the_character_loop():
+    """Quotes, backslash escapes, a backslash at the end and unterminated
+    literals, in random texts of every length up to 12."""
+    import random
+
+    from clickhouse_23_3_19_32_lts_spark.dialect import _blank_strings
+
+    rng = random.Random(19)
+    texts = ["", "'", "\\", "'\\", "'a\\'b'", "x 'it''s' y", "'open", "SELECT 'a\nb' AS s"]
+    texts += ["".join(rng.choice("ab'\\\n ") for _ in range(rng.randint(0, 12))) for _ in range(20000)]
+    for s in texts:
+        assert _blank_strings(s) == _blank_strings_by_character(s), repr(s)
 
 
 def test_unsupported_constructs_raise():

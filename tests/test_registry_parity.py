@@ -20,8 +20,10 @@ import re
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 
 from clickhouse_23_3_19_32_lts_spark import dialect as D
+from clickhouse_23_3_19_32_lts_spark import functions as CH
 from clickhouse_23_3_19_32_lts_spark.dialect import _registry_bridge, ch_sql
 from clickhouse_23_3_19_32_lts_spark.engine import Engine
 from clickhouse_23_3_19_32_lts_spark.functions import REGISTRY
@@ -57,9 +59,6 @@ TABLES = {
 
 DIFFERS = "answers differ"
 NO_RENDER = "the bridge cannot render the call shape"
-# tests/test_dialect.py::test_translate_strings expects the table's text,
-# and the bridge renders another form
-PINNED = "an existing test pins the table's rendering"
 # two random draws never agree, so these compare the result type and whether
 # a second query repeats the first: the table's copy draws from a literal
 # seed, the bridge from a seed per call
@@ -68,54 +67,17 @@ RANDOM = "the result type or the seeding differs"
 # (table, name) -> (reason, a call that shows the reason on the probe table,
 # in a shape ClickHouse accepts; uniqMerge reads an array column as its state)
 KEPT = {
-    ("NAME_MAP", "JSONLength"): (DIFFERS, "JSONLength(j)"),
-    ("NAME_MAP", "anyLast"): (DIFFERS, "anyLast(if(k = 6, NULL, i))"),
-    ("NAME_MAP", "base64Decode"): (DIFFERS, "base64Decode('YWJj')"),
     ("NAME_MAP", "xxHash32"): (NO_RENDER, "xxHash32(s)"),
-    ("TEMPLATES", "JSONExtractBool"): (DIFFERS, "JSONExtractBool(j, 1)"),
-    ("TEMPLATES", "JSONExtractFloat"): (DIFFERS, "JSONExtractFloat(j, 2)"),
-    ("TEMPLATES", "JSONExtractInt"): (DIFFERS, "JSONExtractInt(j, 2)"),
-    ("TEMPLATES", "JSONExtractRaw"): (DIFFERS, "JSONExtractRaw(j, 2)"),
-    ("TEMPLATES", "JSONExtractString"): (DIFFERS, "JSONExtractString(j, 2)"),
-    ("TEMPLATES", "JSONHas"): (DIFFERS, "JSONHas(j, 2)"),
     ("TEMPLATES", "any"): (NO_RENDER, "any(i)"),
-    ("TEMPLATES", "arrayCompact"): (DIFFERS, "arrayCompact(a)"),
     ("TEMPLATES", "arrayCount"): (NO_RENDER, "arrayCount(a)"),
-    ("TEMPLATES", "arrayUniq"): (DIFFERS, "arrayUniq(a)"),
-    ("TEMPLATES", "bitShiftLeft"): (DIFFERS, "bitShiftLeft(5, 3)"),
-    ("TEMPLATES", "bitShiftRight"): (DIFFERS, "bitShiftRight(300, 3)"),
-    ("TEMPLATES", "bitTest"): (DIFFERS, "bitTest(i, 2)"),
-    ("TEMPLATES", "domain"): (DIFFERS, "domain(u)"),
-    ("TEMPLATES", "extractURLParameter"): (DIFFERS, "extractURLParameter(u, 'x')"),
-    ("TEMPLATES", "indexOf"): (DIFFERS, "indexOf(a, 2)"),
-    ("TEMPLATES", "intDiv"): (PINNED, "intDiv(i, 2)"),
-    ("TEMPLATES", "intDivOrZero"): (DIFFERS, "intDivOrZero(9007199254740993, 1)"),
-    ("TEMPLATES", "minus"): (NO_RENDER, "minus(i = 5, k = 2)"),
-    ("TEMPLATES", "modulo"): (NO_RENDER, "modulo(i = 5, 2)"),
-    ("TEMPLATES", "multiply"): (NO_RENDER, "multiply(i = 5, 2)"),
-    ("TEMPLATES", "negate"): (NO_RENDER, "negate(i = 5)"),
-    ("TEMPLATES", "partitionId"): (DIFFERS, "partitionId(i)"),
-    ("TEMPLATES", "plus"): (NO_RENDER, "plus(i = 5, k = 2)"),
-    ("TEMPLATES", "positiveModulo"): (NO_RENDER, "positiveModulo(i = 5, 2)"),
-    ("TEMPLATES", "protocol"): (DIFFERS, "protocol(u)"),
     ("TEMPLATES", "rand"): (RANDOM, "rand()"),
     ("TEMPLATES", "rand64"): (RANDOM, "rand64()"),
-    ("TEMPLATES", "toFixedString"): (DIFFERS, "toFixedString('абв', 4)"),
-    ("TEMPLATES", "toInt128"): (DIFFERS, "toInt128(i)"),
-    ("TEMPLATES", "toInt256"): (DIFFERS, "toInt256(i)"),
-    ("TEMPLATES", "toTypeName"): (DIFFERS, "toTypeName(i)"),
-    ("TEMPLATES", "toUInt128"): (DIFFERS, "toUInt128(i)"),
-    ("TEMPLATES", "toUInt256"): (DIFFERS, "toUInt256(i)"),
     ("TEMPLATES", "uniqMerge"): (NO_RENDER, "uniqMerge(a)"),
     ("TEMPLATES", "uniqState"): (DIFFERS, "uniqState(i)"),
-    ("TEMPLATES", "untuple"): (DIFFERS, "untuple(tuple(i, s))"),
     ("ARITY_TEMPLATES", "arrayEnumerateUniq"): (NO_RENDER, "arrayEnumerateUniq(a, a)"),
-    ("ARITY_TEMPLATES", "arrayUniq"): (DIFFERS, "arrayUniq([1, 1], [1, 2])"),
     ("ARITY_TEMPLATES", "countIf"): (NO_RENDER, "countIf(i, i > 0)"),
     ("ARITY_TEMPLATES", "countState"): (NO_RENDER, "countState()"),
-    ("ARITY_TEMPLATES", "geohashEncode"): (DIFFERS, "geohashEncode(f, f)"),
     ("ARITY_TEMPLATES", "if"): (NO_RENDER, "if(i, s, 'z')"),
-    ("ARITY_TEMPLATES", "ignore"): (DIFFERS, "ignore(i)"),
     ("ARITY_TEMPLATES", "range"): (NO_RENDER, "range(5)"),
     ("PARAMETRIC", "groupArrayMovingAvg"): (NO_RENDER, "groupArrayMovingAvg(2)(i)"),
     ("PARAMETRIC", "groupArrayMovingSum"): (NO_RENDER, "groupArrayMovingSum(2)(i)"),
@@ -124,17 +86,25 @@ KEPT = {
 
 # Entries deleted once ClickHouse's documented answer settled the difference
 # (tests/test_ch_answers.py checks the answers), or once the bridge rendered
-# the table's text (toYear, uniq, toString) or the parametric call shape.
+# the table's text (toYear, uniq, toString), the parametric call shape or
+# arithmetic over comparisons (translate casts their UInt8 results for the
+# bridge).
 # Each keeps its test_kept_reason_holds case, which checks that the
 # registry is now the name's one definition.
 SETTLED = [
     (table, name)
     for table, names in {
         "NAME_MAP": (
-            "fromUnixTimestamp lengthUTF8 toHour toMinute toSecond "
-            "toUnixTimestamp toYear uniq"
+            "JSONLength anyLast base64Decode fromUnixTimestamp lengthUTF8 toHour "
+            "toMinute toSecond toUnixTimestamp toYear uniq"
         ),
         "TEMPLATES": (
+            "JSONExtractBool JSONExtractFloat JSONExtractInt JSONExtractRaw "
+            "JSONExtractString JSONHas arrayCompact arrayUniq bitShiftLeft "
+            "bitShiftRight bitTest domain extractURLParameter indexOf intDiv "
+            "intDivOrZero minus modulo multiply negate partitionId plus "
+            "positiveModulo protocol toFixedString toInt128 toInt256 toTypeName "
+            "toUInt128 toUInt256 untuple "
             "DAYOFWEEK empty fromUnixTimestamp64Micro fromUnixTimestamp64Milli "
             "fromUnixTimestamp64Nano hex monthName notEmpty "
             "positionCaseInsensitive positionCaseInsensitiveUTF8 positionUTF8 "
@@ -145,7 +115,7 @@ SETTLED = [
             "toYYYYMMDD"
         ),
         "ARITY_TEMPLATES": (
-            "addDays now parseDateTime32BestEffort "
+            "addDays arrayUniq geohashEncode ignore now parseDateTime32BestEffort "
             "parseDateTime32BestEffortOrNull parseDateTime32BestEffortOrZero "
             "parseDateTime64BestEffort parseDateTime64BestEffortOrNull "
             "parseDateTime64BestEffortOrZero parseDateTime64BestEffortUS "
@@ -366,9 +336,7 @@ def test_kept_reason_holds(probe, table, name):
     reason, call = KEPT[(table, name)]
     status, table_sql, bridged_sql = _status(probe, table, name, call)
     detail = f"{call}: table {table_sql!r}, without the entry {bridged_sql!r}"
-    if reason == PINNED:
-        assert bridged_sql != table_sql, f"the bridge now renders the pinned text; {detail}"
-    elif reason == RANDOM:
+    if reason == RANDOM:
         with_entry, without = _seeding(probe, table, name, call)
         assert with_entry != without, f"both (type, repeats) {with_entry}; {detail}"
     elif reason == DIFFERS:
@@ -441,3 +409,92 @@ def test_deleted_entry_row_calls_keep_their_answers(probe, call):
 def test_deleted_entry_aggregate_calls_keep_their_answers(probe, call):
     got = ch_sql(probe, f"SELECT {call} AS v FROM __probe").collect()
     assert [_norm(r["v"]) for r in got] == [_norm(AGGREGATE_CALLS[call])]
+
+
+# --- one definition of each settled name ---------------------------------------
+
+# A call of each of the 36 names whose last table entries were settled
+# together (37 entries: arrayUniq had two), with the same call through its
+# builder; a row call reads the probe's columns. ch_sql must
+# give the builder's answer on every probe row: a _rewrite branch that
+# renders the call before the bridge shows here.
+ONE_DEFINITION = {
+    "JSONExtractBool(j, 'b')": lambda: CH.JSONExtractBool("j", "b"),
+    "JSONExtractFloat(j, 'f')": lambda: CH.JSONExtractFloat("j", "f"),
+    "JSONExtractInt(j, 2)": lambda: CH.JSONExtractInt("j", 2),
+    "JSONExtractRaw(j, -1)": lambda: CH.JSONExtractRaw("j", -1),
+    "JSONExtractString(j, 's')": lambda: CH.JSONExtractString("j", "s"),
+    "JSONHas(j, 'a', 2)": lambda: CH.JSONHas("j", "a", 2),
+    "JSONLength(j)": lambda: CH.JSONLength("j"),
+    "arrayCompact(a)": lambda: CH.arrayCompact("a"),
+    "arrayUniq(a)": lambda: CH.arrayUniq("a"),
+    "arrayUniq(a, a)": lambda: CH.arrayUniq("a", "a"),
+    "base64Decode('YWJj')": lambda: CH.base64Decode(F.lit("YWJj")),
+    "bitShiftLeft(i, k)": lambda: CH.bitShiftLeft("i", "k"),
+    "bitShiftRight(i, k)": lambda: CH.bitShiftRight("i", "k"),
+    "bitTest(i, k)": lambda: CH.bitTest("i", "k"),
+    "domain(u)": lambda: CH.domain("u"),
+    "extractURLParameter(u, 'k')": lambda: CH.extractURLParameter("u", "k"),
+    "geohashEncode(f, f)": lambda: CH.geohashEncode("f", "f"),
+    "ignore(i)": lambda: CH.ignore("i"),
+    "indexOf(a, 2)": lambda: CH.indexOf("a", 2),
+    "intDiv(i, k)": lambda: CH.intDiv("i", "k"),
+    "intDivOrZero(i, k - 2)": lambda: CH.intDivOrZero("i", F.col("k") - 2),
+    "minus(i, k)": lambda: CH.minus("i", "k"),
+    "modulo(i, k)": lambda: CH.modulo("i", "k"),
+    "multiply(i, k)": lambda: CH.multiply("i", "k"),
+    "negate(i)": lambda: CH.negate("i"),
+    "partitionId(i, k)": lambda: CH.partitionId("i", "k"),
+    "plus(i, k)": lambda: CH.plus("i", "k"),
+    "positiveModulo(i, k)": lambda: CH.positiveModulo("i", "k"),
+    "protocol(u)": lambda: CH.protocol("u"),
+    "toFixedString(s, 4)": lambda: CH.toFixedString("s", 4),
+    "toInt128(i)": lambda: CH.toInt128("i"),
+    "toInt256(i)": lambda: CH.toInt256("i"),
+    "toTypeName(i)": lambda: CH.toTypeName("i"),
+    "toUInt128(i)": lambda: CH.toUInt128("i"),
+    "toUInt256(i)": lambda: CH.toUInt256("i"),
+    "untuple(tuple(i, s))": lambda: CH.untuple(CH.tuple_("i", "s")),
+}
+ONE_DEFINITION_AGGREGATES = {
+    "anyLast(if(k = 6, NULL, i))": lambda: CH.anyLast(F.when(F.col("k") != 6, F.col("i"))),
+}
+
+
+def _rows(df) -> list:
+    return sorted((_norm(list(r)) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("call", sorted(ONE_DEFINITION))
+def test_ch_sql_gives_the_builders_answer(probe, call):
+    got = _rows(ch_sql(probe, f"SELECT k, {call} FROM __probe"))
+    want = _rows(probe.table("__probe").select("k", ONE_DEFINITION[call]()))
+    assert got == want
+
+
+@pytest.mark.parametrize("call", sorted(ONE_DEFINITION_AGGREGATES))
+def test_ch_sql_gives_the_builders_aggregate(probe, call):
+    got = _rows(ch_sql(probe, f"SELECT {call} FROM __probe"))
+    want = _rows(probe.table("__probe").select(ONE_DEFINITION_AGGREGATES[call]()))
+    assert got == want
+
+
+# Arithmetic and aggregates over comparisons: ClickHouse computes over
+# their UInt8 0/1, and translate casts them before the bridge (the
+# answers the deleted table entries gave on the probe).
+UINT8_CALLS = {
+    "plus(i = 5, k = 2)": [1, 1, None, 0, 0, 1],
+    "minus(i = 5, k = 2)": [1, -1, None, 0, 0, 1],
+    "negate(i = 5)": [-1, 0, None, 0, 0, -1],
+}
+
+
+@pytest.mark.parametrize("call", sorted(UINT8_CALLS))
+def test_arithmetic_over_comparisons(probe, call):
+    got = ch_sql(probe, f"SELECT {call} AS v FROM __probe ORDER BY k").collect()
+    assert [r["v"] for r in got] == UINT8_CALLS[call]
+
+
+def test_aggregates_over_comparisons(probe):
+    got = ch_sql(probe, "SELECT SUM(k = 2) AS a, sum(i > 0) AS b, Avg(k > 3) AS c FROM __probe")
+    assert [tuple(r) for r in got.collect()] == [(1, 3, 0.5)]

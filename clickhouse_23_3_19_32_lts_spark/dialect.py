@@ -26,6 +26,7 @@ from __future__ import annotations
 import contextlib
 import contextvars
 import dataclasses
+import functools
 import re
 
 from clickhouse_23_3_19_32_lts_spark.chtypes import resolve_function as _resolve, static_type
@@ -1879,7 +1880,539 @@ def _rewrite_ternary_tokens(tokens: list[str], _guard: int = 0) -> list[str]:
     return _rewrite_ternary_tokens(new, _guard + 1)
 
 
+# --- _rewrite: token rules, the handler table, the generic call tail --------
+# See the module docstring ("How a call is rendered").
+
+
+def _after_value(out: list[str]) -> bool:
+    """The output so far does not end in `.` or `AS`: a keyword-shaped
+    token here starts an expression rather than naming a field or alias."""
+    return not out or (out[-1] != "." and out[-1].lower() != "as")
+
+
+def _tok_float_literal(tokens, i, out, clause):
+    t = tokens[i]
+    if (
+        t.lower() in ("nan", "inf", "infinity")
+        and (i + 1 >= len(tokens) or tokens[i + 1] != "(")
+        and _after_value(out)
+    ):
+        # ClickHouse float literals (ParserNumber: nan/inf, any case)
+        lit = "NaN" if t.lower() == "nan" else "Infinity"
+        out.append(f"CAST('{lit}' AS DOUBLE)")
+        return i + 1
+    return None
+
+
+def _tok_map_literal(tokens, i, out, clause):
+    if tokens[i] != "{":
+        return None
+    # Map literal {'k': v, ...} (ParserMapOfLiterals) → map(k, v, …)
+    d2 = 0
+    end_b = -1
+    for k in range(i + 1, len(tokens)):
+        if tokens[k] == "{":
+            d2 += 1
+        elif tokens[k] == "}":
+            if d2 == 0:
+                end_b = k
+                break
+            d2 -= 1
+    if end_b <= 0:
+        return None
+    pairs: list[str] = []
+    for ent in _split_args(tokens[i + 1 : end_b]):
+        dd = 0
+        cpos = -1
+        for kk, tk in enumerate(ent):
+            if tk in ("(", "[", "{"):
+                dd += 1
+            elif tk in (")", "]", "}"):
+                dd -= 1
+            elif tk == ":" and dd == 0:
+                cpos = kk
+                break
+        if cpos < 0:
+            return None
+        pairs.append(_rewrite(ent[:cpos], "val"))
+        pairs.append(_rewrite(ent[cpos + 1:], "val"))
+    out.append(f"map({', '.join(pairs)})")
+    return end_b + 1
+
+
+_INTERVAL_UNITS = {
+    "second": 6, "minute": 5, "hour": 4, "day": 3, "week": 2,
+    "month": 1, "year": 0,
+}
+_INTERVAL_FRAC = {"millisecond": 1e3, "microsecond": 1e6, "nanosecond": 1e9}
+
+
+def _tok_interval(tokens, i, out, clause):
+    if not (
+        tokens[i].lower() == "interval"
+        and i + 1 < len(tokens)
+        and tokens[i + 1] != "("
+        and _after_value(out)
+    ):
+        return None
+    # INTERVAL <expr> <unit> (ParserIntervalOperatorExpression): ClickHouse
+    # allows arbitrary expressions and sub-second/quarter units; Spark's
+    # literal form only takes integer literals with standard units.
+    # Literal+standard stays verbatim; everything else becomes
+    # make_interval().
+    d = 0
+    unit_idx = -1
+    k = i + 1
+    while k < len(tokens):
+        tk = tokens[k]
+        if tk in ("(", "["):
+            d += 1
+        elif tk in (")", "]"):
+            if d == 0:
+                break
+            d -= 1
+        elif d == 0 and tk == ",":
+            break
+        elif d == 0:
+            low = tk.lower().rstrip("s") if tk.lower().endswith("s") else tk.lower()
+            if low in _INTERVAL_UNITS or low in _INTERVAL_FRAC or low == "quarter":
+                unit_idx = k
+                break
+        k += 1
+    if unit_idx <= i + 1:
+        return None
+    unit = tokens[unit_idx].lower()
+    if unit.endswith("s"):
+        unit = unit[:-1]
+    expr_toks = tokens[i + 1 : unit_idx]
+    is_lit = len(expr_toks) == 1 and re.fullmatch(r"\d+", expr_toks[0])
+    if is_lit and unit in _INTERVAL_UNITS:
+        out.append(f"INTERVAL {expr_toks[0]} {unit.upper()}")
+    else:
+        e = _rewrite(expr_toks, "val")
+        args = ["0"] * 7
+        if unit == "quarter":
+            args[1] = f"CAST(3 * ({e}) AS INT)"
+        elif unit in _INTERVAL_FRAC:
+            args[6] = f"CAST(({e}) / {_INTERVAL_FRAC[unit]} AS DECIMAL(18, 6))"
+        else:
+            pos = _INTERVAL_UNITS[unit]
+            args[pos] = f"CAST({e} AS DECIMAL(18, 6))" if pos == 6 else f"CAST({e} AS INT)"
+        out.append(f"make_interval({', '.join(args)})")
+    return unit_idx + 1
+
+
+def _tok_system_table(tokens, i, out, clause):
+    if not (
+        tokens[i].lower() == "system"
+        and i + 2 < len(tokens)
+        and tokens[i + 1] == "."
+        and tokens[i + 2].lower() in ("numbers", "numbers_mt", "one", "zeros")
+        and (i + 3 >= len(tokens) or tokens[i + 3] != "(")
+        and (not out or out[-1] != ".")
+    ):
+        return None
+    # system.numbers / system.one / system.zeros virtual tables
+    # (StorageSystemNumbers.cpp, StorageSystemOne.cpp). ClickHouse's
+    # system.numbers is an unbounded stream consumed lazily under LIMIT;
+    # Spark needs a bound — 1e8 rows covers every golden test's LIMIT and
+    # stays lazy under CollectLimit.
+    nm = tokens[i + 2].lower()
+    if nm == "one":
+        out.append("(SELECT CAST(0 AS INT) AS dummy)")
+    elif nm == "zeros":
+        out.append("(SELECT CAST(0 AS INT) AS zero FROM range(100000000))")
+    else:
+        out.append("(SELECT id AS number FROM range(100000000))")
+    return i + 3
+
+
+def _tok_divide_by_zero(tokens, i, out, clause):
+    if not (tokens[i] == "/" and out and i + 1 < len(tokens)):
+        return None
+    # division by a LITERAL zero: ClickHouse '/' is IEEE float division
+    # (0/0 = nan, x/0 = ±inf — DivisionUtils.h); Spark returns NULL. Only
+    # literal-zero divisors rewrite — anything else keeps native division
+    # (and its decimal typing).
+    j = i + 1
+    neg = False
+    if tokens[j] in ("-", "+") and j + 1 < len(tokens):
+        neg = tokens[j] == "-"
+        j += 1
+    ztok = tokens[j]
+    is_zero = bool(re.fullmatch(r"0+(\.0*)?", ztok))
+    j += 1
+    if is_zero and j < len(tokens) and tokens[j] == "." and (
+        j + 1 >= len(tokens) or not re.match(r"[0-9A-Za-z_]", tokens[j + 1])
+    ):
+        j += 1  # trailing dot of `0.`
+    if out[-1] == "." and len(out) >= 2 and re.fullmatch(r"\d+", out[-2]):
+        # `0. / x` — rejoin the trailing-dot float literal
+        out[-2:] = [out[-2] + ".0"]
+    prev = out[-1]
+    left_ok = bool(
+        re.fullmatch(r"[A-Za-z_][\w.]*", prev)
+        or re.fullmatch(r"\d+(\.\d+)?", prev)
+        or (prev.endswith(")") and "(" in prev)
+    ) and (len(out) < 2 or out[-2][-1:] not in (".", ")", "]"))
+    if not (is_zero and left_ok):
+        return None
+    left = out.pop()
+    pinf, ninf = "CAST('Infinity' AS DOUBLE)", "CAST('-Infinity' AS DOUBLE)"
+    if neg:
+        pinf, ninf = ninf, pinf
+    out.append(
+        f"(CASE WHEN {left} IS NULL THEN CAST(NULL AS DOUBLE)"
+        f" WHEN CAST({left} AS DOUBLE) = 0.0 OR isnan(CAST({left} AS DOUBLE))"
+        f" THEN CAST('NaN' AS DOUBLE)"
+        f" WHEN CAST({left} AS DOUBLE) > 0.0 THEN {pinf}"
+        f" ELSE {ninf} END)"
+    )
+    return j
+
+
+def _tok_cast_operator(tokens, i, out, clause):
+    if tokens[i] != "::":
+        return None
+    # x :: Type (ParserCastOperator.cpp) — consume the type tokens
+    j = i + 1
+    if j >= len(tokens) or not _IDENT_RE.fullmatch(tokens[j]):
+        raise ChSqlError(":: needs a type name")
+    tname = tokens[j]
+    j += 1
+    if j < len(tokens) and tokens[j] == "(":
+        close = _find_call_end(tokens, j)
+        tname += "".join(tokens[j : close + 1])
+        j = close + 1
+    try:
+        spark_t = ch_type_to_spark(tname)
+    except ChSqlError:
+        spark_t = tname  # already a Spark type name
+    operand = _pop_operand(out)
+    # the call-merging pass folds `SELECT (expr)` into one element; peel
+    # statement keywords back off before casting the operand
+    km = re.match(
+        r"(?i)^(select|where|prewhere|when|then|else|from|having|by|on|union)"
+        r"\s*\((.*)\)$",
+        operand,
+        re.DOTALL,
+    )
+    if km:
+        out.append(km.group(1))
+        operand = f"({km.group(2)})"
+    if spark_t.upper() == "STRING" and re.match(
+        r"\(?\s*(?:h3CellArea|h3ExactEdgeLength)",
+        operand,
+    ):
+        # Spark's double->string cast goes scientific below 1e-3;
+        # ClickHouse prints shortest decimal. These known double-producing
+        # UDFs route through the CH formatter.
+        out.append(f"ch_f64_str({operand})")
+    else:
+        out.append(f"CAST({operand} AS {spark_t})")
+    return j
+
+
+def _tok_bracket(tokens, i, out, clause):
+    if tokens[i] != "[":
+        return None
+    close = _find_bracket_end(tokens, i)
+    inner_sql = [_rewrite(a) for a in _split_args(tokens[i + 1 : close])]
+    prev = out[-1] if out else ""
+    # after an identifier/)/]: subscript (CH 1-based → element_at);
+    # otherwise an array literal (Spark SQL has no [..] literal)
+    prev_is_ident = bool(_IDENT_RE.fullmatch(prev)) and prev.lower() not in _KEYWORDS
+    if prev and (prev.endswith(")") or prev.endswith("]") or prev_is_ident):
+        if len(inner_sql) != 1:
+            raise ChSqlError("subscript needs one index")
+        base = out.pop()
+        if _CALL.get().safe_subscript:
+            idx = inner_sql[0]
+            out.append(
+                f"(CASE WHEN ({idx}) <> 0 THEN try_element_at({base}, CAST({idx} AS INT)) END)"
+            )
+        else:
+            out.append(f"element_at({base}, {inner_sql[0]})")
+    else:
+        out.append(f"array({', '.join(inner_sql)})")
+    return close + 1
+
+
+def _tok_like_pattern(tokens, i, out, clause):
+    t = tokens[i]
+    if not (t.lower() in ("like", "ilike") and i + 1 < len(tokens) and tokens[i + 1].startswith("'")):
+        return None
+    # ClickHouse LIKE treats a backslash before anything but % _ \ as a
+    # literal backslash (MatchImpl.h); Spark rejects it — double those
+    # backslashes in literal patterns (value level)
+    val, fixed, k = _decode_ch_literal(tokens[i + 1]), [], 0
+    while k < len(val):
+        if val[k] == "\\" and k + 1 < len(val):
+            nxt = val[k + 1]
+            fixed.append(val[k : k + 2] if nxt in "%_\\" else "\\\\" + nxt)
+            k += 2
+        else:
+            fixed.append(val[k])
+            k += 1
+    out.append(t)
+    out.append(_encode_spark_literal("".join(fixed)))
+    return i + 2
+
+
+def _tok_escaped_string(tokens, i, out, clause):
+    t = tokens[i]
+    if t.startswith("'") and "\\" in t:
+        out.append(_reencode_string_literal(t))
+        return i + 1
+    return None
+
+
+def _tok_tuple_element(tokens, i, out, clause):
+    t = tokens[i]
+    if re.fullmatch(r"\.\d+", t) and out and (
+        out[-1].endswith(")") or out[-1].endswith("]")
+        or (_IDENT_RE.fullmatch(out[-1]) and out[-1].lower() not in _KEYWORDS)
+    ):
+        # ClickHouse tuple element access x.1 → Spark struct field ._1
+        out[-1] = out[-1] + "._" + t[1:]
+        return i + 1
+    return None
+
+
+def _tok_tuple_in_literal(tokens, i, out, clause):
+    if not (tokens[i] == "(" and out and out[-1].lower() == "in" and len(out) >= 2 and "named_struct(" in out[-2]):
+        return None
+    # tuple IN tuple-literal: `(a, b) IN ('x', 0)` compares against ONE
+    # tuple (ParserTupleOfLiterals), not a 2-element set — wrap the RHS into
+    # a matching named_struct. A RHS whose elements are themselves tuples
+    # stays a membership list.
+    close = _find_call_end(tokens, i)
+    args = _split_args(tokens[i + 1 : close])
+    heads = [a[0].lower() for a in args if a]
+    if len(args) >= 2 and not any(h in ("select", "with", "(") for h in heads):
+        arg_sql = [_rewrite(a) for a in args]
+        if not any(a.lstrip("(").startswith("named_struct") for a in arg_sql):
+            inner = ", ".join(f"'_{j + 1}', {a}" for j, a in enumerate(arg_sql))
+            out.append(f"(named_struct({inner}))")
+            return close + 1
+    return None
+
+
+def _subquery_width_over_one(tokens, in_pos) -> bool:
+    """`(a, b) IN (SELECT x, y)`: the subquery at in_pos selects more than
+    one top-level item."""
+    sub_close = _find_call_end(tokens, in_pos)
+    depth2, commas = 0, 0
+    for k2 in range(in_pos + 2, sub_close):
+        tk = tokens[k2]
+        if tk in ("(", "["):
+            depth2 += 1
+        elif tk in (")", "]"):
+            depth2 -= 1
+        elif depth2 == 0:
+            if tk == ",":
+                commas += 1
+            elif tk.lower() in ("from", "where", "group", "order", "limit"):
+                break
+    return commas >= 1
+
+
+def _tok_paren(tokens, i, out, clause):
+    if not (tokens[i] == "(" and (not out or out[-1].lower() not in _TUPLE_EXCLUDE_PREV)):
+        return None
+    close = _find_call_end(tokens, i)
+    args = _split_args(tokens[i + 1 : close])
+    heads = [a[0].lower() for a in args if a]
+    is_lambda_params = close + 1 < len(tokens) and tokens[close + 1] == "->"
+    if len(args) >= 2 and not is_lambda_params and not any(
+        h in ("select", "with", "partition", "order") for h in heads
+    ):
+        # `(a, b) IN (SELECT x, y)`: Spark's native multi-column IN matches
+        # the subquery arity — a struct LHS would not
+        nxt = tokens[close + 1].lower() if close + 1 < len(tokens) else ""
+        nxt2 = tokens[close + 2].lower() if close + 2 < len(tokens) else ""
+        in_pos = None
+        if nxt == "in":
+            in_pos = close + 2
+        elif nxt == "not" and nxt2 == "in":
+            in_pos = close + 3
+        if (
+            in_pos is not None
+            and in_pos + 1 < len(tokens)
+            and tokens[in_pos] == "("
+            and tokens[in_pos + 1].lower() in ("select", "with")
+            # a single tuple item still compares against a struct LHS
+            and _subquery_width_over_one(tokens, in_pos)
+        ):
+            out.append("(" + ", ".join(_rewrite(a) for a in args) + ")")
+            return close + 1
+        # bare parenthesized tuple literal (1, 'a') → named_struct('_1', …)
+        # so .N access and comparisons work
+        inner = ", ".join(f"'_{j + 1}', {_rewrite(a)}" for j, a in enumerate(args))
+        out.append(f"named_struct({inner})")
+        return close + 1
+    # grouping paren / subquery: recurse so nested constructs (including
+    # tuples) are still rewritten; inherit predicate/value context so e.g.
+    # `WHERE (not(a))` keeps its boolean rendering
+    out.append("(" + _rewrite(tokens[i + 1 : close], clause) + ")")
+    return close + 1
+
+
+# The forms that are not calls, tried in order at each token: each takes
+# (tokens, i, out, clause), appends its SQL to out and returns the index
+# after what it consumed, or returns None.
+_TOKEN_RULES = (
+    _tok_float_literal,
+    _tok_map_literal,
+    _tok_interval,
+    _tok_system_table,
+    _tok_divide_by_zero,
+    _tok_cast_operator,
+    _tok_bracket,
+    _tok_like_pattern,
+    _tok_escaped_string,
+    _tok_tuple_element,
+    _tok_tuple_in_literal,
+    _tok_paren,
+)
+
+
+def _is_call(tokens: list[str], i: int, out: list[str]) -> bool:
+    t = tokens[i]
+    tl = t.lower()
+    # and(/or( are function calls only when the previous token does NOT end
+    # an expression — `a AND (b)` is infix, `SELECT and(1,0)` a call
+    # (FunctionsLogical.cpp registers both words as ordinary functions)
+    prev = out[-1] if out else ""
+    prev_ends_expr = bool(prev) and (
+        prev.endswith(")")
+        or prev.endswith("]")
+        or prev.endswith("'")
+        or bool(re.fullmatch(r"[\d][\w.]*", prev))
+        or (bool(_IDENT_RE.fullmatch(prev)) and prev.lower() not in _KEYWORDS)
+    )
+    return bool(
+        re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", t)
+        and i + 1 < len(tokens)
+        and tokens[i + 1] == "("
+        and (
+            tl not in _NONCALLABLE_KEYWORDS
+            or (tl in ("and", "or") and not prev_ends_expr)
+            # function-form like(x, pat) (FunctionsStringSearch registers
+            # like/notLike/ilike as ordinary functions); infix `x LIKE (…)`
+            # has an expression right before the keyword
+            or (tl in ("like", "ilike") and not prev_ends_expr)
+            or (tl == "values" and bool(out) and out[-1].lower() == "from")
+        )
+    )
+
+
+class _Site:
+    """One call `name(args)` of a token list, as a handler sees it.
+
+    ``arg_sql`` (each argument rendered, a comparison cast to INT for the
+    names in _UINT8_ARGS) and ``raw_sql`` (without that cast) are rendered
+    on first use. A parametric call `name(params)(args2)` has a second
+    argument group, ``args2``, ending at ``close2``. A handler that consumes tokens past the call's `)` sets
+    ``end``."""
+
+    def __init__(self, tokens: list[str], i: int, out: list[str], clause: str):
+        # one spelling per function: a case-insensitive registry name in
+        # any case becomes its registered spelling (FunctionFactory::tryGet)
+        self.name = _resolve(tokens[i]) or tokens[i]
+        self.tokens, self.i, self.out, self.clause = tokens, i, out, clause
+        self.close = _find_call_end(tokens, i + 1)
+        self.end = self.close + 1
+        self.args = _split_args(tokens[i + 2 : self.close])
+        self.parametric = self.close + 1 < len(tokens) and tokens[self.close + 1] == "("
+
+    @functools.cached_property
+    def close2(self) -> int:
+        return _find_call_end(self.tokens, self.close + 1)
+
+    @functools.cached_property
+    def args2(self) -> list[list[str]]:
+        return _split_args(self.tokens[self.close + 2 : self.close2])
+
+    @functools.cached_property
+    def raw_sql(self) -> list[str]:
+        return [_rewrite(a) for a in self.args]
+
+    @functools.cached_property
+    def arg_sql(self) -> list[str]:
+        if self.name in _UINT8_ARGS:
+            # ClickHouse computes over a comparison's UInt8 0/1 (sum(x = 1)
+            # counts matches, minus(a = 1, b = 2)); Spark refuses boolean
+            # operands
+            return [f"CAST(({a}) AS INT)" if _looks_predicate(a) else a for a in self.raw_sql]
+        return self.raw_sql
+
+    def respelled(self, name: str, args: "list[list[str]] | None" = None) -> list[str]:
+        """The tokens of this call under another name (and arguments), for
+        _rewrite to read again in its place."""
+        if args is None:
+            return [name] + self.tokens[self.i + 1 : self.close + 1]
+        new = [name, "("]
+        for jj, a in enumerate(args):
+            if jj:
+                new.append(",")
+            new += list(a)
+        return new + [")"]
+
+
+# resolved function name -> its handler, handler(site) -> SQL text, the
+# call's tokens respelled (to read again), or None to fall through to the
+# generic tail. Keys registered case-insensitively are stored lower-cased
+# and listed in _CI_HANDLERS.
+_HANDLERS: dict = {}
+_CI_HANDLERS: set = set()
+# handlers that see a parametric call name(params)(args) before the
+# parametric bridge does; every other handler sees one only when the bridge
+# leaves it (the name is not a registry function)
+_EARLY_HANDLERS: set = set()
+
+
+def _handles(*names: str, ci: bool = False, early: bool = False):
+    """Register the decorated function as the handler of ``names``. With
+    ``ci`` a name matches in any case; ``early`` puts it in _EARLY_HANDLERS."""
+
+    def register(fn):
+        for n in names:
+            key = n.lower() if ci else n
+            assert key not in _HANDLERS, f"two handlers for {n}"
+            _HANDLERS[key] = fn
+            if ci:
+                _CI_HANDLERS.add(key)
+        if early:
+            _EARLY_HANDLERS.add(fn)
+        return fn
+
+    return register
+
+
+def _handler(name: str):
+    h = _HANDLERS.get(name)
+    if h is None and name.lower() in _CI_HANDLERS:
+        h = _HANDLERS[name.lower()]
+    return h
+
+
+def _call_sql(c: _Site) -> "str | list[str]":
+    h = _handler(c.name)
+    if c.parametric and h is not None and h not in _EARLY_HANDLERS:
+        sql = _parametric_bridge(c)
+        if sql is not None:
+            return sql
+    for rule in ((h,) if h else ()) + _CALL_TAIL:
+        sql = rule(c)
+        if sql is not None:
+            return sql
+    raise AssertionError("NAME_MAP renders every call")
+
+
 def _rewrite(tokens: list[str], ctx: str = "val") -> str:
+    """Render a token list: the token rules first, then each call through
+    its handler and the generic tail (_call_sql)."""
     out: list[str] = []
     # clause tracks whether we're in a predicate position (WHERE/HAVING/ON/
     # WHEN) or a value position (SELECT list, …): ClickHouse renders logical
@@ -1888,372 +2421,16 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
     clause = ctx
     i = 0
     while i < len(tokens):
+        for rule in _TOKEN_RULES:
+            nxt = rule(tokens, i, out, clause)
+            if nxt is not None:
+                break
+        if nxt is not None:
+            i = nxt
+            continue
         t = tokens[i]
-        if (
-            t.lower() in ("nan", "inf", "infinity")
-            and (i + 1 >= len(tokens) or tokens[i + 1] != "(")
-            and (not out or (out[-1] != "." and out[-1].lower() != "as"))
-        ):
-            # ClickHouse float literals (ParserNumber: nan/inf, any case)
-            lit = "NaN" if t.lower() == "nan" else "Infinity"
-            out.append(f"CAST('{lit}' AS DOUBLE)")
-            i += 1
-            continue
-        if t == "{":
-            # Map literal {'k': v, ...} (ParserMapOfLiterals) → map(k, v, …)
-            d2 = 0
-            end_b = -1
-            for k in range(i + 1, len(tokens)):
-                if tokens[k] == "{":
-                    d2 += 1
-                elif tokens[k] == "}":
-                    if d2 == 0:
-                        end_b = k
-                        break
-                    d2 -= 1
-            if end_b > 0:
-                entries = _split_args(tokens[i + 1 : end_b])
-                pairs: list[str] = []
-                ok_map = True
-                for ent in entries:
-                    dd = 0
-                    cpos = -1
-                    for kk, tk in enumerate(ent):
-                        if tk in ("(", "[", "{"):
-                            dd += 1
-                        elif tk in (")", "]", "}"):
-                            dd -= 1
-                        elif tk == ":" and dd == 0:
-                            cpos = kk
-                            break
-                    if cpos < 0:
-                        ok_map = False
-                        break
-                    pairs.append(_rewrite(ent[:cpos], "val"))
-                    pairs.append(_rewrite(ent[cpos + 1:], "val"))
-                if ok_map:
-                    out.append(f"map({', '.join(pairs)})")
-                    i = end_b + 1
-                    continue
-        if (
-            t.lower() == "interval"
-            and i + 1 < len(tokens)
-            and tokens[i + 1] != "("
-            and (not out or (out[-1] != "." and out[-1].lower() != "as"))
-        ):
-            # INTERVAL <expr> <unit> (ParserIntervalOperatorExpression):
-            # ClickHouse allows arbitrary expressions and sub-second/quarter
-            # units; Spark's literal form only takes integer literals with
-            # standard units. Literal+standard stays verbatim; everything
-            # else becomes make_interval().
-            _units = {
-                "second": 6, "minute": 5, "hour": 4, "day": 3, "week": 2,
-                "month": 1, "year": 0,
-            }
-            _frac = {"millisecond": 1e3, "microsecond": 1e6, "nanosecond": 1e9}
-            d = 0
-            unit_idx = -1
-            k = i + 1
-            while k < len(tokens):
-                tk = tokens[k]
-                if tk in ("(", "["):
-                    d += 1
-                elif tk in (")", "]"):
-                    if d == 0:
-                        break
-                    d -= 1
-                elif d == 0 and tk == ",":
-                    break
-                elif d == 0:
-                    low = tk.lower().rstrip("s") if tk.lower().endswith("s") else tk.lower()
-                    if low in _units or low in _frac or low == "quarter":
-                        unit_idx = k
-                        break
-                k += 1
-            if unit_idx > i + 1:
-                unit = tokens[unit_idx].lower()
-                if unit.endswith("s"):
-                    unit = unit[:-1]
-                expr_toks = tokens[i + 1 : unit_idx]
-                is_lit = len(expr_toks) == 1 and re.fullmatch(r"\d+", expr_toks[0])
-                if is_lit and unit in _units:
-                    out.append(f"INTERVAL {expr_toks[0]} {unit.upper()}")
-                else:
-                    e = _rewrite(expr_toks, "val")
-                    args = ["0"] * 7
-                    if unit == "quarter":
-                        args[1] = f"CAST(3 * ({e}) AS INT)"
-                    elif unit in _frac:
-                        args[6] = f"CAST(({e}) / {_frac[unit]} AS DECIMAL(18, 6))"
-                    else:
-                        pos = _units[unit]
-                        args[pos] = (
-                            f"CAST({e} AS DECIMAL(18, 6))" if pos == 6
-                            else f"CAST({e} AS INT)"
-                        )
-                    out.append(f"make_interval({', '.join(args)})")
-                i = unit_idx + 1
-                continue
-        if (
-            t.lower() == "system"
-            and i + 2 < len(tokens)
-            and tokens[i + 1] == "."
-            and tokens[i + 2].lower() in ("numbers", "numbers_mt", "one", "zeros")
-            and (i + 3 >= len(tokens) or tokens[i + 3] != "(")
-            and (not out or out[-1] != ".")
-        ):
-            # system.numbers / system.one / system.zeros virtual tables
-            # (StorageSystemNumbers.cpp, StorageSystemOne.cpp). ClickHouse's
-            # system.numbers is an unbounded stream consumed lazily under
-            # LIMIT; Spark needs a bound — 1e8 rows covers every golden
-            # test's LIMIT and stays lazy under CollectLimit.
-            nm = tokens[i + 2].lower()
-            if nm == "one":
-                out.append("(SELECT CAST(0 AS INT) AS dummy)")
-            elif nm == "zeros":
-                out.append("(SELECT CAST(0 AS INT) AS zero FROM range(100000000))")
-            else:
-                out.append("(SELECT id AS number FROM range(100000000))")
-            i += 3
-            continue
-        if t == "/" and out and i + 1 < len(tokens):
-            # division by a LITERAL zero: ClickHouse '/' is IEEE float
-            # division (0/0 = nan, x/0 = ±inf — DivisionUtils.h); Spark
-            # returns NULL. Only literal-zero divisors rewrite — anything
-            # else keeps native division (and its decimal typing).
-            j = i + 1
-            neg = False
-            if tokens[j] in ("-", "+") and j + 1 < len(tokens):
-                neg = tokens[j] == "-"
-                j += 1
-            ztok = tokens[j]
-            is_zero = bool(re.fullmatch(r"0+(\.0*)?", ztok))
-            j += 1
-            if is_zero and j < len(tokens) and tokens[j] == "." and (
-                j + 1 >= len(tokens) or not re.match(r"[0-9A-Za-z_]", tokens[j + 1])
-            ):
-                j += 1  # trailing dot of `0.`
-            if (
-                out[-1] == "."
-                and len(out) >= 2
-                and re.fullmatch(r"\d+", out[-2])
-            ):
-                # `0. / x` — rejoin the trailing-dot float literal
-                out[-2:] = [out[-2] + ".0"]
-            prev = out[-1]
-            left_ok = bool(
-                re.fullmatch(r"[A-Za-z_][\w.]*", prev)
-                or re.fullmatch(r"\d+(\.\d+)?", prev)
-                or (prev.endswith(")") and "(" in prev)
-            ) and (len(out) < 2 or out[-2][-1:] not in (".", ")", "]"))
-            if is_zero and left_ok:
-                left = out.pop()
-                pinf, ninf = "CAST('Infinity' AS DOUBLE)", "CAST('-Infinity' AS DOUBLE)"
-                if neg:
-                    pinf, ninf = ninf, pinf
-                out.append(
-                    f"(CASE WHEN {left} IS NULL THEN CAST(NULL AS DOUBLE)"
-                    f" WHEN CAST({left} AS DOUBLE) = 0.0 OR isnan(CAST({left} AS DOUBLE))"
-                    f" THEN CAST('NaN' AS DOUBLE)"
-                    f" WHEN CAST({left} AS DOUBLE) > 0.0 THEN {pinf}"
-                    f" ELSE {ninf} END)"
-                )
-                i = j
-                continue
-        if t == "::":
-            # x :: Type (ParserCastOperator.cpp) — consume the type tokens
-            j = i + 1
-            if j >= len(tokens) or not _IDENT_RE.fullmatch(tokens[j]):
-                raise ChSqlError(":: needs a type name")
-            tname = tokens[j]
-            j += 1
-            if j < len(tokens) and tokens[j] == "(":
-                close = _find_call_end(tokens, j)
-                tname += "".join(tokens[j : close + 1])
-                j = close + 1
-            try:
-                spark_t = ch_type_to_spark(tname)
-            except ChSqlError:
-                spark_t = tname  # already a Spark type name
-            operand = _pop_operand(out)
-            # the call-merging pass folds `SELECT (expr)` into one element;
-            # peel statement keywords back off before casting the operand
-            km = re.match(
-                r"(?i)^(select|where|prewhere|when|then|else|from|having|by|on|union)"
-                r"\s*\((.*)\)$",
-                operand,
-                re.DOTALL,
-            )
-            if km:
-                out.append(km.group(1))
-                operand = f"({km.group(2)})"
-            if spark_t.upper() == "STRING" and re.match(
-                r"\(?\s*(?:h3CellArea|h3ExactEdgeLength)",
-                operand,
-            ):
-                # Spark's double->string cast goes scientific below 1e-3;
-                # ClickHouse prints shortest decimal. These known
-                # double-producing UDFs route through the CH formatter.
-                out.append(f"ch_f64_str({operand})")
-            else:
-                out.append(f"CAST({operand} AS {spark_t})")
-            i = j
-            continue
-        if t == "[":
-            close = _find_bracket_end(tokens, i)
-            inner = _split_args(tokens[i + 1 : close])
-            inner_sql = [_rewrite(a) for a in inner]
-            prev = out[-1] if out else ""
-            # after an identifier/)/]: subscript (CH 1-based → element_at);
-            # otherwise an array literal (Spark SQL has no [..] literal)
-            prev_is_ident = bool(_IDENT_RE.fullmatch(prev)) and prev.lower() not in _KEYWORDS
-            if prev and (prev.endswith(")") or prev.endswith("]") or prev_is_ident):
-                if len(inner_sql) != 1:
-                    raise ChSqlError("subscript needs one index")
-                base = out.pop()
-                if _CALL.get().safe_subscript:
-                    idx = inner_sql[0]
-                    out.append(
-                        f"(CASE WHEN ({idx}) <> 0 THEN try_element_at({base}, CAST({idx} AS INT)) END)"
-                    )
-                else:
-                    out.append(f"element_at({base}, {inner_sql[0]})")
-            else:
-                out.append(f"array({', '.join(inner_sql)})")
-            i = close + 1
-            continue
-        if t.lower() in ("like", "ilike") and i + 1 < len(tokens) and tokens[
-            i + 1
-        ].startswith("'"):
-            # ClickHouse LIKE treats a backslash before anything but % _ \
-            # as a literal backslash (MatchImpl.h); Spark rejects it —
-            # double those backslashes in literal patterns (value level)
-            val, fixed, k = _decode_ch_literal(tokens[i + 1]), [], 0
-            while k < len(val):
-                if val[k] == "\\" and k + 1 < len(val):
-                    nxt = val[k + 1]
-                    fixed.append(val[k : k + 2] if nxt in "%_\\" else "\\\\" + nxt)
-                    k += 2
-                else:
-                    fixed.append(val[k])
-                    k += 1
-            out.append(t)
-            out.append(_encode_spark_literal("".join(fixed)))
-            i += 2
-            continue
-        if t.startswith("'") and "\\" in t:
-            out.append(_reencode_string_literal(t))
-            i += 1
-            continue
-        if re.fullmatch(r"\.\d+", t) and out and (
-            out[-1].endswith(")") or out[-1].endswith("]")
-            or (_IDENT_RE.fullmatch(out[-1]) and out[-1].lower() not in _KEYWORDS)
-        ):
-            # ClickHouse tuple element access x.1 → Spark struct field ._1
-            out[-1] = out[-1] + "._" + t[1:]
-            i += 1
-            continue
-        if t == "(" and out and out[-1].lower() == "in" and len(out) >= 2 and "named_struct(" in out[-2]:
-            # tuple IN tuple-literal: `(a, b) IN ('x', 0)` compares against
-            # ONE tuple (ParserTupleOfLiterals), not a 2-element set — wrap
-            # the RHS into a matching named_struct. A RHS whose elements are
-            # themselves tuples stays a membership list.
-            close = _find_call_end(tokens, i)
-            args = _split_args(tokens[i + 1 : close])
-            heads = [a[0].lower() for a in args if a]
-            if len(args) >= 2 and not any(h in ("select", "with", "(") for h in heads):
-                arg_sql = [_rewrite(a) for a in args]
-                if not any(a.lstrip("(").startswith("named_struct") for a in arg_sql):
-                    inner = ", ".join(f"'_{j + 1}', {a}" for j, a in enumerate(arg_sql))
-                    out.append(f"(named_struct({inner}))")
-                    i = close + 1
-                    continue
-
-        if t == "(" and (not out or out[-1].lower() not in _TUPLE_EXCLUDE_PREV):
-            close = _find_call_end(tokens, i)
-            args = _split_args(tokens[i + 1 : close])
-            heads = [a[0].lower() for a in args if a]
-            is_lambda_params = close + 1 < len(tokens) and tokens[close + 1] == "->"
-            if len(args) >= 2 and not is_lambda_params and not any(
-                h in ("select", "with", "partition", "order") for h in heads
-            ):
-                # `(a, b) IN (SELECT x, y)`: Spark's native multi-column IN
-                # matches the subquery arity — a struct LHS would not
-                nxt = tokens[close + 1].lower() if close + 1 < len(tokens) else ""
-                nxt2 = tokens[close + 2].lower() if close + 2 < len(tokens) else ""
-                in_pos = None
-                if nxt == "in":
-                    in_pos = close + 2
-                elif nxt == "not" and nxt2 == "in":
-                    in_pos = close + 3
-                if (
-                    in_pos is not None
-                    and in_pos + 1 < len(tokens)
-                    and tokens[in_pos] == "("
-                    and tokens[in_pos + 1].lower() in ("select", "with")
-                ):
-                    # count the subquery's top-level select items — a single
-                    # tuple item still compares against a struct LHS
-                    sub_close = _find_call_end(tokens, in_pos)
-                    depth2, commas = 0, 0
-                    for k2 in range(in_pos + 2, sub_close):
-                        tk = tokens[k2]
-                        if tk in ("(", "["):
-                            depth2 += 1
-                        elif tk in (")", "]"):
-                            depth2 -= 1
-                        elif depth2 == 0:
-                            if tk == ",":
-                                commas += 1
-                            elif tk.lower() in ("from", "where", "group", "order", "limit"):
-                                break
-                    if commas >= 1:
-                        out.append(
-                            "(" + ", ".join(_rewrite(a) for a in args) + ")"
-                        )
-                        i = close + 1
-                        continue
-                # bare parenthesized tuple literal (1, 'a') →
-                # named_struct('_1', …) so .N access and comparisons work
-                inner = ", ".join(
-                    f"'_{j + 1}', {_rewrite(a)}" for j, a in enumerate(args)
-                )
-                out.append(f"named_struct({inner})")
-                i = close + 1
-                continue
-            # grouping paren / subquery: recurse so nested constructs
-            # (including tuples) are still rewritten; inherit predicate/value
-            # context so e.g. `WHERE (not(a))` keeps its boolean rendering
-            out.append("(" + _rewrite(tokens[i + 1 : close], clause) + ")")
-            i = close + 1
-            continue
-        tl = t.lower()
-        # and(/or( are function calls only when the previous token does NOT
-        # end an expression — `a AND (b)` is infix, `SELECT and(1,0)` a call
-        # (FunctionsLogical.cpp registers both words as ordinary functions)
-        prev = out[-1] if out else ""
-        prev_ends_expr = bool(prev) and (
-            prev.endswith(")")
-            or prev.endswith("]")
-            or prev.endswith("'")
-            or bool(re.fullmatch(r"[\d][\w.]*", prev))
-            or (bool(_IDENT_RE.fullmatch(prev)) and prev.lower() not in _KEYWORDS)
-        )
-        is_call = (
-            re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", t)
-            and i + 1 < len(tokens)
-            and tokens[i + 1] == "("
-            and (
-                tl not in _NONCALLABLE_KEYWORDS
-                or (tl in ("and", "or") and not prev_ends_expr)
-                # function-form like(x, pat) (FunctionsStringSearch registers
-                # like/notLike/ilike as ordinary functions); infix `x LIKE
-                # (…)` has an expression right before the keyword
-                or (tl in ("like", "ilike") and not prev_ends_expr)
-                or (tl == "values" and bool(out) and out[-1].lower() == "from")
-            )
-        )
-        if not is_call:
+        if not _is_call(tokens, i, out):
+            tl = t.lower()
             if tl in ("where", "prewhere", "having", "on", "when"):
                 clause = "pred"
             elif tl in ("select", "then", "else", "by", "limit", "from", "settings"):
@@ -2261,1796 +2438,1611 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
             out.append("=" if t == "==" else t)
             i += 1
             continue
-
-        # one spelling per function: a case-insensitive registry name in
-        # any case becomes its registered spelling (FunctionFactory::tryGet)
-        canon = _resolve(t)
-        if canon is not None and canon != t:
-            t, tl = canon, canon.lower()
-        close = _find_call_end(tokens, i + 1)
-        args = _split_args(tokens[i + 2 : close])
-        if (
-            t in ("toDateTime", "toDateTime64", "toDateTime32", "toDate",
-                  "toDate32", "toTimeZone", "toTimezone")
-            and len(args) in (2, 3)
-            and re.fullmatch(r"'[^']*'", " ".join(args[-1]).strip())
-            and (
-                len(args) == 2
-                or re.fullmatch(r"\d+", " ".join(args[1]).strip())
-            )
-        ):
-            # tz-arg form over an already-DateTime value: the instant is
-            # unchanged, only the DISPLAY timezone moves (FunctionsConversion
-            # ToDateTimeTransform keeps the unix value). The SOURCE zone is
-            # the value's own declared timezone when the column type carries
-            # one (DataTypeDateTime tz param), else the render default UTC.
-            _a0txt = " ".join(args[0])
-            _is_dt = bool(re.match(
-                r"(?i)\s*(toDateTime(64|32)?|now(64)?|"
-                r"toStartOf\w+|parseDateTime\w*)\s*\(", _a0txt
-            ))
-            _dty0 = None
-            if not _is_dt:
-                _dty0 = _ch_type(args[0])
-                _is_dt = bool(_dty0) and _dty0.replace(
-                    "Nullable(", ""
-                ).lower().startswith("datetime")
-            if _is_dt:
-                # the registry's toTimeZone, a TIMESTAMP as over a column; a
-                # DateTime('Zone') value holds its wall clock in that zone
-                _src = f"CAST({_rewrite(args[0])} AS TIMESTAMP)"
-                _tzm = re.search(r"'([^']+)'", _dty0 or "")
-                if _tzm:
-                    _src = f"to_utc_timestamp({_src}, '{_tzm.group(1)}')"
-                _conv = _registry_bridge("toTimeZone", [_src, " ".join(args[-1]).strip()])
-                if _conv is not None:
-                    out.append(f"CAST({_conv} AS DATE)" if t in ("toDate", "toDate32") else _conv)
-                    i = close + 1
-                    continue
-
-        if tl == "range" and args and 1 <= len(args) <= 3:
-            # range() over IPv4 values iterates the UInt32 representation
-            # (range.cpp takes unsigned ints) — convert dotted carriers
-            _wr, _chg = [], False
-            for _a9 in args:
-                _r9 = _rewrite(_a9)
-                if _ch_type(_a9) == "IPv4":
-                    _r9 = _registry_bridge("IPv4StringToNum", [_r9]) or (
-                        f"aggregate(split({_r9}, '\\\\.'), CAST(0 AS BIGINT),"
-                        f" (__a, __x) -> __a * 256 + CAST(__x AS BIGINT))"
-                    )
-                    _chg = True
-                _wr.append(_r9)
-            if _chg:
-                out.append(
-                    _fill_template(
-                        ARITY_TEMPLATES["range"][len(_wr)], _wr, "range"
-                    )
-                )
-                i = close + 1
-                continue
-
-        if t == "avgWeightedIf" and len(args) == 3:
-            # the -If condition's own nullability does NOT make the result
-            # Nullable (AggregateFunctionIf wraps only the filter) — handle
-            # ahead of the generic combinator expansion
-            _cnd = _rewrite(args[2])
-            _aw0 = [_rewrite(args[0]), _rewrite(args[1])]
-            _nul = _avgw_nullable(args[:2], _aw0)
-            _wrapped = [
-                f"(CASE WHEN CAST(({_cnd}) AS BOOLEAN) THEN {a} END)"
-                for a in _aw0
-            ]
-            out.append(_fill_template(
-                _AVG_WEIGHTED.replace(
-                    "{EMPTY}",
-                    "CAST(NULL AS DOUBLE)" if _nul else "CAST('NaN' AS DOUBLE)",
-                ),
-                _wrapped, t,
-            ))
-            i = close + 1
+        c = _Site(tokens, i, out, clause)
+        sql = _call_sql(c)
+        if isinstance(sql, list):
+            # a respelled call: read it again in place of the old one
+            tokens = tokens[:i] + sql + tokens[c.close + 1 :]
             continue
-
-        if t == "avgWeighted" and len(args) == 2:
-            # empty valid-pair set: NULL when an argument is Nullable,
-            # nan otherwise (the Nullable combinator wraps the result)
-            _aw = [_rewrite(a) for a in args]
-            _nul = _avgw_nullable(args, _aw)
-            out.append(_fill_template(
-                _AVG_WEIGHTED.replace(
-                    "{EMPTY}",
-                    "CAST(NULL AS DOUBLE)" if _nul else "CAST('NaN' AS DOUBLE)",
-                ),
-                _aw, t,
-            ))
-            i = close + 1
-            continue
-
-        if tl == "grouping" and not (
-            i + 1 < len(tokens)
-            and tokens[i + 1] == "("
-            and i + 2 < len(tokens)
-            and tokens[i + 2].lower() == "sets"
-        ) and not (close == i + 2):
-            # GROUPING(keys...) (FunctionGrouping): multi-arg form is
-            # Spark's grouping_id bitmask; force_grouping_standard_
-            # compatibility=0 inverts every bit (1 = used as a key)
-            arg_sql0 = [_rewrite(a) for a in args]
-            if arg_sql0:
-                gid = (
-                    f"grouping_id({', '.join(arg_sql0)})"
-                    if len(arg_sql0) > 1
-                    else f"grouping({arg_sql0[0]})"
-                )
-                if _CALL.get().grouping_legacy:
-                    out.append(
-                        f"({(1 << len(arg_sql0)) - 1} - {gid})"
-                    )
-                else:
-                    out.append(gid)
-                i = close + 1
-                continue
-
-        if tl == "sets" and out and out[-1].lower() == "grouping":
-            # GROUPING SETS((a, b), ()) — each set is a key LIST, not a
-            # tuple literal: keep the parens as grouping parens
-            parts = []
-            for a in args:
-                if a and a[0] == "(" and _find_call_end(a, 0) == len(a) - 1:
-                    parts.append("(" + _rewrite(a[1:-1]) + ")")
-                elif a:
-                    parts.append(_rewrite(a))
-                else:
-                    parts.append("()")
-            out.append("SETS(" + ", ".join(parts) + ")")
-            i = close + 1
-            continue
-        if (
-            t in ("toDateTime", "toDateTime32")
-            and len(args) >= 2
-            and len(args[1]) == 1
-            and args[1][0].isdigit()
-        ):
-            # toDateTime(x, <int>[, tz]) is the DateTime64 form — the
-            # integer is a fractional SCALE (FunctionsConversion.h)
-            t = "toDateTime64"
-        elif t == "toDateTime32":
-            t = "toDateTime"
-
-        if (
-            _CALL.get().dt_best_effort
-            and t in (
-                "toDateTime", "toDateTimeOrNull", "toDateTimeOrZero",
-                "toDateTime64", "toDateTime64OrNull", "toDateTime64OrZero",
-            )
-            and args
-            and (
-                (len(args[0]) == 1 and args[0][0].startswith("'"))
-                or "String" in (_ch_type(args[0]) or "")
-            )
-        ):
-            # date_time_input_format='best_effort' (Settings.h): string
-            # inputs parse via the best-effort scanner
-            base = "parseDateTimeBestEffort" if not t.startswith("toDateTime64") else "parseDateTime64BestEffort"
-            t = base + (t[len("toDateTime64"):] if t.startswith("toDateTime64") else t[len("toDateTime"):])
-
-
-        # generic -If combinator (AggregateFunctionIf.cpp): fooIf(args...,
-        # cond) aggregates only rows where cond — rewrite to the base
-        # aggregate over if(cond, arg, NULL) in CH space and reprocess, so
-        # the base function's own translation machinery applies. Explicitly
-        # mapped combinators (sumIf, countIf, …) keep their entries; a
-        # registry base applies unless the registry defines the -If name.
-        if (
-            t.endswith("If")
-            and len(t) > 2
-            and t not in ("multiIf", "nullIf")
-            and t not in NAME_MAP
-            and t not in TEMPLATES
-            and t not in ARITY_TEMPLATES
-            and len(args) >= 2
-            and (
-                t[:-2] in NAME_MAP
-                or t[:-2] in TEMPLATES
-                or (t[:-2] in ARITY_TEMPLATES and len(args) - 1 in ARITY_TEMPLATES[t[:-2]])
-                or (_resolve(t[:-2]) and not _resolve(t))
-            )
-        ):
-            base = t[:-2]
-            cond = list(args[-1])
-            new: list[str] = [base, "("]
-            for jj, a in enumerate(args[:-1]):
-                if jj:
-                    new.append(",")
-                new += ["if", "("] + cond + [","] + list(a) + [",", "null", ")"]
-            new.append(")")
-            tokens = tokens[:i] + new + tokens[close + 1 :]
-            continue
-
-        # initializeAggregation('agg', v…) = the aggregate applied to one
-        # row (initializeAggregation.cpp) — exactly arrayReduce over
-        # single-element arrays; rewrite and reprocess
-        if t == "initializeAggregation" and len(args) >= 2:
-            new = ["arrayReduce", "("] + list(args[0])
-            for a in args[1:]:
-                new += [",", "["] + list(a) + ["]"]
-            new.append(")")
-            tokens = tokens[:i] + new + tokens[close + 1 :]
-            continue
-
-        # bit-exact hash families: flatten tuple args, type integer literals
-        # at ClickHouse literal width, fold elem/comb UDF calls
-        # (FunctionsHashing.h FunctionAnyHash — see functions/chhash.py)
-        if t in _EXACT_HASH_FAMS and args:
-            out.append(_render_exact_hash(t, args))
-            i = close + 1
-            continue
-        if (
-            t == "hex"
-            and len(args) == 1
-            and args[0]
-            and args[0][0] in ("sipHash128", "murmurHash3_128")
-        ):
-            inner = _split_args(args[0][2:-1])
-            fam = "ch_siphash128_hex" if args[0][0] == "sipHash128" else "ch_murmurhash3_128_hex"
-            out.append(
-                f"{fam}{len(inner)}({', '.join(_hash_arg_sql(a) for a in inner)})"
-            )
-            i = close + 1
-            continue
-
-        arg_sql = [_rewrite(a) for a in args]
-
-        if t == "if" and len(arg_sql) == 3 and arg_sql[0].strip().lower() in (
-            "0", "1", "true", "false",
-        ):
-            # literal-condition fold BEFORE resolution, like the reference's
-            # constant folding (`0 ? not_existing_column : 1` is legal —
-            # if.cpp executeForConstantCondition)
-            cond_true = arg_sql[0].strip().lower() in ("1", "true")
-            out.append(f"({arg_sql[1] if cond_true else arg_sql[2]})")
-            i = close + 1
-            continue
-
-        if t in _UINT8_ARGS:
-            # ClickHouse computes over a comparison's UInt8 0/1 (sum(x = 1)
-            # counts matches, minus(a = 1, b = 2)); Spark refuses boolean
-            # operands
-            arg_sql = [f"CAST(({a}) AS INT)" if _looks_predicate(a) else a for a in arg_sql]
-
-        if (
-            t in ("formatDateTime", "formatDateTimeInJodaSyntax")
-            and len(arg_sql) >= 2
-            and re.fullmatch(r"'(?:[^'\\]|\\.)*'", arg_sql[1].strip())
-        ):
-            # literal format string: convert MySQL-style codes to Java
-            # patterns at translate time (extra timezone arg dropped — the
-            # session is pinned UTC)
-            raw = arg_sql[1].strip()[1:-1]
-
-            def _df_lit(jpat: str) -> str:
-                # Java-quoted literals ('T', …) must be SQL-escaped when
-                # spliced back into a single-quoted Spark literal
-                esc = jpat.replace("\\", "\\\\").replace("'", "\\'")
-                return f"date_format({arg_sql[0]}, '{esc}')"
-
-            if t.endswith("JodaSyntax"):
-                out.append(_df_lit(raw))
-            else:
-                # %w is Sunday-based 0-6 (mysqlDayOfWeek0To6) — no Java
-                # pattern letter yields it; splice dayofweek(x)-1 between
-                # the surrounding date_format segments
-                segs = _split_dtfmt_on_w(raw)
-                pieces: list[str] = []
-                for si, seg in enumerate(segs):
-                    if si:
-                        pieces.append(
-                            f"CAST(dayofweek({arg_sql[0]}) - 1 AS STRING)"
-                        )
-                    # %C (century = year/100, zero-padded) has no Java
-                    # pattern either — splice it the same way
-                    for ci, cseg in enumerate(_split_dtfmt_on_w(seg, "C")):
-                        if ci:
-                            pieces.append(
-                                f"lpad(CAST(CAST(floor(year({arg_sql[0]})"
-                                f" / 100) AS INT) AS STRING), 2, '0')"
-                            )
-                        if cseg:
-                            pieces.append(_df_lit(_ch_dtfmt_to_java(cseg)))
-                if len(pieces) == 1:
-                    out.append(pieces[0])
-                elif pieces:
-                    out.append("concat(" + ", ".join(pieces) + ")")
-                else:
-                    out.append("''")
-            i = close + 1
-            continue
-
-        if (
-            t == "sumIf"
-            and len(arg_sql) == 2
-            and not re.search(r"(?i)null", arg_sql[0])
-            and not any(
-                re.search(rf"(?i)\b{re.escape(c)}\b", arg_sql[0])
-                for c in _CALL.get().nullable_cols
-            )
-        ):
-            # sum over a never-true condition is 0 for non-Nullable values
-            # (AggregateFunctionSum empty state), not NULL
-            out.append(
-                f"coalesce(sum(CASE WHEN {arg_sql[1]} THEN"
-                f" {arg_sql[0]} END), 0)"
-            )
-            i = close + 1
-            continue
-
-        if t == "uniqUpTo" and arg_sql:
-            # AggregateFunctionUniqUpTo.h: threshold must fit in [0, 100]
-            v = _as_py_literal(arg_sql[0])
-            if isinstance(v, (int, float)) and not 0 <= v <= 100:
-                raise ChSqlError(f"uniqUpTo threshold out of range: {arg_sql[0]}")
-
-        # parametric aggregate the registry refuses: name(params)(args)
-        if t in PARAMETRIC and close + 1 < len(tokens) and tokens[close + 1] == "(":
-            close2 = _find_call_end(tokens, close + 1)
-            args2 = _split_args(tokens[close + 2 : close2])
-            s = PARAMETRIC[t]
-            for j, p in enumerate(arg_sql):
-                s = s.replace(f"{{p{j}}}", p)
-            for j, a in enumerate(args2):
-                s = s.replace(f"{{a{j}}}", _rewrite(a))
-            out.append(s)
-            i = close2 + 1
-            continue
-
-        # Exponential-decay window family (WindowTransform.cpp):
-        #   exponentialMovingAverage(hl)(v,t)   = Σ v·2^(-(tc-ti)/hl)·(1-2^(-1/hl))
-        #   exponentialTimeDecayedSum(λ)(v,t)   = Σ v·e^(-(tc-ti)/λ)
-        #   exponentialTimeDecayedCount(λ)(t)   = Σ e^(-(tc-ti)/λ)
-        #   exponentialTimeDecayedAvg(λ)(v,t)   = decayedSum / decayedCount
-        #   exponentialTimeDecayedMax(λ)(v,t)   = max(v·e^(-(tc-ti)/λ))
-        # Factored as (agg(·e^(t/λ)) [OVER w]) · e^(-tc/λ) so the window
-        # attaches to the inner aggregate; plain-agg form uses max(t).
-        if (
-            t in (
-                "exponentialMovingAverage",
-                "exponentialTimeDecayedSum",
-                "exponentialTimeDecayedCount",
-                "exponentialTimeDecayedAvg",
-                "exponentialTimeDecayedMax",
-            )
-            and close + 1 < len(tokens)
-            and tokens[close + 1] == "("
-            and len(arg_sql) == 1
-        ):
-            close2 = _find_call_end(tokens, close + 1)
-            args2 = [_rewrite(a) for a in _split_args(tokens[close + 2 : close2])]
-            nargs = 1 if t == "exponentialTimeDecayedCount" else 2
-            if len(args2) == nargs:
-                lam = f"CAST({arg_sql[0]} AS DOUBLE)"
-                t_raw = args2[-1]
-                tm = f"CAST({t_raw} AS DOUBLE)"
-                v = f"CAST({args2[0]} AS DOUBLE)" if nargs == 2 else None
-                j = close2 + 1
-                over_sql = ""
-                if j + 1 < len(tokens) and tokens[j].lower() == "over":
-                    if tokens[j + 1] == "(":
-                        close3 = _find_call_end(tokens, j + 1)
-                        over_sql = (
-                            " OVER (" + _rewrite(tokens[j + 2 : close3]) + ")"
-                        )
-                        j = close3 + 1
-                    elif re.fullmatch(r"[A-Za-z_]\w*", tokens[j + 1]):
-                        over_sql = f" OVER {tokens[j + 1]}"  # named window
-                        j += 2
-                # Collect the frame/group into an array and reduce in scalar
-                # space so the decay exponent can be CENTERED on the
-                # reference time before exponentiation: with absolute inputs
-                # (epoch seconds) and a small half-life, the previous
-                # factored form sum(v·2^(t/hl)) / 2^(back_t/hl) overflowed
-                # both sides to Infinity and returned NaN, while the
-                # reference accumulates relative decays and stays finite.
-                # Reference time = LAST row of the frame (WindowTransform.cpp:
-                # back_t at prevRowNumber(frame_end)); for the plain-agg form
-                # the group max — identical when frames are time-ordered.
-                pair = (
-                    f"named_struct('v', {v}, 't', {tm})"
-                    if v is not None
-                    else f"named_struct('t', {tm})"
-                )
-                arr = f"collect_list({pair}){over_sql}"
-                back = (
-                    "element_at(__a, size(__a)).t"
-                    if over_sql
-                    else "array_max(transform(__a, __q -> __q.t))"
-                )
-                if t == "exponentialMovingAverage":
-                    body = (
-                        f"aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) ->"
-                        f" __s + __q.v * pow(2.0, (__q.t - __b) / {lam}))"
-                        f" * (1 - pow(2.0, -1.0 / {lam}))"
-                    )
-                elif t == "exponentialTimeDecayedSum":
-                    body = (
-                        f"aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) ->"
-                        f" __s + __q.v * exp((__q.t - __b) / {lam}))"
-                    )
-                elif t == "exponentialTimeDecayedCount":
-                    body = (
-                        f"aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) ->"
-                        f" __s + exp((__q.t - __b) / {lam}))"
-                    )
-                elif t == "exponentialTimeDecayedMax":
-                    body = (
-                        f"array_max(transform(__a, __q ->"
-                        f" __q.v * exp((__q.t - __b) / {lam})))"
-                    )
-                else:  # Avg — the decay-to-back_t factor cancels
-                    body = (
-                        f"aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) ->"
-                        f" __s + __q.v * exp((__q.t - __b) / {lam}))"
-                        f" / aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) ->"
-                        f" __s + exp((__q.t - __b) / {lam}))"
-                    )
-                expr = (
-                    f"element_at(transform(array({arr}), __a ->"
-                    f" CASE WHEN size(__a) = 0 THEN CAST(NULL AS DOUBLE) ELSE"
-                    f" element_at(transform(array({back}), __b -> {body}), 1)"
-                    f" END), 1)"
-                )
-                out.append(expr)
-                i = j
-                continue
-
-        # parametric aggregate f(params)(args): the registry bridge binds the
-        # parameters to the builder's literal slots and the arguments to the
-        # others (windowFunnel, uniqUpTo, the quantile, topK and groupArray
-        # families)
-        if close + 1 < len(tokens) and tokens[close + 1] == "(":
-            close2 = _find_call_end(tokens, close + 1)
-            args2 = _split_args(tokens[close + 2 : close2])
-            arg2_sql = [_rewrite(a) for a in args2]
-            bridged = _registry_bridge(t, arg2_sql, params=arg_sql)
-            if bridged is not None:
-                out.append(bridged)
-                i = close2 + 1
-                continue
-
-        if t == "count" and not arg_sql:
-            # ClickHouse count() has zero args (SURVEY §1.3)
-            out.append("count(*)")
-            i = close + 1
-            continue
-
-        if t == "tuple":
-            # _N field names so ClickHouse 1-based element access (x.1,
-            # tupleElement) maps onto Spark struct fields
-            fields = ", ".join(
-                f"'_{j + 1}', {a}" for j, a in enumerate(arg_sql)
-            )
-            out.append(f"named_struct({fields})")
-            i = close + 1
-            continue
-
-        if t == "tupleElement" and len(arg_sql) == 2 and re.fullmatch(r"\d+", arg_sql[1]):
-            out.append(f"({arg_sql[0]})._{arg_sql[1]}")
-            i = close + 1
-            continue
-
-        if tl == "arrayreduce" and len(arg_sql) >= 2 and re.fullmatch(
-            r"'[^']*'", arg_sql[0].strip()
-        ):
-            # arrayReduce('agg', arr) — scalar per-row reduction of an array
-            # by aggregate-function name (src/Functions/array/arrayReduce.cpp).
-            # Computable subset: plain math aggs incl. -OrNull/-OrDefault and
-            # quantile levels; opaque -State/-Merge forms fall through loud.
-            spec = arg_sql[0].strip()[1:-1]
-            am = re.fullmatch(
-                r"([A-Za-z]+?)(OrNull|OrDefault)?(?:\(([^()]*)\))?", spec
-            )
-            x = arg_sql[1]
-            expr2 = None
-            if spec.lower() in ("summap", "minmap", "maxmap") and len(arg_sql) >= 3:
-                # sumMap/minMap/maxMap(keys, v1[, v2…]): per-key fold over
-                # zipped (key, value) pairs, NULL values skipped, empty key
-                # bucket → 0 (AggregateFunctionSumMap.h); arrayReduce feeds
-                # arrays-of-arrays, so each argument flattens first
-                for a in arg_sql[1:]:
-                    body = re.sub(r"(?is)\barray\s*\(|[\[\](),\s]+", " ", a)
-                    toks_a = body.split()
-                    if toks_a and {w.lower() for w in toks_a} == {"null"}:
-                        raise ChSqlError(
-                            "sumMap: Array(Nullable(Nothing)) argument is "
-                            "an illegal type (serverError 43)"
-                        )
-                ks = f"flatten({arg_sql[1]})"
-                uk = f"array_sort(array_distinct({ks}))"
-                op = spec.lower()[:3]
-                vals = []
-                for a in arg_sql[2:]:
-                    vs = f"flatten({a})"
-                    pairs = (
-                        f"zip_with({ks}, {vs}, (__k, __v) ->"
-                        f" named_struct('k', __k, 'v', __v))"
-                    )
-                    if op == "sum":
-                        per = (
-                            f"aggregate({pairs}, CAST(0 AS DOUBLE),"
-                            f" (__a, __p) -> __a + (CASE WHEN __p.k = __u"
-                            f" AND __p.v IS NOT NULL"
-                            f" THEN CAST(__p.v AS DOUBLE) ELSE 0 END))"
-                        )
-                    else:
-                        fn2 = "array_min" if op == "min" else "array_max"
-                        per = (
-                            f"coalesce({fn2}(transform(filter({pairs},"
-                            f" __p -> __p.k = __u AND __p.v IS NOT NULL),"
-                            f" __p -> CAST(__p.v AS DOUBLE))),"
-                            f" CAST(0 AS DOUBLE))"
-                        )
-                    vals.append(f"transform({uk}, __u -> {per})")
-                fields = ", ".join(
-                    [f"'_1', {uk}"]
-                    + [f"'_{j + 2}', {v}" for j, v in enumerate(vals)]
-                )
-                out.append(f"named_struct({fields})")
-                i = close + 1
-                continue
-            if am and am.group(1).lower() == "simplelinearregression" and len(arg_sql) == 3:
-                # least-squares fit over zipped (x, y) arrays
-                # (AggregateFunctionSimpleLinearRegression.h): returns the
-                # (slope, intercept) tuple; zero denominator → NaN like the
-                # reference's double math (Spark's x/0 is NULL → coalesce)
-                pts = (
-                    f"zip_with({x}, {arg_sql[2]}, (__x, __y) -> named_struct("
-                    f"'x', CAST(__x AS DOUBLE), 'y', CAST(__y AS DOUBLE)))"
-                )
-                acc = (
-                    f"aggregate({pts}, named_struct("
-                    f"'n', CAST(0 AS DOUBLE), 'sx', CAST(0 AS DOUBLE),"
-                    f" 'sy', CAST(0 AS DOUBLE), 'sxy', CAST(0 AS DOUBLE),"
-                    f" 'sxx', CAST(0 AS DOUBLE)),"
-                    f" (__s, __p) -> named_struct('n', __s.n + 1,"
-                    f" 'sx', __s.sx + __p.x, 'sy', __s.sy + __p.y,"
-                    f" 'sxy', __s.sxy + __p.x * __p.y,"
-                    f" 'sxx', __s.sxx + __p.x * __p.x))"
-                )
-                k = (
-                    "coalesce((__t.n * __t.sxy - __t.sx * __t.sy)"
-                    " / (__t.n * __t.sxx - __t.sx * __t.sx), double('NaN'))"
-                )
-                out.append(
-                    f"element_at(transform(array({acc}), __t -> named_struct("
-                    f"'_1', {k},"
-                    f" '_2', coalesce((__t.sy - ({k}) * __t.sx) / __t.n,"
-                    f" double('NaN')))), 1)"
-                )
-                i = close + 1
-                continue
-            if am:
-                base = am.group(1).lower()
-                suffix = am.group(2) or ""
-                params = am.group(3)
-                # multi-array uniq counts distinct TUPLES; an -If suffix
-                # filters by the LAST array's truthiness first
-                # (arrayReduce.cpp passes all arrays as agg arguments)
-                if base in ("uniqif", "uniqexactif") and len(arg_sql) >= 3:
-                    base = base[:-2]
-                    conds = arg_sql[-1]
-                    vals = arg_sql[1:-1]
-                    zipped = vals[0] if len(vals) == 1 else (
-                        f"zip_with({vals[0]}, {vals[1]}, (__a, __b) ->"
-                        f" named_struct('a', __a, 'b', __b))"
-                    )
-                    x = (
-                        f"transform(filter(zip_with({zipped}, {conds},"
-                        f" (__v, __c) -> named_struct('v', __v, 'c', __c)),"
-                        f" __p -> CAST(__p.c AS BOOLEAN)), __p -> __p.v)"
-                    )
-                elif base in ("uniq", "uniqexact", "uniqupto") and len(arg_sql) >= 3:
-                    x = (
-                        f"zip_with({arg_sql[1]}, {arg_sql[2]}, (__a, __b) ->"
-                        f" named_struct('a', __a, 'b', __b))"
-                    )
-                if base == "uniqupto":
-                    # exact count when ≤ K, else K+1 (AggregateFunctionUniqUpTo.h)
-                    base = "uniq"
-                    up = params or "5"
-                    out.append(
-                        f"least(size(array_distinct({x})), CAST({up} AS BIGINT) + 1)"
-                    )
-                    i = close + 1
-                    continue
-                n = f"size({x})"
-                srt = f"array_sort({x})"
-
-                def _quant_exact(p):
-                    # QuantileExact.h get(): nth = level*(s-1) floored;
-                    # empty set → NaN (index 0 would error in Spark)
-                    v = f"element_at({srt}, CAST(floor(({p}) * ({n} - 1)) AS INT) + 1)"
-                    return f"(CASE WHEN {n} = 0 THEN double('NaN') ELSE {v} END)"
-
-                def _quant_interp(p):
-                    h = f"(({p}) * ({n} - 1))"
-                    lo = f"element_at({srt}, CAST(floor({h}) AS INT) + 1)"
-                    hi = f"element_at({srt}, CAST(ceiling({h}) AS INT) + 1)"
-                    v = (
-                        f"(CAST({lo} AS DOUBLE) + ({h} - floor({h}))"
-                        f" * (CAST({hi} AS DOUBLE) - CAST({lo} AS DOUBLE)))"
-                    )
-                    return f"(CASE WHEN {n} = 0 THEN double('NaN') ELSE {v} END)"
-
-                forms = {
-                    "sum": f"aggregate({x}, CAST(0 AS DOUBLE),"
-                           f" (__a, __x) -> __a + CAST(__x AS DOUBLE))",
-                    "max": f"array_max({x})",
-                    "min": f"array_min({x})",
-                    "count": n,
-                    "avg": f"(aggregate({x}, CAST(0 AS DOUBLE),"
-                           f" (__a, __x) -> __a + CAST(__x AS DOUBLE)) / {n})",
-                    "any": f"element_at({x}, 1)",
-                    "anylast": f"element_at({x}, -1)",
-                    "uniq": f"size(array_distinct({x}))",
-                    "uniqexact": f"size(array_distinct({x}))",
-                    "grouparray": x,
-                    "groupuniqarray": f"array_distinct({x})",
-                    "median": _quant_interp("0.5"),
-                    "stddevpop": (
-                        f"sqrt(aggregate({x}, CAST(0 AS DOUBLE), (__s, __e) ->"
-                        f" __s + pow(CAST(__e AS DOUBLE) - aggregate({x},"
-                        f" CAST(0 AS DOUBLE), (__a, __b) -> __a + __b) / {n}, 2))"
-                        f" / {n})"
-                    ),
-                    "stddevsamp": (
-                        f"sqrt(aggregate({x}, CAST(0 AS DOUBLE), (__s, __e) ->"
-                        f" __s + pow(CAST(__e AS DOUBLE) - aggregate({x},"
-                        f" CAST(0 AS DOUBLE), (__a, __b) -> __a + __b) / {n}, 2))"
-                        f" / ({n} - 1))"
-                    ),
-                    "varpop": (
-                        f"(aggregate({x}, CAST(0 AS DOUBLE), (__s, __e) ->"
-                        f" __s + pow(CAST(__e AS DOUBLE) - aggregate({x},"
-                        f" CAST(0 AS DOUBLE), (__a, __b) -> __a + __b) / {n}, 2))"
-                        f" / {n})"
-                    ),
-                    "varsamp": (
-                        f"(aggregate({x}, CAST(0 AS DOUBLE), (__s, __e) ->"
-                        f" __s + pow(CAST(__e AS DOUBLE) - aggregate({x},"
-                        f" CAST(0 AS DOUBLE), (__a, __b) -> __a + __b) / {n}, 2))"
-                        f" / ({n} - 1))"
-                    ),
-                    # sketch families degrade to exact distinct on a single
-                    # block (arrayReduce sees the whole array)
-                    "uniqtheta": f"size(array_distinct({x}))",
-                    "uniqhll": f"size(array_distinct({x}))",
-                    "uniqcombined": f"size(array_distinct({x}))",
-                }
-                # -State/-Merge forms over the documented carriers (the
-                # aggregate TEMPLATES' representations): uniq* states are
-                # sorted distinct arrays, avg states (sum, cnt) structs
-                uniq_m = f"size(array_distinct(flatten({x})))"
-                forms.update({
-                    "uniqmerge": uniq_m, "uniqexactmerge": uniq_m,
-                    "uniqhll12merge": uniq_m, "uniqcombinedmerge": uniq_m,
-                    "summerge": forms["sum"], "countmerge": forms["sum"],
-                    "minmerge": f"array_min({x})",
-                    "maxmerge": f"array_max({x})",
-                    "avgmerge": (
-                        f"(aggregate({x}, CAST(0 AS DOUBLE),"
-                        f" (__a, __e) -> __a + __e.sum)"
-                        f" / aggregate({x}, CAST(0 AS DOUBLE),"
-                        f" (__a, __e) -> __a + __e.cnt))"
-                    ),
-                    "grouparraymerge": f"flatten({x})",
-                    "groupuniqarraymerge": f"array_sort(array_distinct(flatten({x})))",
-                    "uniqstate": f"array_sort(array_distinct({x}))",
-                    "uniqexactstate": f"array_distinct({x})",
-                    "sumstate": forms["sum"],
-                    "countstate": n,
-                    "minstate": f"array_min({x})",
-                    "maxstate": f"array_max({x})",
-                    "grouparraystate": x,
-                })
-                if base == "quantile" or base == "medianexact":
-                    expr2 = _quant_interp(params or "0.5")
-                elif base == "quantileexact":
-                    expr2 = _quant_exact(params or "0.5")
-                elif base in ("quantiles", "quantilesexact") and params:
-                    fn2 = _quant_interp if base == "quantiles" else _quant_exact
-                    per = ", ".join(
-                        fn2(p.strip()) for p in params.split(",") if p.strip()
-                    )
-                    expr2 = f"array({per})"
-                elif base in forms:
-                    expr2 = forms[base]
-                if expr2 is not None and suffix:
-                    empty = f"(size({x}) = 0)"
-                    if suffix == "OrNull":
-                        expr2 = f"(CASE WHEN {empty} THEN NULL ELSE {expr2} END)"
-                    else:  # OrDefault: type default for the empty set
-                        dflt = f"(element_at({x}, 1) * 0)"
-                        if base in ("avg", "median", "quantile", "stddevpop"):
-                            dflt = "CAST(0 AS DOUBLE)"
-                        expr2 = f"(CASE WHEN {empty} THEN {dflt} ELSE {expr2} END)"
-            if expr2 is not None:
-                out.append(expr2)
-                i = close + 1
-                continue
-
-        if t == "toStartOfInterval" and len(arg_sql) >= 2:
-            ivm2 = _INTERVAL_RE.match(arg_sql[1].strip().replace("'", ""))
-            if ivm2:
-                nv, unit = int(ivm2.group(1)), ivm2.group(2).upper()
-                x = arg_sql[0]
-                if unit in ("SECOND", "MINUTE", "HOUR"):
-                    secs = nv * {"SECOND": 1, "MINUTE": 60, "HOUR": 3600}[unit]
-                    out.append(
-                        f"timestamp_seconds(floor(unix_timestamp({x}) / {secs}) * {secs})"
-                    )
-                elif unit == "DAY":
-                    out.append(
-                        f"date_add(DATE '1970-01-01', CAST(floor(datediff({x}, DATE '1970-01-01') / {nv}) * {nv} AS INT))"
-                    )
-                elif unit in ("MONTH", "QUARTER", "YEAR"):
-                    months = nv * {"MONTH": 1, "QUARTER": 3, "YEAR": 12}[unit]
-                    out.append(
-                        f"add_months(DATE '1970-01-01', CAST(floor(months_between({x}, DATE '1970-01-01') / {months}) * {months} AS INT))"
-                    )
-                else:
-                    out.append(f"date_trunc('week', {x})")
-                i = close + 1
-                continue
-
-        if t in ("accurateCastOrDefault", "accurateCastOrNull") and len(arg_sql) >= 2 and re.fullmatch(
-            r"'[\w(), ]+'", arg_sql[1]
-        ):
-            # range-checked cast (FunctionsConversion.h accurateCast family):
-            # out-of-range yields the default/NULL instead of wrapping
-            ch_t2 = arg_sql[1][1:-1]
-            try:
-                spark_t2 = ch_type_to_spark(ch_t2)
-            except ChSqlError:
-                # wide integers: carry in DECIMAL(38,0), bounds below
-                spark_t2 = (
-                    "DECIMAL(38,0)"
-                    if ch_t2.lower() in
-                    ("uint128", "uint256", "int128", "int256")
-                    else None
-                )
-            if spark_t2 is not None:
-                rng = {
-                    "uint8": (0, 255), "uint16": (0, 65535),
-                    "uint32": (0, 4294967295), "uint64": (0, 18446744073709551615),
-                    "int8": (-128, 127), "int16": (-32768, 32767),
-                    "int32": (-2147483648, 2147483647),
-                    "int64": (-9223372036854775808, 9223372036854775807),
-                    # carrier bounds (the true 128/256-bit ranges exceed the
-                    # DECIMAL(38) carrier; negatives still reject correctly)
-                    "uint128": (0, 10**37), "uint256": (0, 10**37),
-                    "int128": (-(10**37), 10**37),
-                    "int256": (-(10**37), 10**37),
-                }.get(ch_t2.lower())
-                casted = f"try_cast({arg_sql[0]} AS {spark_t2})"
-                if rng is not None:
-                    casted = (
-                        f"CASE WHEN try_cast({arg_sql[0]} AS DOUBLE) BETWEEN {rng[0]} AND {rng[1]} "
-                        f"THEN {casted} ELSE NULL END"
-                    )
-                _dflt0 = "''" if spark_t2.upper() == "STRING" else "0"
-                fs2 = re.match(r"(?i)FixedString\s*\(\s*(\d+)\s*\)$", ch_t2)
-                if fs2:
-                    # too-long input rejects; shorter pads with zero bytes,
-                    # and the implicit default is the all-zero FixedString
-                    _n2 = fs2.group(1)
-                    _s2 = f"CAST({arg_sql[0]} AS STRING)"
-                    casted = (
-                        f"(CASE WHEN octet_length({_s2}) > {_n2} THEN NULL"
-                        f" ELSE concat({_s2}, repeat(char(0),"
-                        f" {_n2} - octet_length({_s2}))) END)"
-                    )
-                    _dflt0 = f"repeat(char(0), {_n2})"
-                if t == "accurateCastOrNull":
-                    out.append(f"({casted})")
-                else:
-                    dflt = arg_sql[2] if len(arg_sql) > 2 else _dflt0
-                    out.append(f"coalesce({casted}, {dflt})")
-                i = close + 1
-                continue
-
-        if (tm_dec := re.fullmatch(r"toDecimal(32|64|128|256)(OrZero|OrNull)?", t)) and arg_sql:
-            prec = {"32": 9, "64": 18, "128": 38, "256": 38}[tm_dec.group(1)]
-            scale = arg_sql[1] if len(arg_sql) > 1 else "0"
-            cast_e = f"try_cast({arg_sql[0]} AS DECIMAL({prec}, {scale}))"
-            if tm_dec.group(2) == "OrZero":
-                out.append(f"coalesce({cast_e}, 0)")
-            elif tm_dec.group(2) == "OrNull":
-                out.append(cast_e)
-            else:
-                out.append(f"CAST({arg_sql[0]} AS DECIMAL({prec}, {scale}))")
-            i = close + 1
-            continue
-
-        if t == "extractAllGroupsHorizontal" and len(arg_sql) == 2 and arg_sql[1].startswith("'"):
-            # one regexp_extract_all per capture group (count them in the
-            # literal pattern: unescaped '(' not starting a (?: group)
-            pat = arg_sql[1]
-            ngroups = len(re.findall(r"(?<!\\)\((?!\?)", pat[1:-1]))
-            parts = ", ".join(
-                f"regexp_extract_all({arg_sql[0]}, {pat}, {g + 1})" for g in range(ngroups)
-            )
-            out.append(f"array({parts})")
-            i = close + 1
-            continue
-
-        if t == "extract" and len(arg_sql) == 2:
-            # ClickHouse extract(haystack, pattern): first match of capture
-            # group 1, or the whole match when the pattern has no groups
-            # (FunctionsStringSearch extract) — never Spark's
-            # extract(field FROM ts), which this name would otherwise hit
-            pat = arg_sql[1]
-            g = 0
-            if pat.startswith("'"):
-                g = 1 if re.findall(r"(?<!\\)\((?!\?)", pat[1:-1]) else 0
-            out.append(f"regexp_extract({arg_sql[0]}, {pat}, {g})")
-            i = close + 1
-            continue
-
-        if t in (
-            "runningDifference", "runningDifferenceStartingWithFirstValue",
-            "runningAccumulate", "neighbor", "rowNumberInBlock",
-            "rowNumberInAllBlocks",
-        ):
-            # block-order functions (FunctionsMiscellaneous): emulated over
-            # the statement's read order via a monotonic-id window. Golden
-            # scale only — a single-partition window does not distribute.
-            mono = "monotonically_increasing_id()"
-            if t == "runningDifference" and len(arg_sql) == 1:
-                e = arg_sql[0]
-                out.append(f"({e} - lag({e}, 1, {e}) OVER (ORDER BY {mono}))")
-                i = close + 1
-                continue
-            if t == "runningDifferenceStartingWithFirstValue" and len(arg_sql) == 1:
-                e = arg_sql[0]
-                out.append(f"({e} - lag({e}, 1, 0) OVER (ORDER BY {mono}))")
-                i = close + 1
-                continue
-            if t == "runningAccumulate" and len(arg_sql) in (1, 2):
-                # scalar partial states (sum/count) accumulate additively;
-                # optional second arg restarts accumulation per group
-                part = f"PARTITION BY {arg_sql[1]} " if len(arg_sql) == 2 else ""
-                out.append(
-                    f"sum({arg_sql[0]}) OVER ({part}ORDER BY {mono}"
-                    f" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-                )
-                i = close + 1
-                continue
-            if t in ("rowNumberInBlock", "rowNumberInAllBlocks") and not arg_sql:
-                out.append(f"(row_number() OVER (ORDER BY {mono}) - 1)")
-                i = close + 1
-                continue
-            if t == "neighbor":
-                if len(arg_sql) not in (2, 3):
-                    raise ChSqlError("neighbor needs 2 or 3 arguments")
-                e, o = arg_sql[0], arg_sql[1].strip()
-                d = arg_sql[2] if len(arg_sql) == 3 else "0"
-                om2 = re.fullmatch(r"-?\s*\d+", o)
-                if om2:
-                    k2 = int(o.replace(" ", ""))
-                    if abs(k2) > (1 << 31):
-                        # the reference rejects block-sized offsets
-                        # (neighbor.cpp ARGUMENT_OUT_OF_BOUND)
-                        raise ChSqlError(f"neighbor offset out of bound: {k2}")
-                    fn2 = "lead" if k2 >= 0 else "lag"
-                    out.append(
-                        f"{fn2}({e}, {abs(k2)}, {d}) OVER (ORDER BY {mono})"
-                    )
-                else:
-                    wall = (
-                        f"OVER (ORDER BY {mono} ROWS BETWEEN UNBOUNDED"
-                        f" PRECEDING AND UNBOUNDED FOLLOWING)"
-                    )
-                    rn = f"row_number() OVER (ORDER BY {mono})"
-                    idx = f"({rn} + ({o}))"
-                    out.append(
-                        f"(CASE WHEN {idx} BETWEEN 1 AND count(*) {wall}"
-                        f" THEN element_at(collect_list({e}) {wall},"
-                        f" CAST({idx} AS INT)) ELSE {d} END)"
-                    )
-                i = close + 1
-                continue
-
-        if t in ("hasAll", "hasAny", "hasSubstr") and len(arg_sql) == 2:
-            # ClickHouse raises NO_COMMON_TYPE for numeric-vs-string array
-            # args (hasAllAny.h getReturnTypeImpl); Spark's <=> would
-            # happily coerce — reject literal-array cases up front
-            def _arr_kind(a: str) -> str | None:
-                s2 = a.strip()
-                while s2.lower().startswith("array("):
-                    s2 = s2[6:].strip()
-                if s2.startswith("'"):
-                    return "str"
-                if re.match(r"[-+]?\d", s2):
-                    return "num"
-                return None
-
-            kinds = {_arr_kind(a) for a in arg_sql}
-            if kinds == {"num", "str"}:
-                raise ChSqlError(f"{t}: no common type between array arguments")
-
-        if (
-            t == "format"
-            and len(args) >= 2
-            and len(args[0]) == 1
-            and args[0][0].startswith("'")
-        ):
-            # format('{}/{N}', args...) — positional substitution with
-            # repeatable indexed refs (formatString.h), expanded at
-            # translate time into a concat
-            _flit = args[0][0][1:-1]
-            _frest = [f"CAST({_rewrite(a)} AS STRING)" for a in args[1:]]
-            _fparts, _fauto, _fok = [], 0, True
-            for _ftk in re.split(r"(\{\d*\})", _flit):
-                _fm = re.fullmatch(r"\{(\d*)\}", _ftk)
-                if _fm:
-                    _fidx = int(_fm.group(1)) if _fm.group(1) else _fauto
-                    if not _fm.group(1):
-                        _fauto += 1
-                    if _fidx >= len(_frest):
-                        _fok = False
-                        break
-                    _fparts.append(_frest[_fidx])
-                elif _ftk:
-                    _fparts.append("'" + _ftk + "'")
-            if _fok:
-                out.append(
-                    f"concat({', '.join(_fparts)})" if _fparts else "''"
-                )
-                i = close + 1
-                continue
-
-        if t.upper() == "REGEXP_REPLACE" and len(arg_sql) == 3:
-            # SQL-compat alias (FunctionFactory registerAlias) — same \N
-            # backref conversion as replaceRegexpAll
-            t = "replaceRegexpAll"
-
-        if t in ("replaceRegexpOne", "replaceRegexpAll") and len(arg_sql) == 3:
-            # ClickHouse replacement backrefs are \N (ReplaceRegexpImpl);
-            # Java's are $N with literal $ needing \$ — convert literal
-            # replacement strings. replaceRegexpOne also replaces only the
-            # FIRST match: locate the matched text and splice around it
-            # (regexp_replace on just the match applies the backrefs).
-            s0, pat, rep = arg_sql
-            if rep.startswith("'"):
-                body = rep[1:-1].replace("$", "\\\\$")
-                body = re.sub(r"\\\\(\d)", r"$\1", body)
-                rep = f"'{body}'"
-            if t == "replaceRegexpAll":
-                out.append(f"regexp_replace({s0}, {pat}, {rep})")
-            else:
-                first = f"regexp_extract({s0}, {pat}, 0)"
-                out.append(
-                    f"(CASE WHEN NOT ({s0}) RLIKE ({pat}) THEN {s0}"
-                    f" ELSE concat(substr({s0}, 1, locate({first}, {s0}) - 1),"
-                    f" regexp_replace({first}, {pat}, {rep}),"
-                    f" substr({s0}, locate({first}, {s0}) + length({first})))"
-                    f" END)"
-                )
-            i = close + 1
-            continue
-
-        if t in ("sumMap", "minMap", "maxMap") and len(arg_sql) == 1:
-            # single-argument forms (AggregateFunctionSumMap.cpp): a Map
-            # column → Map result; a tuple of arrays → tuple result. Both
-            # route through the two-array builder
-            a0 = arg_sql[0]
-            if a0.lstrip("(").startswith("named_struct"):
-                b2 = _registry_bridge(t, [f"({a0})._1", f"({a0})._2"])
-                if b2 is not None:
-                    out.append(b2)
-                    i = close + 1
-                    continue
-            b2 = _registry_bridge(t, [f"map_keys({a0})", f"map_values({a0})"])
-            if b2 is not None:
-                out.append(f"map_from_arrays(({b2}).keys, ({b2}).values)")
-                i = close + 1
-                continue
-
-        if t == "round":
-            # ClickHouse round() is banker's rounding (FunctionsRound.cpp)
-            out.append(f"bround({', '.join(arg_sql)})")
-            i = close + 1
-            continue
-
-        if t.upper() == "CAST" and len(args) == 1:
-            # SQL form CAST(x AS String) over a composite: CH text
-            # serialization, like the 2-arg form below
-            _asm = None
-            _d9 = 0
-            for _k9, _tk9 in enumerate(args[0]):
-                if _tk9 in ("(", "["):
-                    _d9 += 1
-                elif _tk9 in (")", "]"):
-                    _d9 -= 1
-                elif _d9 == 0 and _tk9.upper() == "AS":
-                    _asm = _k9
-            if _asm is not None and [
-                x.strip() for x in args[0][_asm + 1 :]
-            ] == ["String"]:
-                _cty1 = _ch_type(args[0][:_asm])
-                if _cty1 is not None and re.match(
-                    r"(?i)(Array|Tuple)\(", _cty1
-                ):
-                    _r1 = _ch_render_sql(_rewrite(args[0][:_asm]), _cty1)
-                    if _r1 is not None:
-                        out.append(_r1)
-                        i = close + 1
-                        continue
-
-        if t.upper() == "CAST" and len(arg_sql) == 2 and re.fullmatch(
-            r"'(?:[^'\\]|\\.)+'", arg_sql[1]
-        ):
-            # ClickHouse 2-arg form: CAST(x, 'Type')
-            ch_type = arg_sql[1][1:-1].replace("\\'", "'")
-            em = re.match(r"Enum(?:8|16)?\s*\((.*)\)\s*$", ch_type, re.DOTALL)
-            if em:
-                # strict enum cast: unknown names (and NULL into a
-                # non-Nullable Enum) raise, as the reference does
-                # (ErrorCodes::UNKNOWN_ELEMENT_OF_ENUM, cast error 349)
-                names = re.findall(r"'((?:[^'\\]|\\.)*)'\s*=", em.group(1))
-                pairs = ", ".join(
-                    f"'{n}', '{n}'" for n in names
-                )
-                out.append(
-                    f"(CASE WHEN element_at(map({pairs}), CAST({arg_sql[0]} AS STRING)) IS NULL"
-                    f" THEN CAST(raise_error('cannot cast to enum') AS STRING)"
-                    f" ELSE CAST({arg_sql[0]} AS STRING) END)"
-                )
-                i = close + 1
-                continue
-            fsm = re.match(r"(?i)FixedString\s*\(\s*(\d+)\s*\)$", ch_type)
-            if fsm:
-                _n = fsm.group(1)
-                _s0 = f"CAST({arg_sql[0]} AS STRING)"
-                out.append(
-                    f"(CASE WHEN octet_length({_s0}) > {_n} THEN"
-                    f" CAST(raise_error('TOO_LARGE_STRING_SIZE: string too"
-                    f" long for FixedString({_n})') AS STRING)"
-                    f" ELSE concat({_s0}, repeat(char(0),"
-                    f" {_n} - octet_length({_s0}))) END)"
-                )
-                i = close + 1
-                continue
-            if ch_type.strip() == "String":
-                # CAST(composite AS String) = CH text serialization, not
-                # Spark's bracket style (FunctionsConversion toString path)
-                _cty0 = _ch_type(args[0])
-                if _cty0 is not None and re.match(r"(?i)(Array|Tuple)\(", _cty0):
-                    _r0 = _ch_render_sql(arg_sql[0], _cty0)
-                    if _r0 is not None:
-                        out.append(_r0)
-                        i = close + 1
-                        continue
-            try:
-                spark_type = ch_type_to_spark(ch_type)
-            except ChSqlError:
-                spark_type = None
-            if spark_type:
-                out.append(f"CAST({arg_sql[0]} AS {spark_type})")
-                i = close + 1
-                continue
-
-        if (
-            tl == "values"
-            and args
-            and args[0]
-            and args[0][0].startswith("'")
-            and len(args) > 1
-        ):
-            # values('a T, b U', (r...), ...) table function
-            # (TableFunctionValues.cpp) → Spark VALUES with typed casts
-            try:
-                cols = []
-                for cdef in _split_type_commas(args[0][0][1:-1]):
-                    nm = re.match(r"([A-Za-z_]\w*)\s+(.+)$", cdef.strip(), re.DOTALL)
-                    cols.append((nm.group(1), ch_type_to_spark(nm.group(2))))
-            except (AttributeError, ChSqlError):
-                cols = None
-            if cols:
-                rows = []
-                for a in args[1:]:
-                    inner_sql = (
-                        ", ".join(_rewrite(x) for x in _split_args(a[1:-1]))
-                        if a and a[0] == "(" and a[-1] == ")"
-                        else _rewrite(a)
-                    )
-                    rows.append(f"({inner_sql})")
-                sel = ", ".join(f"CAST({n} AS {ty}) AS {n}" for n, ty in cols)
-                names = ", ".join(n for n, _ in cols)
-                out.append(
-                    f"(SELECT {sel} FROM VALUES {', '.join(rows)} AS __v({names}))"
-                )
-                i = close + 1
-                continue
-
-        if t in ("numbers", "numbers_mt"):
-            # numbers(N) / numbers(start, N) table function → range() TVF
-            # (numbers_mt is the multithreaded variant — same rows)
-            if len(arg_sql) == 1:
-                out.append(f"(SELECT id AS number FROM range({arg_sql[0]}))")
-            else:
-                out.append(
-                    f"(SELECT id AS number FROM range({arg_sql[0]}, {arg_sql[0]} + {arg_sql[1]}))"
-                )
-            i = close + 1
-            continue
-
-        if t == "zeros" and len(arg_sql) == 1:
-            # zeros(N) table function → N rows of a single UInt8 zero column
-            out.append(
-                f"(SELECT CAST(0 AS INT) AS zero FROM range({arg_sql[0]}))"
-            )
-            i = close + 1
-            continue
-
-        if t in ("sleep", "sleepEachRow") and len(arg_sql) == 1:
-            # sleep()/sleepEachRow() (src/Functions/sleep.h) return UInt8 0;
-            # the wall-clock delay is irrelevant to batch output.
-            out.append("0")
-            i = close + 1
-            continue
-
-        if t == "currentDatabase" and not arg_sql:
-            # currentDatabase() (src/Functions/currentDatabase.cpp) — the
-            # engine has a single flat namespace; ClickHouse's default db.
-            out.append("'default'")
-            i = close + 1
-            continue
-
-        if t == "multiIf":
-            # multiIf(c1, v1, c2, v2, ..., default) → CASE chain
-            if len(arg_sql) % 2 == 0 or len(arg_sql) < 3:
-                raise ChSqlError("multiIf needs odd >= 3 args")
-            parts = ["CASE"]
-            for j in range(0, len(arg_sql) - 1, 2):
-                # UInt8 truthiness handled by _wrap_case_conditions
-                parts.append(f"WHEN {arg_sql[j]} THEN {arg_sql[j + 1]}")
-            parts.append(f"ELSE {arg_sql[-1]} END")
-            out.append(" ".join(parts))
-            i = close + 1
-            continue
-
-        if (
-            t == "JSONExtract"
-            and len(arg_sql) >= 2
-            and re.fullmatch(r"'[^']*'", arg_sql[-1])
-        ):
-            # generic typed extraction (FunctionsJSON.cpp JSONExtract):
-            # JSONExtract(j, k1, …, 'Type') → CAST(get_json_object) for
-            # scalars, from_json for Array/Map/Tuple results
-            try:
-                spark_t = ch_type_to_spark(arg_sql[-1][1:-1])
-            except ChSqlError:
-                spark_t = None
-            parts, ok_path = [], True
-            for a in arg_sql[1:-1]:
-                if re.fullmatch(r"'[^']*'", a):
-                    parts.append("." + a[1:-1])
-                elif re.fullmatch(r"-?\d+", a):
-                    idx = int(a)
-                    parts.append(f"[{idx - 1 if idx > 0 else idx}]")
-                else:
-                    ok_path = False
-                    break
-            if spark_t is not None and ok_path:
-                inner = f"get_json_object({arg_sql[0]}, '${''.join(parts)}')"
-                if re.match(r"(?i)\s*(ARRAY|MAP|STRUCT)", spark_t):
-                    out.append(f"from_json({inner}, '{spark_t}')")
-                else:
-                    out.append(f"CAST({inner} AS {spark_t})")
-                i = close + 1
-                continue
-
-        if _CALL.get().safe_subscript and t == "arrayElement" and len(arg_sql) == 2:
-            out.append(
-                f"(CASE WHEN ({arg_sql[1]}) <> 0 THEN try_element_at({arg_sql[0]}, CAST({arg_sql[1]} AS INT)) END)"
-            )
-            i = close + 1
-            continue
-
-        if (
-            t == "transform"
-            and len(arg_sql) in (3, 4)
-            and not any("->" in a for a in arg_sql)
-        ):
-            # transform(x, [f...], [t...][, d]) → element_at(map(...), x);
-            # the 3-arg form keeps x itself on no match and REQUIRES the
-            # to-array's type to equal x's (transform.cpp error 43) — reject
-            # the obvious literal mismatches Spark would silently coerce
-            if len(arg_sql) == 3:
-                x_lit = _as_py_literal(arg_sql[0])
-                mto = re.fullmatch(r"array\((.+)\)", arg_sql[2])
-                to_lit = (
-                    _as_py_literal(mto.group(1).split(",")[0].strip()) if mto else None
-                )
-                if (
-                    x_lit is not None
-                    and to_lit is not None
-                    and isinstance(x_lit, str) != isinstance(to_lit, str)
-                ):
-                    raise ChSqlError(
-                        "transform: 3-arg form needs matching x/to types"
-                    )
-            dflt = arg_sql[3] if len(arg_sql) == 4 else arg_sql[0]
-            out.append(
-                f"coalesce(element_at(map_from_arrays({arg_sql[1]}, {arg_sql[2]}), {arg_sql[0]}), {dflt})"
-            )
-            i = close + 1
-            continue
-
-        if t in ("dateDiff", "date_diff", "timestampDiff", "TIMESTAMP_DIFF", "age"):
-            out.append(_datediff_expr("age" if t == "age" else "dateDiff", arg_sql))
-            i = close + 1
-            continue
-
-        if (
-            t.lower() in ("avg", "median")
-            and len(arg_sql) == 1
-            and not (close + 1 < len(tokens) and tokens[close + 1].lower() == "over")
-            and not re.search(
-                r"(?i)null", " ".join(tokens[i + 2 : close]) + " " + arg_sql[0]
-            )
-            and not any(
-                re.search(rf"(?i)\b{re.escape(c)}\b", arg_sql[0])
-                for c in _CALL.get().nullable_cols
-            )
-        ):
-            # empty-set avg/median is NaN in ClickHouse (AggregateFunctionAvg
-            # divides 0/0), not NULL; a Nullable argument DOES yield NULL
-            # there, and window uses keep OVER attached — both excluded
-            fn = "avg" if t.lower() == "avg" else "median"
-            out.append(f"coalesce({fn}({arg_sql[0]}), double('NaN'))")
-            i = close + 1
-            continue
-
-        # SQL-standard position(needle IN haystack): re-split and render
-        # the registry's position (ClickHouse position counts bytes)
-        if tl in ("position", "locate") and len(arg_sql) == 1:
-            parts = _split_top_in(arg_sql[0])
-            bridged = parts and _registry_bridge("position", [parts[1], parts[0]])
-            if bridged:
-                out.append(bridged)
-                i = close + 1
-                continue
-
-        if (
-            t in ("substring", "substr", "mid", "substringUTF8")
-            and len(arg_sql) in (2, 3)
-            and re.fullmatch(r"[+-]?0+", arg_sql[1].strip())
-            and (
-                len(arg_sql) == 2
-                or re.fullmatch(r"[+-]?\d+", arg_sql[2].strip())
-            )
-        ):
-            # CONSTANT offset 0 throws ZERO_ARRAY_OR_TUPLE_INDEX error 135
-            # ("Indices in strings are 1-based", substring.cpp:98/114 — the
-            # const-offset path; 3-arg needs length const too). The ''
-            # result of the registry's substring models only the
-            # dynamic-offset path (sliceDynamicOffsetUnbounded).
-            out.append(
-                "CAST(raise_error('ZERO_ARRAY_OR_TUPLE_INDEX: Indices in"
-                " strings are 1-based') AS STRING)"
-            )
-            i = close + 1
-            continue
-
-        _has_lambda = bool(arg_sql) and _is_lambda_sql(arg_sql[0])
-        if (
-            t in ARITY_TEMPLATES
-            and len(arg_sql) in ARITY_TEMPLATES[t]
-            and not _has_lambda
-        ):
-            out.append(_fill_template(ARITY_TEMPLATES[t][len(arg_sql)], arg_sql, t))
-            i = close + 1
-            continue
-
-        if t in ("toTypeName", "toColumnTypeName") and len(args) == 1:
-            # static CH literal/expression typing (chtypes.py implements the
-            # reference's NumberTraits + literal rules); fall back to the
-            # runtime typeof() mapping when not statically inferable.
-            # toColumnTypeName additionally wraps fully-constant expressions
-            # in Const(...) (IColumn::isConst — toColumnTypeName.cpp)
-            _arg_toks = list(args[0])
-            if (
-                len(_arg_toks) == 1
-                and re.match(r"[A-Za-z_]\w*$", _arg_toks[0])
-                and _arg_toks[0] not in _CALL.get().col_ch_types
-            ):
-                # sibling select-item alias (CH inlines these): walk back to
-                # `expr AS ident` earlier in the statement
-                expanded = _alias_backref_tokens(tokens, i, _arg_toks[0])
-                if expanded:
-                    _arg_toks = expanded
-            _st: dict = {}
-            inferred = _ch_type(_arg_toks, _st)
-            if inferred is not None:
-                if t == "toColumnTypeName" and not (
-                    _st.get("col") or _st.get("materialize")
-                ):
-                    inferred = f"Const({inferred})"
-                out.append("'" + inferred.replace("'", "''") + "'")
-                i = close + 1
-                continue
-
-        if t == "isConstant" and len(args) == 1:
-            # isConstant.cpp: 1 for Const columns. Static inference tracks
-            # column refs / materialize(); non-inferable stays the library
-            # builder's conservative 0
-            _st2: dict = {}
-            if _ch_type(args[0], _st2) is not None:
-                out.append(
-                    "0" if (_st2.get("col") or _st2.get("materialize")) else "1"
-                )
-                i = close + 1
-                continue
-
-        if t == "defaultValueOfArgumentType" and len(args) == 1:
-            typ = _ch_type(args[0])
-            dsql = _ch_default_sql(typ) if typ else None
-            if dsql is not None:
-                out.append(dsql)
-                i = close + 1
-                continue
-
-        if t == "defaultValueOfTypeName" and len(args) == 1 and args[0] and args[0][0].startswith("'"):
-            dsql = _ch_default_sql(args[0][0][1:-1])
-            if dsql is not None:
-                out.append(dsql)
-                i = close + 1
-                continue
-
-        if t == "char" and len(arg_sql) >= 1:
-            # FunctionChar.cpp: variadic, each argument truncated to one
-            # byte; the bytes form a (UTF-8) string
-            hexparts = ", ".join(
-                f"lpad(hex(pmod(CAST({a} AS BIGINT), 256)), 2, '0')"
-                for a in arg_sql
-            )
-            out.append(f"decode(unhex(concat({hexparts})), 'UTF-8')")
-            i = close + 1
-            continue
-
-        if (
-            t in ("toUInt8", "toUInt16", "toUInt32", "toUInt64")
-            and len(arg_sql) == 1
-            and re.fullmatch(r"-\s*\d+", arg_sql[0].strip())
-        ):
-            # unsigned wrap of a negative literal (CH casts reinterpret the
-            # two's-complement bits: toUInt64(-1) = 18446744073709551615).
-            # UInt64 exceeds BIGINT, so surface it as DECIMAL(20,0) — the
-            # same carrier the ch-hash family uses for unsigned 64-bit
-            neg = int(arg_sql[0].replace(" ", ""))
-            width = {"toUInt8": 8, "toUInt16": 16, "toUInt32": 32, "toUInt64": 64}[t]
-            wrapped = neg % (1 << width)
-            if width == 64:
-                out.append(f"CAST({wrapped} AS DECIMAL(20,0))")
-            else:
-                out.append(f"CAST({wrapped} AS BIGINT)")
-            i = close + 1
-            continue
-
-        if (
-            t in ("startsWith", "endsWith")
-            and len(arg_sql) == 2
-            and any(a.strip().startswith(("array(", "[")) for a in arg_sql)
-        ):
-            # array form (FunctionStartsEndsWith): prefix/suffix slice
-            # equality; NULL elements compare positionally (<=> per slot)
-            a0, a1 = arg_sql
-            if t == "startsWith":
-                sl = f"slice({a0}, 1, size({a1}))"
-            else:
-                sl = (
-                    f"(CASE WHEN size({a1}) = 0 THEN array()"
-                    f" ELSE slice({a0}, -size({a1}), size({a1})) END)"
-                )
-            out.append(
-                f"(size({a0}) >= size({a1}) AND size(filter(zip_with({sl},"
-                f" {a1}, (__p, __q) -> NOT (__p <=> __q)), __b -> __b)) = 0)"
-            )
-            i = close + 1
-            continue
-
-        if t in ("IPv4StringToNum", "INET_ATON") and len(arg_sql) == 1:
-            # the reference registers these as the Throw variant
-            # (FunctionsCodingIP.cpp:1160): invalid input -> error 675
-            # CANNOT_PARSE_IPV4. Per-row throw is impractical in Spark, so
-            # the registry builder yields 0 (OrDefault) for non-constant
-            # rows; a constant invalid literal is caught here so golden
-            # tests expecting serverError 675 match.
-            _ipm = re.fullmatch(r"'((?:[^'\\]|\\.)*)'", arg_sql[0].strip())
-            if _ipm and "\\" not in _ipm.group(1) and not re.fullmatch(
-                r"(25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)"
-                r"(\.(25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)){3}",
-                _ipm.group(1),
-            ):
-                out.append(
-                    "CAST(raise_error('CANNOT_PARSE_IPV4: Invalid IPv4"
-                    " value') AS BIGINT)"
-                )
-                i = close + 1
-                continue
-
-        if t == "toFixedString" and len(arg_sql) == 2:
-            # constant too-long input: TOO_LARGE_STRING_SIZE at translate
-            # time (toFixedString.h:101) — checked here so non-constant
-            # rows past a streaming LIMIT never trip a runtime error
-            _lm = re.fullmatch(r"'((?:[^'\\]|\\.)*)'", arg_sql[0].strip())
-            _nm = re.fullmatch(r"\d+", arg_sql[1].strip())
-            if _lm and _nm and "\\" not in _lm.group(1) and _lm.group(
-                1
-            ).isascii() and len(
-                _lm.group(1).encode("utf-8", "surrogateescape")
-            ) > int(_nm.group(0)):
-                # runtime raise (Spark keeps never-taken CASE/IF branches
-                # lazy, preserving CH short-circuit: 02408)
-                out.append(
-                    f"CAST(raise_error('TOO_LARGE_STRING_SIZE: string too"
-                    f" long for FixedString({_nm.group(0)})') AS STRING)"
-                )
-                i = close + 1
-                continue
-
-        if t == "toFixedString" and len(arg_sql) == 2 and re.match(
-            r"(?i)(unhex|aes_|to_binary|sha1|sha2|md5)\s*\(", arg_sql[0].strip()
-        ):
-            # binary input: rpad's string pad would force a lossy UTF-8
-            # cast; the bytes already have the exact width
-            out.append(arg_sql[0])
-            i = close + 1
-            continue
-
-        if (
-            t == "toString"
-            and len(arg_sql) == 2
-            and arg_sql[1].strip().upper() == "NULL"
-        ):
-            # a NULL timezone argument nulls the result (default
-            # NULL-propagation of ordinary functions)
-            out.append("CAST(NULL AS STRING)")
-            i = close + 1
-            continue
-
-        if t in ("length", "empty", "notEmpty") and len(arg_sql) == 1:
-            # ClickHouse's length, empty and notEmpty take strings, arrays
-            # and maps (length.cpp, EmptyImpl): the argument's static type
-            # picks the form
-            _ety = _ch_type(args[0])
-            _bty = (_ety or "").replace("Nullable(", "")
-            if _ety is None and re.match(
-                r"(?:array\(|array_distinct\(|array_sort\(|array_intersect\(|"
-                r"array_except\(|array_union\(|array_repeat\(|array_remove\(|"
-                r"collect_list\(|collect_set\(|slice\(|arrays_zip\(|sequence\(|"
-                r"split\(|flatten\(|transform\(|filter\(|"
-                r"h3kRing\(|h3HexRing\(|h3Line\(|h3GetFaces\(|h3ToGeoBoundary\(|"
-                r"h3ToChildren\(|h3GetUnidirectionalEdgesFromHexagon\(|"
-                r"h3GetUnidirectionalEdgeBoundary\()",
-                arg_sql[0],
-            ):
-                _bty = "Array("  # untyped, but visibly an array producer
-            if _bty.startswith(("Array(", "Map(")):
-                _sz = f"size({arg_sql[0]})"
-                out.append(
-                    f"CAST({_sz} AS BIGINT)" if t == "length"
-                    else f"({_sz} = 0)" if t == "empty"
-                    else f"({_sz} > 0)"
-                )
-                i = close + 1
-                continue
-            if t != "length" and _bty.rstrip(")") in ("IPv4", "IPv6"):
-                # the all-zero address is the IP types' empty value
-                # (EmptyImpl over the numeric domain types)
-                _z9 = f"(({arg_sql[0]}) RLIKE '^[0:.]*$')"
-                out.append(_z9 if t == "empty" else f"(NOT {_z9})")
-                i = close + 1
-                continue
-            if t != "length" and _bty.startswith("FixedString"):
-                # zero bytes don't count (EmptyImpl vectorFixedToVector
-                # skips zeros); plain String stays size-only
-                _z = f"coalesce(length(replace({arg_sql[0]}, char(0), '')), 0)"
-                out.append(f"({_z} = 0)" if t == "empty" else f"({_z} > 0)")
-                i = close + 1
-                continue
-
-        if t == "toString" and len(arg_sql) == 1:
-            _sty = _ch_type(args[0])
-            if _sty is not None and re.match(
-                r"(?i)(Array|Tuple)\(", _sty
-            ):
-                # CH-style composite stringification (FieldVisitorToString)
-                _r = _ch_render_sql(arg_sql[0], _sty)
-                if _r is not None:
-                    out.append(_r)
-                    i = close + 1
-                    continue
-            if _sty is not None and _sty.startswith("FixedString"):
-                # FixedStringToString drops the zero padding
-                # (FunctionsConversion.h ConvertImplFixedStringToString)
-                out.append(
-                    f"regexp_replace(CAST({arg_sql[0]} AS STRING),"
-                    f" concat(char(0), '+$'), '')"
-                )
-                i = close + 1
-                continue
-
-        if (
-            t in _NUM_CONV_SPARK
-            and len(arg_sql) == 1
-        ):
-            # CH numeric conversions of temporal values take the UNDERLYING
-            # number (DataTypeDate is UInt16 days, DateTime is UInt32
-            # seconds — src/Functions/FunctionsConversion.h), which Spark's
-            # CAST(date AS INT) refuses: emit the epoch arithmetic instead
-            _ity = _ch_type(args[0])
-            if _ity in ("Date", "Date32"):
-                out.append(
-                    f"CAST(datediff({arg_sql[0]}, DATE '1970-01-01')"
-                    f" AS {_NUM_CONV_SPARK[t]})"
-                )
-                i = close + 1
-                continue
-            if _ity is not None and _ity.startswith("DateTime"):
-                out.append(
-                    f"CAST(unix_timestamp({arg_sql[0]}) AS {_NUM_CONV_SPARK[t]})"
-                )
-                i = close + 1
-                continue
-
-        if t == "finalizeAggregation" and len(arg_sql) == 1 and re.match(
-            r"(array_sort\(\s*)?(array_distinct|collect_set)\(",
-            arg_sql[0].strip(),
-        ):
-            # a uniq-family state carrier (sorted distinct array):
-            # finalizing it produces the COUNT (finalizeAggregation.cpp)
-            out.append(f"CAST(size({arg_sql[0]}) AS BIGINT)")
-            i = close + 1
-            continue
-
-        if t in TEMPLATES and TEMPLATES[t] is not None and not _has_lambda:
-            out.append(_fill_template(TEMPLATES[t], arg_sql, t))
-            i = close + 1
-            continue
-
-        if t.lower() in ("and", "or", "xor", "not") and arg_sql:
-            # function-form logical ops over UInt8 (FunctionsLogical.cpp,
-            # case-insensitive registry): nonzero = true. Rendered as 0/1
-            # only in value position; predicate contexts (WHERE/HAVING/ON)
-            # need a genuine boolean or Spark rejects the filter.
-            tl2 = t.lower()
-            bools = [f"(({a}) <> 0)" for a in arg_sql]
-            if tl2 == "not":
-                expr = f"NOT {bools[0]}"
-            elif tl2 == "xor":
-                expr = " != ".join(bools)
-            else:
-                expr = (" AND " if tl2 == "and" else " OR ").join(bools)
-            out.append(f"({expr})" if clause == "pred" else f"CAST(({expr}) AS INT)")
-            i = close + 1
-            continue
-
-        if t in ("arrayPartialSort", "arrayPartialReverseSort") and len(args) >= 2:
-            # partial sort: every reference usage resizes to the limit, and a
-            # full sort's first `limit` elements equal the partial sort's
-            # (arraySort.cpp ArrayPartialSortImpl) — drop the limit arg and
-            # reprocess as the full keyed/plain sort
-            base = (
-                "arraySort" if t == "arrayPartialSort" else "arrayReverseSort"
-            )
-            if _is_lambda_sql(" ".join(args[0])):
-                keep = [args[0]] + args[2:]
-            else:
-                lim_sql = " ".join(args[0]).strip().strip("() ")
-                if len(args) != 2 or not re.fullmatch(
-                    r"\d+|[A-Za-z_]\w*", lim_sql
-                ):
-                    raise ChSqlError(
-                        f"{t}: expects (limit, array) or (lambda, limit, "
-                        f"arrays…)"
-                    )
-                keep = args[1:]
-            new = [base, "("]
-            for jj, a in enumerate(keep):
-                if jj:
-                    new.append(",")
-                new += list(a)
-            new.append(")")
-            tokens = tokens[:i] + new + tokens[close + 1 :]
-            continue
-
-        _HOF = (
-            "arrayMap", "arrayFilter", "arrayExists", "arrayAll", "arrayFirst",
-            "arrayLast", "arrayFirstOrNull", "arrayLastOrNull",
-            "arrayFirstIndex", "arrayCount", "arraySum",
-            "arrayAvg", "arrayMin", "arrayMax", "arrayCompact",
-            "arraySort", "arrayReverseSort",
-            "arraySplit", "arrayReverseSplit",
-            "arrayCumSum", "arrayCumSumNonNegative",
-            "mapFilter", "mapApply",
-        )
-        if t in _HOF and arg_sql and _is_lambda_sql(arg_sql[0]):
-            # ClickHouse HOFs are lambda-FIRST (FunctionsHigherOrder); Spark's
-            # transform/filter/exists/forall are array-first — rotate. Multi-
-            # array arrayMap(f, a, b) is Spark's zip_with.
-            lam, arrs = arg_sql[0], arg_sql[1:]
-            if t not in ("arrayMap", "arraySum", "arrayAvg", "arrayMin",
-                         "arrayMax", "arrayCompact", "arraySort",
-                         "arrayReverseSort", "arrayCumSum",
-                         "arrayCumSumNonNegative", "mapApply"):
-                # predicate HOFs: ClickHouse treats any nonzero as true
-                # (UInt8 lambdas like `x -> 1`); Spark demands BOOLEAN
-                head_l, body_l = lam.split("->", 1)
-                lam = f"{head_l}-> CAST(({body_l.strip()}) AS BOOLEAN)"
-            a0 = arrs[0] if arrs else ""
-            sum_t = "aggregate(transform({a}, {l}), CAST(0 AS DOUBLE), (acc, __x) -> acc + __x)"
-            if t == "arrayMap" and len(arrs) == 2:
-                out.append(f"zip_with({arrs[0]}, {arrs[1]}, {lam})")
-            elif t in ("arrayFirst", "arrayFirstOrNull", "arrayLast", "arrayLastOrNull"):
-                pos = 1 if "First" in t else -1
-                if len(arrs) == 2:
-                    # two-array predicate: value from the first array where
-                    # the (zipped) predicate holds
-                    head_l2, body_l2 = lam.split("->", 1)
-                    params = head_l2.strip().strip("()")
-                    first_p = params.split(",")[0].strip()
-                    z = (
-                        f"zip_with({arrs[0]}, {arrs[1]}, ({params}) -> "
-                        f"named_struct('v', {first_p}, 'p', {body_l2.strip()}))"
-                    )
-                    out.append(f"element_at(filter({z}, __s -> __s.p), {pos}).v")
-                else:
-                    out.append(f"element_at(filter({a0}, {lam}), {pos})")
-            elif t == "arrayFirstIndex":
-                # first matching VALUE's position — predicates are pure, so
-                # equal elements match equally and first-occurrence is exact
-                out.append(
-                    f"coalesce(array_position({a0}, element_at(filter({a0}, {lam}), 1)), 0)"
-                )
-            elif t in ("arraySort", "arrayReverseSort"):
-                # keyed sort (FunctionArraySort): STABLE — decorate each
-                # element with (key, original index), sort by key with the
-                # index as tiebreak, strip. Spark's bare struct sort can't
-                # express desc or the stable tiebreak, so use a comparator.
-                # Two-array form sorts the FIRST array by a key computed
-                # from both, zipped positionally.
-                if len(arrs) == 2:
-                    key = f"element_at(zip_with(array(__x), array(element_at({arrs[1]}, __i + 1)), {lam}), 1)"
-                else:
-                    key = f"element_at(transform(array(__x), {lam}), 1)"
-                dec = (
-                    f"transform({a0}, (__x, __i) -> named_struct("
-                    f"'k', {key},"
-                    f" 'i', __i, 'v', __x))"
-                )
-                lt, gt = ("1", "-1") if t == "arrayReverseSort" else ("-1", "1")
-                cmp = (
-                    f"(__l, __r) -> CASE"
-                    f" WHEN __l.k IS NULL AND __r.k IS NULL THEN"
-                    f" (CASE WHEN __l.i < __r.i THEN -1"
-                    f" WHEN __l.i > __r.i THEN 1 ELSE 0 END)"
-                    f" WHEN __l.k IS NULL THEN 1"
-                    f" WHEN __r.k IS NULL THEN -1"
-                    f" WHEN __l.k < __r.k THEN {lt}"
-                    f" WHEN __l.k > __r.k THEN {gt}"
-                    f" WHEN __l.i < __r.i THEN -1 WHEN __l.i > __r.i THEN 1"
-                    f" ELSE 0 END"
-                )
-                out.append(
-                    f"transform(array_sort({dec}, {cmp}), __s -> __s.v)"
-                )
-            elif t == "arrayCompact":
-                # keyed form arrayCompact(f, a): drop an element when f of it
-                # null-safe-equals f of its predecessor; returns ORIGINAL
-                # elements (arrayCompact.cpp). The lambda is applied via a
-                # single-element transform so no param substitution is needed.
-                cur = f"element_at(transform(array(__x), {lam}), 1)"
-                prv = (
-                    f"element_at(transform(array("
-                    f"element_at({a0}, greatest(__i, 1))), {lam}), 1)"
-                )
-                out.append(
-                    f"filter({a0}, (__x, __i) -> __i = 0"
-                    f" OR NOT ({cur} <=> {prv}))"
-                )
-            elif t == "mapFilter":
-                out.append(f"map_filter({a0}, {lam})")
-            elif t == "mapApply":
-                # lambda yields a (k, v) tuple (mapApply.cpp) — rebuild the
-                # map from transformed entries; a non-pair tuple surfaces as
-                # a missing-field analysis error like the reference's
-                # NUMBER_OF_ARGUMENTS_DOESNT_MATCH
-                st = (
-                    f"element_at(zip_with(array(__e.key), array(__e.value),"
-                    f" {lam}), 1)"
-                )
-                out.append(
-                    f"map_from_entries(transform(map_entries({a0}),"
-                    f" __e -> named_struct('key', ({st})._1,"
-                    f" 'value', ({st})._2)))"
-                )
-            elif t in ("arraySplit", "arrayReverseSplit"):
-                # cut BEFORE flagged elements (arraySplit) / AFTER them
-                # (arrayReverseSplit) — FunctionArrayMapped ArraySplitImpl.
-                # Group starts → slices; empty source filters to [].
-                flags = (
-                    f"zip_with({arrs[0]}, {arrs[1]}, {lam})"
-                    if len(arrs) == 2
-                    else f"transform({arrs[0]}, {lam})"
-                )
-                off = "__i" if t == "arraySplit" else "__i - 1"
-                starts = (
-                    f"filter(sequence(1, greatest(size({a0}), 1)),"
-                    f" __i -> __i <= size({a0}) AND (__i = 1 OR"
-                    f" (CASE WHEN ({off}) >= 1 THEN"
-                    f" coalesce(CAST(try_element_at({flags}, {off})"
-                    f" AS BOOLEAN), false) ELSE false END)))"
-                )
-                out.append(
-                    f"filter(transform({starts}, (__s, __j) ->"
-                    f" slice({a0}, __s,"
-                    f" coalesce(try_element_at({starts}, __j + 2),"
-                    f" size({a0}) + 1) - __s)),"
-                    f" __g -> size({a0}) > 0)"
-                )
-            elif t in ("arrayCumSum", "arrayCumSumNonNegative"):
-                b = (
-                    f"zip_with({arrs[0]}, {arrs[1]}, {lam})"
-                    if len(arrs) == 2
-                    else f"transform({arrs[0]}, {lam})"
-                )
-                step = (
-                    "greatest(__a + CAST(__x AS DOUBLE), CAST(0 AS DOUBLE))"
-                    if t == "arrayCumSumNonNegative"
-                    else "__a + CAST(__x AS DOUBLE)"
-                )
-                out.append(
-                    f"transform(CASE WHEN size({a0}) > 0 THEN"
-                    f" sequence(1, size({a0})) ELSE"
-                    f" CAST(array() AS ARRAY<INT>) END,"
-                    f" __i -> aggregate(slice({b}, 1, __i),"
-                    f" CAST(0 AS DOUBLE), (__a, __x) -> {step}))"
-                )
-            elif t == "arrayCount":
-                out.append(f"size(filter({a0}, {lam}))")
-            elif t == "arraySum":
-                out.append(sum_t.format(a=a0, l=lam))
-            elif t == "arrayAvg":
-                out.append(f"({sum_t.format(a=a0, l=lam)} / size({a0}))")
-            elif t == "arrayMin":
-                out.append(f"array_min(transform({a0}, {lam}))")
-            elif t == "arrayMax":
-                out.append(f"array_max(transform({a0}, {lam}))")
-            else:
-                fn = {"arrayMap": "transform", "arrayFilter": "filter",
-                      "arrayExists": "exists", "arrayAll": "forall"}[t]
-                out.append(f"{fn}({', '.join(arrs)}, {lam})")
-            i = close + 1
-            continue
-
-        if t not in NAME_MAP:
-            bridged = _registry_bridge(t, arg_sql)
-            if bridged is not None:
-                out.append(bridged)
-                i = close + 1
-                continue
-        name = NAME_MAP.get(t, t)
-        out.append(f"{name}({', '.join(arg_sql)})")
-        i = close + 1
-        continue
+        out.append(sql)
+        i = c.end
     # join tokens with spaces, then tidy spacing around punctuation
     s = " ".join(out)
     s = re.sub(r"\s+([,)\].])", r"\1", s)
     s = re.sub(r"([(\[])\s+", r"\1", s)
     s = re.sub(r"\s+", " ", s)
     return s.strip()
+
+
+# --- handlers, in the order the generic rules once interleaved them --------
+
+
+@_handles("toDateTime", "toDateTime64", "toDateTime32", "toDate", "toDate32", "toTimeZone", "toTimezone", early=True)
+def _tz_of_datetime(c: _Site):
+    args = c.args
+    if not (
+        len(args) in (2, 3)
+        and re.fullmatch(r"'[^']*'", " ".join(args[-1]).strip())
+        and (len(args) == 2 or re.fullmatch(r"\d+", " ".join(args[1]).strip()))
+    ):
+        return None
+    # tz-arg form over an already-DateTime value: the instant is unchanged,
+    # only the DISPLAY timezone moves (FunctionsConversion
+    # ToDateTimeTransform keeps the unix value). The SOURCE zone is the
+    # value's own declared timezone when the column type carries one
+    # (DataTypeDateTime tz param), else the render default UTC.
+    is_dt = bool(re.match(
+        r"(?i)\s*(toDateTime(64|32)?|now(64)?|toStartOf\w+|parseDateTime\w*)\s*\(",
+        " ".join(args[0]),
+    ))
+    dty0 = None
+    if not is_dt:
+        dty0 = _ch_type(args[0])
+        is_dt = bool(dty0) and dty0.replace("Nullable(", "").lower().startswith("datetime")
+    if not is_dt:
+        return None
+    # the registry's toTimeZone, a TIMESTAMP as over a column; a
+    # DateTime('Zone') value holds its wall clock in that zone
+    src = f"CAST({_rewrite(args[0])} AS TIMESTAMP)"
+    tzm = re.search(r"'([^']+)'", dty0 or "")
+    if tzm:
+        src = f"to_utc_timestamp({src}, '{tzm.group(1)}')"
+    conv = _registry_bridge("toTimeZone", [src, " ".join(args[-1]).strip()])
+    if conv is None:
+        return None
+    return f"CAST({conv} AS DATE)" if c.name in ("toDate", "toDate32") else conv
+
+
+@_handles("range", ci=True, early=True)
+def _range_of_ipv4(c: _Site):
+    if not 1 <= len(c.args) <= 3:
+        return None
+    # range() over IPv4 values iterates the UInt32 representation (range.cpp
+    # takes unsigned ints) — convert dotted carriers
+    wr, chg = [], False
+    for a in c.args:
+        r = _rewrite(a)
+        if _ch_type(a) == "IPv4":
+            r = _registry_bridge("IPv4StringToNum", [r]) or (
+                f"aggregate(split({r}, '\\\\.'), CAST(0 AS BIGINT),"
+                f" (__a, __x) -> __a * 256 + CAST(__x AS BIGINT))"
+            )
+            chg = True
+        wr.append(r)
+    return _fill_template(ARITY_TEMPLATES["range"][len(wr)], wr, "range") if chg else None
+
+
+def _avg_weighted_sql(name: str, vals: list[str], nullable: bool) -> str:
+    return _fill_template(
+        _AVG_WEIGHTED.replace("{EMPTY}", "CAST(NULL AS DOUBLE)" if nullable else "CAST('NaN' AS DOUBLE)"),
+        vals, name,
+    )
+
+
+@_handles("avgWeightedIf", early=True)
+def _avg_weighted_if(c: _Site):
+    if len(c.args) != 3:
+        return None
+    # the -If condition's own nullability does NOT make the result Nullable
+    # (AggregateFunctionIf wraps only the filter) — handled ahead of the
+    # generic combinator expansion
+    cnd = _rewrite(c.args[2])
+    aw = [_rewrite(c.args[0]), _rewrite(c.args[1])]
+    nul = _avgw_nullable(c.args[:2], aw)
+    return _avg_weighted_sql(c.name, [f"(CASE WHEN CAST(({cnd}) AS BOOLEAN) THEN {a} END)" for a in aw], nul)
+
+
+@_handles("avgWeighted", early=True)
+def _avg_weighted(c: _Site):
+    if len(c.args) != 2:
+        return None
+    # empty valid-pair set: NULL when an argument is Nullable, nan otherwise
+    # (the Nullable combinator wraps the result)
+    return _avg_weighted_sql(c.name, c.raw_sql, _avgw_nullable(c.args, c.raw_sql))
+
+
+@_handles("grouping", ci=True, early=True)
+def _grouping(c: _Site):
+    if c.tokens[c.i + 2].lower() == "sets" or c.close == c.i + 2:
+        return None
+    # GROUPING(keys...) (FunctionGrouping): multi-arg form is Spark's
+    # grouping_id bitmask; force_grouping_standard_compatibility=0 inverts
+    # every bit (1 = used as a key)
+    keys = c.raw_sql
+    if not keys:
+        return None
+    gid = f"grouping_id({', '.join(keys)})" if len(keys) > 1 else f"grouping({keys[0]})"
+    return f"({(1 << len(keys)) - 1} - {gid})" if _CALL.get().grouping_legacy else gid
+
+
+@_handles("sets", ci=True, early=True)
+def _grouping_sets(c: _Site):
+    if not (c.out and c.out[-1].lower() == "grouping"):
+        return None
+    # GROUPING SETS((a, b), ()) — each set is a key LIST, not a tuple
+    # literal: keep the parens as grouping parens
+    parts = []
+    for a in c.args:
+        if a and a[0] == "(" and _find_call_end(a, 0) == len(a) - 1:
+            parts.append("(" + _rewrite(a[1:-1]) + ")")
+        elif a:
+            parts.append(_rewrite(a))
+        else:
+            parts.append("()")
+    return "SETS(" + ", ".join(parts) + ")"
+
+
+@_handles(*_EXACT_HASH_FAMS, early=True)
+def _exact_hash(c: _Site):
+    # bit-exact hash families: flatten tuple args, type integer literals at
+    # ClickHouse literal width, fold elem/comb UDF calls
+    # (FunctionsHashing.h FunctionAnyHash — see functions/chhash.py)
+    return _render_exact_hash(c.name, c.args) if c.args else None
+
+
+@_handles("hex", early=True)
+def _hex_of_hash128(c: _Site):
+    a0 = c.args[0] if len(c.args) == 1 else None
+    if not (a0 and a0[0] in ("sipHash128", "murmurHash3_128")):
+        return None
+    inner = _split_args(a0[2:-1])
+    fam = "ch_siphash128_hex" if a0[0] == "sipHash128" else "ch_murmurhash3_128_hex"
+    return f"{fam}{len(inner)}({', '.join(_hash_arg_sql(a) for a in inner)})"
+
+
+@_handles("if", early=True)
+def _if_of_constant(c: _Site):
+    a = c.arg_sql
+    if len(a) == 3 and a[0].strip().lower() in ("0", "1", "true", "false"):
+        # literal-condition fold BEFORE resolution, like the reference's
+        # constant folding (`0 ? not_existing_column : 1` is legal — if.cpp
+        # executeForConstantCondition)
+        return f"({a[1] if a[0].strip().lower() in ('1', 'true') else a[2]})"
+    return None
+
+
+@_handles("formatDateTime", "formatDateTimeInJodaSyntax", early=True)
+def _format_date_time(c: _Site):
+    a = c.arg_sql
+    if not (len(a) >= 2 and re.fullmatch(r"'(?:[^'\\]|\\.)*'", a[1].strip())):
+        return None
+    # literal format string: convert MySQL-style codes to Java patterns at
+    # translate time (extra timezone arg dropped — the session is pinned UTC)
+    raw = a[1].strip()[1:-1]
+
+    def df_lit(jpat: str) -> str:
+        # Java-quoted literals ('T', …) must be SQL-escaped when spliced
+        # back into a single-quoted Spark literal
+        esc = jpat.replace("\\", "\\\\").replace("'", "\\'")
+        return f"date_format({a[0]}, '{esc}')"
+
+    if c.name.endswith("JodaSyntax"):
+        return df_lit(raw)
+    # %w is Sunday-based 0-6 (mysqlDayOfWeek0To6) — no Java pattern letter
+    # yields it; splice dayofweek(x)-1 between the surrounding date_format
+    # segments
+    pieces: list[str] = []
+    for si, seg in enumerate(_split_dtfmt_on_w(raw)):
+        if si:
+            pieces.append(f"CAST(dayofweek({a[0]}) - 1 AS STRING)")
+        # %C (century = year/100, zero-padded) has no Java pattern either —
+        # splice it the same way
+        for ci, cseg in enumerate(_split_dtfmt_on_w(seg, "C")):
+            if ci:
+                pieces.append(f"lpad(CAST(CAST(floor(year({a[0]}) / 100) AS INT) AS STRING), 2, '0')")
+            if cseg:
+                pieces.append(df_lit(_ch_dtfmt_to_java(cseg)))
+    if len(pieces) == 1:
+        return pieces[0]
+    return "concat(" + ", ".join(pieces) + ")" if pieces else "''"
+
+
+def _mentions_nullable(sql: str) -> bool:
+    """The SQL names a column the statement declares Nullable."""
+    return any(re.search(rf"(?i)\b{re.escape(col)}\b", sql) for col in _CALL.get().nullable_cols)
+
+
+@_handles("sumIf", early=True)
+def _sum_if(c: _Site):
+    a = c.arg_sql
+    if len(a) == 2 and not re.search(r"(?i)null", a[0]) and not _mentions_nullable(a[0]):
+        # sum over a never-true condition is 0 for non-Nullable values
+        # (AggregateFunctionSum empty state), not NULL
+        return f"coalesce(sum(CASE WHEN {a[1]} THEN {a[0]} END), 0)"
+    return None
+
+
+@_handles("uniqUpTo", early=True)
+def _uniq_up_to(c: _Site):
+    # AggregateFunctionUniqUpTo.h: threshold must fit in [0, 100]
+    if c.arg_sql:
+        v = _as_py_literal(c.arg_sql[0])
+        if isinstance(v, (int, float)) and not 0 <= v <= 100:
+            raise ChSqlError(f"uniqUpTo threshold out of range: {c.arg_sql[0]}")
+    return None
+
+
+# Exponential-decay window family (WindowTransform.cpp), each body a fold
+# over the frame's (v, t) pairs __a relative to the reference time __b:
+#   exponentialMovingAverage(hl)(v,t)   = Σ v·2^(-(tc-ti)/hl)·(1-2^(-1/hl))
+#   exponentialTimeDecayedSum(λ)(v,t)   = Σ v·e^(-(tc-ti)/λ)
+#   exponentialTimeDecayedCount(λ)(t)   = Σ e^(-(tc-ti)/λ)
+#   exponentialTimeDecayedAvg(λ)(v,t)   = decayedSum / decayedCount (the
+#                                         decay-to-back_t factor cancels)
+#   exponentialTimeDecayedMax(λ)(v,t)   = max(v·e^(-(tc-ti)/λ))
+_DECAY_SUM = "aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) -> __s + __q.v * exp((__q.t - __b) / {lam}))"
+_DECAY_COUNT = "aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) -> __s + exp((__q.t - __b) / {lam}))"
+_DECAY_BODIES = {
+    "exponentialMovingAverage": (
+        "aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) ->"
+        " __s + __q.v * pow(2.0, (__q.t - __b) / {lam}))"
+        " * (1 - pow(2.0, -1.0 / {lam}))"
+    ),
+    "exponentialTimeDecayedSum": _DECAY_SUM,
+    "exponentialTimeDecayedCount": _DECAY_COUNT,
+    "exponentialTimeDecayedMax": "array_max(transform(__a, __q -> __q.v * exp((__q.t - __b) / {lam})))",
+    "exponentialTimeDecayedAvg": f"{_DECAY_SUM} / {_DECAY_COUNT}",
+}
+
+
+@_handles(*_DECAY_BODIES, early=True)
+def _exponential_decay(c: _Site):
+    if not (c.parametric and len(c.arg_sql) == 1):
+        return None
+    args2 = [_rewrite(a) for a in c.args2]
+    nargs = 1 if c.name == "exponentialTimeDecayedCount" else 2
+    if len(args2) != nargs:
+        return None
+    tokens = c.tokens
+    lam = f"CAST({c.arg_sql[0]} AS DOUBLE)"
+    tm = f"CAST({args2[-1]} AS DOUBLE)"
+    j = c.close2 + 1
+    over_sql = ""
+    if j + 1 < len(tokens) and tokens[j].lower() == "over":
+        if tokens[j + 1] == "(":
+            close3 = _find_call_end(tokens, j + 1)
+            over_sql = " OVER (" + _rewrite(tokens[j + 2 : close3]) + ")"
+            j = close3 + 1
+        elif re.fullmatch(r"[A-Za-z_]\w*", tokens[j + 1]):
+            over_sql = f" OVER {tokens[j + 1]}"  # named window
+            j += 2
+    c.end = j
+    # Collect the frame/group into an array and reduce in scalar space so
+    # the decay exponent can be CENTERED on the reference time before
+    # exponentiation: with absolute inputs (epoch seconds) and a small
+    # half-life, the factored form sum(v·2^(t/hl)) / 2^(back_t/hl)
+    # overflowed both sides to Infinity and returned NaN, while the
+    # reference accumulates relative decays and stays finite. Reference
+    # time = LAST row of the frame (WindowTransform.cpp: back_t at
+    # prevRowNumber(frame_end)); for the plain-agg form the group max —
+    # identical when frames are time-ordered.
+    pair = (
+        f"named_struct('v', CAST({args2[0]} AS DOUBLE), 't', {tm})"
+        if nargs == 2
+        else f"named_struct('t', {tm})"
+    )
+    arr = f"collect_list({pair}){over_sql}"
+    back = "element_at(__a, size(__a)).t" if over_sql else "array_max(transform(__a, __q -> __q.t))"
+    body = _DECAY_BODIES[c.name].format(lam=lam)
+    return (
+        f"element_at(transform(array({arr}), __a ->"
+        f" CASE WHEN size(__a) = 0 THEN CAST(NULL AS DOUBLE) ELSE"
+        f" element_at(transform(array({back}), __b -> {body}), 1)"
+        f" END), 1)"
+    )
+
+
+@_handles("count")
+def _count_star(c: _Site):
+    # ClickHouse count() has zero args (SURVEY §1.3)
+    return "count(*)" if not c.arg_sql else None
+
+
+@_handles("tuple")
+def _tuple(c: _Site):
+    # _N field names so ClickHouse 1-based element access (x.1,
+    # tupleElement) maps onto Spark struct fields
+    fields = ", ".join(f"'_{j + 1}', {a}" for j, a in enumerate(c.arg_sql))
+    return f"named_struct({fields})"
+
+
+@_handles("tupleElement")
+def _tuple_element(c: _Site):
+    a = c.arg_sql
+    return f"({a[0]})._{a[1]}" if len(a) == 2 and re.fullmatch(r"\d+", a[1]) else None
+
+
+# --- arrayReduce('agg', arr…): a scalar per-row reduction of arrays by
+# aggregate-function name (src/Functions/array/arrayReduce.cpp). Computable
+# subset: plain math aggregates incl. -OrNull/-OrDefault and quantile
+# levels; opaque -State/-Merge forms fall through loud.
+
+
+def _reduce_map(spec: str, arg_sql: list[str]) -> str:
+    # sumMap/minMap/maxMap(keys, v1[, v2…]): per-key fold over zipped (key,
+    # value) pairs, NULL values skipped, empty key bucket → 0
+    # (AggregateFunctionSumMap.h); arrayReduce feeds arrays-of-arrays, so
+    # each argument flattens first
+    for a in arg_sql[1:]:
+        body = re.sub(r"(?is)\barray\s*\(|[\[\](),\s]+", " ", a)
+        toks_a = body.split()
+        if toks_a and {w.lower() for w in toks_a} == {"null"}:
+            raise ChSqlError(
+                "sumMap: Array(Nullable(Nothing)) argument is an illegal type (serverError 43)"
+            )
+    ks = f"flatten({arg_sql[1]})"
+    uk = f"array_sort(array_distinct({ks}))"
+    op = spec.lower()[:3]
+    vals = []
+    for a in arg_sql[2:]:
+        pairs = f"zip_with({ks}, flatten({a}), (__k, __v) -> named_struct('k', __k, 'v', __v))"
+        if op == "sum":
+            per = (
+                f"aggregate({pairs}, CAST(0 AS DOUBLE),"
+                f" (__a, __p) -> __a + (CASE WHEN __p.k = __u"
+                f" AND __p.v IS NOT NULL"
+                f" THEN CAST(__p.v AS DOUBLE) ELSE 0 END))"
+            )
+        else:
+            fn2 = "array_min" if op == "min" else "array_max"
+            per = (
+                f"coalesce({fn2}(transform(filter({pairs},"
+                f" __p -> __p.k = __u AND __p.v IS NOT NULL),"
+                f" __p -> CAST(__p.v AS DOUBLE))),"
+                f" CAST(0 AS DOUBLE))"
+            )
+        vals.append(f"transform({uk}, __u -> {per})")
+    fields = ", ".join([f"'_1', {uk}"] + [f"'_{j + 2}', {v}" for j, v in enumerate(vals)])
+    return f"named_struct({fields})"
+
+
+def _reduce_linear_regression(x: str, y: str) -> str:
+    # least-squares fit over zipped (x, y) arrays
+    # (AggregateFunctionSimpleLinearRegression.h): returns the (slope,
+    # intercept) tuple; zero denominator → NaN like the reference's double
+    # math (Spark's x/0 is NULL → coalesce)
+    pts = (
+        f"zip_with({x}, {y}, (__x, __y) -> named_struct("
+        f"'x', CAST(__x AS DOUBLE), 'y', CAST(__y AS DOUBLE)))"
+    )
+    acc = (
+        f"aggregate({pts}, named_struct("
+        f"'n', CAST(0 AS DOUBLE), 'sx', CAST(0 AS DOUBLE),"
+        f" 'sy', CAST(0 AS DOUBLE), 'sxy', CAST(0 AS DOUBLE),"
+        f" 'sxx', CAST(0 AS DOUBLE)),"
+        f" (__s, __p) -> named_struct('n', __s.n + 1,"
+        f" 'sx', __s.sx + __p.x, 'sy', __s.sy + __p.y,"
+        f" 'sxy', __s.sxy + __p.x * __p.y,"
+        f" 'sxx', __s.sxx + __p.x * __p.x))"
+    )
+    k = (
+        "coalesce((__t.n * __t.sxy - __t.sx * __t.sy)"
+        " / (__t.n * __t.sxx - __t.sx * __t.sx), double('NaN'))"
+    )
+    return (
+        f"element_at(transform(array({acc}), __t -> named_struct("
+        f"'_1', {k},"
+        f" '_2', coalesce((__t.sy - ({k}) * __t.sx) / __t.n,"
+        f" double('NaN')))), 1)"
+    )
+
+
+def _reduce_forms(x: str) -> dict[str, str]:
+    """Lower-cased aggregate name -> its reduction of the array x."""
+    n = f"size({x})"
+    total = f"aggregate({x}, CAST(0 AS DOUBLE), (__a, __x) -> __a + CAST(__x AS DOUBLE))"
+    sq = (
+        f"aggregate({x}, CAST(0 AS DOUBLE), (__s, __e) ->"
+        f" __s + pow(CAST(__e AS DOUBLE) - aggregate({x},"
+        f" CAST(0 AS DOUBLE), (__a, __b) -> __a + __b) / {n}, 2))"
+    )
+    distinct = f"size(array_distinct({x}))"
+    # -State/-Merge forms over the documented carriers (the aggregate
+    # TEMPLATES' representations): uniq* states are sorted distinct arrays,
+    # avg states (sum, cnt) structs
+    uniq_m = f"size(array_distinct(flatten({x})))"
+    return {
+        "sum": total,
+        "max": f"array_max({x})",
+        "min": f"array_min({x})",
+        "count": n,
+        "avg": f"({total} / {n})",
+        "any": f"element_at({x}, 1)",
+        "anylast": f"element_at({x}, -1)",
+        "uniq": distinct,
+        "uniqexact": distinct,
+        "grouparray": x,
+        "groupuniqarray": f"array_distinct({x})",
+        "median": _quantile_interp(x, "0.5"),
+        "stddevpop": f"sqrt({sq} / {n})",
+        "stddevsamp": f"sqrt({sq} / ({n} - 1))",
+        "varpop": f"({sq} / {n})",
+        "varsamp": f"({sq} / ({n} - 1))",
+        # sketch families degrade to exact distinct on a single block
+        # (arrayReduce sees the whole array)
+        "uniqtheta": distinct,
+        "uniqhll": distinct,
+        "uniqcombined": distinct,
+        "uniqmerge": uniq_m, "uniqexactmerge": uniq_m,
+        "uniqhll12merge": uniq_m, "uniqcombinedmerge": uniq_m,
+        "summerge": total, "countmerge": total,
+        "minmerge": f"array_min({x})",
+        "maxmerge": f"array_max({x})",
+        "avgmerge": (
+            f"(aggregate({x}, CAST(0 AS DOUBLE),"
+            f" (__a, __e) -> __a + __e.sum)"
+            f" / aggregate({x}, CAST(0 AS DOUBLE),"
+            f" (__a, __e) -> __a + __e.cnt))"
+        ),
+        "grouparraymerge": f"flatten({x})",
+        "groupuniqarraymerge": f"array_sort(array_distinct(flatten({x})))",
+        "uniqstate": f"array_sort(array_distinct({x}))",
+        "uniqexactstate": f"array_distinct({x})",
+        "sumstate": total,
+        "countstate": n,
+        "minstate": f"array_min({x})",
+        "maxstate": f"array_max({x})",
+        "grouparraystate": x,
+    }
+
+
+def _quantile_exact(x: str, p: str) -> str:
+    # QuantileExact.h get(): nth = level*(s-1) floored; empty set → NaN
+    # (index 0 would error in Spark)
+    n = f"size({x})"
+    v = f"element_at(array_sort({x}), CAST(floor(({p}) * ({n} - 1)) AS INT) + 1)"
+    return f"(CASE WHEN {n} = 0 THEN double('NaN') ELSE {v} END)"
+
+
+def _quantile_interp(x: str, p: str) -> str:
+    n, srt = f"size({x})", f"array_sort({x})"
+    h = f"(({p}) * ({n} - 1))"
+    lo = f"element_at({srt}, CAST(floor({h}) AS INT) + 1)"
+    hi = f"element_at({srt}, CAST(ceiling({h}) AS INT) + 1)"
+    v = f"(CAST({lo} AS DOUBLE) + ({h} - floor({h})) * (CAST({hi} AS DOUBLE) - CAST({lo} AS DOUBLE)))"
+    return f"(CASE WHEN {n} = 0 THEN double('NaN') ELSE {v} END)"
+
+
+def _reduce_aggregate(base: str, suffix: str, params: "str | None", arg_sql: list[str]) -> "str | None":
+    """arrayReduce of a plain aggregate (with -OrNull/-OrDefault) over the
+    arrays arg_sql[1:]."""
+    x = arg_sql[1]
+    # multi-array uniq counts distinct TUPLES; an -If suffix filters by the
+    # LAST array's truthiness first (arrayReduce.cpp passes all arrays as
+    # agg arguments)
+    if base in ("uniqif", "uniqexactif") and len(arg_sql) >= 3:
+        base = base[:-2]
+        vals = arg_sql[1:-1]
+        zipped = vals[0] if len(vals) == 1 else (
+            f"zip_with({vals[0]}, {vals[1]}, (__a, __b) -> named_struct('a', __a, 'b', __b))"
+        )
+        x = (
+            f"transform(filter(zip_with({zipped}, {arg_sql[-1]},"
+            f" (__v, __c) -> named_struct('v', __v, 'c', __c)),"
+            f" __p -> CAST(__p.c AS BOOLEAN)), __p -> __p.v)"
+        )
+    elif base in ("uniq", "uniqexact", "uniqupto") and len(arg_sql) >= 3:
+        x = f"zip_with({arg_sql[1]}, {arg_sql[2]}, (__a, __b) -> named_struct('a', __a, 'b', __b))"
+    if base == "uniqupto":
+        # exact count when ≤ K, else K+1 (AggregateFunctionUniqUpTo.h)
+        return f"least(size(array_distinct({x})), CAST({params or '5'} AS BIGINT) + 1)"
+    forms = _reduce_forms(x)
+    if base in ("quantile", "medianexact"):
+        expr = _quantile_interp(x, params or "0.5")
+    elif base == "quantileexact":
+        expr = _quantile_exact(x, params or "0.5")
+    elif base in ("quantiles", "quantilesexact") and params:
+        fn = _quantile_interp if base == "quantiles" else _quantile_exact
+        expr = f"array({', '.join(fn(x, p.strip()) for p in params.split(',') if p.strip())})"
+    elif base in forms:
+        expr = forms[base]
+    else:
+        return None
+    if not suffix:
+        return expr
+    empty = f"(size({x}) = 0)"
+    if suffix == "OrNull":
+        return f"(CASE WHEN {empty} THEN NULL ELSE {expr} END)"
+    # OrDefault: type default for the empty set
+    dflt = f"(element_at({x}, 1) * 0)"
+    if base in ("avg", "median", "quantile", "stddevpop"):
+        dflt = "CAST(0 AS DOUBLE)"
+    return f"(CASE WHEN {empty} THEN {dflt} ELSE {expr} END)"
+
+
+@_handles("arrayReduce", ci=True)
+def _array_reduce(c: _Site):
+    a = c.arg_sql
+    if not (len(a) >= 2 and re.fullmatch(r"'[^']*'", a[0].strip())):
+        return None
+    spec = a[0].strip()[1:-1]
+    if spec.lower() in ("summap", "minmap", "maxmap") and len(a) >= 3:
+        return _reduce_map(spec, a)
+    am = re.fullmatch(r"([A-Za-z]+?)(OrNull|OrDefault)?(?:\(([^()]*)\))?", spec)
+    if not am:
+        return None
+    if am.group(1).lower() == "simplelinearregression" and len(a) == 3:
+        return _reduce_linear_regression(a[1], a[2])
+    return _reduce_aggregate(am.group(1).lower(), am.group(2) or "", am.group(3), a)
+
+
+@_handles("toStartOfInterval")
+def _to_start_of_interval(c: _Site):
+    a = c.arg_sql
+    ivm2 = _INTERVAL_RE.match(a[1].strip().replace("'", "")) if len(a) >= 2 else None
+    if not ivm2:
+        return None
+    nv, unit = int(ivm2.group(1)), ivm2.group(2).upper()
+    x = a[0]
+    if unit in ("SECOND", "MINUTE", "HOUR"):
+        secs = nv * {"SECOND": 1, "MINUTE": 60, "HOUR": 3600}[unit]
+        return f"timestamp_seconds(floor(unix_timestamp({x}) / {secs}) * {secs})"
+    if unit == "DAY":
+        return f"date_add(DATE '1970-01-01', CAST(floor(datediff({x}, DATE '1970-01-01') / {nv}) * {nv} AS INT))"
+    if unit in ("MONTH", "QUARTER", "YEAR"):
+        months = nv * {"MONTH": 1, "QUARTER": 3, "YEAR": 12}[unit]
+        return (
+            f"add_months(DATE '1970-01-01', CAST(floor(months_between({x}, DATE '1970-01-01')"
+            f" / {months}) * {months} AS INT))"
+        )
+    return f"date_trunc('week', {x})"
+
+
+# accurateCast's range check per integer type; the 128/256-bit bounds are
+# the DECIMAL(38) carrier's (the true ranges exceed it; negatives still
+# reject correctly)
+_ACCURATE_RANGES = {
+    "uint8": (0, 255), "uint16": (0, 65535),
+    "uint32": (0, 4294967295), "uint64": (0, 18446744073709551615),
+    "int8": (-128, 127), "int16": (-32768, 32767),
+    "int32": (-2147483648, 2147483647),
+    "int64": (-9223372036854775808, 9223372036854775807),
+    "uint128": (0, 10**37), "uint256": (0, 10**37),
+    "int128": (-(10**37), 10**37),
+    "int256": (-(10**37), 10**37),
+}
+
+
+@_handles("accurateCastOrDefault", "accurateCastOrNull")
+def _accurate_cast(c: _Site):
+    a = c.arg_sql
+    if not (len(a) >= 2 and re.fullmatch(r"'[\w(), ]+'", a[1])):
+        return None
+    # range-checked cast (FunctionsConversion.h accurateCast family):
+    # out-of-range yields the default/NULL instead of wrapping
+    ch_t2 = a[1][1:-1]
+    try:
+        spark_t2 = ch_type_to_spark(ch_t2)
+    except ChSqlError:
+        # wide integers: carry in DECIMAL(38,0), bounds below
+        spark_t2 = "DECIMAL(38,0)" if ch_t2.lower() in ("uint128", "uint256", "int128", "int256") else None
+    if spark_t2 is None:
+        return None
+    rng = _ACCURATE_RANGES.get(ch_t2.lower())
+    casted = f"try_cast({a[0]} AS {spark_t2})"
+    if rng is not None:
+        casted = f"CASE WHEN try_cast({a[0]} AS DOUBLE) BETWEEN {rng[0]} AND {rng[1]} THEN {casted} ELSE NULL END"
+    dflt0 = "''" if spark_t2.upper() == "STRING" else "0"
+    fs2 = re.match(r"(?i)FixedString\s*\(\s*(\d+)\s*\)$", ch_t2)
+    if fs2:
+        # too-long input rejects; shorter pads with zero bytes, and the
+        # implicit default is the all-zero FixedString
+        n2 = fs2.group(1)
+        s2 = f"CAST({a[0]} AS STRING)"
+        casted = (
+            f"(CASE WHEN octet_length({s2}) > {n2} THEN NULL"
+            f" ELSE concat({s2}, repeat(char(0), {n2} - octet_length({s2}))) END)"
+        )
+        dflt0 = f"repeat(char(0), {n2})"
+    if c.name == "accurateCastOrNull":
+        return f"({casted})"
+    return f"coalesce({casted}, {a[2] if len(a) > 2 else dflt0})"
+
+
+_DECIMAL_PRECISION = {"32": 9, "64": 18, "128": 38, "256": 38}
+
+
+@_handles(*(f"toDecimal{w}{s}" for w in _DECIMAL_PRECISION for s in ("", "OrZero", "OrNull")))
+def _to_decimal(c: _Site):
+    a = c.arg_sql
+    if not a:
+        return None
+    w, suffix = re.fullmatch(r"toDecimal(32|64|128|256)(OrZero|OrNull)?", c.name).groups()
+    dec = f"DECIMAL({_DECIMAL_PRECISION[w]}, {a[1] if len(a) > 1 else '0'})"
+    if suffix == "OrZero":
+        return f"coalesce(try_cast({a[0]} AS {dec}), 0)"
+    if suffix == "OrNull":
+        return f"try_cast({a[0]} AS {dec})"
+    return f"CAST({a[0]} AS {dec})"
+
+
+@_handles("extractAllGroupsHorizontal")
+def _extract_all_groups_horizontal(c: _Site):
+    a = c.arg_sql
+    if not (len(a) == 2 and a[1].startswith("'")):
+        return None
+    # one regexp_extract_all per capture group (count them in the literal
+    # pattern: unescaped '(' not starting a (?: group)
+    ngroups = len(re.findall(r"(?<!\\)\((?!\?)", a[1][1:-1]))
+    parts = ", ".join(f"regexp_extract_all({a[0]}, {a[1]}, {g + 1})" for g in range(ngroups))
+    return f"array({parts})"
+
+
+@_handles("extract")
+def _extract(c: _Site):
+    a = c.arg_sql
+    if len(a) != 2:
+        return None
+    # ClickHouse extract(haystack, pattern): first match of capture group 1,
+    # or the whole match when the pattern has no groups
+    # (FunctionsStringSearch extract) — never Spark's extract(field FROM
+    # ts), which this name would otherwise hit
+    g = 1 if a[1].startswith("'") and re.findall(r"(?<!\\)\((?!\?)", a[1][1:-1]) else 0
+    return f"regexp_extract({a[0]}, {a[1]}, {g})"
+
+
+_MONO = "monotonically_increasing_id()"
+
+
+@_handles(
+    "runningDifference", "runningDifferenceStartingWithFirstValue",
+    "runningAccumulate", "neighbor", "rowNumberInBlock", "rowNumberInAllBlocks",
+)
+def _block_order(c: _Site):
+    # block-order functions (FunctionsMiscellaneous): emulated over the
+    # statement's read order via a monotonic-id window. Golden scale only —
+    # a single-partition window does not distribute.
+    t, a = c.name, c.arg_sql
+    if t == "runningDifference" and len(a) == 1:
+        return f"({a[0]} - lag({a[0]}, 1, {a[0]}) OVER (ORDER BY {_MONO}))"
+    if t == "runningDifferenceStartingWithFirstValue" and len(a) == 1:
+        return f"({a[0]} - lag({a[0]}, 1, 0) OVER (ORDER BY {_MONO}))"
+    if t == "runningAccumulate" and len(a) in (1, 2):
+        # scalar partial states (sum/count) accumulate additively; optional
+        # second arg restarts accumulation per group
+        part = f"PARTITION BY {a[1]} " if len(a) == 2 else ""
+        return f"sum({a[0]}) OVER ({part}ORDER BY {_MONO} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    if t in ("rowNumberInBlock", "rowNumberInAllBlocks") and not a:
+        return f"(row_number() OVER (ORDER BY {_MONO}) - 1)"
+    if t != "neighbor":
+        return None
+    if len(a) not in (2, 3):
+        raise ChSqlError("neighbor needs 2 or 3 arguments")
+    e, o = a[0], a[1].strip()
+    d = a[2] if len(a) == 3 else "0"
+    if re.fullmatch(r"-?\s*\d+", o):
+        k2 = int(o.replace(" ", ""))
+        if abs(k2) > (1 << 31):
+            # the reference rejects block-sized offsets (neighbor.cpp
+            # ARGUMENT_OUT_OF_BOUND)
+            raise ChSqlError(f"neighbor offset out of bound: {k2}")
+        return f"{'lead' if k2 >= 0 else 'lag'}({e}, {abs(k2)}, {d}) OVER (ORDER BY {_MONO})"
+    wall = f"OVER (ORDER BY {_MONO} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+    idx = f"(row_number() OVER (ORDER BY {_MONO}) + ({o}))"
+    return (
+        f"(CASE WHEN {idx} BETWEEN 1 AND count(*) {wall}"
+        f" THEN element_at(collect_list({e}) {wall}, CAST({idx} AS INT)) ELSE {d} END)"
+    )
+
+
+def _literal_array_kind(a: str) -> "str | None":
+    s2 = a.strip()
+    while s2.lower().startswith("array("):
+        s2 = s2[6:].strip()
+    if s2.startswith("'"):
+        return "str"
+    if re.match(r"[-+]?\d", s2):
+        return "num"
+    return None
+
+
+@_handles("hasAll", "hasAny", "hasSubstr")
+def _has_all_any(c: _Site):
+    # ClickHouse raises NO_COMMON_TYPE for numeric-vs-string array args
+    # (hasAllAny.h getReturnTypeImpl); Spark's <=> would happily coerce —
+    # reject literal-array cases up front
+    if len(c.arg_sql) == 2 and {_literal_array_kind(a) for a in c.arg_sql} == {"num", "str"}:
+        raise ChSqlError(f"{c.name}: no common type between array arguments")
+    return None
+
+
+@_handles("format")
+def _format(c: _Site):
+    args = c.args
+    if not (len(c.arg_sql) >= 2 and len(args[0]) == 1 and args[0][0].startswith("'")):
+        return None
+    # format('{}/{N}', args...) — positional substitution with repeatable
+    # indexed refs (formatString.h), expanded at translate time into a concat
+    rest = [f"CAST({_rewrite(a)} AS STRING)" for a in args[1:]]
+    parts, auto = [], 0
+    for tk in re.split(r"(\{\d*\})", args[0][0][1:-1]):
+        fm = re.fullmatch(r"\{(\d*)\}", tk)
+        if fm:
+            idx = int(fm.group(1)) if fm.group(1) else auto
+            if not fm.group(1):
+                auto += 1
+            if idx >= len(rest):
+                return None
+            parts.append(rest[idx])
+        elif tk:
+            parts.append("'" + tk + "'")
+    return f"concat({', '.join(parts)})" if parts else "''"
+
+
+@_handles("REGEXP_REPLACE", ci=True)
+def _regexp_replace(c: _Site):
+    # SQL-compat alias (FunctionFactory registerAlias) — same \N backref
+    # conversion as replaceRegexpAll
+    return _replace_regexp(c, "replaceRegexpAll") if len(c.arg_sql) == 3 else None
+
+
+def _replace_regexp(c: _Site, name: str):
+    if len(c.arg_sql) != 3:
+        return None
+    # ClickHouse replacement backrefs are \N (ReplaceRegexpImpl); Java's are
+    # $N with literal $ needing \$ — convert literal replacement strings.
+    # replaceRegexpOne also replaces only the FIRST match: locate the
+    # matched text and splice around it (regexp_replace on just the match
+    # applies the backrefs).
+    s0, pat, rep = c.arg_sql
+    if rep.startswith("'"):
+        body = rep[1:-1].replace("$", "\\\\$")
+        body = re.sub(r"\\\\(\d)", r"$\1", body)
+        rep = f"'{body}'"
+    if name == "replaceRegexpAll":
+        return f"regexp_replace({s0}, {pat}, {rep})"
+    first = f"regexp_extract({s0}, {pat}, 0)"
+    return (
+        f"(CASE WHEN NOT ({s0}) RLIKE ({pat}) THEN {s0}"
+        f" ELSE concat(substr({s0}, 1, locate({first}, {s0}) - 1),"
+        f" regexp_replace({first}, {pat}, {rep}),"
+        f" substr({s0}, locate({first}, {s0}) + length({first})))"
+        f" END)"
+    )
+
+
+@_handles("replaceRegexpOne", "replaceRegexpAll")
+def _replace_regexp_call(c: _Site):
+    return _replace_regexp(c, c.name)
+
+
+@_handles("sumMap", "minMap", "maxMap")
+def _map_aggregate_of_one(c: _Site):
+    if len(c.arg_sql) != 1:
+        return None
+    # single-argument forms (AggregateFunctionSumMap.cpp): a Map column →
+    # Map result; a tuple of arrays → tuple result. Both route through the
+    # two-array builder
+    a0 = c.arg_sql[0]
+    if a0.lstrip("(").startswith("named_struct"):
+        b2 = _registry_bridge(c.name, [f"({a0})._1", f"({a0})._2"])
+        if b2 is not None:
+            return b2
+    b2 = _registry_bridge(c.name, [f"map_keys({a0})", f"map_values({a0})"])
+    return None if b2 is None else f"map_from_arrays(({b2}).keys, ({b2}).values)"
+
+
+@_handles("round")
+def _round(c: _Site):
+    # ClickHouse round() is banker's rounding (FunctionsRound.cpp)
+    return f"bround({', '.join(c.arg_sql)})"
+
+
+def _composite_to_string(tokens: list[str], sql: str) -> "str | None":
+    """CAST(composite AS String) = CH text serialization, not Spark's
+    bracket style (FunctionsConversion toString path)."""
+    ty = _ch_type(tokens)
+    if ty is not None and re.match(r"(?i)(Array|Tuple)\(", ty):
+        return _ch_render_sql(sql, ty)
+    return None
+
+
+@_handles("CAST")
+def _cast(c: _Site):
+    a = c.arg_sql
+    if len(a) == 1:
+        # SQL form CAST(x AS String) over a composite: CH text
+        # serialization, like the 2-arg form below
+        asm, d9 = None, 0
+        for k9, tk9 in enumerate(c.args[0]):
+            if tk9 in ("(", "["):
+                d9 += 1
+            elif tk9 in (")", "]"):
+                d9 -= 1
+            elif d9 == 0 and tk9.upper() == "AS":
+                asm = k9
+        if asm is not None and [x.strip() for x in c.args[0][asm + 1 :]] == ["String"]:
+            operand = c.args[0][:asm]
+            ty = _ch_type(operand)
+            if ty is not None and re.match(r"(?i)(Array|Tuple)\(", ty):
+                return _ch_render_sql(_rewrite(operand), ty)
+        return None
+    if not (len(a) == 2 and re.fullmatch(r"'(?:[^'\\]|\\.)+'", a[1])):
+        return None
+    # ClickHouse 2-arg form: CAST(x, 'Type')
+    ch_type = a[1][1:-1].replace("\\'", "'")
+    em = re.match(r"Enum(?:8|16)?\s*\((.*)\)\s*$", ch_type, re.DOTALL)
+    if em:
+        # strict enum cast: unknown names (and NULL into a non-Nullable
+        # Enum) raise, as the reference does (ErrorCodes::
+        # UNKNOWN_ELEMENT_OF_ENUM, cast error 349)
+        names = re.findall(r"'((?:[^'\\]|\\.)*)'\s*=", em.group(1))
+        pairs = ", ".join(f"'{n}', '{n}'" for n in names)
+        return (
+            f"(CASE WHEN element_at(map({pairs}), CAST({a[0]} AS STRING)) IS NULL"
+            f" THEN CAST(raise_error('cannot cast to enum') AS STRING)"
+            f" ELSE CAST({a[0]} AS STRING) END)"
+        )
+    fsm = re.match(r"(?i)FixedString\s*\(\s*(\d+)\s*\)$", ch_type)
+    if fsm:
+        n, s0 = fsm.group(1), f"CAST({a[0]} AS STRING)"
+        return (
+            f"(CASE WHEN octet_length({s0}) > {n} THEN"
+            f" CAST(raise_error('TOO_LARGE_STRING_SIZE: string too"
+            f" long for FixedString({n})') AS STRING)"
+            f" ELSE concat({s0}, repeat(char(0), {n} - octet_length({s0}))) END)"
+        )
+    if ch_type.strip() == "String":
+        r0 = _composite_to_string(c.args[0], a[0])
+        if r0 is not None:
+            return r0
+    try:
+        spark_type = ch_type_to_spark(ch_type)
+    except ChSqlError:
+        return None
+    return f"CAST({a[0]} AS {spark_type})" if spark_type else None
+
+
+@_handles("values", ci=True)
+def _values_table(c: _Site):
+    args = c.args
+    if not (c.arg_sql and args[0][0].startswith("'") and len(args) > 1):
+        return None
+    # values('a T, b U', (r...), ...) table function (TableFunctionValues.cpp)
+    # → Spark VALUES with typed casts
+    try:
+        cols = []
+        for cdef in _split_type_commas(args[0][0][1:-1]):
+            nm = re.match(r"([A-Za-z_]\w*)\s+(.+)$", cdef.strip(), re.DOTALL)
+            cols.append((nm.group(1), ch_type_to_spark(nm.group(2))))
+    except (AttributeError, ChSqlError):
+        return None
+    if not cols:
+        return None
+    rows = []
+    for a in args[1:]:
+        inner_sql = (
+            ", ".join(_rewrite(x) for x in _split_args(a[1:-1]))
+            if a and a[0] == "(" and a[-1] == ")"
+            else _rewrite(a)
+        )
+        rows.append(f"({inner_sql})")
+    sel = ", ".join(f"CAST({n} AS {ty}) AS {n}" for n, ty in cols)
+    names = ", ".join(n for n, _ in cols)
+    return f"(SELECT {sel} FROM VALUES {', '.join(rows)} AS __v({names}))"
+
+
+@_handles("numbers", "numbers_mt")
+def _numbers_table(c: _Site):
+    # numbers(N) / numbers(start, N) table function → range() TVF
+    # (numbers_mt is the multithreaded variant — same rows)
+    a = c.arg_sql
+    if len(a) == 1:
+        return f"(SELECT id AS number FROM range({a[0]}))"
+    return f"(SELECT id AS number FROM range({a[0]}, {a[0]} + {a[1]}))"
+
+
+@_handles("zeros")
+def _zeros_table(c: _Site):
+    # zeros(N) table function → N rows of a single UInt8 zero column
+    a = c.arg_sql
+    return f"(SELECT CAST(0 AS INT) AS zero FROM range({a[0]}))" if len(a) == 1 else None
+
+
+@_handles("sleep", "sleepEachRow")
+def _sleep(c: _Site):
+    # sleep()/sleepEachRow() (src/Functions/sleep.h) return UInt8 0; the
+    # wall-clock delay is irrelevant to batch output.
+    return "0" if len(c.arg_sql) == 1 else None
+
+
+@_handles("currentDatabase")
+def _current_database(c: _Site):
+    # currentDatabase() (src/Functions/currentDatabase.cpp) — the engine has
+    # a single flat namespace; ClickHouse's default db.
+    return "'default'" if not c.arg_sql else None
+
+
+@_handles("multiIf")
+def _multi_if(c: _Site):
+    # multiIf(c1, v1, c2, v2, ..., default) → CASE chain
+    a = c.arg_sql
+    if len(a) % 2 == 0 or len(a) < 3:
+        raise ChSqlError("multiIf needs odd >= 3 args")
+    # UInt8 truthiness handled by _wrap_case_conditions
+    whens = [f"WHEN {a[j]} THEN {a[j + 1]}" for j in range(0, len(a) - 1, 2)]
+    return " ".join(["CASE", *whens, f"ELSE {a[-1]} END"])
+
+
+@_handles("JSONExtract")
+def _json_extract(c: _Site):
+    a = c.arg_sql
+    if not (len(a) >= 2 and re.fullmatch(r"'[^']*'", a[-1])):
+        return None
+    # generic typed extraction (FunctionsJSON.cpp JSONExtract):
+    # JSONExtract(j, k1, …, 'Type') → CAST(get_json_object) for scalars,
+    # from_json for Array/Map/Tuple results
+    try:
+        spark_t = ch_type_to_spark(a[-1][1:-1])
+    except ChSqlError:
+        return None
+    parts = []
+    for k in a[1:-1]:
+        if re.fullmatch(r"'[^']*'", k):
+            parts.append("." + k[1:-1])
+        elif re.fullmatch(r"-?\d+", k):
+            idx = int(k)
+            parts.append(f"[{idx - 1 if idx > 0 else idx}]")
+        else:
+            return None
+    inner = f"get_json_object({a[0]}, '${''.join(parts)}')"
+    if re.match(r"(?i)\s*(ARRAY|MAP|STRUCT)", spark_t):
+        return f"from_json({inner}, '{spark_t}')"
+    return f"CAST({inner} AS {spark_t})"
+
+
+@_handles("arrayElement")
+def _array_element(c: _Site):
+    a = c.arg_sql
+    if _CALL.get().safe_subscript and len(a) == 2:
+        return f"(CASE WHEN ({a[1]}) <> 0 THEN try_element_at({a[0]}, CAST({a[1]} AS INT)) END)"
+    return None
+
+
+@_handles("transform")
+def _transform(c: _Site):
+    a = c.arg_sql
+    if not (len(a) in (3, 4) and not any("->" in x for x in a)):
+        return None
+    # transform(x, [f...], [t...][, d]) → element_at(map(...), x); the 3-arg
+    # form keeps x itself on no match and REQUIRES the to-array's type to
+    # equal x's (transform.cpp error 43) — reject the obvious literal
+    # mismatches Spark would silently coerce
+    if len(a) == 3:
+        x_lit = _as_py_literal(a[0])
+        mto = re.fullmatch(r"array\((.+)\)", a[2])
+        to_lit = _as_py_literal(mto.group(1).split(",")[0].strip()) if mto else None
+        if x_lit is not None and to_lit is not None and isinstance(x_lit, str) != isinstance(to_lit, str):
+            raise ChSqlError("transform: 3-arg form needs matching x/to types")
+    dflt = a[3] if len(a) == 4 else a[0]
+    return f"coalesce(element_at(map_from_arrays({a[1]}, {a[2]}), {a[0]}), {dflt})"
+
+
+@_handles("dateDiff", "date_diff", "timestampDiff", "TIMESTAMP_DIFF", "age")
+def _date_diff(c: _Site):
+    return _datediff_expr("age" if c.name == "age" else "dateDiff", c.arg_sql)
+
+
+@_handles("avg", "median", ci=True)
+def _avg_of_empty_is_nan(c: _Site):
+    a, tokens = c.arg_sql, c.tokens
+    if (
+        len(a) == 1
+        and not (c.close + 1 < len(tokens) and tokens[c.close + 1].lower() == "over")
+        and not re.search(r"(?i)null", " ".join(tokens[c.i + 2 : c.close]) + " " + a[0])
+        and not _mentions_nullable(a[0])
+    ):
+        # empty-set avg/median is NaN in ClickHouse (AggregateFunctionAvg
+        # divides 0/0), not NULL; a Nullable argument DOES yield NULL there,
+        # and window uses keep OVER attached — both excluded
+        return f"coalesce({c.name.lower()}({a[0]}), double('NaN'))"
+    return None
+
+
+@_handles("position", "locate", ci=True)
+def _position_in(c: _Site):
+    # SQL-standard position(needle IN haystack): re-split and render the
+    # registry's position (ClickHouse position counts bytes)
+    if len(c.arg_sql) != 1:
+        return None
+    parts = _split_top_in(c.arg_sql[0])
+    return (parts and _registry_bridge("position", [parts[1], parts[0]])) or None
+
+
+@_handles("substring", "substr", "mid", "substringUTF8")
+def _substring_at_zero(c: _Site):
+    a = c.arg_sql
+    if (
+        len(a) in (2, 3)
+        and re.fullmatch(r"[+-]?0+", a[1].strip())
+        and (len(a) == 2 or re.fullmatch(r"[+-]?\d+", a[2].strip()))
+    ):
+        # CONSTANT offset 0 throws ZERO_ARRAY_OR_TUPLE_INDEX error 135
+        # ("Indices in strings are 1-based", substring.cpp:98/114 — the
+        # const-offset path; 3-arg needs length const too). The '' result of
+        # the registry's substring models only the dynamic-offset path
+        # (sliceDynamicOffsetUnbounded).
+        return "CAST(raise_error('ZERO_ARRAY_OR_TUPLE_INDEX: Indices in strings are 1-based') AS STRING)"
+    return None
+
+
+@_handles("toTypeName", "toColumnTypeName")
+def _type_name(c: _Site):
+    if len(c.arg_sql) != 1:
+        return None
+    # static CH literal/expression typing (chtypes.py implements the
+    # reference's NumberTraits + literal rules); fall back to the runtime
+    # typeof() mapping when not statically inferable. toColumnTypeName
+    # additionally wraps fully-constant expressions in Const(...)
+    # (IColumn::isConst — toColumnTypeName.cpp)
+    arg_toks = list(c.args[0])
+    if (
+        len(arg_toks) == 1
+        and re.match(r"[A-Za-z_]\w*$", arg_toks[0])
+        and arg_toks[0] not in _CALL.get().col_ch_types
+    ):
+        # sibling select-item alias (CH inlines these): walk back to `expr
+        # AS ident` earlier in the statement
+        arg_toks = _alias_backref_tokens(c.tokens, c.i, arg_toks[0]) or arg_toks
+    st: dict = {}
+    inferred = _ch_type(arg_toks, st)
+    if inferred is None:
+        return None
+    if c.name == "toColumnTypeName" and not (st.get("col") or st.get("materialize")):
+        inferred = f"Const({inferred})"
+    return "'" + inferred.replace("'", "''") + "'"
+
+
+@_handles("isConstant")
+def _is_constant(c: _Site):
+    # isConstant.cpp: 1 for Const columns. Static inference tracks column
+    # refs / materialize(); non-inferable stays the library builder's
+    # conservative 0
+    st: dict = {}
+    if len(c.arg_sql) != 1 or _ch_type(c.args[0], st) is None:
+        return None
+    return "0" if (st.get("col") or st.get("materialize")) else "1"
+
+
+@_handles("defaultValueOfArgumentType")
+def _default_of_argument_type(c: _Site):
+    if len(c.arg_sql) != 1:
+        return None
+    typ = _ch_type(c.args[0])
+    return _ch_default_sql(typ) if typ else None
+
+
+@_handles("defaultValueOfTypeName")
+def _default_of_type_name(c: _Site):
+    if len(c.arg_sql) == 1 and c.args[0][0].startswith("'"):
+        return _ch_default_sql(c.args[0][0][1:-1])
+    return None
+
+
+@_handles("char")
+def _char(c: _Site):
+    # FunctionChar.cpp: variadic, each argument truncated to one byte; the
+    # bytes form a (UTF-8) string
+    if not c.arg_sql:
+        return None
+    hexparts = ", ".join(f"lpad(hex(pmod(CAST({a} AS BIGINT), 256)), 2, '0')" for a in c.arg_sql)
+    return f"decode(unhex(concat({hexparts})), 'UTF-8')"
+
+
+@_handles(*_NUM_CONV_SPARK)
+def _to_number(c: _Site):
+    a = c.arg_sql
+    if len(a) != 1:
+        return None
+    width = {"toUInt8": 8, "toUInt16": 16, "toUInt32": 32, "toUInt64": 64}.get(c.name)
+    if width and re.fullmatch(r"-\s*\d+", a[0].strip()):
+        # unsigned wrap of a negative literal (CH casts reinterpret the
+        # two's-complement bits: toUInt64(-1) = 18446744073709551615).
+        # UInt64 exceeds BIGINT, so surface it as DECIMAL(20,0) — the same
+        # carrier the ch-hash family uses for unsigned 64-bit
+        wrapped = int(a[0].replace(" ", "")) % (1 << width)
+        return f"CAST({wrapped} AS DECIMAL(20,0))" if width == 64 else f"CAST({wrapped} AS BIGINT)"
+    # CH numeric conversions of temporal values take the UNDERLYING number
+    # (DataTypeDate is UInt16 days, DateTime is UInt32 seconds —
+    # src/Functions/FunctionsConversion.h), which Spark's CAST(date AS INT)
+    # refuses: emit the epoch arithmetic instead
+    ity = _ch_type(c.args[0])
+    if ity in ("Date", "Date32"):
+        return f"CAST(datediff({a[0]}, DATE '1970-01-01') AS {_NUM_CONV_SPARK[c.name]})"
+    if ity is not None and ity.startswith("DateTime"):
+        return f"CAST(unix_timestamp({a[0]}) AS {_NUM_CONV_SPARK[c.name]})"
+    return None
+
+
+@_handles("startsWith", "endsWith")
+def _starts_with_array(c: _Site):
+    a = c.arg_sql
+    if not (len(a) == 2 and any(x.strip().startswith(("array(", "[")) for x in a)):
+        return None
+    # array form (FunctionStartsEndsWith): prefix/suffix slice equality;
+    # NULL elements compare positionally (<=> per slot)
+    a0, a1 = a
+    if c.name == "startsWith":
+        sl = f"slice({a0}, 1, size({a1}))"
+    else:
+        sl = f"(CASE WHEN size({a1}) = 0 THEN array() ELSE slice({a0}, -size({a1}), size({a1})) END)"
+    return (
+        f"(size({a0}) >= size({a1}) AND size(filter(zip_with({sl},"
+        f" {a1}, (__p, __q) -> NOT (__p <=> __q)), __b -> __b)) = 0)"
+    )
+
+
+@_handles("IPv4StringToNum", "INET_ATON")
+def _ipv4_constant(c: _Site):
+    # the reference registers these as the Throw variant
+    # (FunctionsCodingIP.cpp:1160): invalid input -> error 675
+    # CANNOT_PARSE_IPV4. Per-row throw is impractical in Spark, so the
+    # registry builder yields 0 (OrDefault) for non-constant rows; a
+    # constant invalid literal is caught here so golden tests expecting
+    # serverError 675 match.
+    if len(c.arg_sql) != 1:
+        return None
+    ipm = re.fullmatch(r"'((?:[^'\\]|\\.)*)'", c.arg_sql[0].strip())
+    if ipm and "\\" not in ipm.group(1) and not re.fullmatch(
+        r"(25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)(\.(25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)){3}",
+        ipm.group(1),
+    ):
+        return "CAST(raise_error('CANNOT_PARSE_IPV4: Invalid IPv4 value') AS BIGINT)"
+    return None
+
+
+@_handles("toFixedString")
+def _to_fixed_string(c: _Site):
+    a = c.arg_sql
+    if len(a) != 2:
+        return None
+    # constant too-long input: TOO_LARGE_STRING_SIZE at translate time
+    # (toFixedString.h:101) — checked here so non-constant rows past a
+    # streaming LIMIT never trip a runtime error
+    lm = re.fullmatch(r"'((?:[^'\\]|\\.)*)'", a[0].strip())
+    nm = re.fullmatch(r"\d+", a[1].strip())
+    if lm and nm and "\\" not in lm.group(1) and lm.group(1).isascii() and len(
+        lm.group(1).encode("utf-8", "surrogateescape")
+    ) > int(nm.group(0)):
+        # runtime raise (Spark keeps never-taken CASE/IF branches lazy,
+        # preserving CH short-circuit: 02408)
+        return (
+            f"CAST(raise_error('TOO_LARGE_STRING_SIZE: string too"
+            f" long for FixedString({nm.group(0)})') AS STRING)"
+        )
+    if re.match(r"(?i)(unhex|aes_|to_binary|sha1|sha2|md5)\s*\(", a[0].strip()):
+        # binary input: rpad's string pad would force a lossy UTF-8 cast;
+        # the bytes already have the exact width
+        return a[0]
+    return None
+
+
+@_handles("toString")
+def _to_string(c: _Site):
+    a = c.arg_sql
+    if len(a) == 2 and a[1].strip().upper() == "NULL":
+        # a NULL timezone argument nulls the result (default
+        # NULL-propagation of ordinary functions)
+        return "CAST(NULL AS STRING)"
+    if len(a) != 1:
+        return None
+    sty = _ch_type(c.args[0])
+    if sty is not None and re.match(r"(?i)(Array|Tuple)\(", sty):
+        # CH-style composite stringification (FieldVisitorToString)
+        r = _ch_render_sql(a[0], sty)
+        if r is not None:
+            return r
+    if sty is not None and sty.startswith("FixedString"):
+        # FixedStringToString drops the zero padding (FunctionsConversion.h
+        # ConvertImplFixedStringToString)
+        return f"regexp_replace(CAST({a[0]} AS STRING), concat(char(0), '+$'), '')"
+    return None
+
+
+_ARRAY_PRODUCER_RE = re.compile(
+    r"(?:array\(|array_distinct\(|array_sort\(|array_intersect\(|"
+    r"array_except\(|array_union\(|array_repeat\(|array_remove\(|"
+    r"collect_list\(|collect_set\(|slice\(|arrays_zip\(|sequence\(|"
+    r"split\(|flatten\(|transform\(|filter\(|"
+    r"h3kRing\(|h3HexRing\(|h3Line\(|h3GetFaces\(|h3ToGeoBoundary\(|"
+    r"h3ToChildren\(|h3GetUnidirectionalEdgesFromHexagon\(|"
+    r"h3GetUnidirectionalEdgeBoundary\()"
+)
+
+
+@_handles("length", "empty", "notEmpty")
+def _length_by_type(c: _Site):
+    # ClickHouse's length, empty and notEmpty take strings, arrays and maps
+    # (length.cpp, EmptyImpl): the argument's static type picks the form
+    t, a = c.name, c.arg_sql
+    if len(a) != 1:
+        return None
+    ety = _ch_type(c.args[0])
+    bty = (ety or "").replace("Nullable(", "")
+    if ety is None and _ARRAY_PRODUCER_RE.match(a[0]):
+        bty = "Array("  # untyped, but visibly an array producer
+    if bty.startswith(("Array(", "Map(")):
+        sz = f"size({a[0]})"
+        return f"CAST({sz} AS BIGINT)" if t == "length" else f"({sz} = 0)" if t == "empty" else f"({sz} > 0)"
+    if t != "length" and bty.rstrip(")") in ("IPv4", "IPv6"):
+        # the all-zero address is the IP types' empty value (EmptyImpl over
+        # the numeric domain types)
+        z9 = f"(({a[0]}) RLIKE '^[0:.]*$')"
+        return z9 if t == "empty" else f"(NOT {z9})"
+    if t != "length" and bty.startswith("FixedString"):
+        # zero bytes don't count (EmptyImpl vectorFixedToVector skips
+        # zeros); plain String stays size-only
+        z = f"coalesce(length(replace({a[0]}, char(0), '')), 0)"
+        return f"({z} = 0)" if t == "empty" else f"({z} > 0)"
+    return None
+
+
+@_handles("finalizeAggregation")
+def _finalize_aggregation(c: _Site):
+    a = c.arg_sql
+    if len(a) == 1 and re.match(r"(array_sort\(\s*)?(array_distinct|collect_set)\(", a[0].strip()):
+        # a uniq-family state carrier (sorted distinct array): finalizing it
+        # produces the COUNT (finalizeAggregation.cpp)
+        return f"CAST(size({a[0]}) AS BIGINT)"
+    return None
+
+
+@_handles("and", "or", "xor", "not", ci=True)
+def _logical(c: _Site):
+    if not c.arg_sql:
+        return None
+    # function-form logical ops over UInt8 (FunctionsLogical.cpp,
+    # case-insensitive registry): nonzero = true. Rendered as 0/1 only in
+    # value position; predicate contexts (WHERE/HAVING/ON) need a genuine
+    # boolean or Spark rejects the filter.
+    op = c.name.lower()
+    bools = [f"(({a}) <> 0)" for a in c.arg_sql]
+    if op == "not":
+        expr = f"NOT {bools[0]}"
+    elif op == "xor":
+        expr = " != ".join(bools)
+    else:
+        expr = (" AND " if op == "and" else " OR ").join(bools)
+    return f"({expr})" if c.clause == "pred" else f"CAST(({expr}) AS INT)"
+
+
+@_handles("arrayPartialSort", "arrayPartialReverseSort")
+def _array_partial_sort(c: _Site):
+    args = c.args
+    if len(c.arg_sql) < 2:
+        return None
+    # partial sort: every reference usage resizes to the limit, and a full
+    # sort's first `limit` elements equal the partial sort's (arraySort.cpp
+    # ArrayPartialSortImpl) — drop the limit arg and read the call again as
+    # the full keyed/plain sort
+    if _is_lambda_sql(" ".join(args[0])):
+        keep = [args[0]] + args[2:]
+    else:
+        lim_sql = " ".join(args[0]).strip().strip("() ")
+        if len(args) != 2 or not re.fullmatch(r"\d+|[A-Za-z_]\w*", lim_sql):
+            raise ChSqlError(f"{c.name}: expects (limit, array) or (lambda, limit, arrays…)")
+        keep = args[1:]
+    return c.respelled("arraySort" if c.name == "arrayPartialSort" else "arrayReverseSort", keep)
+
+
+# --- higher-order functions: ClickHouse HOFs are lambda-FIRST
+# (FunctionsHigherOrder); Spark's transform/filter/exists/forall are
+# array-first — each family rotates.
+
+
+def _lambda_call(c: _Site, predicate: bool = False):
+    """(lambda, arrays) of a call whose first argument is a lambda, else
+    None. A predicate lambda's body is cast to BOOLEAN: ClickHouse treats
+    any nonzero as true (UInt8 lambdas like `x -> 1`); Spark demands
+    BOOLEAN."""
+    a = c.arg_sql
+    if not (a and _is_lambda_sql(a[0])):
+        return None
+    lam = a[0]
+    if predicate:
+        head_l, body_l = lam.split("->", 1)
+        lam = f"{head_l}-> CAST(({body_l.strip()}) AS BOOLEAN)"
+    return lam, a[1:]
+
+
+@_handles("arrayMap", "arrayFilter", "arrayExists", "arrayAll")
+def _hof_rotate(c: _Site):
+    la = _lambda_call(c, predicate=c.name != "arrayMap")
+    if la is None:
+        return None
+    lam, arrs = la
+    if c.name == "arrayMap" and len(arrs) == 2:
+        # multi-array arrayMap(f, a, b) is Spark's zip_with
+        return f"zip_with({arrs[0]}, {arrs[1]}, {lam})"
+    fn = {"arrayMap": "transform", "arrayFilter": "filter", "arrayExists": "exists", "arrayAll": "forall"}[c.name]
+    return f"{fn}({', '.join(arrs)}, {lam})"
+
+
+@_handles("arrayFirst", "arrayFirstOrNull", "arrayLast", "arrayLastOrNull", "arrayFirstIndex")
+def _hof_first(c: _Site):
+    la = _lambda_call(c, predicate=True)
+    if la is None:
+        return None
+    lam, arrs = la
+    a0 = arrs[0] if arrs else ""
+    if c.name == "arrayFirstIndex":
+        # first matching VALUE's position — predicates are pure, so equal
+        # elements match equally and first-occurrence is exact
+        return f"coalesce(array_position({a0}, element_at(filter({a0}, {lam}), 1)), 0)"
+    pos = 1 if "First" in c.name else -1
+    if len(arrs) != 2:
+        return f"element_at(filter({a0}, {lam}), {pos})"
+    # two-array predicate: value from the first array where the (zipped)
+    # predicate holds
+    head_l2, body_l2 = lam.split("->", 1)
+    params = head_l2.strip().strip("()")
+    first_p = params.split(",")[0].strip()
+    z = f"zip_with({arrs[0]}, {arrs[1]}, ({params}) -> named_struct('v', {first_p}, 'p', {body_l2.strip()}))"
+    return f"element_at(filter({z}, __s -> __s.p), {pos}).v"
+
+
+@_handles("arraySort", "arrayReverseSort")
+def _hof_sort(c: _Site):
+    la = _lambda_call(c)
+    if la is None:
+        return None
+    lam, arrs = la
+    a0 = arrs[0] if arrs else ""
+    # keyed sort (FunctionArraySort): STABLE — decorate each element with
+    # (key, original index), sort by key with the index as tiebreak, strip.
+    # Spark's bare struct sort can't express desc or the stable tiebreak, so
+    # use a comparator. Two-array form sorts the FIRST array by a key
+    # computed from both, zipped positionally.
+    if len(arrs) == 2:
+        key = f"element_at(zip_with(array(__x), array(element_at({arrs[1]}, __i + 1)), {lam}), 1)"
+    else:
+        key = f"element_at(transform(array(__x), {lam}), 1)"
+    dec = f"transform({a0}, (__x, __i) -> named_struct('k', {key}, 'i', __i, 'v', __x))"
+    lt, gt = ("1", "-1") if c.name == "arrayReverseSort" else ("-1", "1")
+    cmp = (
+        f"(__l, __r) -> CASE"
+        f" WHEN __l.k IS NULL AND __r.k IS NULL THEN"
+        f" (CASE WHEN __l.i < __r.i THEN -1"
+        f" WHEN __l.i > __r.i THEN 1 ELSE 0 END)"
+        f" WHEN __l.k IS NULL THEN 1"
+        f" WHEN __r.k IS NULL THEN -1"
+        f" WHEN __l.k < __r.k THEN {lt}"
+        f" WHEN __l.k > __r.k THEN {gt}"
+        f" WHEN __l.i < __r.i THEN -1 WHEN __l.i > __r.i THEN 1"
+        f" ELSE 0 END"
+    )
+    return f"transform(array_sort({dec}, {cmp}), __s -> __s.v)"
+
+
+@_handles("arrayCompact")
+def _hof_compact(c: _Site):
+    la = _lambda_call(c)
+    if la is None:
+        return None
+    lam, arrs = la
+    a0 = arrs[0] if arrs else ""
+    # keyed form arrayCompact(f, a): drop an element when f of it
+    # null-safe-equals f of its predecessor; returns ORIGINAL elements
+    # (arrayCompact.cpp). The lambda is applied via a single-element
+    # transform so no param substitution is needed.
+    cur = f"element_at(transform(array(__x), {lam}), 1)"
+    prv = f"element_at(transform(array(element_at({a0}, greatest(__i, 1))), {lam}), 1)"
+    return f"filter({a0}, (__x, __i) -> __i = 0 OR NOT ({cur} <=> {prv}))"
+
+
+@_handles("mapFilter", "mapApply")
+def _hof_map(c: _Site):
+    la = _lambda_call(c, predicate=c.name == "mapFilter")
+    if la is None:
+        return None
+    lam, arrs = la
+    a0 = arrs[0] if arrs else ""
+    if c.name == "mapFilter":
+        return f"map_filter({a0}, {lam})"
+    # lambda yields a (k, v) tuple (mapApply.cpp) — rebuild the map from
+    # transformed entries; a non-pair tuple surfaces as a missing-field
+    # analysis error like the reference's NUMBER_OF_ARGUMENTS_DOESNT_MATCH
+    st = f"element_at(zip_with(array(__e.key), array(__e.value), {lam}), 1)"
+    return f"map_from_entries(transform(map_entries({a0}), __e -> named_struct('key', ({st})._1, 'value', ({st})._2)))"
+
+
+def _lambda_over(lam: str, arrs: list[str]) -> str:
+    """The lambda applied over one array, or zipped over two."""
+    return f"zip_with({arrs[0]}, {arrs[1]}, {lam})" if len(arrs) == 2 else f"transform({arrs[0]}, {lam})"
+
+
+@_handles("arraySplit", "arrayReverseSplit")
+def _hof_split(c: _Site):
+    la = _lambda_call(c, predicate=True)
+    if la is None:
+        return None
+    lam, arrs = la
+    a0 = arrs[0] if arrs else ""
+    # cut BEFORE flagged elements (arraySplit) / AFTER them
+    # (arrayReverseSplit) — FunctionArrayMapped ArraySplitImpl. Group starts
+    # → slices; empty source filters to [].
+    flags = _lambda_over(lam, arrs)
+    off = "__i" if c.name == "arraySplit" else "__i - 1"
+    starts = (
+        f"filter(sequence(1, greatest(size({a0}), 1)),"
+        f" __i -> __i <= size({a0}) AND (__i = 1 OR"
+        f" (CASE WHEN ({off}) >= 1 THEN"
+        f" coalesce(CAST(try_element_at({flags}, {off})"
+        f" AS BOOLEAN), false) ELSE false END)))"
+    )
+    return (
+        f"filter(transform({starts}, (__s, __j) ->"
+        f" slice({a0}, __s,"
+        f" coalesce(try_element_at({starts}, __j + 2),"
+        f" size({a0}) + 1) - __s)),"
+        f" __g -> size({a0}) > 0)"
+    )
+
+
+@_handles("arrayCumSum", "arrayCumSumNonNegative")
+def _hof_cum_sum(c: _Site):
+    la = _lambda_call(c)
+    if la is None:
+        return None
+    lam, arrs = la
+    a0 = arrs[0] if arrs else ""
+    step = (
+        "greatest(__a + CAST(__x AS DOUBLE), CAST(0 AS DOUBLE))"
+        if c.name == "arrayCumSumNonNegative"
+        else "__a + CAST(__x AS DOUBLE)"
+    )
+    return (
+        f"transform(CASE WHEN size({a0}) > 0 THEN"
+        f" sequence(1, size({a0})) ELSE"
+        f" CAST(array() AS ARRAY<INT>) END,"
+        f" __i -> aggregate(slice({_lambda_over(lam, arrs)}, 1, __i),"
+        f" CAST(0 AS DOUBLE), (__a, __x) -> {step}))"
+    )
+
+
+@_handles("arrayCount", "arraySum", "arrayAvg", "arrayMin", "arrayMax")
+def _hof_fold(c: _Site):
+    la = _lambda_call(c, predicate=c.name == "arrayCount")
+    if la is None:
+        return None
+    lam, arrs = la
+    a0 = arrs[0] if arrs else ""
+    total = f"aggregate(transform({a0}, {lam}), CAST(0 AS DOUBLE), (acc, __x) -> acc + __x)"
+    return {
+        "arrayCount": f"size(filter({a0}, {lam}))",
+        "arraySum": total,
+        "arrayAvg": f"({total} / size({a0}))",
+        "arrayMin": f"array_min(transform({a0}, {lam}))",
+        "arrayMax": f"array_max(transform({a0}, {lam}))",
+    }[c.name]
+
+
+# --- the generic call tail: tried in order after the name's handler ---------
+
+
+def _if_combinator(c: _Site):
+    # generic -If combinator (AggregateFunctionIf.cpp): fooIf(args..., cond)
+    # aggregates only rows where cond — respelled as the base aggregate over
+    # if(cond, arg, NULL) in CH space and read again, so the base function's
+    # own translation machinery applies. Explicitly mapped combinators
+    # (sumIf, countIf, …) keep their entries; a registry base applies unless
+    # the registry defines the -If name.
+    t, args = c.name, c.args
+    if not (
+        t.endswith("If")
+        and len(t) > 2
+        and t not in ("multiIf", "nullIf")
+        and t not in NAME_MAP
+        and t not in TEMPLATES
+        and t not in ARITY_TEMPLATES
+        and len(args) >= 2
+    ):
+        return None
+    base = t[:-2]
+    if not (
+        base in NAME_MAP
+        or base in TEMPLATES
+        or (base in ARITY_TEMPLATES and len(args) - 1 in ARITY_TEMPLATES[base])
+        or (_resolve(base) and not _resolve(t))
+    ):
+        return None
+    cond = list(args[-1])
+    return c.respelled(base, [["if", "("] + cond + [","] + list(a) + [",", "null", ")"] for a in args[:-1]])
+
+
+def _renamed(c: _Site):
+    t, args = c.name, c.args
+    # initializeAggregation('agg', v…) = the aggregate applied to one row
+    # (initializeAggregation.cpp) — exactly arrayReduce over single-element
+    # arrays
+    if t == "initializeAggregation" and len(args) >= 2:
+        return c.respelled("arrayReduce", [args[0]] + [["["] + list(a) + ["]"] for a in args[1:]])
+    if t in ("toDateTime", "toDateTime32") and len(args) >= 2 and len(args[1]) == 1 and args[1][0].isdigit():
+        # toDateTime(x, <int>[, tz]) is the DateTime64 form — the integer is
+        # a fractional SCALE (FunctionsConversion.h)
+        t = "toDateTime64"
+    elif t == "toDateTime32":
+        t = "toDateTime"
+    if (
+        _CALL.get().dt_best_effort
+        and t in (
+            "toDateTime", "toDateTimeOrNull", "toDateTimeOrZero",
+            "toDateTime64", "toDateTime64OrNull", "toDateTime64OrZero",
+        )
+        and args
+        and ((len(args[0]) == 1 and args[0][0].startswith("'")) or "String" in (_ch_type(args[0]) or ""))
+    ):
+        # date_time_input_format='best_effort' (Settings.h): string inputs
+        # parse via the best-effort scanner
+        if t.startswith("toDateTime64"):
+            t = "parseDateTime64BestEffort" + t[len("toDateTime64"):]
+        else:
+            t = "parseDateTimeBestEffort" + t[len("toDateTime"):]
+    return c.respelled(t) if t != c.name else None
+
+
+def _parametric_table(c: _Site):
+    # parametric aggregate the registry refuses: name(params)(args)
+    if not (c.name in PARAMETRIC and c.parametric):
+        return None
+    s = PARAMETRIC[c.name]
+    for j, p in enumerate(c.arg_sql):
+        s = s.replace(f"{{p{j}}}", p)
+    for j, a in enumerate(c.args2):
+        s = s.replace(f"{{a{j}}}", _rewrite(a))
+    c.end = c.close2 + 1
+    return s
+
+
+def _parametric_bridge(c: _Site):
+    # parametric aggregate f(params)(args): the registry bridge binds the
+    # parameters to the builder's literal slots and the arguments to the
+    # others (windowFunnel, uniqUpTo, the quantile, topK and groupArray
+    # families)
+    if not c.parametric:
+        return None
+    params = c.arg_sql
+    bridged = _registry_bridge(c.name, [_rewrite(a) for a in c.args2], params=params)
+    if bridged is not None:
+        c.end = c.close2 + 1
+    return bridged
+
+
+def _has_lambda(c: _Site) -> bool:
+    return bool(c.arg_sql) and _is_lambda_sql(c.arg_sql[0])
+
+
+def _arity_template(c: _Site):
+    forms = ARITY_TEMPLATES.get(c.name)
+    if forms and len(c.arg_sql) in forms and not _has_lambda(c):
+        return _fill_template(forms[len(c.arg_sql)], c.arg_sql, c.name)
+    return None
+
+
+def _template(c: _Site):
+    if TEMPLATES.get(c.name) is not None and not _has_lambda(c):
+        return _fill_template(TEMPLATES[c.name], c.arg_sql, c.name)
+    return None
+
+
+def _bridge(c: _Site):
+    return None if c.name in NAME_MAP else _registry_bridge(c.name, c.arg_sql)
+
+
+def _name_map(c: _Site):
+    return f"{NAME_MAP.get(c.name, c.name)}({', '.join(c.arg_sql)})"
+
+
+_CALL_TAIL = (
+    _if_combinator,
+    _renamed,
+    _parametric_table,
+    _parametric_bridge,
+    _arity_template,
+    _template,
+    _bridge,
+    _name_map,
+)
 
 
 _PRED_TOKEN_RE = re.compile(

@@ -193,11 +193,22 @@ def _find_top_ops(tokens: list[str], ops: set[str]) -> list[int]:
     return idxs
 
 
+# Spark and SQL type names -> the ClickHouse type (DataTypeFactory's
+# case-insensitive aliases, and the type a Spark value of each comes from)
+CH_TYPE_NAMES = {
+    "bigint": "Int64", "int": "Int32", "integer": "Int32", "smallint": "Int16", "tinyint": "Int8",
+    "double": "Float64", "float": "Float32", "real": "Float32",
+    "string": "String", "varchar": "String", "text": "String", "binary": "String",
+    "date": "Date", "timestamp": "DateTime", "boolean": "Bool",
+}
+
+
 def _norm_type_tokens(toks: list[str]) -> str:
-    """Join type tokens the way CH canonically prints them."""
+    """Join type tokens the way CH canonically prints them, an alias
+    (BIGINT) under ClickHouse's name (Int64)."""
     s = "".join(toks)
     s = s.replace(",", ", ")
-    return s
+    return CH_TYPE_NAMES.get(s.lower(), s)
 
 
 def resolve_function(name: str) -> str | None:
@@ -342,7 +353,7 @@ def static_type(
             return _FIXED[f]
         if fl in ("cast", "accuratecast"):
             if len(args) == 2 and args[1] and args[1][0].startswith("'"):
-                return args[1][0][1:-1]
+                return _norm_type_tokens([args[1][0][1:-1]])
             if len(args) == 1:
                 # CAST(x AS T) — AS kept inside the single arg
                 up = [i for i, tk in enumerate(args[0]) if tk.upper() == "AS"]

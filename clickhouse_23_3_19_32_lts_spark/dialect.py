@@ -17,6 +17,22 @@ The tokenizer is intentionally small: strings/identifiers/numbers/punct,
 with balanced-paren argument parsing for the template rewrites. Anything it
 doesn't recognize passes through untouched — valid Spark SQL stays valid.
 
+How a call is rendered. `_rewrite` walks the tokens once. At each token it
+tries `_TOKEN_RULES` in order, the forms that are not calls (nan/inf, map
+literals, INTERVAL, system.*, division by a literal zero, `::`, brackets,
+LIKE patterns, escaped strings, `.N` access, tuples and parentheses). A call
+`name(args)` is dispatched once (`_call_sql`) on its resolved name (the
+registry's spelling of a case-insensitive name): first to the name's one
+handler in `_HANDLERS`, registered with `@_handles`, then to the generic
+tail `_CALL_TAIL`: the -If combinator, the renames (initializeAggregation,
+DateTime64, best-effort parsing), PARAMETRIC, the parametric bridge,
+ARITY_TEMPLATES, TEMPLATES, the registry bridge and NAME_MAP. A handler
+gets a `_Site` (name, argument tokens, argument SQL rendered once, the
+`(params)(args)` second group, the predicate/value clause) and returns SQL
+text, the call respelled as tokens to read again, or None to fall through.
+A parametric call `name(params)(args)` reaches a handler only after the
+parametric bridge leaves it, unless the handler is registered `early`.
+
 Reference: function registry src/Functions/FunctionFactory.cpp (case-
 sensitive names + aliases); grammar src/Parsers/ParserSelectQuery.cpp.
 """
@@ -3599,11 +3615,9 @@ def _to_fixed_string(c: _Site):
     # constant too-long input: TOO_LARGE_STRING_SIZE at translate time
     # (toFixedString.h:101) — checked here so non-constant rows past a
     # streaming LIMIT never trip a runtime error
-    lm = re.fullmatch(r"'((?:[^'\\]|\\.)*)'", a[0].strip())
+    lit = c.args[0][0] if len(c.args[0]) == 1 and c.args[0][0].startswith("'") else None
     nm = re.fullmatch(r"\d+", a[1].strip())
-    if lm and nm and "\\" not in lm.group(1) and lm.group(1).isascii() and len(
-        lm.group(1).encode("utf-8", "surrogateescape")
-    ) > int(nm.group(0)):
+    if lit and nm and len(_decode_ch_literal(lit).encode("utf-8", "surrogateescape")) > int(nm.group(0)):
         # runtime raise (Spark keeps never-taken CASE/IF branches lazy,
         # preserving CH short-circuit: 02408)
         return (
@@ -3961,24 +3975,27 @@ def _renamed(c: _Site):
         # toDateTime(x, <int>[, tz]) is the DateTime64 form — the integer is
         # a fractional SCALE (FunctionsConversion.h)
         t = "toDateTime64"
-    elif t == "toDateTime32":
-        t = "toDateTime"
     if (
         _CALL.get().dt_best_effort
-        and t in (
-            "toDateTime", "toDateTimeOrNull", "toDateTimeOrZero",
-            "toDateTime64", "toDateTime64OrNull", "toDateTime64OrZero",
-        )
+        and t in _BEST_EFFORT
         and args
         and ((len(args[0]) == 1 and args[0][0].startswith("'")) or "String" in (_ch_type(args[0]) or ""))
     ):
         # date_time_input_format='best_effort' (Settings.h): string inputs
         # parse via the best-effort scanner
-        if t.startswith("toDateTime64"):
-            t = "parseDateTime64BestEffort" + t[len("toDateTime64"):]
-        else:
-            t = "parseDateTimeBestEffort" + t[len("toDateTime"):]
+        t = _BEST_EFFORT[t]
     return c.respelled(t) if t != c.name else None
+
+
+_BEST_EFFORT = {
+    "toDateTime": "parseDateTimeBestEffort",
+    "toDateTime32": "parseDateTimeBestEffort",
+    "toDateTimeOrNull": "parseDateTimeBestEffortOrNull",
+    "toDateTimeOrZero": "parseDateTimeBestEffortOrZero",
+    "toDateTime64": "parseDateTime64BestEffort",
+    "toDateTime64OrNull": "parseDateTime64BestEffortOrNull",
+    "toDateTime64OrZero": "parseDateTime64BestEffortOrZero",
+}
 
 
 def _parametric_table(c: _Site):

@@ -15,6 +15,7 @@ import datetime as _dt
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from clickhouse_23_3_19_32_lts_spark.chtypes import CH_TYPE_NAMES
 from clickhouse_23_3_19_32_lts_spark.functions.catalog import udf_call
 from clickhouse_23_3_19_32_lts_spark.functions.datetime import _in_zone
 from clickhouse_23_3_19_32_lts_spark.functions.registry import chfn, col, lit_or_col
@@ -158,7 +159,9 @@ def _datetime(x, tz, frac: bool = False, parse=F.to_timestamp) -> Column:
     digits = s.rlike(r"^-?[0-9]+(\.[0-9]+)?$" if frac else "^-?[0-9]+$")
     secs = _seconds(c, t)
     if not frac:
-        secs = F.timestamp_seconds(F.greatest(secs.cast("long"), F.lit(0)))
+        # clamp before the epoch, keeping NULL (greatest() would skip it)
+        secs = secs.cast("long")
+        secs = F.timestamp_seconds(F.when(secs < 0, F.lit(0)).otherwise(secs))
     ts = (
         F.when(t.isin(*_TIMES), c.cast("timestamp"))
         .when((t != "string") | digits, secs)
@@ -167,7 +170,7 @@ def _datetime(x, tz, frac: bool = False, parse=F.to_timestamp) -> Column:
     return _in_zone(ts, tz, ~t.isin("string", "date", "timestamp_ntz") | digits)
 
 
-@chfn("toDateTime")
+@chfn("toDateTime", "toDateTime32")
 def toDateTime(x, tz=None) -> Column:
     """Numbers and all-digit text are unix seconds, other text a wall clock."""
     return _datetime(x, tz)
@@ -403,14 +406,6 @@ def toIntervalYear(n) -> Column:
     return F.make_ym_interval(years=col(n))
 
 
-# Spark type name -> the ClickHouse type a value of it comes from
-_CH_TYPE_NAMES = {
-    "bigint": "Int64", "int": "Int32", "smallint": "Int16", "tinyint": "Int8",
-    "double": "Float64", "float": "Float32", "string": "String", "binary": "String",
-    "date": "Date", "timestamp": "DateTime", "boolean": "Bool",
-}
-
-
 @chfn("toTypeName")
 def toTypeName(x) -> Column:
     """The ClickHouse name of x's runtime type; another Spark type keeps
@@ -419,6 +414,6 @@ def toTypeName(x) -> Column:
     type to recover them from)."""
     t = F.typeof(col(x))
     out = F
-    for spark_name, ch_name in _CH_TYPE_NAMES.items():
+    for spark_name, ch_name in CH_TYPE_NAMES.items():
         out = out.when(t == spark_name, F.lit(ch_name))
     return out.otherwise(t)

@@ -5,9 +5,7 @@ JSONLength, JSONType), FunctionSQLJSON.cpp + src/Functions/JSONPath/
 (JSON_VALUE/JSON_QUERY/JSON_EXISTS), visitParam (simdjson-free fast path).
 
 ClickHouse paths are (key_or_index, ...) varargs; SQL/JSONPath uses $.a[0].b.
-The JSONExtract* functions, JSONHas and JSONLength walk the varargs with
-`_node`; JSONType, JSONExtractKeys and JSONExtractArrayRaw still turn them
-into Spark's get_json_object JSONPath, which indexes arrays only.
+Every function that takes them walks the varargs with `_node`.
 """
 
 from __future__ import annotations
@@ -26,17 +24,6 @@ __all__ = [
     "visitParamExtractFloat", "visitParamExtractBool", "visitParamExtractRaw",
     "visitParamHas", "isValidJSON", "toJSONString",
 ]
-
-
-def _path(*keys) -> str:
-    """ClickHouse varargs (keys / 1-based indices) -> JSONPath string."""
-    out = "$"
-    for k in keys:
-        if isinstance(k, int):
-            out += f"[{k - 1}]"  # ClickHouse JSON indices are 1-based
-        else:
-            out += f".{k}"
-    return out
 
 
 # A JSON node is a pair: its text, exact for an object or an array (which
@@ -132,16 +119,28 @@ def JSONExtractRaw(j, *keys: str | int) -> Column:
 
 @chfn("JSONExtractArrayRaw")
 def JSONExtractArrayRaw(j, *keys: str | int) -> Column:
-    """Array elements as raw JSON strings."""
-    return F.from_json(
-        F.get_json_object(col(j), _path(*keys)), "array<string>"
-    )
+    """The elements of the array at ``keys`` as raw JSON text; [] for a
+    missing value or another type."""
+
+    def pick(t, kind, v):
+        raw = F.zip_with(
+            F.from_json(t, "array<string>"), F.from_json(t, "array<variant>"),
+            lambda et, ev: F.when(F.schema_of_variant(ev).rlike("^(STRING|VOID)"), F.to_json(ev)).otherwise(et),
+        )
+        return F.when(kind.startswith("ARRAY"), raw)
+
+    return _extract(j, keys, pick, F.array().cast("array<string>"))
 
 
 @chfn("JSONExtractKeys")
 def JSONExtractKeys(j, *keys: str | int) -> Column:
-    target = F.get_json_object(col(j), _path(*keys)) if keys else col(j)
-    return F.json_object_keys(target)
+    """The keys of the object at ``keys`` in document order; [] for a
+    missing value or another type."""
+    return _extract(
+        j, keys,
+        lambda t, kind, v: F.when(kind.startswith("OBJECT"), F.json_object_keys(t)),
+        F.array().cast("array<string>"),
+    )
 
 
 @chfn("JSONHas")
@@ -163,20 +162,24 @@ def JSONLength(j, *keys: str | int) -> Column:
     )
 
 
+# a VARIANT's type (schema_of_variant) -> ClickHouse's JSON type name
+_JSON_TYPES = (
+    ("^OBJECT", "Object"), ("^ARRAY", "Array"), ("^BOOLEAN$", "Bool"), ("^VOID$", "Null"),
+    ("^BIGINT$", "Int64"), ("^(DOUBLE|DECIMAL)", "Double"), ("^STRING$", "String"),
+)
+
+
 @chfn("JSONType")
 def JSONType(j, *keys: str | int) -> Column:
-    v = F.get_json_object(col(j), _path(*keys)) if keys else col(j)
-    t = F.trim(v)
-    return (
-        F.when(v.isNull(), F.lit(None))
-        .when(t.startswith("{"), F.lit("Object"))
-        .when(t.startswith("["), F.lit("Array"))
-        .when(t.isin("true", "false"), F.lit("Bool"))
-        .when(t == "null", F.lit("Null"))
-        .when(t.rlike(r"^-?\d+$"), F.lit("Int64"))
-        .when(t.rlike(r"^-?\d*\.?\d+([eE][+-]?\d+)?$"), F.lit("Double"))
-        .otherwise(F.lit("String"))
-    )
+    """The JSON type of the value at ``keys``; 'Null' for a missing value."""
+
+    def pick(t, kind, v):
+        out = F
+        for pattern, name in _JSON_TYPES:
+            out = out.when(kind.rlike(pattern), F.lit(name))
+        return out
+
+    return _extract(j, keys, pick, F.lit("Null"))
 
 
 @chfn("JSON_VALUE")

@@ -132,11 +132,6 @@ def toDecimal256(x, scale: int = 10) -> Column:
     return col(x).cast(f"decimal(38,{int(scale)})")
 
 
-@chfn("toDateTime32")
-def toDateTime32(x) -> Column:
-    return col(x).cast("timestamp")
-
-
 @chfn("toIPv6")
 def toIPv6(x) -> Column:
     return col(x)  # stored in string form; IPv6 fns parse on use

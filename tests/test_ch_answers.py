@@ -450,6 +450,7 @@ BITS = DOCS + "bit-functions"
 NULL_RULE = f"{DOCS}#null-processing"
 # a view: its column types reach translate only at run time
 COLS = "cols"
+NULL_X = "(SELECT CAST(NULL AS BIGINT) AS x)"
 
 
 def _doc():
@@ -585,7 +586,56 @@ TYPED_CALLS.update({
         f"{CONV}#tofixedstrings-n",
     ),
     "partitionId(NULL)": (COLS, lambda: CH.partitionId(F.lit(None)), None, "string", NULL_RULE),
+    # a function of NULL is NULL; toDateTime32 is toDateTime's name for
+    # DateTime (type-conversion-functions#todatetime)
+    "toDateTime(x)": (NULL_X, lambda: CH.toDateTime("x"), None, "timestamp", NULL_RULE),
+    "toDateTime32(x)": (NULL_X, lambda: CH.toDateTime32("x"), None, "timestamp", NULL_RULE),
+    # BIGINT is ClickHouse's alias of Int64 (data-types/int-uint)
+    "toTypeName(j)": (
+        "(SELECT CAST(-4 AS BIGINT) AS j)", lambda: CH.toTypeName("j"), "Int64", "string",
+        f"{DOCS}other-functions#totypename",
+    ),
+    # an integer key selects the n-th object member, a negative one counts
+    # from the end of an array
+    """JSONType('{"a": {"b": 1}}', 1)""": (
+        COLS, lambda: CH.JSONType(F.lit('{"a": {"b": 1}}'), 1), "Object", "string",
+        f"{JSON}#jsontypejson-indices_or_keys",
+    ),
+    "JSONType('[1, 2]', -1)": (
+        COLS, lambda: CH.JSONType(F.lit("[1, 2]"), -1), "Int64", "string",
+        f"{JSON}#jsontypejson-indices_or_keys",
+    ),
+    """JSONExtractKeys('{"a": {"b": 1}}', 1)""": (
+        COLS, lambda: CH.JSONExtractKeys(F.lit('{"a": {"b": 1}}'), 1), ["b"], "array<string>",
+        f"{JSON}#jsonextractkeysjson-indices_or_keys",
+    ),
+    # the pages' examples
+    f"JSONType({DOC})": (
+        COLS, lambda: CH.JSONType(_doc()), "Object", "string", f"{JSON}#jsontypejson-indices_or_keys",
+    ),
+    f"JSONType({DOC}, 'a')": (
+        COLS, lambda: CH.JSONType(_doc(), "a"), "String", "string", f"{JSON}#jsontypejson-indices_or_keys",
+    ),
+    f"JSONType({DOC}, 'b')": (
+        COLS, lambda: CH.JSONType(_doc(), "b"), "Array", "string", f"{JSON}#jsontypejson-indices_or_keys",
+    ),
+    f"JSONExtractKeys({DOC})": (
+        COLS, lambda: CH.JSONExtractKeys(_doc()), ["a", "b"], "array<string>",
+        f"{JSON}#jsonextractkeysjson-indices_or_keys",
+    ),
+    """JSONExtractArrayRaw('{"a": "hello", "b": [-100, 200.0, "hello"]}', 'b')""": (
+        COLS, lambda: CH.JSONExtractArrayRaw(F.lit('{"a": "hello", "b": [-100, 200.0, "hello"]}'), "b"),
+        ["-100", "200.0", '"hello"'], "array<string>", f"{JSON}#jsonextractarrayrawjson-indices_or_keys",
+    ),
 })
+
+
+def test_a_constant_longer_than_its_fixed_string_raises(spark):
+    """toFixedString(s, N): "if the string has more bytes than N, an
+    exception is thrown" (type-conversion-functions#tofixedstrings-n);
+    'абв' is 6 bytes."""
+    with pytest.raises(Exception, match="TOO_LARGE_STRING_SIZE"):
+        ch_sql(spark, "SELECT toFixedString('абв', 4) AS v").collect()
 
 
 def _answer_and_type(df):

@@ -1956,10 +1956,7 @@ def _tok_map_literal(tokens, i, out, clause):
     return end_b + 1
 
 
-_INTERVAL_UNITS = {
-    "second": 6, "minute": 5, "hour": 4, "day": 3, "week": 2,
-    "month": 1, "year": 0,
-}
+_INTERVAL_UNITS = {"second": 6, "minute": 5, "hour": 4, "day": 3, "week": 2, "month": 1, "year": 0}
 _INTERVAL_FRAC = {"millisecond": 1e3, "microsecond": 1e6, "nanosecond": 1e9}
 
 
@@ -2078,11 +2075,9 @@ def _tok_divide_by_zero(tokens, i, out, clause):
     if neg:
         pinf, ninf = ninf, pinf
     out.append(
-        f"(CASE WHEN {left} IS NULL THEN CAST(NULL AS DOUBLE)"
-        f" WHEN CAST({left} AS DOUBLE) = 0.0 OR isnan(CAST({left} AS DOUBLE))"
-        f" THEN CAST('NaN' AS DOUBLE)"
-        f" WHEN CAST({left} AS DOUBLE) > 0.0 THEN {pinf}"
-        f" ELSE {ninf} END)"
+        f"(CASE WHEN {left} IS NULL THEN CAST(NULL AS DOUBLE) WHEN CAST({left} AS DOUBLE) = 0.0"
+        f" OR isnan(CAST({left} AS DOUBLE)) THEN CAST('NaN' AS DOUBLE)"
+        f" WHEN CAST({left} AS DOUBLE) > 0.0 THEN {pinf} ELSE {ninf} END)"
     )
     return j
 
@@ -2116,10 +2111,7 @@ def _tok_cast_operator(tokens, i, out, clause):
     if km:
         out.append(km.group(1))
         operand = f"({km.group(2)})"
-    if spark_t.upper() == "STRING" and re.match(
-        r"\(?\s*(?:h3CellArea|h3ExactEdgeLength)",
-        operand,
-    ):
+    if spark_t.upper() == "STRING" and re.match(r"\(?\s*(?:h3CellArea|h3ExactEdgeLength)", operand):
         # Spark's double->string cast goes scientific below 1e-3;
         # ClickHouse prints shortest decimal. These known double-producing
         # UDFs route through the CH formatter.
@@ -2144,9 +2136,7 @@ def _tok_bracket(tokens, i, out, clause):
         base = out.pop()
         if _CALL.get().safe_subscript:
             idx = inner_sql[0]
-            out.append(
-                f"(CASE WHEN ({idx}) <> 0 THEN try_element_at({base}, CAST({idx} AS INT)) END)"
-            )
+            out.append(f"(CASE WHEN ({idx}) <> 0 THEN try_element_at({base}, CAST({idx} AS INT)) END)")
         else:
             out.append(f"element_at({base}, {inner_sql[0]})")
     else:
@@ -2487,10 +2477,7 @@ def _tz_of_datetime(c: _Site):
     # ToDateTimeTransform keeps the unix value). The SOURCE zone is the
     # value's own declared timezone when the column type carries one
     # (DataTypeDateTime tz param), else the render default UTC.
-    is_dt = bool(re.match(
-        r"(?i)\s*(toDateTime(64|32)?|now(64)?|toStartOf\w+|parseDateTime\w*)\s*\(",
-        " ".join(args[0]),
-    ))
+    is_dt = bool(re.match(r"(?i)\s*(toDateTime(64|32)?|now(64)?|toStartOf\w+|parseDateTime\w*)\s*\(", " ".join(args[0])))
     dty0 = None
     if not is_dt:
         dty0 = _ch_type(args[0])
@@ -2690,8 +2677,7 @@ _DECAY_SUM = "aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) -> __s + __q.v * exp(
 _DECAY_COUNT = "aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) -> __s + exp((__q.t - __b) / {lam}))"
 _DECAY_BODIES = {
     "exponentialMovingAverage": (
-        "aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) ->"
-        " __s + __q.v * pow(2.0, (__q.t - __b) / {lam}))"
+        "aggregate(__a, CAST(0 AS DOUBLE), (__s, __q) -> __s + __q.v * pow(2.0, (__q.t - __b) / {lam}))"
         " * (1 - pow(2.0, -1.0 / {lam}))"
     ),
     "exponentialTimeDecayedSum": _DECAY_SUM,
@@ -2732,19 +2718,13 @@ def _exponential_decay(c: _Site):
     # time = LAST row of the frame (WindowTransform.cpp: back_t at
     # prevRowNumber(frame_end)); for the plain-agg form the group max —
     # identical when frames are time-ordered.
-    pair = (
-        f"named_struct('v', CAST({args2[0]} AS DOUBLE), 't', {tm})"
-        if nargs == 2
-        else f"named_struct('t', {tm})"
-    )
+    pair = f"named_struct('v', CAST({args2[0]} AS DOUBLE), 't', {tm})" if nargs == 2 else f"named_struct('t', {tm})"
     arr = f"collect_list({pair}){over_sql}"
     back = "element_at(__a, size(__a)).t" if over_sql else "array_max(transform(__a, __q -> __q.t))"
     body = _DECAY_BODIES[c.name].format(lam=lam)
     return (
-        f"element_at(transform(array({arr}), __a ->"
-        f" CASE WHEN size(__a) = 0 THEN CAST(NULL AS DOUBLE) ELSE"
-        f" element_at(transform(array({back}), __b -> {body}), 1)"
-        f" END), 1)"
+        f"element_at(transform(array({arr}), __a -> CASE WHEN size(__a) = 0 THEN CAST(NULL AS DOUBLE)"
+        f" ELSE element_at(transform(array({back}), __b -> {body}), 1) END), 1)"
     )
 
 
@@ -2783,9 +2763,7 @@ def _reduce_map(spec: str, arg_sql: list[str]) -> str:
         body = re.sub(r"(?is)\barray\s*\(|[\[\](),\s]+", " ", a)
         toks_a = body.split()
         if toks_a and {w.lower() for w in toks_a} == {"null"}:
-            raise ChSqlError(
-                "sumMap: Array(Nullable(Nothing)) argument is an illegal type (serverError 43)"
-            )
+            raise ChSqlError("sumMap: Array(Nullable(Nothing)) argument is an illegal type (serverError 43)")
     ks = f"flatten({arg_sql[1]})"
     uk = f"array_sort(array_distinct({ks}))"
     op = spec.lower()[:3]
@@ -2794,18 +2772,13 @@ def _reduce_map(spec: str, arg_sql: list[str]) -> str:
         pairs = f"zip_with({ks}, flatten({a}), (__k, __v) -> named_struct('k', __k, 'v', __v))"
         if op == "sum":
             per = (
-                f"aggregate({pairs}, CAST(0 AS DOUBLE),"
-                f" (__a, __p) -> __a + (CASE WHEN __p.k = __u"
-                f" AND __p.v IS NOT NULL"
-                f" THEN CAST(__p.v AS DOUBLE) ELSE 0 END))"
+                f"aggregate({pairs}, CAST(0 AS DOUBLE), (__a, __p) -> __a + (CASE WHEN __p.k = __u"
+                f" AND __p.v IS NOT NULL THEN CAST(__p.v AS DOUBLE) ELSE 0 END))"
             )
         else:
-            fn2 = "array_min" if op == "min" else "array_max"
             per = (
-                f"coalesce({fn2}(transform(filter({pairs},"
-                f" __p -> __p.k = __u AND __p.v IS NOT NULL),"
-                f" __p -> CAST(__p.v AS DOUBLE))),"
-                f" CAST(0 AS DOUBLE))"
+                f"coalesce({'array_min' if op == 'min' else 'array_max'}(transform(filter({pairs},"
+                f" __p -> __p.k = __u AND __p.v IS NOT NULL), __p -> CAST(__p.v AS DOUBLE))), CAST(0 AS DOUBLE))"
             )
         vals.append(f"transform({uk}, __u -> {per})")
     fields = ", ".join([f"'_1', {uk}"] + [f"'_{j + 2}', {v}" for j, v in enumerate(vals)])
@@ -2817,29 +2790,17 @@ def _reduce_linear_regression(x: str, y: str) -> str:
     # (AggregateFunctionSimpleLinearRegression.h): returns the (slope,
     # intercept) tuple; zero denominator → NaN like the reference's double
     # math (Spark's x/0 is NULL → coalesce)
-    pts = (
-        f"zip_with({x}, {y}, (__x, __y) -> named_struct("
-        f"'x', CAST(__x AS DOUBLE), 'y', CAST(__y AS DOUBLE)))"
-    )
+    pts = f"zip_with({x}, {y}, (__x, __y) -> named_struct('x', CAST(__x AS DOUBLE), 'y', CAST(__y AS DOUBLE)))"
     acc = (
-        f"aggregate({pts}, named_struct("
-        f"'n', CAST(0 AS DOUBLE), 'sx', CAST(0 AS DOUBLE),"
-        f" 'sy', CAST(0 AS DOUBLE), 'sxy', CAST(0 AS DOUBLE),"
-        f" 'sxx', CAST(0 AS DOUBLE)),"
-        f" (__s, __p) -> named_struct('n', __s.n + 1,"
-        f" 'sx', __s.sx + __p.x, 'sy', __s.sy + __p.y,"
-        f" 'sxy', __s.sxy + __p.x * __p.y,"
-        f" 'sxx', __s.sxx + __p.x * __p.x))"
+        f"aggregate({pts}, named_struct('n', CAST(0 AS DOUBLE), 'sx', CAST(0 AS DOUBLE),"
+        f" 'sy', CAST(0 AS DOUBLE), 'sxy', CAST(0 AS DOUBLE), 'sxx', CAST(0 AS DOUBLE)),"
+        f" (__s, __p) -> named_struct('n', __s.n + 1, 'sx', __s.sx + __p.x, 'sy', __s.sy + __p.y,"
+        f" 'sxy', __s.sxy + __p.x * __p.y, 'sxx', __s.sxx + __p.x * __p.x))"
     )
-    k = (
-        "coalesce((__t.n * __t.sxy - __t.sx * __t.sy)"
-        " / (__t.n * __t.sxx - __t.sx * __t.sx), double('NaN'))"
-    )
+    k = "coalesce((__t.n * __t.sxy - __t.sx * __t.sy) / (__t.n * __t.sxx - __t.sx * __t.sx), double('NaN'))"
     return (
-        f"element_at(transform(array({acc}), __t -> named_struct("
-        f"'_1', {k},"
-        f" '_2', coalesce((__t.sy - ({k}) * __t.sx) / __t.n,"
-        f" double('NaN')))), 1)"
+        f"element_at(transform(array({acc}), __t -> named_struct('_1', {k},"
+        f" '_2', coalesce((__t.sy - ({k}) * __t.sx) / __t.n, double('NaN')))), 1)"
     )
 
 
@@ -2885,10 +2846,8 @@ def _reduce_forms(x: str) -> dict[str, str]:
         "minmerge": f"array_min({x})",
         "maxmerge": f"array_max({x})",
         "avgmerge": (
-            f"(aggregate({x}, CAST(0 AS DOUBLE),"
-            f" (__a, __e) -> __a + __e.sum)"
-            f" / aggregate({x}, CAST(0 AS DOUBLE),"
-            f" (__a, __e) -> __a + __e.cnt))"
+            f"(aggregate({x}, CAST(0 AS DOUBLE), (__a, __e) -> __a + __e.sum)"
+            f" / aggregate({x}, CAST(0 AS DOUBLE), (__a, __e) -> __a + __e.cnt))"
         ),
         "grouparraymerge": f"flatten({x})",
         "groupuniqarraymerge": f"array_sort(array_distinct(flatten({x})))",
@@ -3008,14 +2967,10 @@ def _to_start_of_interval(c: _Site):
 # the DECIMAL(38) carrier's (the true ranges exceed it; negatives still
 # reject correctly)
 _ACCURATE_RANGES = {
-    "uint8": (0, 255), "uint16": (0, 65535),
-    "uint32": (0, 4294967295), "uint64": (0, 18446744073709551615),
-    "int8": (-128, 127), "int16": (-32768, 32767),
-    "int32": (-2147483648, 2147483647),
+    "uint8": (0, 255), "uint16": (0, 65535), "uint32": (0, 4294967295), "uint64": (0, 18446744073709551615),
+    "int8": (-128, 127), "int16": (-32768, 32767), "int32": (-2147483648, 2147483647),
     "int64": (-9223372036854775808, 9223372036854775807),
-    "uint128": (0, 10**37), "uint256": (0, 10**37),
-    "int128": (-(10**37), 10**37),
-    "int256": (-(10**37), 10**37),
+    "uint128": (0, 10**37), "uint256": (0, 10**37), "int128": (-(10**37), 10**37), "int256": (-(10**37), 10**37),
 }
 
 
@@ -3293,10 +3248,8 @@ def _cast(c: _Site):
     if fsm:
         n, s0 = fsm.group(1), f"CAST({a[0]} AS STRING)"
         return (
-            f"(CASE WHEN octet_length({s0}) > {n} THEN"
-            f" CAST(raise_error('TOO_LARGE_STRING_SIZE: string too"
-            f" long for FixedString({n})') AS STRING)"
-            f" ELSE concat({s0}, repeat(char(0), {n} - octet_length({s0}))) END)"
+            f"(CASE WHEN octet_length({s0}) > {n} THEN CAST(raise_error('TOO_LARGE_STRING_SIZE: string too"
+            f" long for FixedString({n})') AS STRING) ELSE concat({s0}, repeat(char(0), {n} - octet_length({s0}))) END)"
         )
     if ch_type.strip() == "String":
         r0 = _composite_to_string(c.args[0], a[0])
@@ -3582,10 +3535,7 @@ def _starts_with_array(c: _Site):
         sl = f"slice({a0}, 1, size({a1}))"
     else:
         sl = f"(CASE WHEN size({a1}) = 0 THEN array() ELSE slice({a0}, -size({a1}), size({a1})) END)"
-    return (
-        f"(size({a0}) >= size({a1}) AND size(filter(zip_with({sl},"
-        f" {a1}, (__p, __q) -> NOT (__p <=> __q)), __b -> __b)) = 0)"
-    )
+    return f"(size({a0}) >= size({a1}) AND size(filter(zip_with({sl}, {a1}, (__p, __q) -> NOT (__p <=> __q)), __b -> __b)) = 0)"
 
 
 @_handles("IPv4StringToNum", "INET_ATON")
@@ -3620,10 +3570,7 @@ def _to_fixed_string(c: _Site):
     if lit and nm and len(_decode_ch_literal(lit).encode("utf-8", "surrogateescape")) > int(nm.group(0)):
         # runtime raise (Spark keeps never-taken CASE/IF branches lazy,
         # preserving CH short-circuit: 02408)
-        return (
-            f"CAST(raise_error('TOO_LARGE_STRING_SIZE: string too"
-            f" long for FixedString({nm.group(0)})') AS STRING)"
-        )
+        return f"CAST(raise_error('TOO_LARGE_STRING_SIZE: string too long for FixedString({nm.group(0)})') AS STRING)"
     if re.match(r"(?i)(unhex|aes_|to_binary|sha1|sha2|md5)\s*\(", a[0].strip()):
         # binary input: rpad's string pad would force a lossy UTF-8 cast;
         # the bytes already have the exact width
@@ -3814,16 +3761,10 @@ def _hof_sort(c: _Site):
     dec = f"transform({a0}, (__x, __i) -> named_struct('k', {key}, 'i', __i, 'v', __x))"
     lt, gt = ("1", "-1") if c.name == "arrayReverseSort" else ("-1", "1")
     cmp = (
-        f"(__l, __r) -> CASE"
-        f" WHEN __l.k IS NULL AND __r.k IS NULL THEN"
-        f" (CASE WHEN __l.i < __r.i THEN -1"
-        f" WHEN __l.i > __r.i THEN 1 ELSE 0 END)"
-        f" WHEN __l.k IS NULL THEN 1"
-        f" WHEN __r.k IS NULL THEN -1"
-        f" WHEN __l.k < __r.k THEN {lt}"
-        f" WHEN __l.k > __r.k THEN {gt}"
-        f" WHEN __l.i < __r.i THEN -1 WHEN __l.i > __r.i THEN 1"
-        f" ELSE 0 END"
+        f"(__l, __r) -> CASE WHEN __l.k IS NULL AND __r.k IS NULL THEN"
+        f" (CASE WHEN __l.i < __r.i THEN -1 WHEN __l.i > __r.i THEN 1 ELSE 0 END)"
+        f" WHEN __l.k IS NULL THEN 1 WHEN __r.k IS NULL THEN -1 WHEN __l.k < __r.k THEN {lt}"
+        f" WHEN __l.k > __r.k THEN {gt} WHEN __l.i < __r.i THEN -1 WHEN __l.i > __r.i THEN 1 ELSE 0 END"
     )
     return f"transform(array_sort({dec}, {cmp}), __s -> __s.v)"
 
@@ -3878,18 +3819,13 @@ def _hof_split(c: _Site):
     flags = _lambda_over(lam, arrs)
     off = "__i" if c.name == "arraySplit" else "__i - 1"
     starts = (
-        f"filter(sequence(1, greatest(size({a0}), 1)),"
-        f" __i -> __i <= size({a0}) AND (__i = 1 OR"
-        f" (CASE WHEN ({off}) >= 1 THEN"
-        f" coalesce(CAST(try_element_at({flags}, {off})"
-        f" AS BOOLEAN), false) ELSE false END)))"
+        f"filter(sequence(1, greatest(size({a0}), 1)), __i -> __i <= size({a0}) AND (__i = 1 OR"
+        f" (CASE WHEN ({off}) >= 1 THEN coalesce(CAST(try_element_at({flags}, {off}) AS BOOLEAN), false)"
+        f" ELSE false END)))"
     )
     return (
-        f"filter(transform({starts}, (__s, __j) ->"
-        f" slice({a0}, __s,"
-        f" coalesce(try_element_at({starts}, __j + 2),"
-        f" size({a0}) + 1) - __s)),"
-        f" __g -> size({a0}) > 0)"
+        f"filter(transform({starts}, (__s, __j) -> slice({a0}, __s,"
+        f" coalesce(try_element_at({starts}, __j + 2), size({a0}) + 1) - __s)), __g -> size({a0}) > 0)"
     )
 
 
@@ -3900,17 +3836,12 @@ def _hof_cum_sum(c: _Site):
         return None
     lam, arrs = la
     a0 = arrs[0] if arrs else ""
-    step = (
-        "greatest(__a + CAST(__x AS DOUBLE), CAST(0 AS DOUBLE))"
-        if c.name == "arrayCumSumNonNegative"
-        else "__a + CAST(__x AS DOUBLE)"
-    )
+    step = "__a + CAST(__x AS DOUBLE)"
+    if c.name == "arrayCumSumNonNegative":
+        step = f"greatest({step}, CAST(0 AS DOUBLE))"
     return (
-        f"transform(CASE WHEN size({a0}) > 0 THEN"
-        f" sequence(1, size({a0})) ELSE"
-        f" CAST(array() AS ARRAY<INT>) END,"
-        f" __i -> aggregate(slice({_lambda_over(lam, arrs)}, 1, __i),"
-        f" CAST(0 AS DOUBLE), (__a, __x) -> {step}))"
+        f"transform(CASE WHEN size({a0}) > 0 THEN sequence(1, size({a0})) ELSE CAST(array() AS ARRAY<INT>) END,"
+        f" __i -> aggregate(slice({_lambda_over(lam, arrs)}, 1, __i), CAST(0 AS DOUBLE), (__a, __x) -> {step}))"
     )
 
 
@@ -3987,14 +3918,11 @@ def _renamed(c: _Site):
     return c.respelled(t) if t != c.name else None
 
 
+# date_time_input_format='best_effort': a conversion's best-effort parser
 _BEST_EFFORT = {
-    "toDateTime": "parseDateTimeBestEffort",
     "toDateTime32": "parseDateTimeBestEffort",
-    "toDateTimeOrNull": "parseDateTimeBestEffortOrNull",
-    "toDateTimeOrZero": "parseDateTimeBestEffortOrZero",
-    "toDateTime64": "parseDateTime64BestEffort",
-    "toDateTime64OrNull": "parseDateTime64BestEffortOrNull",
-    "toDateTime64OrZero": "parseDateTime64BestEffortOrZero",
+    **{f"toDateTime{s}": f"parseDateTimeBestEffort{s}" for s in ("", "OrNull", "OrZero")},
+    **{f"toDateTime64{s}": f"parseDateTime64BestEffort{s}" for s in ("", "OrNull", "OrZero")},
 }
 
 

@@ -2317,8 +2317,7 @@ class _Site:
     """One call `name(args)` of a token list, as a handler sees it.
 
     ``arg_sql`` (each argument rendered, a comparison cast to INT for the
-    names in _UINT8_ARGS) and ``raw_sql`` (without that cast) are rendered
-    on first use. A parametric call `name(params)(args2)` has a second
+    names in _UINT8_ARGS) is rendered on first use. A parametric call `name(params)(args2)` has a second
     argument group, ``args2``, ending at ``close2``. A handler that consumes tokens past the call's `)` sets
     ``end``."""
 
@@ -2341,17 +2340,14 @@ class _Site:
         return _split_args(self.tokens[self.close + 2 : self.close2])
 
     @functools.cached_property
-    def raw_sql(self) -> list[str]:
-        return [_rewrite(a) for a in self.args]
-
-    @functools.cached_property
     def arg_sql(self) -> list[str]:
+        sql = [_rewrite(a) for a in self.args]
         if self.name in _UINT8_ARGS:
             # ClickHouse computes over a comparison's UInt8 0/1 (sum(x = 1)
             # counts matches, minus(a = 1, b = 2)); Spark refuses boolean
             # operands
-            return [f"CAST(({a}) AS INT)" if _looks_predicate(a) else a for a in self.raw_sql]
-        return self.raw_sql
+            return [f"CAST(({a}) AS INT)" if _looks_predicate(a) else a for a in sql]
+        return sql
 
     def respelled(self, name: str, args: "list[list[str]] | None" = None) -> list[str]:
         """The tokens of this call under another name (and arguments), for
@@ -2541,7 +2537,7 @@ def _avg_weighted(c: _Site):
         return None
     # empty valid-pair set: NULL when an argument is Nullable, nan otherwise
     # (the Nullable combinator wraps the result)
-    return _avg_weighted_sql(c.name, c.raw_sql, _avgw_nullable(c.args, c.raw_sql))
+    return _avg_weighted_sql(c.name, c.arg_sql, _avgw_nullable(c.args, c.arg_sql))
 
 
 @_handles("grouping", ci=True, early=True)
@@ -2551,7 +2547,7 @@ def _grouping(c: _Site):
     # GROUPING(keys...) (FunctionGrouping): multi-arg form is Spark's
     # grouping_id bitmask; force_grouping_standard_compatibility=0 inverts
     # every bit (1 = used as a key)
-    keys = c.raw_sql
+    keys = c.arg_sql
     if not keys:
         return None
     gid = f"grouping_id({', '.join(keys)})" if len(keys) > 1 else f"grouping({keys[0]})"
@@ -3140,14 +3136,11 @@ def _format(c: _Site):
     return f"concat({', '.join(parts)})" if parts else "''"
 
 
+# REGEXP_REPLACE: the SQL-compat alias of replaceRegexpAll (FunctionFactory
+# registerAlias), in any case
 @_handles("REGEXP_REPLACE", ci=True)
-def _regexp_replace(c: _Site):
-    # SQL-compat alias (FunctionFactory registerAlias) — same \N backref
-    # conversion as replaceRegexpAll
-    return _replace_regexp(c, "replaceRegexpAll") if len(c.arg_sql) == 3 else None
-
-
-def _replace_regexp(c: _Site, name: str):
+@_handles("replaceRegexpOne", "replaceRegexpAll")
+def _replace_regexp(c: _Site):
     if len(c.arg_sql) != 3:
         return None
     # ClickHouse replacement backrefs are \N (ReplaceRegexpImpl); Java's are
@@ -3160,7 +3153,7 @@ def _replace_regexp(c: _Site, name: str):
         body = rep[1:-1].replace("$", "\\\\$")
         body = re.sub(r"\\\\(\d)", r"$\1", body)
         rep = f"'{body}'"
-    if name == "replaceRegexpAll":
+    if c.name != "replaceRegexpOne":
         return f"regexp_replace({s0}, {pat}, {rep})"
     first = f"regexp_extract({s0}, {pat}, 0)"
     return (
@@ -3170,11 +3163,6 @@ def _replace_regexp(c: _Site, name: str):
         f" substr({s0}, locate({first}, {s0}) + length({first})))"
         f" END)"
     )
-
-
-@_handles("replaceRegexpOne", "replaceRegexpAll")
-def _replace_regexp_call(c: _Site):
-    return _replace_regexp(c, c.name)
 
 
 @_handles("sumMap", "minMap", "maxMap")
@@ -3197,15 +3185,6 @@ def _map_aggregate_of_one(c: _Site):
 def _round(c: _Site):
     # ClickHouse round() is banker's rounding (FunctionsRound.cpp)
     return f"bround({', '.join(c.arg_sql)})"
-
-
-def _composite_to_string(tokens: list[str], sql: str) -> "str | None":
-    """CAST(composite AS String) = CH text serialization, not Spark's
-    bracket style (FunctionsConversion toString path)."""
-    ty = _ch_type(tokens)
-    if ty is not None and re.match(r"(?i)(Array|Tuple)\(", ty):
-        return _ch_render_sql(sql, ty)
-    return None
 
 
 @_handles("CAST")
@@ -3252,7 +3231,10 @@ def _cast(c: _Site):
             f" long for FixedString({n})') AS STRING) ELSE concat({s0}, repeat(char(0), {n} - octet_length({s0}))) END)"
         )
     if ch_type.strip() == "String":
-        r0 = _composite_to_string(c.args[0], a[0])
+        # CAST(composite AS String) = CH text serialization, not Spark's
+        # bracket style (FunctionsConversion toString path)
+        ty = _ch_type(c.args[0])
+        r0 = _ch_render_sql(a[0], ty) if ty is not None and re.match(r"(?i)(Array|Tuple)\(", ty) else None
         if r0 is not None:
             return r0
     try:

@@ -2456,7 +2456,7 @@ def _rewrite(tokens: list[str], ctx: str = "val") -> str:
     return s.strip()
 
 
-# --- handlers, in the order the generic rules once interleaved them --------
+# --- handlers: one per name, or per family of names ------------------------
 
 
 @_handles("toDateTime", "toDateTime64", "toDateTime32", "toDate", "toDate32", "toTimeZone", "toTimezone", early=True)
